@@ -31,11 +31,13 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 from bench.common import cpu_sys_steal_total as _cpu_sys_total  # noqa: E402
 
 
-def _calm_anchor(sf: float) -> float | None:
+def _calm_anchor(sf: float, cpus: int) -> float | None:
     """Flagship calm-window reference from the newest committed calmest-run
-    artifact (BENCH/BENCH_r*_local.json) at the SAME sf — drives the
-    adaptive-rep gate and the recorded calm_ratio, instead of a hardcoded
-    literal (round-4 ADVICE)."""
+    artifact (BENCH/BENCH_r*_local.json) at the SAME sf AND cpus — drives
+    the adaptive-rep gate and the recorded calm_ratio, instead of a
+    hardcoded literal (round-4 ADVICE).  ``None`` when no artifact matches
+    both: a 4-core run held to a 32-core anchor always looks stormy and
+    pays every flagship rep."""
     import glob
     import re
 
@@ -51,7 +53,8 @@ def _calm_anchor(sf: float) -> float | None:
         try:
             with open(path) as fh:
                 rec = json.load(fh)
-            if abs(float(rec.get("sf", -1)) - sf) < 1e-9:
+            if (abs(float(rec.get("sf", -1)) - sf) < 1e-9
+                    and int(rec.get("cpus", -1)) == cpus):
                 return float(rec["queries"]["reverse_geocode"])
         except Exception:
             continue
@@ -98,7 +101,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         # cheapest shot at straddling a storm edge; a calm run never pays
         # for the extras.  EVERY rep is recorded (count + spread) so noisy
         # and calm runs stay comparable even though the headline is min-of-N.
-        anchor = _calm_anchor(sf)
+        anchor = _calm_anchor(sf, cpus)
         noise_gate = 2.0 * anchor if anchor else float("inf")
         sys0 = _cpu_sys_total()
         flagship_reps: list[float] = []

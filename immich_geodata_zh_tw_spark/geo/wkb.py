@@ -84,9 +84,21 @@ def decode(buf: bytes) -> list[np.ndarray]:
     raise ValueError(f"unsupported WKB geometry type {geom_type}")
 
 
-def bounds(buf: bytes) -> tuple[float, float, float, float]:
-    """(lon_min, lat_min, lon_max, lat_max) of a WKB geometry."""
-    rings = decode(buf)
-    pts = np.vstack(rings)
-    return (float(pts[:, 0].min()), float(pts[:, 1].min()),
-            float(pts[:, 0].max()), float(pts[:, 1].max()))
+_ORIGIN = np.zeros((1, 2))
+
+
+def bounds_array(bufs) -> np.ndarray:
+    """(n, 4) float64 array of (lon_min, lat_min, lon_max, lat_max), one row
+    per WKB geometry in ``bufs``, degenerate rings included.  A geometry
+    without points reports (0, 0, 0, 0), as ``pip.PreparedGeometry`` does.
+    One min/max reduction over all geometries' points, not one per
+    geometry."""
+    pts = [np.concatenate(decode(bytes(b)) or [_ORIGIN]) for b in bufs]
+    pts = [g if len(g) else _ORIGIN for g in pts]
+    if not pts:
+        return np.empty((0, 4))
+    sizes = np.fromiter(map(len, pts), dtype=np.int64, count=len(pts))
+    allp = np.concatenate(pts)
+    starts = np.cumsum(sizes) - sizes
+    return np.hstack([np.minimum.reduceat(allp, starts),
+                      np.maximum.reduceat(allp, starts)])

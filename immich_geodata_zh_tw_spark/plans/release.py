@@ -24,6 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.registry import get_handler
+from ..sources.geonames import CITIES_SCHEMA
 from ..sources.pack import pack_release
 from . import enhance
 
@@ -84,7 +85,10 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
         enhanced = spark.read.parquet(cities_path)
         translated = enhance.translate_cities500(
             enhanced, metadata, chinese_names)
-        translated.write.mode("overwrite").parquet(translated_path)
+        # GeoNames field order: the joins inside the translate chain move
+        # their keys first, and cities500.txt is read by position
+        (translated.select(*CITIES_SCHEMA.fieldNames())
+         .write.mode("overwrite").parquet(translated_path))
 
     result = {"cities": cities_path, "admin1": admin1_path,
               "translated": translated_path}

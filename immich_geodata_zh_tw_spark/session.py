@@ -13,6 +13,7 @@ from pathlib import Path
 from tempfile import gettempdir
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
 
 
 def _parse_mem_mb(text: str) -> int:
@@ -121,9 +122,18 @@ def local_dim_df(spark: SparkSession, rows, schema: str):
     data: downstream broadcast joins/aggregations are indifferent to the
     input partitioning, so results are identical while every scan
     schedules exactly one task at any cluster width.
+
+    Rows are type-checked against ``schema`` here, on the driver: from an
+    RDD, Spark would only check them on an executor at the first action.
     """
+    struct = _parse_datatype_string(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema)
+        spark.sparkContext.parallelize(rows, numSlices=1), struct,
+        verifySchema=False)
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -57,3 +57,34 @@ class TestPinned:
                 os._exit(0 if ok else 1)
             _, status = os.waitpid(pid, 0)
             assert os.waitstatus_to_exitcode(status) == 0
+
+
+class TestCalmAnchor:
+    """``bench.py``'s calm anchor must come from an artifact measured at the
+    same sf AND core count."""
+
+    @staticmethod
+    def _bench_module(repo):
+        import importlib.util
+
+        spec = importlib.util.spec_from_file_location(
+            "bench_main", os.path.join(repo, "bench.py"))
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod
+
+    def test_keys_on_sf_and_cpus(self, tmp_path, monkeypatch):
+        import json
+
+        mod = self._bench_module(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        (tmp_path / "BENCH").mkdir()
+        for rnd, cpus, sec in ((9, 32, 3.0), (10, 4, 7.5), (11, 32, 2.9)):
+            (tmp_path / "BENCH" / f"BENCH_r{rnd}_local.json").write_text(
+                json.dumps({"sf": 0.1, "cpus": cpus,
+                            "queries": {"reverse_geocode": sec}}))
+        monkeypatch.setattr(mod, "_REPO", str(tmp_path))
+        assert mod._calm_anchor(0.1, 32) == 2.9  # newest round wins
+        assert mod._calm_anchor(0.1, 4) == 7.5
+        assert mod._calm_anchor(0.1, 8) is None
+        assert mod._calm_anchor(0.01, 4) is None

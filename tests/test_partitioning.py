@@ -103,3 +103,23 @@ class TestScaleSafeSessionDefaults:
         assert init >= 1024
         adv = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         assert adv.endswith("m") and 16 <= int(adv[:-1]) <= 64
+
+
+class TestLocalDimDf:
+    def test_one_partition_and_rows(self, spark):
+        from immich_geodata_zh_tw_spark.session import local_dim_df
+
+        df = local_dim_df(spark, [("TW", 1), ("JP", 2)], "cc string, n long")
+        assert df.rdd.getNumPartitions() == 1
+        assert sorted(map(tuple, df.collect())) == [("JP", 2), ("TW", 1)]
+
+    def test_malformed_row_raises_at_construction(self, spark):
+        """Rows are checked on the driver when the frame is built, not on an
+        executor at the first action."""
+        from immich_geodata_zh_tw_spark.session import local_dim_df
+
+        with pytest.raises(TypeError, match="LongType"):
+            local_dim_df(spark, [("TW", 1), ("JP", "two")],
+                         "cc string, n long")
+        with pytest.raises(ValueError):  # wrong arity
+            local_dim_df(spark, [("TW", 1, 3)], "cc string, n long")

@@ -78,6 +78,28 @@ class TestReleaseRunner:
             a2 = [n for n in zf.namelist() if n.endswith("admin2Codes.txt")]
             assert a2 and zf.read(a2[0])  # non-empty in the archive too
 
+    def test_cities500_txt_is_in_geonames_field_order(self, spark, tmp_path,
+                                                      inputs):
+        """cities500.txt is read by position (sources.geonames.read_cities_tsv,
+        Immich's importer): its columns must be CITIES_SCHEMA's, in order."""
+        from immich_geodata_zh_tw_spark.sources.geonames import (
+            CITIES_SCHEMA, read_cities_tsv)
+
+        res = run_release(spark, workdir=tmp_path, **inputs,
+                          release_date="2026-08-16")
+        translated = spark.read.parquet(res["translated"])
+        assert translated.columns == CITIES_SCHEMA.fieldNames()
+        txt = read_cities_tsv(spark, str(tmp_path / "cities500.txt"))
+        got = sorted(txt.collect(), key=lambda r: r["geoname_id"])
+        want = sorted(translated.collect(), key=lambda r: r["geoname_id"])
+        assert [(r["geoname_id"], r["name"], r["latitude"], r["longitude"],
+                 r["country_code"], r["population"]) for r in got] == [
+            (r["geoname_id"], r["name"], r["latitude"], r["longitude"],
+             r["country_code"], r["population"]) for r in want]
+        fr = [r for r in got if r["country_code"] == "FR"]
+        assert [(r["name"], r["timezone"]) for r in fr] == [
+            ("巴黎市", "Europe/Paris")]
+
     def test_skip_stages_reuses_artifacts(self, spark, tmp_path, inputs):
         run_release(spark, workdir=tmp_path, **inputs,
                     skip={"translate", "pack"})

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from immich_geodata_zh_tw_spark.geo import distance, grid, pip
+from immich_geodata_zh_tw_spark.geo import distance, grid, pip, wkb
 from immich_geodata_zh_tw_spark.operators import knn as knn_op
 from immich_geodata_zh_tw_spark.operators import pipjoin
 from immich_geodata_zh_tw_spark.synth import polygons
@@ -219,6 +219,26 @@ class TestKnnJoin:
         assert out["place_id"].tolist() == [1, 3]
 
 
+    def test_pole_query_not_settled_by_far_column_candidate(self, spark):
+        """Every longitude meets at the pole: a place there can be nearer
+        than an in-ring candidate while sitting two cell columns away.  The
+        guard must not settle the ring candidate (an 89.999° latitude cap
+        did, at res 3: guard 0.044 km, ring candidate 0.024 km, true
+        nearest 0.0096 km)."""
+        places = pd.DataFrame({"place_id": [1, 2],
+                               "latitude": [-90.0, -89.9997],
+                               "longitude": [64.06131642329353, 103.24]})
+        q = spark.createDataFrame(pd.DataFrame(
+            {"qid": [0], "lat": [-89.99991342323736],
+             "lon": [103.24353888242291]}))
+        out = knn_op.knn_join(spark, q, places, query_id="qid",
+                              place_cols=["place_id"], res=3, k=1).toPandas()
+        d = distance.haversine_np(-89.99991342323736, 103.24353888242291,
+                                  places["latitude"], places["longitude"])
+        assert d[0] < d[1]
+        assert out["place_id"].tolist() == [1]
+
+
 class TestPipJoin:
     def test_points_in_synthetic_villages(self, spark):
         polys = polygons.admin_polygons_pdf(village_grid=3)
@@ -279,6 +299,80 @@ class TestPipJoin:
         assert got.get(0) == enc["poly_id"]
         assert got.get(2) == enc["poly_id"]
         assert 1 not in got  # gap belongs to no polygon
+
+
+def reference_cover(polys_pdf, *, id_col, res):
+    """One :func:`grid.covering_cells` call per polygon bbox."""
+    cells, ids = [], []
+    for pid, buf in zip(polys_pdf[id_col], polys_pdf["geometry_wkb"]):
+        g = pip.PreparedGeometry(bytes(buf))
+        c = grid.covering_cells(g.lat_min, g.lat_max, g.lon_min, g.lon_max,
+                                res)
+        cells.extend(c.tolist())
+        ids.extend([pid] * len(c))
+    return cells, ids
+
+
+def _box(lat0, lat1, lon0, lon1):
+    return np.array([[lon0, lat0], [lon1, lat0], [lon1, lat1], [lon0, lat1]])
+
+
+class TestPolygonCover:
+    #: res 10 cells are exactly 0.17578125° on both axes (binary fraction)
+    STEP = 180.0 / 1024
+
+    def cover_polys(self):
+        s = self.STEP
+        lat0, lon0 = -90.0 + 640 * s, -180.0 + 1714 * s  # cell corners
+        geoms = [
+            # bbox edges exactly on cell boundaries: 2 × 3 cells, not 3 × 4
+            wkb.encode_polygon([_box(lat0, lat0 + 2 * s, lon0, lon0 + 3 * s)]),
+            # two parts and a hole: the cover is the union bbox's
+            wkb.encode_multipolygon([
+                [_box(21.9, 22.3, 120.1, 120.4),
+                 _box(22.0, 22.1, 120.2, 120.3)],
+                [_box(22.6, 22.7, 120.9, 121.3)]]),
+            # degenerate ring (2 points): no edges, but its points count
+            wkb.encode_polygon([np.array([[121.5, 24.0], [121.9, 24.4]])]),
+            # zero-height bbox on a cell boundary: no cell at all
+            wkb.encode_polygon([np.array([[lon0, lat0], [lon0 + s, lat0],
+                                          [lon0 + 2 * s, lat0]])]),
+            # a point-sized polygon inside one cell
+            wkb.encode_polygon([_box(23.01, 23.01, 120.51, 120.51)]),
+        ]
+        return polygons.admin_polygons_pdf(village_grid=2).pipe(
+            lambda df: pd.concat([
+                df[["geometry_wkb"]],
+                pd.DataFrame({"geometry_wkb": geoms})], ignore_index=True))
+
+    @pytest.mark.parametrize("ids", ["int", "str"])
+    def test_matches_per_polygon_loop(self, ids):
+        polys = self.cover_polys()
+        polys["poly_id"] = (np.arange(len(polys)) * 7 if ids == "int"
+                            else [f"p{i}" for i in range(len(polys))])
+        got = pipjoin.polygon_cells_pdf(polys, id_col="poly_id", res=10)
+        cells, pids = reference_cover(polys, id_col="poly_id", res=10)
+        assert got["cell"].tolist() == cells
+        assert got["poly_id"].tolist() == pids
+        assert got["poly_id"].dtype == polys["poly_id"].dtype
+        # the edge-aligned box covers exactly its 2 × 3 cells
+        n = len(polys) - 5
+        assert (got["poly_id"] == polys["poly_id"][n]).sum() == 6
+        assert (got["poly_id"] == polys["poly_id"][n + 3]).sum() == 0
+
+    def test_empty_table(self):
+        got = pipjoin.polygon_cells_pdf(
+            pd.DataFrame({"poly_id": pd.Series([], dtype="int64"),
+                          "geometry_wkb": pd.Series([], dtype=object)}),
+            id_col="poly_id", res=10)
+        assert len(got) == 0
+
+    def test_spark_schema_of_integer_ids(self, spark):
+        polys = self.cover_polys()
+        polys.insert(0, "poly_id", range(len(polys)))
+        cover = spark.createDataFrame(
+            pipjoin.polygon_cells_pdf(polys, id_col="poly_id", res=10))
+        assert cover.schema.simpleString() == "struct<cell:bigint,poly_id:bigint>"
 
 
 class TestRasterVector:
