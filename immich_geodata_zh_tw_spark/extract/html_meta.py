@@ -80,14 +80,18 @@ def extract_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     """``mapInPandas`` kernel: pages batch → (url, lat, lon, text) batch.
 
     Schema: ``url string, lat double, lon double, text string`` (lat/lon NaN→
-    null when no geo tag).  Runs entirely inside one Arrow batch; no shuffle.
+    null when no geo tag; lat/lon/text null for a null page).  Runs entirely
+    inside one Arrow batch; no shuffle.
     """
     for pdf in batches:
         n = len(pdf)
         lat = np.full(n, np.nan)
         lon = np.full(n, np.nan)
-        texts: list[str] = []
+        texts: list[str | None] = []
         for i, html in enumerate(pdf["html"].to_numpy()):
+            if html is None:  # null page: null text, no tag to parse
+                texts.append(None)
+                continue
             geo = extract_geo(html)
             if geo is not None:
                 lat[i], lon[i] = geo
@@ -116,8 +120,8 @@ def extract_geo_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         lat = np.full(n, np.nan)
         lon = np.full(n, np.nan)
         for i, html in enumerate(pdf["html"].to_numpy()):
-            if html is None:  # JVM-side marker pre-null (extract_pages):
-                continue      # provably tagless page, nothing to parse
+            if html is None:  # null page: no tag to parse
+                continue
             geo = extract_geo(html)
             if geo is not None:
                 lat[i], lon[i] = geo
@@ -131,76 +135,8 @@ def extract_geo_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 EXTRACTED_SCHEMA = "url string, lat double, lon double, text string"
 EXTRACTED_GEO_SCHEMA = "url string, lat double, lon double"
 
-# Java-regex twins of the three byte-regexes above.  Every pattern atom is
-# pure ASCII, so matching the UTF-8-decoded string is equivalent to matching
-# the raw bytes: ASCII bytes decode 1:1 in both engines, malformed sequences
-# become U+FFFD (never an ASCII char) in both Python errors="replace" and the
-# JVM's replace-on-decode, and Java's default \d/\s are the same ASCII sets
-# as Python's bytes-mode classes.  Equivalence is pinned row-for-row by
-# tests/test_extract_and_synth.py (corpus sweep + hypothesis fuzz).
-_NUM = r"(-?\d+(?:\.\d+)?)"
-_JVM_GEO_PATTERNS = [
-    rf'(?i)<meta\s+name="geo\.position"\s+content="{_NUM};{_NUM}"',
-    rf'(?i)<meta\s+name="ICBM"\s+content="{_NUM},\s*{_NUM}"',
-    rf'(?i)<meta\s+name="exif\.gps"\s+content="{_NUM}\s+{_NUM}"',
-]
 
-
-def extract_geo_jvm(pages_df):
-    """Geo-only extract as pure Column algebra — zero Python in the plan.
-
-    Same (url, lat, lon) frame as ``extract_pages(with_text=False)``, built
-    from ``regexp_extract`` + a CASE cascade instead of a mapInPandas
-    kernel.  Rationale at 100 TB: the geo-only consumer (the flagship
-    reverse-geocode) needs ~20 bytes of output per page, but the Arrow
-    kernel must ship every (url, html) pair across the JVM→Python IPC
-    boundary — two full memcpys of the corpus plus Python-worker
-    oversubscription per core — only for the rows to be bbox-filtered
-    away.  Expressing the cascade in Column algebra keeps the whole
-    extract inside whole-stage codegen: the page is scanned by the Java
-    regex engine in-place and only (url, lat, lon) ever materializes.
-
-    Per-style cost is ONE page scan: the style's full match (group 0) is a
-    single canonicalized subexpression reused by both coordinates (codegen
-    subexpression elimination), and the group extracts re-match only the
-    ≤ 60-char matched tag.  The bounds-fallthrough semantics (an
-    out-of-range geo.position tag falls through to ICBM, then exif) mirror
-    ``extract_geo`` exactly.
-
-    Measured (interleaved min-of-3, flagship E2E noop at 2 M pages /
-    32 cores, calm): jvm 4.72 s vs arrow 3.26 s — the binary→string cast
-    pays a UTF-8→UTF-16 copy per page and Java's (?i) regex scans UTF-16,
-    while the Arrow kernel runs C regex over raw bytes across 32 Python
-    workers.  The arrow kernel therefore stays the DEFAULT; this path is
-    the zero-Python alternative for clusters where Python workers are the
-    constrained resource (memory-tight executors, no Arrow IPC headroom)
-    and is equivalence-pinned so either engine can serve the plan.
-
-    The text path deliberately stays on the Arrow kernel: the byte-identical
-    -text-per-url invariant is defined by ``extract_text`` (stdlib ``re``),
-    and re-expressing entity/whitespace folding in Java regex would make
-    byte-identity an empirical property instead of holding by construction.
-    """
-    from pyspark.sql import functions as F
-
-    h = F.col("html").cast("string")
-    styles = []
-    for pat in _JVM_GEO_PATTERNS:
-        m = F.regexp_extract(h, pat, 0)  # "" when the style is absent
-        la = F.regexp_extract(m, pat, 1).try_cast("double")
-        lo = F.regexp_extract(m, pat, 2).try_cast("double")
-        ok = (la.isNotNull() & lo.isNotNull()
-              & la.between(-90.0, 90.0) & lo.between(-180.0, 180.0))
-        # null struct when the style misses or is out of range → coalesce
-        # falls through to the next style, like the Python cascade
-        styles.append(F.when(ok, F.struct(la.alias("lat"), lo.alias("lon"))))
-    geo = F.coalesce(*styles)
-    return pages_df.select(
-        "url", geo["lat"].alias("lat"), geo["lon"].alias("lon"))
-
-
-def extract_pages(pages_df, *, with_text: bool = True,
-                  geo_engine: str = "arrow"):
+def extract_pages(pages_df, *, with_text: bool = True):
     """Spark plan: pages DataFrame → extracted DataFrame.
 
     Column-pruned before the UDF so only (url, html) crosses the Arrow
@@ -208,21 +144,11 @@ def extract_pages(pages_df, *, with_text: bool = True,
     ``with_text=False`` selects the geo-only extract (same rows, no ``text``
     column) for consumers that never output text — the byte-identical-text
     invariant stays pinned by the extractor's own tests either way.
-
-    ``geo_engine`` (geo-only path): ``"arrow"`` (default — measured
-    faster E2E, see ``extract_geo_jvm``) uses the mapInPandas kernel;
-    ``"jvm"`` the codegen Column-algebra cascade, the zero-Python plan for
-    Python-worker-constrained clusters.  Row-for-row equivalence of the two
-    engines is pinned by tests/test_extract_and_synth.py.
     """
-    from pyspark.sql import functions as F
-
     pruned = pages_df.select("url", "html")
     if with_text:
         return pruned.mapInPandas(extract_pages_batches,
                                   schema=EXTRACTED_SCHEMA)
-    if geo_engine == "jvm":
-        return extract_geo_jvm(pruned)
     # Examined and REJECTED (r6): nulling the payload JVM-side for pages
     # without a marker substring (lower(cast)+3×instr, then
     # when(has_marker, html)) — sound (any regex match implies the ASCII

@@ -479,13 +479,6 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     )
 
 
-def haversine_sql_cols(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """Spark-SQL haversine text (same formula as geo/distance.py)."""
-    from ..geo.distance import haversine_sql
-
-    return haversine_sql(lat1, lon1, lat2, lon2)
-
-
 def _haversine_places_sql(lat_col: str, lon_col: str) -> str:
     from ..geo.distance import haversine_sql
 

@@ -10,8 +10,10 @@ pages(url, warc_ts, html, text, lang)
 
 This is the Immich runtime semantic (reference README.md:103 — nearest-
 distance match against cities500) fused with the extract-stage polygon
-semantics, expressed as one Catalyst plan: the pages side is never shuffled —
-every join is broadcast, the kNN reduction is a map-side-combinable hash agg.
+semantics, expressed as one Catalyst plan: the pages side crosses exactly one
+exchange (the round-robin repartition after the bbox filter); every join is
+broadcast, and the kNN pick is a per-row ``array_min`` over the broadcast
+ring candidates — no aggregation on the pages side.
 """
 
 from __future__ import annotations
@@ -29,36 +31,30 @@ from ..operators.knn import (knn_join, knn_join_static, max_nn_spacing_km,
 from ..operators.pipjoin import pip_join
 from ..synth import TW_BBOX
 
+# res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
+# nearest-centroid distance of the village tiling, so virtually every row
+# settles in the zero-shuffle static path — one broadcast join + codegen.
+# The kNN ring grid is the PIP prefilter grid because an INTERLEAVED
+# same-session A/B (noop-measured, 2 M pages/32 cores) put a res-12 ring
+# with k=3 at 3.79 s vs 3.13 s here, even though the kNN stage ALONE
+# measured faster at 12/3 (0.93 vs 1.30 s over uniform synthetic points) —
+# sharing res lets the per-row cell encode CSE across the PIP and kNN joins,
+# and the 9-entry ring map beats the 49-entry one on broadcast build+probe.
+RES = 10      # PIP prefilter grid
+KNN_RES = 10  # kNN ring grid
+KNN_K = 1     # ring radius in cells
+
 
 def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
                           polys_pdf: pd.DataFrame, cities_pdf: pd.DataFrame, *,
                           bbox: tuple[float, float, float, float] = TW_BBOX,
-                          country_code: str = "TW",
-                          res: int = 10, knn_res: int = 10,
-                          knn_k: int = 1,
-                          geo_engine: str = "arrow") -> DataFrame:
-    # res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
-    # nearest-centroid distance of the village tiling, so virtually every
-    # row settles in the zero-shuffle static path — one broadcast join +
-    # codegen.  knn_res decouples the kNN ring grid from the PIP prefilter
-    # grid; both default to 10 because an INTERLEAVED same-session A/B
-    # (noop-measured, 2 M pages/32 cores) put knn_res=12 k=3 at 3.79 s vs
-    # 3.13 s here, even though the kNN stage ALONE measured faster at 12/3
-    # (0.93 vs 1.30 s over uniform synthetic points) — sharing res lets the
-    # per-row cell encode CSE across the PIP and kNN joins, and the 9-entry
-    # ring map beats the 49-entry one on broadcast build+probe.  The knob
-    # exists for place tables whose spacing genuinely demands another grid.
+                          country_code: str = "TW") -> DataFrame:
     """Full reverse-geocode of a pages table against polygon + point tables."""
     # geo-only kernel: this plan never outputs text, and pruning cannot
     # reach inside mapInPandas — the text pass (tag-strip + entities + ws
     # regexes per page) would otherwise run for every page only to be
     # dropped, and at a global corpus vs a Taiwan bbox that is ~all of it
-    # geo_engine="jvm" swaps the Arrow extract kernel for the zero-Python
-    # regexp_extract twin (extract.html_meta.extract_geo_jvm) — equivalence-
-    # pinned; serves executors whose cores can't afford a Python worker per
-    # task (see COVERAGE.md and the pinned-scaling A/B in BENCH/BASELINE.md)
-    ext = extract_pages(pages, with_text=False,
-                        geo_engine=geo_engine).observe(
+    ext = extract_pages(pages, with_text=False).observe(
         "extract_metrics",
         F.count(F.lit(1)).alias("pages_extracted"),
         F.count(F.col("lat")).alias("pages_with_geo"))
@@ -88,11 +84,11 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     polys.insert(0, "poly_id", range(len(polys)))
     with_admin = pip_join(
         spark, pts, polys[["poly_id", "geometry_wkb", "county", "township", "village"]],
-        id_col="poly_id", attr_cols=["county", "township", "village"], res=res,
+        id_col="poly_id", attr_cols=["county", "township", "village"], res=RES,
     ).drop("poly_id")
 
     # exactness precondition for the static (single-pass, action-free) kNN:
-    # the k-ring at `res` must cover the worst-case nearest-centroid distance
+    # the k-ring at KNN_RES must cover the worst-case nearest-centroid distance
     # of the cities table.  We MEASURE that from the data: the max nearest-
     # neighbor spacing of the (driver-resident) cities table is a covering-
     # radius proxy for tiling-derived point sets (adjacent tile centroids are
@@ -104,19 +100,19 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     # irregular cities tables — fall back to the general kNN join, whose
     # per-row guard + full-array CASE fallback is exact for any point set
     # (VERDICT.md round-1 item 5 / ADVICE.md item 2).
-    guard_km = knn_k * min_cell_km(knn_res,
+    guard_km = KNN_K * min_cell_km(KNN_RES,
                                    max(abs(bbox[0]), abs(bbox[1])) + 1.0)
     spacing_km = max_nn_spacing_km(cities_pdf)
     if spacing_km <= guard_km:
         named = knn_join_static(
             spark, with_admin, cities_pdf, query_id="url",
             place_cols=["geoname_id", "name", "admin1_code"],
-            res=knn_res, k=knn_k)
+            res=KNN_RES, k=KNN_K)
     else:
         named = knn_join(
             spark, with_admin, cities_pdf, query_id="url",
             place_cols=["geoname_id", "name", "admin1_code"],
-            res=knn_res, k=knn_k)
+            res=KNN_RES, k=KNN_K)
     # localized country display name (reference i18n-iso-countries zh-tw.json
     # via Immich's display path, README.md:103) — broadcast dim join.
     # country_code travels with bbox: a non-Taiwan invocation passes its own

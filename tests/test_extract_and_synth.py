@@ -148,118 +148,18 @@ class TestGeoOnlyKernel:
         assert list(geo.columns) == ["url", "lat", "lon"]
         assert geo.equals(full)
 
-
-class TestJvmGeoExtract:
-    """The Column-algebra geo extract (``extract_geo_jvm``) must agree with
-    the Arrow kernel row-for-row — the Python ``extract_geo`` function is
-    the semantic definition, the JVM cascade the scale path."""
-
-    def _compare(self, spark, htmls: list[bytes]):
-        from immich_geodata_zh_tw_spark.extract.html_meta import (
-            extract_geo, extract_pages)
-
-        pdf = pd.DataFrame({
-            "url": [f"u{i:05d}" for i in range(len(htmls))],
-            "html": htmls,
-        })
-        df = spark.createDataFrame(pdf)
-        got = (extract_pages(df, with_text=False, geo_engine="jvm")
-               .toPandas().sort_values("url").reset_index(drop=True))
-        want_rows = [extract_geo(h) for h in htmls]
-        want = pd.DataFrame({
-            "url": pdf["url"],
-            "lat": [r[0] if r else np.nan for r in want_rows],
-            "lon": [r[1] if r else np.nan for r in want_rows],
-        })
-        pd.testing.assert_frame_equal(got, want, check_exact=True)
-
-    def test_adversarial_corpus(self, spark):
-        """Deterministic adversarial sweep: style priority, bounds
-        fallthrough, case folding, whitespace variants, malformed UTF-8,
-        truncated tags, multiple tags, sign/decimal shapes."""
-        import random
-
-        rng = random.Random(20260819)
-        tags = {
-            "geo": '<meta name="geo.position" content="{a};{b}">',
-            "icbm": '<meta name="ICBM" content="{a}, {b}">',
-            "exif": '<meta name="exif.gps" content="{a} {b}">',
-        }
-        nums = ["25.04", "-90", "90", "91", "-91.5", "121.5", "-180",
-                "180", "181", "-200.25", "0", "7", "25.", ".5", "+3.1",
-                "1e2", "nan", "25.0000001"]
-        cases: list[bytes] = []
-        for style, t in tags.items():
-            for a in nums:
-                for b in nums[::3]:
-                    cases.append(t.format(a=a, b=b).encode())
-        # case folding + whitespace + attr-order variants
-        cases += [
-            b'<META NAME="GEO.POSITION" CONTENT="25.1;121.5">',
-            b'<meta  name="geo.position"  content="25.1;121.5">',
-            b'<meta\tname="ICBM"\ncontent="25.1,121.5">',
-            b'<meta name="icbm" content="25.1,  121.5">',
-            b'<meta name="ICBM" content="25.1,121.5">',
-            b'<meta name="exif.GPS" content="25.1\t121.5">',
-            b'<meta content="25.1;121.5" name="geo.position">',  # swapped
-            b'<meta name="geo.position" content="25.1,121.5">',  # wrong sep
-            b'<meta name="geo.position" content="25.1;121.5',    # truncated
-            b'<meta name="geo.position" content=25.1;121.5>',    # unquoted
-        ]
-        # bounds fallthrough: out-of-range first style + valid later style
-        cases += [
-            (tags["geo"].format(a="95", b="121") +
-             tags["icbm"].format(a="24.9", b="121.2")).encode(),
-            (tags["geo"].format(a="25", b="190") +
-             tags["exif"].format(a="-24", b="120")).encode(),
-            (tags["icbm"].format(a="99", b="0") +
-             tags["geo"].format(a="23", b="120")).encode(),  # priority wins
-            (tags["exif"].format(a="1", b="2") +
-             tags["geo"].format(a="3", b="4")).encode(),     # geo beats exif
-            (tags["geo"].format(a="95", b="0") +
-             tags["geo"].format(a="25", b="121")).encode(),  # 1st match only
-        ]
-        # malformed UTF-8 around and inside pages
-        cases += [
-            b"\xff\xfe" + tags["geo"].format(a="25.1", b="121.5").encode(),
-            tags["icbm"].format(a="24", b="121").encode() + b"\x80\x80",
-            b'<meta name="geo.position" content="25.1;121.5"> \xc3\x28 tail',
-            b"\xe4\xb8" + b'<meta name="exif.gps" content="24 121">',
-            b"no tags at all \xf0\x9f",
-        ]
-        # random soup with embedded tags
-        for _ in range(60):
-            soup = "".join(rng.choice(
-                ['<div>', 'x', ' ', '"', ';', ',', '&amp;', '台北', '<meta ',
-                 'name="geo.position"', 'content="25;121"'])
-                for _ in range(rng.randrange(3, 25)))
-            cases.append(soup.encode())
-        self._compare(spark, cases)
-
-    def test_synth_corpus_engines_agree(self, spark):
-        """jvm vs arrow engines over the real synthetic generator mix."""
-        from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
-        from immich_geodata_zh_tw_spark.synth.pages import pages_df
-
-        pg = pages_df(spark, 3000, partitions=8)
-        jvm = (extract_pages(pg, with_text=False, geo_engine="jvm")
-               .toPandas().sort_values("url").reset_index(drop=True))
-        arrow = (extract_pages(pg, with_text=False, geo_engine="arrow")
-                 .toPandas().sort_values("url").reset_index(drop=True))
-        pd.testing.assert_frame_equal(jvm, arrow, check_exact=True)
-        assert jvm["lat"].notna().sum() > 1000  # the mix really has geo rows
-
-    def test_jvm_plan_has_no_python(self, spark):
-        """The jvm-engine geo plan must contain no Python evaluation node
-        (ArrowEvalPython/MapInPandas/BatchEvalPython) — the point is that
-        (url, html) never crosses the IPC boundary.  The source here is a
-        plain local frame: the synthetic *generator* is itself a
-        mapInPandas, which would trip the assertion for the wrong node."""
+    def test_null_html_row(self, spark):
+        """A null ``html`` (nullable in the pages schema) gives null
+        lat/lon on both kernels and null text on the full one."""
         from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
 
-        src = spark.createDataFrame(pd.DataFrame({
-            "url": ["u1"], "html": [b'<meta name="ICBM" content="25,121">'],
-        }))
-        plan = (extract_pages(src, with_text=False, geo_engine="jvm")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "Python" not in plan and "Pandas" not in plan, plan
+        df = spark.createDataFrame(
+            [("u0", b'<meta name="ICBM" content="25.1, 121.5"><p>hi</p>'),
+             ("u1", None)], "url string, html binary")
+        full = (extract_pages(df).toPandas()
+                .sort_values("url").reset_index(drop=True))
+        geo = (extract_pages(df, with_text=False).toPandas()
+               .sort_values("url").reset_index(drop=True))
+        assert geo.equals(full.drop(columns="text"))
+        assert full.loc[0, ["lat", "lon", "text"]].tolist() == [25.1, 121.5, "hi"]
+        assert full.loc[1, ["lat", "lon", "text"]].isna().all()

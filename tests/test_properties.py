@@ -489,47 +489,6 @@ class TestCountryPairCorpus:
         assert zh._py_s2t("纽埃") == "紐埃"
 
 
-class TestResizeProperties:
-    """Area-average resize kernel (extract/multimodal.resize_pixels):
-    the overlap weights must PARTITION the source axis (each row a convex
-    combination, each input cell fully distributed), which implies global
-    mean preservation at any in/out shape pair."""
-
-    shapes = st.integers(min_value=1, max_value=37)
-
-    @given(shapes, shapes)
-    @settings(max_examples=150, deadline=None)
-    def test_weights_are_a_partition(self, n_in, n_out):
-        from immich_geodata_zh_tw_spark.extract.multimodal import \
-            _overlap_weights
-
-        w = _overlap_weights(n_in, n_out)
-        assert w.shape == (n_out, n_in)
-        assert (w >= 0).all()
-        # rows: convex combinations
-        assert np.allclose(w.sum(axis=1), 1.0)
-        # columns scaled by out/in: every input cell fully used
-        assert np.allclose(w.sum(axis=0), n_out / n_in)
-
-    @given(shapes, shapes, shapes, shapes,
-           st.integers(min_value=0, max_value=2 ** 31 - 1))
-    @settings(max_examples=60, deadline=None)
-    def test_global_mean_preserved(self, h, w, oh, ow, seed):
-        from immich_geodata_zh_tw_spark.extract.multimodal import \
-            resize_pixels
-
-        rng = np.random.default_rng(seed)
-        px = rng.integers(0, 256, size=(h, w, 3)).astype(np.uint8)
-        th = resize_pixels(px, oh, ow)
-        assert th.shape == (oh, ow, 3)
-        # weighted by output cell areas the mean is exactly the source
-        # mean; for uniform output cells (always true here: linspace
-        # edges) the plain mean suffices
-        assert np.allclose(th.mean(axis=(0, 1)),
-                           px.astype(np.float64).mean(axis=(0, 1)),
-                           atol=1e-6)
-
-
 class TestSubstrDedupProperty:
     """Randomized equivalence of dedup.substr_dedup against an independent
     in-memory reference over 40 seeded corpora of tiny-vocab texts (the
