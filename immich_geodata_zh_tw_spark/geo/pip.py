@@ -5,8 +5,10 @@ Replaces the exact-refinement role shapely's STRtree + ``contains`` would play
 this kernel does the exact test inside an Arrow-batched pandas UDF.
 
 Algorithm: standard even-odd ray casting (public domain; cf. W. Randolph
-Franklin's PNPOLY), vectorized so one call tests ``n`` points against one
-geometry in O(n · edges) numpy ops — no per-row Python.
+Franklin's PNPOLY), vectorized over whole batches of (point, polygon) pairs:
+a bbox test per pair, ``np.repeat`` expansion of the survivors' edges, one
+crossing test per (pair, edge) and ``np.bincount`` parity — no per-row or
+per-polygon Python.
 
 Boundary semantics: points exactly on an edge are implementation-defined (as
 with shapely's ``contains``); synthetic fixtures keep points off edges.
@@ -18,54 +20,89 @@ import numpy as np
 
 from . import wkb
 
+#: (pair, edge) rows expanded per numpy step (8 MB per float64 temporary)
+_EDGE_CHUNK = 1_000_000
+_BREAK = np.full((1, 2), np.nan)  # the ring-break vertex
 
-class PreparedGeometry:
-    """Edge arrays precomputed from WKB for repeated batch PIP tests."""
 
-    __slots__ = ("x1", "y1", "x2", "y2", "lon_min", "lat_min", "lon_max", "lat_max")
+def _vertices(rings: list[np.ndarray]) -> np.ndarray:
+    """One geometry's vertex rows, rings split by a NaN row; a geometry
+    without points is one NaN row.  A degenerate ring (< 4 points: fewer
+    than 3 distinct + closure) has no edges, but its points still count for
+    the bbox, so each of them becomes a one-vertex ring."""
+    pieces = [p for r in rings for p in (r[:, None] if len(r) < 4 else [r])]
+    if not pieces:
+        return _BREAK
+    return np.concatenate(
+        [pieces[0], *(x for p in pieces[1:] for x in (_BREAK, p))])
 
-    def __init__(self, wkb_bytes: bytes):
-        rings = wkb.decode(wkb_bytes)
-        xs1, ys1, xs2, ys2 = [], [], [], []
-        for ring in rings:
-            if len(ring) < 4:  # degenerate (needs >=3 distinct + closure)
-                continue
-            x, y = ring[:, 0], ring[:, 1]
-            xs1.append(x[:-1]); ys1.append(y[:-1])
-            xs2.append(x[1:]);  ys2.append(y[1:])
-        if xs1:
-            self.x1 = np.concatenate(xs1); self.y1 = np.concatenate(ys1)
-            self.x2 = np.concatenate(xs2); self.y2 = np.concatenate(ys2)
-        else:
-            self.x1 = self.y1 = self.x2 = self.y2 = np.empty(0)
-        pts = np.vstack([r for r in rings]) if rings else np.zeros((1, 2))
-        self.lon_min = float(pts[:, 0].min()); self.lat_min = float(pts[:, 1].min())
-        self.lon_max = float(pts[:, 0].max()); self.lat_max = float(pts[:, 1].max())
 
-    def contains(self, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-        """Boolean mask: which (lon, lat) points fall inside (even-odd rule)."""
+class PolygonTable:
+    """Polygons as one CSR vertex table, built once on the driver and
+    broadcast to executors: geometry ``i`` (id ``ids[i]``) owns vertices
+    ``off[i]:off[i + 1]`` of ``x`` / ``y`` (lon / lat), consecutive vertices
+    form its edges, and a NaN vertex breaks rings (an edge touching NaN
+    never crosses a ray).  Vertices, not edges, keep the payload no bigger
+    than the WKB; the bboxes and the id lookup are derived on load, not
+    pickled.  Coordinates must be finite."""
+
+    def __init__(self, ids, off, x, y):
+        self.ids, self.off, self.x, self.y = ids, off, x, y
+        starts = off[:-1]  # every geometry owns ≥ 1 vertex
+        self.bbox = np.stack([np.fmin.reduceat(x, starts),
+                              np.fmin.reduceat(y, starts),
+                              np.fmax.reduceat(x, starts),
+                              np.fmax.reduceat(y, starts)], axis=1)
+        self._order = np.argsort(ids, kind="stable")
+        self._sorted_ids = ids[self._order]
+
+    def __reduce__(self):
+        return PolygonTable, (self.ids, self.off, self.x, self.y)
+
+    @classmethod
+    def from_wkb(cls, ids, bufs) -> "PolygonTable":
+        verts = [_vertices(wkb.decode(bytes(b))) for b in bufs]
+        sizes = np.fromiter(map(len, verts), dtype=np.int64, count=len(verts))
+        xy = np.concatenate(verts) if verts else np.empty((0, 2))
+        return cls(np.asarray(ids), np.r_[0, np.cumsum(sizes)].astype(np.int32),
+                   np.ascontiguousarray(xy[:, 0]), np.ascontiguousarray(xy[:, 1]))
+
+    def rows(self, ids) -> np.ndarray:
+        """Table rows of ``ids`` (every id must be in the table)."""
+        return self._order[np.searchsorted(self._sorted_ids, ids)]
+
+    def contains(self, row, lon, lat) -> np.ndarray:
+        """Is point ``j`` inside geometry ``row[j]`` (even-odd rule)?"""
+        row = np.asarray(row, dtype=np.int64)
         lon = np.asarray(lon, dtype=np.float64)
         lat = np.asarray(lat, dtype=np.float64)
-        out = np.zeros(lon.shape, dtype=bool)
-        # bbox prefilter keeps the O(n·edges) broadcast small
-        cand = (
-            (lon >= self.lon_min) & (lon <= self.lon_max)
-            & (lat >= self.lat_min) & (lat <= self.lat_max)
-        )
-        if not cand.any() or self.x1.size == 0:
-            return out
-        px = lon[cand][:, None]
-        py = lat[cand][:, None]
-        y1, y2 = self.y1[None, :], self.y2[None, :]
-        x1, x2 = self.x1[None, :], self.x2[None, :]
-        straddle = (y1 > py) != (y2 > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-        crossings = np.sum(straddle & (px < xint), axis=1)
-        out[cand] = (crossings % 2) == 1
+        out = np.zeros(row.shape, dtype=bool)
+        b = self.bbox[row]
+        live = np.flatnonzero((lon >= b[:, 0]) & (lon <= b[:, 2])
+                              & (lat >= b[:, 1]) & (lat <= b[:, 3]))
+        first = self.off[row[live]]
+        n_edges = np.maximum(self.off[row[live] + 1] - first - 1, 0)
+        total = int(n_edges.sum())
+        cuts = np.searchsorted(np.cumsum(n_edges),
+                               np.arange(_EDGE_CHUNK, total, _EDGE_CHUNK))
+        for idx in np.split(np.arange(live.size), cuts):
+            part, ne = live[idx], n_edges[idx]  # ≤ ~_EDGE_CHUNK edges
+            pair = np.repeat(np.arange(part.size), ne)
+            e = np.arange(ne.sum()) + np.repeat(
+                first[idx] - (np.cumsum(ne) - ne), ne)
+            px, py = lon[part][pair], lat[part][pair]
+            x1, y1, x2, y2 = self.x[e], self.y[e], self.x[e + 1], self.y[e + 1]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                straddle = (y1 > py) != (y2 > py)
+                xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+            crossings = np.bincount(pair[straddle & (px < xint)],
+                                    minlength=part.size)
+            out[part] = (crossings % 2) == 1
         return out
 
 
 def contains_wkb(wkb_bytes: bytes, lon, lat) -> np.ndarray:
-    """One-shot convenience: PIP test without caching the prepared geometry."""
-    return PreparedGeometry(wkb_bytes).contains(np.asarray(lon), np.asarray(lat))
+    """One-shot convenience: PIP test of points against one geometry."""
+    lon = np.asarray(lon)
+    return PolygonTable.from_wkb([0], [wkb_bytes]).contains(
+        np.zeros(lon.shape, dtype=np.int64), lon, lat)

@@ -90,9 +90,8 @@ _ORIGIN = np.zeros((1, 2))
 def bounds_array(bufs) -> np.ndarray:
     """(n, 4) float64 array of (lon_min, lat_min, lon_max, lat_max), one row
     per WKB geometry in ``bufs``, degenerate rings included.  A geometry
-    without points reports (0, 0, 0, 0), as ``pip.PreparedGeometry`` does.
-    One min/max reduction over all geometries' points, not one per
-    geometry."""
+    without points reports (0, 0, 0, 0).  One min/max reduction over all
+    geometries' points, not one per geometry."""
     pts = [np.concatenate(decode(bytes(b)) or [_ORIGIN]) for b in bufs]
     pts = [g if len(g) else _ORIGIN for g in pts]
     if not pts:

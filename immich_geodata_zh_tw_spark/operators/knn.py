@@ -6,9 +6,10 @@ one row per village centroid, so k=1 lands on the right village).  At 10^12
 pages a cross join is impossible; the scalable plan is:
 
 1. encode each query point's grid cell in pure Column algebra (no UDF);
-2. explode the **small** places table by the k-ring of each place's cell
-   (driver-side numpy — the places table is broadcast-sized by construction,
-   ~10^4 rows; the 10^12-row side is never exploded and never shuffled);
+2. group the **small** places table by the cells of each place's k-ring
+   on the driver into one Arrow frame of per-cell candidate arrays (the
+   places table is broadcast-sized by construction, ~10^4 rows; the
+   10^12-row side is never exploded and never shuffled);
 3. broadcast equi-join on the query's own cell → per-row candidate array;
 4. pick the nearest candidate with ``array_min(transform(...))`` — evaluated
    inside whole-stage codegen, 1 row in → 1 row out, NO explode, NO groupBy
@@ -33,6 +34,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,31 +50,50 @@ _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 _GUARD_SAFETY = 0.999
 
 
+def _kring_rows(places_pdf, *, lat_col: str, lon_col: str, res: int,
+                k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, cell) per (place, covering cell): ``row`` indexes
+    ``places_pdf``, ``cell`` is a cell of the place's k-ring."""
+    rings = grid.k_ring(grid.cell_of(places_pdf[lat_col].to_numpy(),
+                                     places_pdf[lon_col].to_numpy(), res), k)
+    keep = rings.ravel() >= 0  # -1: beyond a pole
+    return (np.repeat(np.arange(len(rings)), rings.shape[1])[keep],
+            rings.ravel()[keep])
+
+
 def explode_places_by_kring(spark: SparkSession, places_pdf, *,
                             lat_col: str, lon_col: str,
                             res: int, k: int) -> DataFrame:
     """Small-side prep: one row per (place, covered cell), as a Spark DF.
 
     ``places_pdf`` is a pandas DataFrame (broadcast-scale by contract).
-    Adds ``cell`` (the covering cell) and ``ring`` (Chebyshev cell distance
-    from the place's own cell to that covering cell — equal to the query→place
-    cell distance when a query in ``cell`` probes this row).
+    Adds ``cell`` (the covering cell).
     """
-    cells = grid.cell_of(places_pdf[lat_col].to_numpy(),
-                         places_pdf[lon_col].to_numpy(), res)
-    rings = grid.k_ring(cells, k)  # (n, (2k+1)^2)
-    n, m = rings.shape
-    offs = np.arange(-k, k + 1, dtype=np.int64)
-    drow = np.repeat(offs, 2 * k + 1)
-    dcol = np.tile(offs, 2 * k + 1)
-    cheb = np.maximum(np.abs(drow), np.abs(dcol))  # (m,)
-    idx = np.repeat(np.arange(n), m)
-    flat = rings.ravel()
-    keep = flat >= 0
-    out = places_pdf.iloc[idx[keep]].reset_index(drop=True)
-    out["cell"] = flat[keep]
-    out["ring"] = np.tile(cheb, n)[keep].astype(np.int32)
+    row, cell = _kring_rows(places_pdf, lat_col=lat_col, lon_col=lon_col,
+                            res=res, k=k)
+    out = places_pdf.iloc[row].reset_index(drop=True)
+    out["cell"] = cell
     return spark.createDataFrame(out)
+
+
+def _candidate_arrays(spark: SparkSession, places_pdf, row, key,
+                      fields: dict[str, str], cells=None) -> DataFrame:
+    """``(cell, __places)``: per cell of ``cells`` (default: the distinct
+    ``key`` values), the candidate structs ``fields`` of the ``places_pdf``
+    rows ``row`` whose ``key`` is that cell.  Grouped on the driver and
+    shipped as ONE Arrow frame — a Spark ``collect_list`` over an exploded
+    row table cost ~680 py4j round trips to build and an exchange on every
+    execution."""
+    order = np.argsort(key, kind="stable")
+    key, row = key[order], row[order]
+    cells = np.unique(key) if cells is None else cells
+    structs = pa.StructArray.from_arrays(
+        [pa.array(places_pdf[src].to_numpy()[row], from_pandas=True)
+         for src in fields.values()], names=list(fields))
+    places = pa.ListArray.from_arrays(
+        pa.array(np.r_[np.searchsorted(key, cells), key.size].astype(np.int32)),
+        structs)
+    return spark.createDataFrame(pa.table({"cell": cells, "__places": places}))
 
 
 def min_cell_km(res: int, max_abs_lat: float) -> float:
@@ -309,40 +330,47 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
     return best[1], best[2]
 
 
-def _reduce_dup_coord_places(places_pdf, *, place_lat: str, place_lon: str,
-                             tiebreak: str):
-    """One row per distinct coordinate, keeping the min-``tiebreak`` row.
+def _places_side(places_pdf, place_lat: str, place_lon: str,
+                 place_cols: list[str] | None):
+    """(places, fields): one place per distinct coordinate, keeping the
+    min-tiebreak row, and the candidate struct's field → column map (plat,
+    plon, then ``tb`` — the first place column, the tie-break — then the
+    payload).
 
-    EXACT for the 1-NN joins here: every query's distance to coordinate
-    twins is identical, and ``_best_over`` breaks ties on ``tiebreak``
-    ascending (struct array_min compares (d, tb, …) lexicographically;
-    ``tiebreak`` is a unique key by caller contract), so among places
-    sharing BOTH coordinates only the min-tiebreak row can ever win —
-    pinned by test_spatial_joins.  Duplicate-bearing tables otherwise
-    multiply every candidate array and the brute-fallback array by the
-    duplication factor (the r6 4×-supplier bench: place coords are mod-997
-    products, so 4 000 suppliers put 4 copies on every point — kNN row
-    23× slower)."""
+    The reduction is EXACT for the 1-NN joins here: every query's distance
+    to coordinate twins is identical, and ``_best_over`` breaks ties on
+    ``tb`` ascending (struct array_min compares (d, tb, …)
+    lexicographically; the tie-break is a unique key by caller contract),
+    so among places sharing BOTH coordinates only the min-tiebreak row can
+    ever win — pinned by test_spatial_joins.  Duplicate-bearing tables
+    otherwise multiply every candidate array and the brute-fallback array
+    by the duplication factor (the r6 4×-supplier bench: place coords are
+    mod-997 products, so 4 000 suppliers put 4 copies on every point — kNN
+    row 23× slower)."""
+    if place_cols is None:
+        place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
     if places_pdf.duplicated([place_lat, place_lon]).any():
-        places_pdf = (places_pdf.sort_values(tiebreak, kind="mergesort")
+        places_pdf = (places_pdf.sort_values(place_cols[0], kind="mergesort")
                       .drop_duplicates([place_lat, place_lon], keep="first")
                       .sort_index())
-    return places_pdf
+    return places_pdf, {"plat": place_lat, "plon": place_lon,
+                        "tb": place_cols[0], **{c: c for c in place_cols[1:]}}
 
 
-def _candidate_struct(place_lat: str, place_lon: str, tiebreak: str,
-                      place_cols: list[str]) -> Column:
-    return F.struct(
-        F.col(place_lat).alias("plat"), F.col(place_lon).alias("plon"),
-        F.col(tiebreak).alias("tb"),
-        *[F.col(c).alias(c) for c in place_cols if c != tiebreak])
+def _output(out: DataFrame, queries: DataFrame,
+            fields: dict[str, str]) -> DataFrame:
+    return out.select(
+        *queries.columns,
+        F.col("__best.tb").alias(fields["tb"]),
+        *[F.col(f"__best.{c}").alias(c) for c in list(fields)[3:]],
+        F.col("__best.d").alias("knn_dist_km"),
+    )
 
 
-def _best_over(array_col: str, lat_col: str, lon_col: str, tiebreak: str,
-               place_cols: list[str]) -> Column:
+def _best_over(array_col: str, lat_col: str, lon_col: str,
+               fields: dict[str, str]) -> Column:
     dist_sql = _haversine_places_sql(lat_col, lon_col)
-    payload = ", ".join(["p.tb AS tb",
-                         *[f"p.{c} AS {c}" for c in place_cols if c != tiebreak]])
+    payload = ", ".join(f"p.{f} AS {f}" for f in list(fields)[2:])
     return F.expr(
         f"array_min(transform({array_col}, p -> struct({dist_sql} AS d, {payload})))")
 
@@ -372,12 +400,8 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
     (silently ignoring it would hand back a different ring than asked
     for); pin an int res to control k (default 1).
     """
-    if place_cols is None:
-        place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
-    tiebreak = place_cols[0]
-    places_pdf = _reduce_dup_coord_places(
-        places_pdf, place_lat=place_lat, place_lon=place_lon,
-        tiebreak=tiebreak)
+    places_pdf, fields = _places_side(places_pdf, place_lat, place_lon,
+                                      place_cols)
     if res == "auto":
         if k is not None:
             raise ValueError("res='auto' derives BOTH res and k from the "
@@ -385,50 +409,37 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
         res, k = auto_ring(places_pdf, lat_col=place_lat, lon_col=place_lon)
     elif k is None:
         k = 1
+    row, cell = _kring_rows(places_pdf, lat_col=place_lat,
+                            lon_col=place_lon, res=res, k=k)
+    grouped = _candidate_arrays(spark, places_pdf, row, cell, fields)
 
-    exploded = explode_places_by_kring(
-        spark, places_pdf, lat_col=place_lat, lon_col=place_lon, res=res, k=k)
-    grouped = exploded.groupBy("cell").agg(
-        F.collect_list(_candidate_struct(place_lat, place_lon, tiebreak,
-                                         place_cols)).alias("__places"))
-
-    # one-row DF carrying ALL places as a single array — the brute-force
-    # fallback operand (same broadcast payload the round-1 tail used, now
-    # fused into the per-row CASE instead of a separate plan + union).
-    # Measured (round 3, VERDICT round-2 item 4): 2M query rows × 500
-    # places on 32 cores = 0.4 s end-to-end — the CASE's lazy branch means
-    # settled rows never evaluate the array fold, and codegen pipelines the
-    # broadcast row reference without copying the array into output rows
-    # (it is projected away before any materialization boundary).  The cap
-    # that matters is the BROADCAST size of the places table itself, which
-    # binds every kNN variant here equally; beyond broadcast scale, switch
-    # to a cell-bucketed shuffle join on the k-ring (same explode, join on
-    # cell instead of broadcast) — the fallback residual then routes
-    # through a pair of per-row nearest cells rather than a global array.
-    all_places = (spark.createDataFrame(places_pdf)
-                  .agg(F.collect_list(
-                      _candidate_struct(place_lat, place_lon, tiebreak,
-                                        place_cols)).alias("__all")))
+    # one-row DF carrying ALL places as one array — the exact fallback
+    # operand of the per-row CASE, whose lazy branch means settled rows never
+    # fold it (round 3: 2M query rows × 500 places on 32 cores = 0.4 s).
+    # The cap is the BROADCAST size of the places table, the same for every
+    # kNN variant here; beyond it, switch to a cell-bucketed shuffle join on
+    # the k-ring, the fallback residual routing through per-row nearest
+    # cells rather than a global array.
+    n = len(places_pdf)
+    all_places = _candidate_arrays(
+        spark, places_pdf, np.arange(n), np.zeros(n, dtype=np.int64), fields,
+        cells=np.zeros(1, dtype=np.int64)).select(
+            F.col("__places").alias("__all"))
 
     q = queries.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
     joined = (q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "left")
               .drop("cell")
               .crossJoin(F.broadcast(all_places)))
 
-    ring_best = _best_over("__places", lat_col, lon_col, tiebreak, place_cols)
-    brute_best = _best_over("__all", lat_col, lon_col, tiebreak, place_cols)
+    ring_best = _best_over("__places", lat_col, lon_col, fields)
+    brute_best = _best_over("__all", lat_col, lon_col, fields)
     guard = guard_km_col(F.col(lat_col), res=res, k=k)
 
     out = joined.withColumn("__rb", ring_best)
     settled = F.col("__rb").isNotNull() & (F.col("__rb.d") <= guard)
-    out = out.withColumn("__best", F.when(settled, F.col("__rb"))
-                         .otherwise(brute_best))
-    return out.select(
-        *[c for c in queries.columns],
-        F.col("__best.tb").alias(tiebreak),
-        *[F.col(f"__best.{c}").alias(c) for c in place_cols if c != tiebreak],
-        F.col("__best.d").alias("knn_dist_km"),
-    )
+    return _output(out.withColumn("__best", F.when(settled, F.col("__rb"))
+                                  .otherwise(brute_best)),
+                   queries, fields)
 
 
 def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
@@ -447,36 +458,24 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     :func:`knn_join` when the check fails).  Queries with no candidate in the
     ring are dropped; use :func:`knn_join` when coverage is unknown.
 
-    Plan shape: the small side is pre-grouped per covering cell into an
-    ``array<struct(lat, lon, payload…)>`` and broadcast; each query row joins
+    Plan shape: the small side is grouped per covering cell on the driver
+    into an ``array<struct(lat, lon, payload…)>`` and broadcast (no
+    aggregate, no exchange anywhere in the plan); each query row joins
     its own cell's candidate array (1 row in → 1 row out — NO explode) and
     picks the nearest with ``array_min(transform(...))`` in whole-stage
     codegen.  Streaming/foreachBatch-safe (no actions).
     """
-    if place_cols is None:
-        place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
-    tiebreak = place_cols[0]
-    places_pdf = _reduce_dup_coord_places(
-        places_pdf, place_lat=place_lat, place_lon=place_lon,
-        tiebreak=tiebreak)
-
-    exploded = explode_places_by_kring(
-        spark, places_pdf, lat_col=place_lat, lon_col=place_lon, res=res, k=k)
-    grouped = exploded.groupBy("cell").agg(
-        F.collect_list(_candidate_struct(place_lat, place_lon, tiebreak,
-                                         place_cols)).alias("__places"))
+    places_pdf, fields = _places_side(places_pdf, place_lat, place_lon,
+                                      place_cols)
+    row, cell = _kring_rows(places_pdf, lat_col=place_lat,
+                            lon_col=place_lon, res=res, k=k)
+    grouped = _candidate_arrays(spark, places_pdf, row, cell, fields)
 
     q = queries.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
     joined = q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "inner")
 
-    best = _best_over("__places", lat_col, lon_col, tiebreak, place_cols)
-    out = joined.withColumn("__best", best)
-    return out.select(
-        *[c for c in queries.columns],
-        F.col("__best.tb").alias(tiebreak),
-        *[F.col(f"__best.{c}").alias(c) for c in place_cols if c != tiebreak],
-        F.col("__best.d").alias("knn_dist_km"),
-    )
+    best = _best_over("__places", lat_col, lon_col, fields)
+    return _output(joined.withColumn("__best", best), queries, fields)
 
 
 def _haversine_places_sql(lat_col: str, lon_col: str) -> str:

@@ -8,10 +8,12 @@ assigned the admin polygon containing it.  Scalable plan:
 2. points (10^12 side) compute their cell in Column algebra and broadcast
    equi-join → candidate (point, poly_id) pairs.  Non-overlapping admin
    tilings yield ~1 candidate per point (plus bbox false positives);
-3. exact refinement inside an Arrow-batched pandas UDF: polygons ship to
-   executors once as a Spark broadcast of raw WKB (pickle-cheap); each
-   executor lazily prepares edge arrays (PreparedGeometry) and caches them
-   process-wide, then tests whole batches vectorized (no per-row Python).
+3. exact refinement inside an Arrow-batched pandas UDF: the driver packs the
+   polygons into one CSR vertex table (:class:`pip.PolygonTable`, no bigger
+   than their WKB), broadcast once per call; each batch of candidate pairs
+   is tested in one vectorized pass — bbox test per pair, edge expansion
+   over the survivors, crossing parity — with no per-row or per-polygon
+   Python and no executor-side cache.
 
 No shuffle touches the big side at any step — the only wide operation is the
 broadcast itself.
@@ -27,19 +29,6 @@ from pyspark.sql.types import BooleanType
 
 from ..functions.geo import cell_expr
 from ..geo import grid, pip, wkb
-
-# executor-local cache: per-pip_join-call key → {poly_id: PreparedGeometry}.
-# Keyed by a driver-side monotonic counter captured in the UDF closure (one
-# key per pip_join call, never recycled), NOT ``id(bc.value)`` — Python
-# object ids ARE recycled after GC, so a long-lived executor serving several
-# pip_join calls could silently hit a stale entry and test points against the
-# wrong polygon set (ADVICE.md round-1 item 3).  Bounded: oldest entries
-# evicted beyond _CACHE_MAX.
-import itertools
-
-_PREPARED_CACHE: dict[int, dict] = {}
-_CACHE_MAX = 8
-_CALL_COUNTER = itertools.count()
 
 
 def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
@@ -93,38 +82,14 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
     cover = spark.createDataFrame(polygon_cells_pdf(polys_pdf, id_col=id_col,
                                                     wkb_col=wkb_col, res=res))
     bc = spark.sparkContext.broadcast(
-        {pid: bytes(buf) for pid, buf in zip(polys_pdf[id_col], polys_pdf[wkb_col])})
-    call_key = next(_CALL_COUNTER)  # closure-captured, unique per call
+        pip.PolygonTable.from_wkb(polys_pdf[id_col], polys_pdf[wkb_col]))
 
     @F.pandas_udf(BooleanType())
     def contains_udf(pid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if call_key not in _PREPARED_CACHE and len(_PREPARED_CACHE) >= _CACHE_MAX:
-            _PREPARED_CACHE.pop(next(iter(_PREPARED_CACHE)))
-        cache = _PREPARED_CACHE.setdefault(call_key, {})
-        out = np.zeros(len(pid), dtype=bool)
-        lon_np = lon.to_numpy(dtype=np.float64)
-        lat_np = lat.to_numpy(dtype=np.float64)
-        # vectorize per distinct polygon within the batch.  Group rows by
-        # polygon via ONE stable argsort + run-boundary split — the
-        # per-unique boolean-mask form was O(|polys| × batch): with ~500
-        # polygons present in every (round-robin-shuffled) 10 k-row batch
-        # it allocated 500 full-batch masks per batch, measured r6 as the
-        # dominant CPU of the flagship tail stage
-        pid_np = pid.to_numpy()
-        if len(pid_np) == 0:
-            return pd.Series(out)
-        order = np.argsort(pid_np, kind="stable")
-        spid = pid_np[order]
-        starts = np.flatnonzero(
-            np.concatenate(([True], spid[1:] != spid[:-1])))
-        for s, e in zip(starts, np.append(starts[1:], len(spid))):
-            idx = order[s:e]
-            p = spid[s]
-            geom = cache.get(p)
-            if geom is None:
-                geom = cache[p] = pip.PreparedGeometry(bc.value[p])
-            out[idx] = geom.contains(lon_np[idx], lat_np[idx])
-        return pd.Series(out)
+        table = bc.value
+        return pd.Series(table.contains(table.rows(pid.to_numpy()),
+                                        lon.to_numpy(dtype=np.float64),
+                                        lat.to_numpy(dtype=np.float64)))
 
     pts = points.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
     cand = pts.join(F.broadcast(cover), pts["__cell"] == cover["cell"], "inner")

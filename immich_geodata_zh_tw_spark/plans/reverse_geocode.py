@@ -26,23 +26,34 @@ from ..extract.html_meta import extract_pages
 from ..functions.countries import localize_country
 from ..functions.geo import cell_expr, in_bbox
 from ..geo import grid
-from ..operators.knn import (knn_join, knn_join_static, max_nn_spacing_km,
-                             min_cell_km)
+from ..operators.knn import (auto_ring, knn_join, knn_join_static,
+                             max_nn_spacing_km, min_cell_km)
 from ..operators.pipjoin import pip_join
 from ..synth import TW_BBOX
 
-# res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
-# nearest-centroid distance of the village tiling, so virtually every row
-# settles in the zero-shuffle static path — one broadcast join + codegen.
-# The kNN ring grid is the PIP prefilter grid because an INTERLEAVED
-# same-session A/B (noop-measured, 2 M pages/32 cores) put a res-12 ring
-# with k=3 at 3.79 s vs 3.13 s here, even though the kNN stage ALONE
-# measured faster at 12/3 (0.93 vs 1.30 s over uniform synthetic points) —
-# sharing res lets the per-row cell encode CSE across the PIP and kNN joins,
-# and the 9-entry ring map beats the 49-entry one on broadcast build+probe.
-RES = 10      # PIP prefilter grid
-KNN_RES = 10  # kNN ring grid
-KNN_K = 1     # ring radius in cells
+
+def grid_res(cities_pdf: pd.DataFrame,
+             bbox: tuple[float, float, float, float] = TW_BBOX) -> int | None:
+    """The flagship's grid: the finest res in [4, MAX_RES] whose k=1 ring
+    guard covers the cities table's max nearest-neighbour spacing, or None.
+
+    The guard is the static kNN's exactness precondition: the spacing is a
+    covering-radius proxy for tiling-derived point sets (adjacent tile
+    centroids are one tile apart; half-diagonal ≤ NN spacing at aspect ratio
+    ≤ ~1.4), measured by an exact grid-bucketed search (0.02 s at 8,000
+    villages).  One res serves both joins: the reference's cities table
+    holds one centroid per village, so that res also puts about one village
+    in each PIP cell — 12 at 8,000 villages (spacing 3.88 km, guard
+    4.37 km; 4.4 candidates per point and 11.5 per query, against 29.7 and
+    175 at a fixed res 10), 10 on the 500-village ``bench.py`` fixture.
+    History: res 10 was fixed on that fixture, where an interleaved A/B put
+    a res-12, k=3 kNN ring beside a res-10 PIP grid at 3.79 s vs 3.13 s
+    (2 M pages, 32 cores); the computed res keeps one grid and k=1.
+    """
+    spacing_km = max_nn_spacing_km(cities_pdf)
+    max_lat = max(abs(bbox[0]), abs(bbox[1])) + 1.0
+    return next((res for res in range(grid.MAX_RES, 3, -1)
+                 if min_cell_km(res, max_lat) >= spacing_km), None)
 
 
 def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
@@ -80,39 +91,23 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
            # stragglers.
            .repartition(spark.sparkContext.defaultParallelism))
 
+    # no res guards a sparse or irregular cities table: take the general
+    # kNN join at auto_ring's ring — its per-row guard + full-array CASE
+    # fallback is exact for any point set (VERDICT.md round-1 item 5)
+    res, k = grid_res(cities_pdf, bbox), 1
+    static = res is not None
+    if not static:
+        res, k = auto_ring(cities_pdf)
+
     polys = polys_pdf.reset_index(drop=True).copy()
     polys.insert(0, "poly_id", range(len(polys)))
     with_admin = pip_join(
         spark, pts, polys[["poly_id", "geometry_wkb", "county", "township", "village"]],
-        id_col="poly_id", attr_cols=["county", "township", "village"], res=RES,
+        id_col="poly_id", attr_cols=["county", "township", "village"], res=res,
     ).drop("poly_id")
-
-    # exactness precondition for the static (single-pass, action-free) kNN:
-    # the k-ring at KNN_RES must cover the worst-case nearest-centroid distance
-    # of the cities table.  We MEASURE that from the data: the max nearest-
-    # neighbor spacing of the (driver-resident) cities table is a covering-
-    # radius proxy for tiling-derived point sets (adjacent tile centroids are
-    # one tile apart; half-diagonal ≤ NN spacing at aspect ratio ≤ ~1.4).
-    # The measurement is an exact grid-bucketed search, near-linear in the
-    # table size (0.02 s at 8,000 villages, ~1 s at the global cities500's
-    # ~200 k points; the O(n²) scan it replaced took 3.5 s at 8,000 and was
-    # the bulk of this plan's build time).  When the check fails — sparse or
-    # irregular cities tables — fall back to the general kNN join, whose
-    # per-row guard + full-array CASE fallback is exact for any point set
-    # (VERDICT.md round-1 item 5 / ADVICE.md item 2).
-    guard_km = KNN_K * min_cell_km(KNN_RES,
-                                   max(abs(bbox[0]), abs(bbox[1])) + 1.0)
-    spacing_km = max_nn_spacing_km(cities_pdf)
-    if spacing_km <= guard_km:
-        named = knn_join_static(
-            spark, with_admin, cities_pdf, query_id="url",
-            place_cols=["geoname_id", "name", "admin1_code"],
-            res=KNN_RES, k=KNN_K)
-    else:
-        named = knn_join(
-            spark, with_admin, cities_pdf, query_id="url",
-            place_cols=["geoname_id", "name", "admin1_code"],
-            res=KNN_RES, k=KNN_K)
+    named = (knn_join_static if static else knn_join)(
+        spark, with_admin, cities_pdf, query_id="url",
+        place_cols=["geoname_id", "name", "admin1_code"], res=res, k=k)
     # localized country display name (reference i18n-iso-countries zh-tw.json
     # via Immich's display path, README.md:103) — broadcast dim join.
     # country_code travels with bbox: a non-Taiwan invocation passes its own

@@ -99,10 +99,9 @@ def get_spark(app_name: str = "immich-geodata-zh-tw-spark",
         # case but a 27 s full-GC outlier; 16g: 4.6-5.4 s consistently)
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # UI off by default (costs listener overhead at bench time);
-        # SPARK_GRAFT_UI=true turns it on to read per-stage times from the
-        # REST API
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: it costs listener overhead at bench time, and per-stage
+        # times come from the event log of a traced benchmark run
+        .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     _ship_package(spark)

@@ -15,6 +15,29 @@ def _plan(df) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
+def _check_flagship_plan(spark, cities_pdf) -> None:
+    import re
+    from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
+        reverse_geocode_pages
+    from immich_geodata_zh_tw_spark.synth import pages, polygons
+
+    out = reverse_geocode_pages(
+        spark, pages.pages_df(spark, 100),
+        polygons.admin_polygons_pdf(village_grid=2), cities_pdf)
+    plan = _plan(out)
+    assert "SortMergeJoin" not in plan
+    assert "collect_list" not in plan and "Aggregate" not in plan, plan
+    blocks = re.split(r"\n\n", plan)
+    shuffles = [b for b in blocks
+                if re.match(r"\(\d+\) Exchange\b", b.strip())]
+    # pages-side rows (url/html/lat/lon) cross exactly ONE exchange — the
+    # documented post-filter repartition — and no other shuffle exists
+    pages_shuffles = [b for b in shuffles if re.search(r"\b(url|html)#", b)]
+    assert len(pages_shuffles) == 1, pages_shuffles
+    assert "RoundRobinPartitioning" in pages_shuffles[0]
+    assert len(shuffles) == 1, shuffles
+
+
 class TestPlanQuality:
     def test_knn_join_is_broadcast_only(self, spark):
         """The kNN hot path must never sort-merge-join the big side."""
@@ -92,28 +115,23 @@ class TestPlanQuality:
     def test_flagship_single_wide_op(self, spark):
         """The full reverse-geocode plan: no sort-merge join, and the ONLY
         non-broadcast exchange is the single documented post-filter
-        repartition — the pages side is otherwise never shuffled."""
-        import re
-        from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
-            reverse_geocode_pages
-        from immich_geodata_zh_tw_spark.synth import cities, pages, polygons
+        repartition — the pages side is otherwise never shuffled, and the
+        places side is grouped on the driver (no collect_list aggregate)."""
+        from immich_geodata_zh_tw_spark.synth import cities
 
-        out = reverse_geocode_pages(
-            spark, pages.pages_df(spark, 100),
-            polygons.admin_polygons_pdf(village_grid=2),
-            cities.cities_pdf(village_grid=2))
-        plan = _plan(out)
-        assert "SortMergeJoin" not in plan
-        blocks = re.split(r"\n\n", plan)
-        shuffles = [b for b in blocks
-                    if re.match(r"\(\d+\) Exchange\b", b.strip())]
-        # pages-side rows (url/html/lat/lon) cross exactly ONE exchange — the
-        # documented post-filter repartition; any other shuffle may only
-        # touch dimension-sized sides (the cell→array place grouping)
-        pages_shuffles = [b for b in shuffles
-                          if re.search(r"\b(url|html)#", b)]
-        assert len(pages_shuffles) == 1, pages_shuffles
-        assert "RoundRobinPartitioning" in pages_shuffles[0]
+        _check_flagship_plan(spark, cities.cities_pdf(village_grid=2))
+
+    def test_flagship_general_knn_path(self, spark):
+        """The same plan rules on the general kNN path, which a cities
+        table no ring guards takes (here: one far-away place)."""
+        from immich_geodata_zh_tw_spark.plans.reverse_geocode import grid_res
+        from immich_geodata_zh_tw_spark.synth import cities
+
+        cts = cities.cities_pdf(village_grid=2)
+        cts = pd.concat([cts, cts.iloc[:1].assign(
+            geoname_id=-1, latitude=-33.87, longitude=151.21)])
+        assert grid_res(cts) is None
+        _check_flagship_plan(spark, cts)
 
     def test_parquet_scan_pruning(self, spark):
         """Filters and projections must reach the parquet scan."""

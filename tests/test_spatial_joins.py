@@ -154,22 +154,25 @@ class TestKnnJoin:
     def test_guard_detects_sparse_cities_and_falls_back(self, spark):
         """VERDICT.md round-1 item 5: a cities table sparser than the village
         tiling must NOT silently drop/mis-name rows — the flagship measures
-        max nearest-neighbor spacing and falls back to the exact knn_join."""
+        max nearest-neighbor spacing and, when no ring guards it, falls back
+        to the exact knn_join."""
         from immich_geodata_zh_tw_spark.operators.knn import (max_nn_spacing_km,
                                                               min_cell_km)
-        from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
-            reverse_geocode_pages
+        from immich_geodata_zh_tw_spark.plans.reverse_geocode import (
+            grid_res, reverse_geocode_pages)
         from immich_geodata_zh_tw_spark.synth import pages, polygons
 
-        # 4 far-apart cities: NN spacing ≫ the k=1 guard at res 10
+        # 4 far-apart cities in the bbox (a res-6 ring would still guard
+        # them) and one half a world away: no ring guards that spacing
         sparse = pd.DataFrame({
-            "geoname_id": [1, 2, 3, 4],
-            "name": ["a", "b", "c", "d"],
-            "admin1_code": ["01", "02", "03", "04"],
-            "latitude": [21.7, 25.3, 21.7, 25.3],
-            "longitude": [119.7, 119.7, 122.3, 122.3],
+            "geoname_id": [1, 2, 3, 4, 5],
+            "name": ["a", "b", "c", "d", "e"],
+            "admin1_code": ["01", "02", "03", "04", "05"],
+            "latitude": [21.7, 25.3, 21.7, 25.3, -33.87],
+            "longitude": [119.7, 119.7, 122.3, 122.3, 151.21],
         })
         assert max_nn_spacing_km(sparse) > 1 * min_cell_km(10, 26.5)
+        assert grid_res(sparse) is None
         p = pages.pages_df(spark, 400)
         out = reverse_geocode_pages(
             spark, p, polygons.admin_polygons_pdf(village_grid=2), sparse,
@@ -203,6 +206,20 @@ class TestKnnJoin:
         assert "LeftAnti" not in plan
         assert "Exchange hashpartitioning(qid" not in plan
         assert plan.count("BroadcastHashJoin") >= 1
+
+    def test_empty_places_table_keeps_every_query(self, spark):
+        """The general join's fallback array is one row even when empty, so
+        every query row comes back, with no place."""
+        places = pd.DataFrame({"place_id": pd.Series([], dtype="int64"),
+                               "latitude": pd.Series([], dtype="float64"),
+                               "longitude": pd.Series([], dtype="float64")})
+        q = spark.createDataFrame(pd.DataFrame(
+            {"qid": [0, 1], "lat": [23.0, 24.0], "lon": [121.0, 121.5]}))
+        out = (knn_op.knn_join(spark, q, places, query_id="qid",
+                               place_cols=["place_id"], res=10, k=1)
+               .toPandas().sort_values("qid"))
+        assert out["qid"].tolist() == [0, 1]
+        assert out["place_id"].isna().all()
 
     def test_dense_single_cell(self, spark):
         # all queries and places inside one cell — degenerate skew case
@@ -285,12 +302,13 @@ class TestPipJoin:
         polys = polygons.admin_polygons_pdf(village_grid=5)
         polys = polys.reset_index().rename(columns={"index": "poly_id"})
         enc = polys.iloc[0]  # the two-part enclave village
-        g = pip.PreparedGeometry(bytes(enc["geometry_wkb"]))
+        lon_min, lat_min, lon_max, lat_max = wkb.bounds_array(
+            [enc["geometry_wkb"]])[0]
         # point in left part, point in the gap, point in right part
-        lon_l = g.lon_min + 0.01 * (g.lon_max - g.lon_min)
-        lon_r = g.lon_max - 0.01 * (g.lon_max - g.lon_min)
-        lon_gap = (g.lon_min + g.lon_max) / 2
-        lat_c = (g.lat_min + g.lat_max) / 2
+        lon_l = lon_min + 0.01 * (lon_max - lon_min)
+        lon_r = lon_max - 0.01 * (lon_max - lon_min)
+        lon_gap = (lon_min + lon_max) / 2
+        lat_c = (lat_min + lat_max) / 2
         pts = spark.createDataFrame(pd.DataFrame(
             {"pid": [0, 1, 2], "lat": [lat_c] * 3, "lon": [lon_l, lon_gap, lon_r]}))
         out = pipjoin.pip_join(spark, pts, polys, id_col="poly_id",
@@ -304,10 +322,10 @@ class TestPipJoin:
 def reference_cover(polys_pdf, *, id_col, res):
     """One :func:`grid.covering_cells` call per polygon bbox."""
     cells, ids = [], []
-    for pid, buf in zip(polys_pdf[id_col], polys_pdf["geometry_wkb"]):
-        g = pip.PreparedGeometry(bytes(buf))
-        c = grid.covering_cells(g.lat_min, g.lat_max, g.lon_min, g.lon_max,
-                                res)
+    bounds = wkb.bounds_array(polys_pdf["geometry_wkb"])
+    for pid, (lon_min, lat_min, lon_max, lat_max) in zip(polys_pdf[id_col],
+                                                          bounds):
+        c = grid.covering_cells(lat_min, lat_max, lon_min, lon_max, res)
         cells.extend(c.tolist())
         ids.extend([pid] * len(c))
     return cells, ids
