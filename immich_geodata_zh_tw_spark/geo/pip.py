@@ -39,37 +39,30 @@ def _vertices(rings: list[np.ndarray]) -> np.ndarray:
 
 class PolygonTable:
     """Polygons as one CSR vertex table, built once on the driver and
-    broadcast to executors: geometry ``i`` (id ``ids[i]``) owns vertices
-    ``off[i]:off[i + 1]`` of ``x`` / ``y`` (lon / lat), consecutive vertices
-    form its edges, and a NaN vertex breaks rings (an edge touching NaN
-    never crosses a ray).  Vertices, not edges, keep the payload no bigger
-    than the WKB; the bboxes and the id lookup are derived on load, not
-    pickled.  Coordinates must be finite."""
+    broadcast to executors: geometry ``i`` owns vertices ``off[i]:off[i + 1]``
+    of ``x`` / ``y`` (lon / lat), consecutive vertices form its edges, and a
+    NaN vertex breaks rings (an edge touching NaN never crosses a ray).
+    Vertices, not edges, keep the payload no bigger than the WKB; the bboxes
+    are derived on load, not pickled.  Coordinates must be finite."""
 
-    def __init__(self, ids, off, x, y):
-        self.ids, self.off, self.x, self.y = ids, off, x, y
+    def __init__(self, off, x, y):
+        self.off, self.x, self.y = off, x, y
         starts = off[:-1]  # every geometry owns ≥ 1 vertex
         self.bbox = np.stack([np.fmin.reduceat(x, starts),
                               np.fmin.reduceat(y, starts),
                               np.fmax.reduceat(x, starts),
                               np.fmax.reduceat(y, starts)], axis=1)
-        self._order = np.argsort(ids, kind="stable")
-        self._sorted_ids = ids[self._order]
 
     def __reduce__(self):
-        return PolygonTable, (self.ids, self.off, self.x, self.y)
+        return PolygonTable, (self.off, self.x, self.y)
 
     @classmethod
-    def from_wkb(cls, ids, bufs) -> "PolygonTable":
+    def from_wkb(cls, bufs) -> "PolygonTable":
         verts = [_vertices(wkb.decode(bytes(b))) for b in bufs]
         sizes = np.fromiter(map(len, verts), dtype=np.int64, count=len(verts))
         xy = np.concatenate(verts) if verts else np.empty((0, 2))
-        return cls(np.asarray(ids), np.r_[0, np.cumsum(sizes)].astype(np.int32),
+        return cls(np.r_[0, np.cumsum(sizes)].astype(np.int32),
                    np.ascontiguousarray(xy[:, 0]), np.ascontiguousarray(xy[:, 1]))
-
-    def rows(self, ids) -> np.ndarray:
-        """Table rows of ``ids`` (every id must be in the table)."""
-        return self._order[np.searchsorted(self._sorted_ids, ids)]
 
     def contains(self, row, lon, lat) -> np.ndarray:
         """Is point ``j`` inside geometry ``row[j]`` (even-odd rule)?"""
@@ -104,5 +97,5 @@ class PolygonTable:
 def contains_wkb(wkb_bytes: bytes, lon, lat) -> np.ndarray:
     """One-shot convenience: PIP test of points against one geometry."""
     lon = np.asarray(lon)
-    return PolygonTable.from_wkb([0], [wkb_bytes]).contains(
+    return PolygonTable.from_wkb([wkb_bytes]).contains(
         np.zeros(lon.shape, dtype=np.int64), lon, lat)

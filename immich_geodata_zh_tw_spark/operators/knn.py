@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import cell_expr
 from ..geo import grid
+from ..geo.distance import haversine_sql
 
 _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 
@@ -190,8 +191,10 @@ def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
     For a tiling-derived point set this is a proxy for the covering radius
     (worst-case query→nearest-place distance): adjacent tile centroids are
     one tile apart, so covering radius ≈ half-diagonal ≤ nearest-neighbor
-    spacing for aspect ratios ≤ ~1.4.  Callers use it to validate the
-    static-kNN exactness precondition (VERDICT.md round-1 item 5).
+    spacing for aspect ratios ≤ ~1.4.  Callers use it to size the kNN
+    ring (:func:`auto_ring`, the flagship's grid pick); it does NOT bound
+    the covering radius of an arbitrary set, whose voids can be far wider
+    (two pairs of places 300 km apart have a 51.5 km spacing).
 
     Exact grid-bucketed search, ~O(n log n) on the driver: the points are
     bucketed at the coarsest resolution with at least n/2 distinct cells,
@@ -369,7 +372,7 @@ def _output(out: DataFrame, queries: DataFrame,
 
 def _best_over(array_col: str, lat_col: str, lon_col: str,
                fields: dict[str, str]) -> Column:
-    dist_sql = _haversine_places_sql(lat_col, lon_col)
+    dist_sql = haversine_sql(lat_col, lon_col, "p.plat", "p.plon")
     payload = ", ".join(f"p.{f} AS {f}" for f in list(fields)[2:])
     return F.expr(
         f"array_min(transform({array_col}, p -> struct({dist_sql} AS d, {payload})))")
@@ -414,12 +417,14 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
     grouped = _candidate_arrays(spark, places_pdf, row, cell, fields)
 
     # one-row DF carrying ALL places as one array — the exact fallback
-    # operand of the per-row CASE, whose lazy branch means settled rows never
-    # fold it (round 3: 2M query rows × 500 places on 32 cores = 0.4 s).
-    # The cap is the BROADCAST size of the places table, the same for every
-    # kNN variant here; beyond it, switch to a cell-bucketed shuffle join on
-    # the k-ring, the fallback residual routing through per-row nearest
-    # cells rather than a global array.
+    # operand, joined only to the rows the guard does not settle: the
+    # transform folds run outside whole-stage codegen, so every row that
+    # carries the array copies it at each row boundary (at 8,000 places a
+    # copy to every row cost 0.43 s per 4,800 rows).  Settled rows carry a
+    # null.  The cap is the BROADCAST size of the places table, the same
+    # for every kNN variant here; beyond it, switch to a cell-bucketed
+    # shuffle join on the k-ring, the fallback residual routing through
+    # per-row nearest cells rather than a global array.
     n = len(places_pdf)
     all_places = _candidate_arrays(
         spark, places_pdf, np.arange(n), np.zeros(n, dtype=np.int64), fields,
@@ -427,16 +432,14 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
             F.col("__places").alias("__all"))
 
     q = queries.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
-    joined = (q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "left")
-              .drop("cell")
-              .crossJoin(F.broadcast(all_places)))
-
-    ring_best = _best_over("__places", lat_col, lon_col, fields)
-    brute_best = _best_over("__all", lat_col, lon_col, fields)
+    ring = (q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "left")
+            .withColumn("__rb", _best_over("__places", lat_col,
+                                           lon_col, fields))
+            .drop("cell", "__places"))
     guard = guard_km_col(F.col(lat_col), res=res, k=k)
-
-    out = joined.withColumn("__rb", ring_best)
     settled = F.col("__rb").isNotNull() & (F.col("__rb.d") <= guard)
+    out = ring.join(F.broadcast(all_places), ~settled, "left")
+    brute_best = _best_over("__all", lat_col, lon_col, fields)
     return _output(out.withColumn("__best", F.when(settled, F.col("__rb"))
                                   .otherwise(brute_best)),
                    queries, fields)
@@ -450,13 +453,13 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     """Single-pass exact kNN as a *pure narrow plan* — zero shuffle, no
     fallback branch.
 
-    Valid when the caller can guarantee every query's true nearest place lies
-    within the k-ring (e.g. a tiling-derived point set whose worst-case
-    nearest-centroid distance is below the ring guard — validate with
-    :func:`max_nn_spacing_km`, a near-linear driver-side check cheap enough
-    to run on every plan build; the flagship does, and falls back to
-    :func:`knn_join` when the check fails).  Queries with no candidate in the
-    ring are dropped; use :func:`knn_join` when coverage is unknown.
+    Valid only when the caller can guarantee every query's true nearest
+    place lies within the k-ring, i.e. the covering radius of the places
+    over the query domain is below the ring guard.  The max nearest-neighbour
+    spacing (:func:`max_nn_spacing_km`) does not show that: it is blind to
+    voids between clusters.  Queries with no candidate in the ring are
+    dropped and a farther in-ring candidate is taken silently; the flagship
+    uses :func:`knn_join`, whose per-row guard costs settled rows nothing.
 
     Plan shape: the small side is grouped per covering cell on the driver
     into an ``array<struct(lat, lon, payload…)>`` and broadcast (no
@@ -476,9 +479,3 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
 
     best = _best_over("__places", lat_col, lon_col, fields)
     return _output(joined.withColumn("__best", best), queries, fields)
-
-
-def _haversine_places_sql(lat_col: str, lon_col: str) -> str:
-    from ..geo.distance import haversine_sql
-
-    return haversine_sql(lat_col, lon_col, "p.plat", "p.plon")

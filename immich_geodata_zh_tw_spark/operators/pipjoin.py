@@ -4,7 +4,8 @@ The extract-stage semantic of the reference (SURVEY.md §2.3 J9): a point is
 assigned the admin polygon containing it.  Scalable plan:
 
 1. driver-side: expand each polygon (small side: ~10^4 admin polygons) into
-   the grid cells covering its bbox → (cell, poly_id) table, broadcast;
+   the grid cells covering its bbox → (cell, row, poly_id) table, broadcast
+   (``row``: the polygon's row in the vertex table of step 3);
 2. points (10^12 side) compute their cell in Column algebra and broadcast
    equi-join → candidate (point, poly_id) pairs.  Non-overlapping admin
    tilings yield ~1 candidate per point (plus bbox false positives);
@@ -31,17 +32,11 @@ from ..functions.geo import cell_expr
 from ..geo import grid, pip, wkb
 
 
-def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
-                      wkb_col: str = "geometry_wkb",
-                      res: int = grid.DEFAULT_RES) -> pd.DataFrame:
-    """(cell, poly_id) covering table — driver-side numpy, small side only.
-
-    Row for row what a :func:`grid.covering_cells` call per polygon bbox
-    gives (same floor/clip arithmetic, same row-major cell order), built in
-    one numpy pass: only the bboxes are read from the WKB
-    (:func:`wkb.bounds_array`).  The id column keeps its dtype.
-    """
-    lon_min, lat_min, lon_max, lat_max = wkb.bounds_array(polys_pdf[wkb_col]).T
+def _cover(bounds: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """(cell, row): the cells covering the bbox of each row of ``bounds``
+    ((lon_min, lat_min, lon_max, lat_max) per row), rows in order and each
+    row's cells row-major."""
+    lon_min, lat_min, lon_max, lat_max = bounds.T
     nrows = 1 << res
     ncols = 2 << res
     r0 = np.clip(np.floor((lat_min + 90.0) / 180.0 * nrows), 0, nrows - 1)
@@ -52,15 +47,26 @@ def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
     n_r = np.maximum(r1.astype(np.int64) - r0 + 1, 0)
     n_c = np.maximum(c1.astype(np.int64) - c0 + 1, 0)
     n_cells = n_r * n_c
-    poly = np.repeat(np.arange(len(n_cells)), n_cells)
-    # position of each row within its polygon's row-major rows × cols block
+    row = np.repeat(np.arange(len(n_cells)), n_cells)
+    # position of each cell within its row's rows × cols block
     t = np.arange(int(n_cells.sum())) - np.repeat(np.cumsum(n_cells) - n_cells,
                                                   n_cells)
-    return pd.DataFrame({
-        "cell": grid.make_cell(res, r0[poly] + t // n_c[poly],
-                               c0[poly] + t % n_c[poly]),
-        id_col: np.repeat(polys_pdf[id_col].to_numpy(), n_cells),
-    })
+    return (grid.make_cell(res, r0[row] + t // n_c[row], c0[row] + t % n_c[row]),
+            row)
+
+
+def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
+                      wkb_col: str = "geometry_wkb",
+                      res: int = grid.DEFAULT_RES) -> pd.DataFrame:
+    """(cell, poly_id) covering table — driver-side numpy, small side only.
+
+    Row for row what a :func:`grid.covering_cells` call per polygon bbox
+    gives (same floor/clip arithmetic, same row-major cell order), built in
+    one numpy pass: only the bboxes are read from the WKB
+    (:func:`wkb.bounds_array`).  The id column keeps its dtype.
+    """
+    cell, row = _cover(wkb.bounds_array(polys_pdf[wkb_col]), res)
+    return pd.DataFrame({"cell": cell, id_col: polys_pdf[id_col].to_numpy()[row]})
 
 
 def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
@@ -79,22 +85,25 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
     if attr_cols is None:
         attr_cols = [c for c in polys_pdf.columns if c not in (id_col, wkb_col)]
 
-    cover = spark.createDataFrame(polygon_cells_pdf(polys_pdf, id_col=id_col,
-                                                    wkb_col=wkb_col, res=res))
-    bc = spark.sparkContext.broadcast(
-        pip.PolygonTable.from_wkb(polys_pdf[id_col], polys_pdf[wkb_col]))
+    # decoded once: the vertex table's bboxes give the cover (NaN: a
+    # geometry without points, (0, 0) as in wkb.bounds_array), and the cover
+    # carries each polygon's table row, so the kernel needs no id lookup
+    table = pip.PolygonTable.from_wkb(polys_pdf[wkb_col])
+    cell, row = _cover(np.nan_to_num(table.bbox), res)
+    cover = spark.createDataFrame(pd.DataFrame({
+        "cell": cell, "__row": row, id_col: polys_pdf[id_col].to_numpy()[row]}))
+    bc = spark.sparkContext.broadcast(table)
 
     @F.pandas_udf(BooleanType())
-    def contains_udf(pid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        table = bc.value
-        return pd.Series(table.contains(table.rows(pid.to_numpy()),
-                                        lon.to_numpy(dtype=np.float64),
-                                        lat.to_numpy(dtype=np.float64)))
+    def contains_udf(row: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(bc.value.contains(row.to_numpy(),
+                                           lon.to_numpy(dtype=np.float64),
+                                           lat.to_numpy(dtype=np.float64)))
 
     pts = points.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
     cand = pts.join(F.broadcast(cover), pts["__cell"] == cover["cell"], "inner")
-    hit = (cand.filter(contains_udf(F.col(id_col), F.col(lon_col), F.col(lat_col)))
-           .drop("__cell", "cell"))
+    hit = (cand.filter(contains_udf(F.col("__row"), F.col(lon_col), F.col(lat_col)))
+           .drop("__cell", "cell", "__row"))
 
     if attr_cols:
         attrs = spark.createDataFrame(polys_pdf[[id_col, *attr_cols]])

@@ -25,32 +25,32 @@ from pyspark.sql import functions as F
 from ..extract.html_meta import extract_pages
 from ..functions.countries import localize_country
 from ..functions.geo import cell_expr, in_bbox
-from ..geo import grid
-from ..operators.knn import (auto_ring, knn_join, knn_join_static,
-                             max_nn_spacing_km, min_cell_km)
+from ..geo import grid, wkb
+from ..operators.knn import knn_join, max_nn_spacing_km, min_cell_km
 from ..operators.pipjoin import pip_join
 from ..synth import TW_BBOX
 
 
-def grid_res(cities_pdf: pd.DataFrame,
+def grid_res(points_pdf: pd.DataFrame,
              bbox: tuple[float, float, float, float] = TW_BBOX) -> int | None:
-    """The flagship's grid: the finest res in [4, MAX_RES] whose k=1 ring
-    guard covers the cities table's max nearest-neighbour spacing, or None.
+    """The finest res in [4, MAX_RES] whose k=1 ring guard covers the max
+    nearest-neighbour spacing of ``points_pdf`` (latitude, longitude), or
+    None.
 
-    The guard is the static kNN's exactness precondition: the spacing is a
-    covering-radius proxy for tiling-derived point sets (adjacent tile
-    centroids are one tile apart; half-diagonal ≤ NN spacing at aspect ratio
-    ≤ ~1.4), measured by an exact grid-bucketed search (0.02 s at 8,000
-    villages).  One res serves both joins: the reference's cities table
-    holds one centroid per village, so that res also puts about one village
-    in each PIP cell — 12 at 8,000 villages (spacing 3.88 km, guard
-    4.37 km; 4.4 candidates per point and 11.5 per query, against 29.7 and
-    175 at a fixed res 10), 10 on the 500-village ``bench.py`` fixture.
-    History: res 10 was fixed on that fixture, where an interleaved A/B put
-    a res-12, k=3 kNN ring beside a res-10 PIP grid at 3.79 s vs 3.13 s
-    (2 M pages, 32 cores); the computed res keeps one grid and k=1.
+    A cost choice only, never an exactness one: the flagship gives it to
+    the general kNN join, whose per-row guard sends every unsettled row to
+    the full-array fallback.  For a tiling-derived point set the spacing is
+    about the covering radius, so at this res nearly every row settles on
+    a one-ring of about one place per cell; the polygon bbox centres pick
+    the PIP res the same way, about one polygon per cell.  At 8,000
+    villages both are 12 (spacing 3.88 km, guard 4.37 km; 4.4 candidates
+    per point and 11.5 per query, against 29.7 and 175 at a fixed res 10),
+    on the 500-village ``bench.py`` fixture both are 10.  History: res 10
+    was fixed on that fixture, where an interleaved A/B put a res-12, k=3
+    kNN ring beside a res-10 PIP grid at 3.79 s vs 3.13 s (2 M pages, 32
+    cores); the computed res keeps k=1.
     """
-    spacing_km = max_nn_spacing_km(cities_pdf)
+    spacing_km = max_nn_spacing_km(points_pdf)
     max_lat = max(abs(bbox[0]), abs(bbox[1])) + 1.0
     return next((res for res in range(grid.MAX_RES, 3, -1)
                  if min_cell_km(res, max_lat) >= spacing_km), None)
@@ -91,23 +91,24 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
            # stragglers.
            .repartition(spark.sparkContext.defaultParallelism))
 
-    # no res guards a sparse or irregular cities table: take the general
-    # kNN join at auto_ring's ring — its per-row guard + full-array CASE
-    # fallback is exact for any point set (VERDICT.md round-1 item 5)
-    res, k = grid_res(cities_pdf, bbox), 1
-    static = res is not None
-    if not static:
-        res, k = auto_ring(cities_pdf)
+    # PIP res from the polygons' bbox centres (res 4 when no res guards
+    # their spacing: one polygon, or polygons a continent apart); kNN res
+    # from the cities, or auto_ring's (res, k) when none guards theirs
+    lon0, lat0, lon1, lat1 = wkb.bounds_array(polys_pdf["geometry_wkb"]).T
+    pip_res = grid_res(pd.DataFrame({"latitude": (lat0 + lat1) / 2,
+                                     "longitude": (lon0 + lon1) / 2}), bbox)
+    knn_res = grid_res(cities_pdf, bbox)
 
     polys = polys_pdf.reset_index(drop=True).copy()
     polys.insert(0, "poly_id", range(len(polys)))
     with_admin = pip_join(
         spark, pts, polys[["poly_id", "geometry_wkb", "county", "township", "village"]],
-        id_col="poly_id", attr_cols=["county", "township", "village"], res=res,
+        id_col="poly_id", attr_cols=["county", "township", "village"],
+        res=pip_res or 4,
     ).drop("poly_id")
-    named = (knn_join_static if static else knn_join)(
+    named = knn_join(
         spark, with_admin, cities_pdf, query_id="url",
-        place_cols=["geoname_id", "name", "admin1_code"], res=res, k=k)
+        place_cols=["geoname_id", "name", "admin1_code"], res=knn_res or "auto")
     # localized country display name (reference i18n-iso-countries zh-tw.json
     # via Immich's display path, README.md:103) — broadcast dim join.
     # country_code travels with bbox: a non-Taiwan invocation passes its own

@@ -1,6 +1,7 @@
-"""The flagship's computed grid (``plans.reverse_geocode.grid_res``) and the
-precondition that makes its static kNN exact.  The lattice checks are
-driver-side numpy, no Spark session."""
+"""The flagship's computed grids (``plans.reverse_geocode.grid_res`` over
+the cities and over the polygon bbox centres) and what they buy: every row
+settles on its kNN one-ring, few candidates per row.  The lattice checks
+are driver-side numpy, no Spark session."""
 
 from __future__ import annotations
 
@@ -8,20 +9,30 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from immich_geodata_zh_tw_spark.geo import distance, grid
+from immich_geodata_zh_tw_spark.geo import distance, grid, wkb
+from immich_geodata_zh_tw_spark.operators.knn import _guard_km_np
 from immich_geodata_zh_tw_spark.operators.pipjoin import polygon_cells_pdf
 from immich_geodata_zh_tw_spark.plans.reverse_geocode import grid_res
 from immich_geodata_zh_tw_spark.synth import TW_BBOX, cities, polygons
 
 
+def bbox_centres(polys_pdf) -> pd.DataFrame:
+    lon0, lat0, lon1, lat1 = wkb.bounds_array(polys_pdf["geometry_wkb"]).T
+    return pd.DataFrame({"latitude": (lat0 + lat1) / 2,
+                         "longitude": (lon0 + lon1) / 2})
+
+
 @pytest.mark.parametrize("village_grid, res", [(2, 8), (5, 10), (20, 12)])
 def test_pick(village_grid, res):
+    """The cities and the polygon bbox centres pick the same res."""
     assert grid_res(cities.cities_pdf(village_grid)) == res
+    assert grid_res(bbox_centres(
+        polygons.admin_polygons_pdf(village_grid))) == res
 
 
 def test_no_res_guards_a_two_place_table():
     """Taipei and Sydney: the spacing exceeds every ring guard down to
-    res 4, so only the general kNN join is exact."""
+    res 4, so the flagship's kNN takes auto_ring's (res, k)."""
     two = pd.DataFrame({"latitude": [25.03, -33.87],
                         "longitude": [121.56, 151.21]})
     assert grid_res(two) is None
@@ -63,10 +74,10 @@ def brute_nearest(lat, lon, plat, plon, chunk: int = 512,
     return out
 
 
-class TestStaticPrecondition:
+class TestPick:
     """At 8,000 villages the pick is res 12, where the k=1 guard (4.37 km)
-    exceeds the spacing (3.88 km) by only 1.13×: pin the static path's
-    exactness directly on a lattice of 16 points per cell."""
+    exceeds the spacing (3.88 km) by only 1.13×: pin on a lattice of 16
+    points per cell that no row pays the kNN's full-array fallback."""
 
     VILLAGE_GRID = 20
 
@@ -77,28 +88,27 @@ class TestStaticPrecondition:
         lat, lon = lattice(0.25, res)
         return cts, res, lat, lon
 
-    def test_nearest_place_in_own_ring(self, case):
+    def test_every_row_settles_on_its_ring(self, case):
         cts, res, lat, lon = case
         plat = cts["latitude"].to_numpy()
         plon = cts["longitude"].to_numpy()
         near = brute_nearest(lat, lon, plat, plon)
-        q = grid.cell_of(lat, lon, res)
-        p = grid.cell_of(plat[near], plon[near], res)
-        cheb = np.maximum(np.abs(grid.cell_row(q) - grid.cell_row(p)),
-                          np.abs(grid.cell_col(q) - grid.cell_col(p)))
+        d = distance.haversine_np(lat, lon, plat[near], plon[near])
         assert lat.size > 90_000
-        assert cheb.max() <= 1
+        assert (d <= _guard_km_np(lat, res=res, k=1)).all()
 
     def test_candidates_per_row(self, case):
         """PIP candidates per point ≤ 5 and kNN candidates per query ≤ 15
-        at the pick (a fixed res 10 gave 29.7 and 175)."""
+        at the picks (a fixed res 10 gave 29.7 and 175)."""
         cts, res, lat, lon = case
-        q = grid.cell_of(lat, lon, res)
         polys = polygons.admin_polygons_pdf(self.VILLAGE_GRID)
         polys.insert(0, "poly_id", range(len(polys)))
-        cover = polygon_cells_pdf(polys, id_col="poly_id", res=res)
+        pip_res = grid_res(bbox_centres(polys))
+        cover = polygon_cells_pdf(polys, id_col="poly_id", res=pip_res)
+        q = grid.cell_of(lat, lon, pip_res)
         per_cell = cover.groupby("cell").size()
         pip_cand = per_cell.reindex(q, fill_value=0).to_numpy()
+        q = grid.cell_of(lat, lon, res)
         places = pd.Series(grid.cell_of(cts["latitude"].to_numpy(),
                                         cts["longitude"].to_numpy(), res))
         per_cell = places.value_counts()

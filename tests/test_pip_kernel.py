@@ -117,7 +117,7 @@ def batch(draw, n_polys):
 
 
 def table_of(bufs) -> pip.PolygonTable:
-    return pip.PolygonTable.from_wkb(np.arange(len(bufs)), bufs)
+    return pip.PolygonTable.from_wkb(bufs)
 
 
 class TestKernelEquivalence:
@@ -187,20 +187,12 @@ class TestKernelEquivalence:
 
 
 class TestPolygonTable:
-    def test_ids_map_to_rows(self):
-        bufs = [wkb.encode_polygon([np.array([[i, 0], [i + 1, 0], [i, 1]],
-                                             float)]) for i in range(3)]
-        t = pip.PolygonTable.from_wkb(["c", "a", "b"], bufs)
-        assert t.rows(["a", "b", "c", "a"]).tolist() == [1, 2, 0, 1]
-        assert t.contains(t.rows(["b", "a"]), [2.2, 2.2], [0.1, 0.1]).tolist() \
-            == [True, False]
-
     def test_pickle_carries_vertices_only(self):
-        """Bboxes and the id lookup are derived on load; the payload is no
-        bigger than the pickled {id: WKB} dict at 8,000 villages."""
+        """Bboxes are derived on load; the payload is no bigger than the
+        pickled {id: WKB} dict at 8,000 villages."""
         polys = polygons.admin_polygons_pdf(village_grid=20)
         ids = np.arange(len(polys))
-        t = pip.PolygonTable.from_wkb(ids, polys["geometry_wkb"])
+        t = pip.PolygonTable.from_wkb(polys["geometry_wkb"])
         back = pickle.loads(pickle.dumps(t))
         assert np.array_equal(back.bbox, t.bbox)
         assert np.array_equal(back.bbox, wkb.bounds_array(polys["geometry_wkb"]))

@@ -122,8 +122,8 @@ class TestPlanQuality:
         _check_flagship_plan(spark, cities.cities_pdf(village_grid=2))
 
     def test_flagship_general_knn_path(self, spark):
-        """The same plan rules on the general kNN path, which a cities
-        table no ring guards takes (here: one far-away place)."""
+        """The same plan rules when no one-ring guards the cities table and
+        the kNN takes auto_ring's ring (here: one far-away place)."""
         from immich_geodata_zh_tw_spark.plans.reverse_geocode import grid_res
         from immich_geodata_zh_tw_spark.synth import cities
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -153,46 +155,58 @@ class TestKnnJoin:
 
     def test_guard_detects_sparse_cities_and_falls_back(self, spark):
         """VERDICT.md round-1 item 5: a cities table sparser than the village
-        tiling must NOT silently drop/mis-name rows — the flagship measures
-        max nearest-neighbor spacing and, when no ring guards it, falls back
-        to the exact knn_join."""
-        from immich_geodata_zh_tw_spark.operators.knn import (max_nn_spacing_km,
-                                                              min_cell_km)
-        from immich_geodata_zh_tw_spark.plans.reverse_geocode import (
-            grid_res, reverse_geocode_pages)
-        from immich_geodata_zh_tw_spark.synth import pages, polygons
-
-        # 4 far-apart cities in the bbox (a res-6 ring would still guard
-        # them) and one half a world away: no ring guards that spacing
-        sparse = pd.DataFrame({
-            "geoname_id": [1, 2, 3, 4, 5],
-            "name": ["a", "b", "c", "d", "e"],
-            "admin1_code": ["01", "02", "03", "04", "05"],
-            "latitude": [21.7, 25.3, 21.7, 25.3, -33.87],
-            "longitude": [119.7, 119.7, 122.3, 122.3, 151.21],
-        })
-        assert max_nn_spacing_km(sparse) > 1 * min_cell_km(10, 26.5)
-        assert grid_res(sparse) is None
-        p = pages.pages_df(spark, 400)
-        out = reverse_geocode_pages(
-            spark, p, polygons.admin_polygons_pdf(village_grid=2), sparse,
-        ).toPandas()
-        # every extracted in-bbox page row gets named (nothing dropped) …
+        tiling must NOT silently drop/mis-name rows — the flagship's kNN
+        guard sends each row whose nearest city may lie outside its ring to
+        the exact full-array fallback, at any grid pick."""
         from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
         from immich_geodata_zh_tw_spark.functions.geo import in_bbox
-        from immich_geodata_zh_tw_spark.synth import TW_BBOX
+        from immich_geodata_zh_tw_spark.plans.reverse_geocode import (
+            grid_res, reverse_geocode_pages)
+        from immich_geodata_zh_tw_spark.synth import TW_BBOX, pages, polygons
+
+        p = pages.pages_df(spark, 400)
         expected = (extract_pages(p)
                     .filter(F.col("lat").isNotNull())
                     .filter(in_bbox(F.col("lat"), F.col("lon"), TW_BBOX))
                     .count())
-        assert len(out) == expected and expected > 0
-        # … and with the true nearest city (brute-force check)
-        d = distance.haversine_np(
-            out["lat"].to_numpy()[:, None], out["lon"].to_numpy()[:, None],
-            sparse["latitude"].to_numpy()[None, :],
-            sparse["longitude"].to_numpy()[None, :])
-        want = sparse["geoname_id"].to_numpy()[np.argmin(d, axis=1)]
-        assert out["geoname_id"].tolist() == want.tolist()
+        assert expected > 0
+        for lat, lon, res, ring_misses in [
+            # four corners of the bbox: a res-6 one-ring guards their spacing
+            ([21.7, 25.3, 21.7, 25.3], [119.7, 119.7, 122.3, 122.3], 6,
+             False),
+            # two pairs 300 km apart: res 8 guards their 51.5 km spacing,
+            # but no city lies in a res-8 one-ring between the pairs
+            ([25.0, 25.0, 22.2, 22.2], [121.3, 121.8, 120.4, 120.9], 8,
+             True),
+            # the corners plus a city half a world away: no res guards it
+            ([21.7, 25.3, 21.7, 25.3, -33.87],
+             [119.7, 119.7, 122.3, 122.3, 151.21], None, False),
+        ]:
+            n = len(lat)
+            sparse = pd.DataFrame({
+                "geoname_id": range(1, n + 1), "name": list("abcde"[:n]),
+                "admin1_code": [f"0{i}" for i in range(1, n + 1)],
+                "latitude": lat, "longitude": lon})
+            assert grid_res(sparse) == res
+            out = reverse_geocode_pages(
+                spark, p, polygons.admin_polygons_pdf(village_grid=2), sparse,
+            ).toPandas()
+            # every extracted in-bbox page row gets named (nothing dropped) …
+            assert len(out) == expected
+            # … and with the true nearest city (brute-force check)
+            qlat, qlon = out["lat"].to_numpy(), out["lon"].to_numpy()
+            d = distance.haversine_np(qlat[:, None], qlon[:, None],
+                                      np.array(lat)[None, :],
+                                      np.array(lon)[None, :])
+            near = np.argmin(d, axis=1)
+            assert out["geoname_id"].tolist() == (near + 1).tolist()
+            if ring_misses:
+                # some rows' nearest city lies outside their one-ring
+                q = grid.cell_of(qlat, qlon, res)
+                c = grid.cell_of(np.array(lat)[near], np.array(lon)[near], res)
+                cheb = np.maximum(abs(grid.cell_row(q) - grid.cell_row(c)),
+                                  abs(grid.cell_col(q) - grid.cell_col(c)))
+                assert cheb.max() > 1
 
     def test_knn_join_is_one_plan_no_actions(self, spark, queries_pdf, places_pdf):
         """The general kNN must be a single narrow plan (round-1 ran per-round
@@ -298,6 +312,26 @@ class TestPipJoin:
         assert out.iloc[0]["county"] is not None
         assert out.iloc[1]["county"] is None
 
+    def test_string_ids_in_any_order(self, spark):
+        """Points get the id and attributes of their own polygon when the
+        ids are strings and the table is not in id order."""
+        polys = polygons.admin_polygons_pdf(village_grid=3).iloc[::-1]
+        polys = polys.assign(poly_id=[f"v{i}" for i in range(len(polys))])
+        rng = np.random.default_rng(4)
+        pts_pdf = pd.DataFrame({"pid": np.arange(200),
+                                "lat": rng.uniform(21.6, 25.4, 200),
+                                "lon": rng.uniform(119.6, 122.4, 200)})
+        out = pipjoin.pip_join(
+            spark, spark.createDataFrame(pts_pdf), polys, id_col="poly_id",
+            attr_cols=["village"], res=9).toPandas()
+        want = {}
+        for pid, village, buf in zip(polys["poly_id"], polys["village"],
+                                     polys["geometry_wkb"]):
+            inside = pip.contains_wkb(buf, pts_pdf["lon"], pts_pdf["lat"])
+            want.update({p: (pid, village) for p in pts_pdf["pid"][inside]})
+        assert len(want) > 150
+        assert dict(zip(out["pid"], zip(out["poly_id"], out["village"]))) == want
+
     def test_enclave_multipolygon(self, spark):
         polys = polygons.admin_polygons_pdf(village_grid=5)
         polys = polys.reset_index().rename(columns={"index": "poly_id"})
@@ -362,6 +396,18 @@ class TestPolygonCover:
             lambda df: pd.concat([
                 df[["geometry_wkb"]],
                 pd.DataFrame({"geometry_wkb": geoms})], ignore_index=True))
+
+    def test_vertex_table_bboxes_give_the_same_cover(self):
+        """pip_join covers the bboxes of its vertex table: the same cells as
+        polygon_cells_pdf, a geometry without points included."""
+        polys = self.cover_polys()
+        polys.loc[len(polys)] = [struct.pack("<BII", 1, 3, 0)]  # no rings
+        table = pip.PolygonTable.from_wkb(polys["geometry_wkb"])
+        cell, row = pipjoin._cover(np.nan_to_num(table.bbox), 10)
+        want = pipjoin.polygon_cells_pdf(polys.assign(i=range(len(polys))),
+                                         id_col="i", res=10)
+        assert cell.tolist() == want["cell"].tolist()
+        assert row.tolist() == want["i"].tolist()
 
     @pytest.mark.parametrize("ids", ["int", "str"])
     def test_matches_per_polygon_loop(self, ids):
