@@ -16,16 +16,31 @@ from ..geo.grid import _RES_SHIFT, _ROW_SHIFT, DEFAULT_RES, MAX_RES
 from ..geo.distance import haversine_col, haversine_sql  # noqa: F401 (re-export)
 
 
-def cell_expr(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Column:
+def cell_expr(lat: Column | str, lon: Column | str,
+              res: int = DEFAULT_RES) -> Column:
     """int64 grid cell of (lat, lon) — null-safe, codegen-friendly.
 
     Exactly mirrors ``geo.grid.cell_of`` (same float arithmetic and clamping);
-    null/NaN coordinates yield NULL.
+    null/NaN coordinates yield NULL.  Column NAMES build the same expression
+    tree from SQL text in one JVM call (the Column algebra costs ~60 py4j
+    round trips per encode, and a plan builds several).
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"resolution must be in [0, {MAX_RES}], got {res}")
     nrows = 1 << res
     ncols = 2 << res
+    if isinstance(lat, str) and isinstance(lon, str):
+        lat, lon = f"`{lat}`", f"`{lon}`"
+        return F.expr(
+            f"CASE WHEN (({lat} IS NULL OR {lon} IS NULL) OR isnan({lat})) "
+            f"OR isnan({lon}) THEN CAST(NULL AS BIGINT) ELSE "
+            f"CAST({res} AS BIGINT) * {1 << _RES_SHIFT} + CAST(least(greatest("
+            f"floor(({lat} + 90.0D) / 180.0D * {float(nrows)}D), 0), "
+            f"{nrows - 1}) AS BIGINT) * {1 << _ROW_SHIFT} + CAST((("
+            f"floor(({lon} + 180.0D) / 360.0D * {float(ncols)}D) % {ncols}) "
+            f"+ {ncols}) % {ncols} AS BIGINT) END")
+    lat = F.col(lat) if isinstance(lat, str) else lat
+    lon = F.col(lon) if isinstance(lon, str) else lon
     row = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nrows)))
     col = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(ncols)))
     row = F.least(F.greatest(row, F.lit(0)), F.lit(nrows - 1))

@@ -4,8 +4,8 @@ The extract-stage semantic of the reference (SURVEY.md §2.3 J9): a point is
 assigned the admin polygon containing it.  Scalable plan:
 
 1. driver-side: expand each polygon (small side: ~10^4 admin polygons) into
-   the grid cells covering its bbox → (cell, row, poly_id) table, broadcast
-   (``row``: the polygon's row in the vertex table of step 3);
+   the grid cells covering its bbox → (cell, row, poly_id, attrs…) table,
+   broadcast (``row``: the polygon's row in the vertex table of step 3);
 2. points (10^12 side) compute their cell in Column algebra and broadcast
    equi-join → candidate (point, poly_id) pairs.  Non-overlapping admin
    tilings yield ~1 candidate per point (plus bbox false positives);
@@ -87,11 +87,14 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
 
     # decoded once: the vertex table's bboxes give the cover (NaN: a
     # geometry without points, (0, 0) as in wkb.bounds_array), and the cover
-    # carries each polygon's table row, so the kernel needs no id lookup
+    # carries each polygon's table row, so the kernel needs no id lookup,
+    # and its id and attributes, so no second join fetches them
     table = pip.PolygonTable.from_wkb(polys_pdf[wkb_col])
     cell, row = _cover(np.nan_to_num(table.bbox), res)
-    cover = spark.createDataFrame(pd.DataFrame({
-        "cell": cell, "__row": row, id_col: polys_pdf[id_col].to_numpy()[row]}))
+    cover = polys_pdf[[id_col, *attr_cols]].iloc[row].reset_index(drop=True)
+    cover.insert(0, "__row", row)
+    cover.insert(0, "cell", cell)
+    cover = spark.createDataFrame(cover)
     bc = spark.sparkContext.broadcast(table)
 
     @F.pandas_udf(BooleanType())
@@ -100,14 +103,10 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
                                            lon.to_numpy(dtype=np.float64),
                                            lat.to_numpy(dtype=np.float64)))
 
-    pts = points.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
-    cand = pts.join(F.broadcast(cover), pts["__cell"] == cover["cell"], "inner")
+    cand = points.join(F.broadcast(cover),
+                       cell_expr(lat_col, lon_col, res) == cover["cell"], "inner")
     hit = (cand.filter(contains_udf(F.col("__row"), F.col(lon_col), F.col(lat_col)))
-           .drop("__cell", "cell", "__row"))
-
-    if attr_cols:
-        attrs = spark.createDataFrame(polys_pdf[[id_col, *attr_cols]])
-        hit = hit.join(F.broadcast(attrs), id_col, "left")
+           .select(id_col, *points.columns, *attr_cols))
     if how == "inner":
         return hit
     if how == "left":

@@ -6,6 +6,7 @@ pages(url, warc_ts, html, text, lang)
   → grid cell in Column algebra                         [functions/geo]
   → PIP join vs admin polygons (exact admin_1/2/3)      [operators/pipjoin]
   → kNN (k=1) naming join vs cities500-style points     [operators/knn]
+  → zh-TW country name (a literal: one country code per call)
   → url, lat, lon, cell, county, township, village, name, admin1_code
 
 This is the Immich runtime semantic (reference README.md:103 — nearest-
@@ -18,15 +19,17 @@ ring candidates — no aggregation on the pages side.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract.html_meta import extract_pages
-from ..functions.countries import localize_country
+from ..functions.countries import COUNTRY_ZH_TW
 from ..functions.geo import cell_expr, in_bbox
 from ..geo import grid, wkb
-from ..operators.knn import knn_join, max_nn_spacing_km, min_cell_km
+from ..operators.knn import (knn_join, knn_join_static, max_nn_spacing_km,
+                             min_cell_km, ring_covers)
 from ..operators.pipjoin import pip_join
 from ..synth import TW_BBOX
 
@@ -37,9 +40,10 @@ def grid_res(points_pdf: pd.DataFrame,
     nearest-neighbour spacing of ``points_pdf`` (latitude, longitude), or
     None.
 
-    A cost choice only, never an exactness one: the flagship gives it to
-    the general kNN join, whose per-row guard sends every unsettled row to
-    the full-array fallback.  For a tiling-derived point set the spacing is
+    A cost choice only, never an exactness one: the flagship takes the
+    static kNN join at it only where ``knn.ring_covers`` proves every query
+    settles, and otherwise the general join, whose per-row guard sends
+    every unsettled row to the full-array fallback.  For a tiling-derived point set the spacing is
     about the covering radius, so at this res nearly every row settles on
     a one-ring of about one place per cell; the polygon bbox centres pick
     the PIP res the same way, about one polygon per cell.  At 8,000
@@ -106,19 +110,29 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
         id_col="poly_id", attr_cols=["county", "township", "village"],
         res=pip_res or 4,
     ).drop("poly_id")
-    named = knn_join(
+    # every kNN query is a PIP hit inside ``bbox``, so it lies in the
+    # domain below; where the cities' one-rings provably cover it, the
+    # static join is exact and skips the guard and the full-array operand
+    # (the benchmark's 8,000 villages); elsewhere the guarded join
+    lat_min, lat_max, lon_min, lon_max = bbox
+    domain = np.stack([np.maximum(lon0, lon_min), np.maximum(lat0, lat_min),
+                       np.minimum(lon1, lon_max), np.minimum(lat1, lat_max)], 1)
+    static = knn_res is not None and ring_covers(cities_pdf, domain, res=knn_res)
+    named = (knn_join_static if static else knn_join)(
         spark, with_admin, cities_pdf, query_id="url",
         place_cols=["geoname_id", "name", "admin1_code"], res=knn_res or "auto")
     # localized country display name (reference i18n-iso-countries zh-tw.json
-    # via Immich's display path, README.md:103) — broadcast dim join.
-    # country_code travels with bbox: a non-Taiwan invocation passes its own
-    # code and gets that country's zh-TW name (ADVICE.md round-2 item 5)
-    localized = localize_country(
-        named.withColumn("country_code", F.lit(country_code)))
-    return localized.select(
+    # via Immich's display path, README.md:103).  country_code travels with
+    # bbox: a non-Taiwan invocation passes its own code and gets that
+    # country's zh-TW name (ADVICE.md round-2 item 5).  The code is one
+    # constant per call, so the name is a literal: the dim join
+    # (functions.countries.localize_country) would cost a DataFrame, a
+    # broadcast job and a join to look up one key
+    return named.select(
         "url", "lat", "lon",
-        cell_expr(F.col("lat"), F.col("lon"), grid.DEFAULT_RES).alias("cell"),
+        cell_expr("lat", "lon", grid.DEFAULT_RES).alias("cell"),
         "county", "township", "village",
-        "geoname_id", "name", "admin1_code", "country_zh",
+        "geoname_id", "name", "admin1_code",
+        F.lit(COUNTRY_ZH_TW.get(country_code)).cast("string").alias("country_zh"),
         F.round("knn_dist_km", 6).alias("knn_dist_km"),
     )

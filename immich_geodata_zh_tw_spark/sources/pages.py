@@ -38,29 +38,51 @@ DDL shape (run on a cluster with Iceberg jars)::
 
 from __future__ import annotations
 
+import os
+import weakref
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
+
+#: per SparkContext: does the ``iceberg`` data source resolve?  The
+#: classpath is fixed for a context's life, and a failed ``format("iceberg")``
+#: load costs ~0.1 s of exception conversion on every read
+_ICEBERG_SOURCE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _has_iceberg_source(spark: SparkSession) -> bool:
+    sc = spark.sparkContext
+    if sc not in _ICEBERG_SOURCE:
+        try:
+            spark._jvm.org.apache.spark.sql.execution.datasources.DataSource \
+                .lookupDataSource("iceberg", spark._jsparkSession.sessionState().conf())
+            _ICEBERG_SOURCE[sc] = True
+        except Py4JJavaError:  # no Iceberg jars
+            _ICEBERG_SOURCE[sc] = False
+    return _ICEBERG_SOURCE[sc]
 
 
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
     """Resolve the pages table from an Iceberg table name, an Iceberg path,
     or a parquet directory — whichever the environment provides."""
-    import os
-
+    df = None
     if not ("/" in source or source.endswith(".parquet")):
         df = spark.read.table(source)  # catalog table (Iceberg in prod)
-    else:
+    elif _has_iceberg_source(spark):
         try:
             df = spark.read.format("iceberg").load(source)
-        except Exception:  # no Iceberg jars
-            if os.path.isdir(os.path.join(source, "metadata")):
-                # real Iceberg layout, no runtime: pure-Python metadata walk
-                from .iceberg_lite import read_iceberg_table
+        except Exception:  # not an Iceberg table: the fallbacks below
+            pass
+    if df is None:
+        if os.path.isdir(os.path.join(source, "metadata")):
+            # real Iceberg layout, no runtime: pure-Python metadata walk
+            from .iceberg_lite import read_iceberg_table
 
-                df = read_iceberg_table(spark, source)
-            else:
-                df = spark.read.parquet(source)  # plain-parquet fallback
+            df = read_iceberg_table(spark, source)
+        else:
+            df = spark.read.parquet(source)  # plain-parquet fallback
     missing = [c for c in PAGES_COLUMNS if c not in df.columns]
     if missing:
         raise ValueError(f"pages source {source!r} lacks columns {missing}")

@@ -166,6 +166,35 @@ class TestPlanQuality:
         assert "codegen id" in plan  # '*'-starred operators in formatted mode
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
+    def test_cell_encode_from_names_is_the_same_expression(self, spark):
+        """Column names build the encode from SQL text in one JVM call; it
+        must optimize to the Column-algebra expression and give
+        ``grid.cell_of``'s cells, NULL for a null or NaN coordinate."""
+        import re
+
+        import numpy as np
+
+        from immich_geodata_zh_tw_spark.functions.geo import cell_expr
+        from immich_geodata_zh_tw_spark.geo import grid
+
+        rng = np.random.default_rng(3)
+        lat = [*rng.uniform(-90, 90, 300), 90.0, -90.0, 0.0, float("nan"), None]
+        lon = [*rng.uniform(-180, 180, 300), 180.0, -180.0, 1.0, 2.0, 3.0]
+        df = spark.createDataFrame(
+            [(a if a is None else float(a), float(b)) for a, b in zip(lat, lon)],
+            "lat double, lon double")
+        for res in (0, 10, 28):
+            by_name = df.select(cell_expr("lat", "lon", res).alias("c"))
+            by_col = df.select(cell_expr(F.col("lat"), F.col("lon"), res).alias("c"))
+            plans = [re.sub(r"#\d+", "", d._jdf.queryExecution()
+                            .optimizedPlan().toString()) for d in (by_name, by_col)]
+            assert plans[0] == plans[1]
+            got = [r.c for r in by_name.collect()]  # int64, not via float
+            assert got[-2:] == [None, None]
+            want = grid.cell_of(np.array(lat[:-2], dtype=float),
+                                np.array(lon[:-2]), res)
+            assert got[:-2] == want.tolist()
+
 
 class TestSpanDedupPlan:
     def test_span_dedup_no_join_two_exchanges(self, spark):

@@ -157,7 +157,8 @@ class TestKnnJoin:
         """VERDICT.md round-1 item 5: a cities table sparser than the village
         tiling must NOT silently drop/mis-name rows — the flagship's kNN
         guard sends each row whose nearest city may lie outside its ring to
-        the exact full-array fallback, at any grid pick."""
+        the exact full-array fallback, at any grid pick; the static join
+        runs only where ``ring_covers`` proves the rings cover the domain."""
         from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
         from immich_geodata_zh_tw_spark.functions.geo import in_bbox
         from immich_geodata_zh_tw_spark.plans.reverse_geocode import (
@@ -170,8 +171,11 @@ class TestKnnJoin:
                     .filter(in_bbox(F.col("lat"), F.col("lon"), TW_BBOX))
                     .count())
         assert expected > 0
+        polys = polygons.admin_polygons_pdf(village_grid=2)
+        bounds = wkb.bounds_array(polys["geometry_wkb"])
         for lat, lon, res, ring_misses in [
             # four corners of the bbox: a res-6 one-ring guards their spacing
+            # and covers the bbox (the static join)
             ([21.7, 25.3, 21.7, 25.3], [119.7, 119.7, 122.3, 122.3], 6,
              False),
             # two pairs 300 km apart: res 8 guards their 51.5 km spacing,
@@ -188,9 +192,10 @@ class TestKnnJoin:
                 "admin1_code": [f"0{i}" for i in range(1, n + 1)],
                 "latitude": lat, "longitude": lon})
             assert grid_res(sparse) == res
-            out = reverse_geocode_pages(
-                spark, p, polygons.admin_polygons_pdf(village_grid=2), sparse,
-            ).toPandas()
+            if res is not None:
+                assert knn_op.ring_covers(sparse, bounds, res=res) == (
+                    not ring_misses)
+            out = reverse_geocode_pages(spark, p, polys, sparse).toPandas()
             # every extracted in-bbox page row gets named (nothing dropped) …
             assert len(out) == expected
             # … and with the true nearest city (brute-force check)
