@@ -81,9 +81,7 @@ def _sql_lit(v, dt) -> str | None:
 def sequential_ids_scalable(df: DataFrame, sort_cols: list[str], *, base: int,
                             out_col: str = "seq_id",
                             buckets: int | None = None,
-                            sample_target: int = 100_000,
-                            presampled: list[tuple] | None = None
-                            ) -> DataFrame:
+                            sample_target: int = 100_000) -> DataFrame:
     """Same result as ``sequential_ids`` without a single-partition window
     and WITHOUT materializing the input (VERDICT.md round-2 item 4 — the
     round-2 version persisted the full table as its determinism anchor,
@@ -128,29 +126,15 @@ def sequential_ids_scalable(df: DataFrame, sort_cols: list[str], *, base: int,
         f"{c}:{fields[c].simpleString()}" for c in sort_cols) + ">")
 
     # probe-first sampling: ONE limit(target+1) job both sizes the input and
-    # — for dimension-scale frames (the release pipeline's admin tables) —
-    # IS the complete boundary sample, so small inputs pay a single driver
-    # action instead of count + sample (fixed job latency dominated the
-    # release-pipeline bench at sf0.1).  Big inputs fall through to the
-    # count-then-bounded-fraction path, where two extra linear jobs are
-    # noise at 10^12 rows and the collect stays ≤ sample_target rows.
-    #
-    # ``presampled`` (r6): a caller-supplied sort-key sample skips the
-    # probe job entirely — callers that already run a bounded
-    # construction-time action (the release pipeline's fused 1-row
-    # scalars) can collect the sample in the SAME action.  ANY value set
-    # is a correct boundary source (boundary quality affects only bucket
-    # balance, never the ids — they come from the total order + exact
-    # offsets), so the sample may even predate cheap row-local rewrites
-    # of the input (null-token normalization, rounding).
-    if presampled is not None and len(presampled) <= sample_target:
-        probe = None
-        sampled = [tuple(v) for v in presampled]
-    else:
-        probe = df.select(*sort_cols).limit(sample_target + 1).collect()
-    if probe is not None and len(probe) <= sample_target:
+    # — for dimension-scale frames — IS the complete boundary sample, so
+    # small inputs pay a single driver action instead of count + sample.
+    # Big inputs fall through to the count-then-bounded-fraction path,
+    # where two extra linear jobs are noise at 10^12 rows and the collect
+    # stays ≤ sample_target rows.
+    probe = df.select(*sort_cols).limit(sample_target + 1).collect()
+    if len(probe) <= sample_target:
         sampled = [tuple(r[c] for c in sort_cols) for r in probe]
-    elif probe is not None:
+    else:
         n_rows = df.select(*sort_cols).count()  # column-pruned count scan
         fraction = _bounded_sample_fraction(n_rows, sample_target)
         sampled = [tuple(r[c] for c in sort_cols)

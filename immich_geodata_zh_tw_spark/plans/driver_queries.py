@@ -2409,9 +2409,9 @@ def q_release_pipeline(spark, sf_dir):
     """The reference's ``main.py release`` §3.1 chain end-to-end as one
     oracle-checked plan (enhance_data.py:10-68 + translate.py:149-338):
 
-    global max geoname id → admin1 record generation (dense-rank codes +
+    global max geoname id → admin1 record generation (rank codes +
     sequential ids) → GEODATA→cities500 conversion (8-dp rounding, admin1
-    dim join, scalable sequential ids) → merge-extra + coordinate dedup →
+    dim join, per-country window ids) → merge-extra + coordinate dedup →
     translate (metadata coordinate join, alternate-name s2t, F11
     alternatenames scan, 裏→里 fixup).
 
@@ -2434,39 +2434,12 @@ def q_release_pipeline(spark, sf_dir):
                "ELSE NULL END").alias("admin_3"),
         F.lit(None).cast("string").alias("admin_4"))
 
-    # the reference threads current_max_id through two scalars (global max
-    # id, then +|admin1|); both are 1-row aggregates, so fuse them into ONE
-    # bounded driver action (1×1-row crossJoin) instead of two jobs' fixed
-    # scheduling latency.  The |admin1| side counts generate_admin1_records
-    # ITSELF (its row count is invariant to base_geoname_id, so a
-    # provisional base of 0 is sound) — definitionally the same quantity
-    # the old admin1.count() action measured, robust to any future
-    # filtering inside the generator.
-    # The SAME action also collects the cities id-allocator's boundary
-    # sample (r6): sequential_ids_scalable would otherwise run its own
-    # probe job during plan construction; the sample rides along as one
-    # bounded collect_list (≤ its sample_target rows, the exact bound the
-    # probe had), and ANY sample is a correct boundary source per the
-    # ids.py ``presampled`` contract.
-    mdf = enhance.global_max_geoname_id_df(
-        [_t(spark, sf_dir, "orders")
-         .select(F.col("o_orderkey").alias("geoname_id"))])
-    ndf = (enhance.generate_admin1_records(
-               geodata, country_code="JP", base_geoname_id=0)
-           .agg(F.count(F.lit(1)).alias("n")))
-    pdf = (geodata.select(*enhance.CITIES_SORT_COLS).limit(100_001)
-           .agg(F.collect_list(
-               F.struct(*enhance.CITIES_SORT_COLS)).alias("p")))
-    row = mdf.crossJoin(ndf).crossJoin(pdf).first()
-    base = int(row.m) if row.m is not None else 0
-    admin1 = enhance.generate_admin1_records(
-        geodata, country_code="JP", base_geoname_id=base + 1)
-    base2 = base + 1 + int(row.n)
-    presampled = ([tuple(r) for r in row.p]
-                  if len(row.p) <= 100_000 else None)
-    cities = enhance.convert_to_cities_schema(
-        geodata, country_code="JP", base_geoname_id=base2,
-        admin1_codes=admin1, presampled=presampled)
+    # the same enhance stage as run_release: one bounded driver action
+    # (global max id + the admin1 and city counts), plain per-country ids
+    _, cities, bases = enhance.enhance_countries(
+        {"JP": geodata}, [_t(spark, sf_dir, "orders")
+                          .select(F.col("o_orderkey").alias("geoname_id"))])
+    base2 = bases["JP"]
 
     p = _t(spark, sf_dir, "part")
     extra = p.select(

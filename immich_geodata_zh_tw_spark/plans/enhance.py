@@ -3,18 +3,26 @@
 Re-expresses the enhance + translate stages (reference core/enhance_data.py,
 core/translate.py, core/geodata/base.py — see SURVEY.md §3.1) on DataFrames:
 
-* ``global_max_geoname_id``  — A4 scan over all id-bearing tables
-  (core/utils/geoname_ids.py:36-75);
-* ``generate_admin1_records`` — distinct admin_1 → zero-padded dense-rank
-  codes + sequential geoname ids (base.py:493-592, :627-671);
+* ``enhance_countries``      — every handler country in one plan: ONE
+  bounded driver action returns the global max id (A4,
+  core/utils/geoname_ids.py:36-75) and each country's admin1 and city
+  counts, from which the driver threads the reference's ``current_max_id``
+  (run_release's enhance stage and the declared ``release_pipeline`` query);
+* ``generate_admin1_records`` — distinct (country, admin_1) → zero-padded
+  rank codes + sequential geoname ids (base.py:493-592, :627-671);
+* ``convert_to_cities_schema`` — GEODATA rows → cities500 rows: 8-dp rounded
+  coordinates, admin1-code lookup, sequential ids (base.py:71-188);
 * ``update_admin1``          — delete-by-prefix + insert (enhance_data.py:137-142);
 * ``merge_extra_data``       — anti-join new rows ≥ population floor, then
   coordinate dedup keep-max-pop/min-id (enhance_data.py:222-297);
-* ``convert_to_cities_schema`` — GEODATA rows → cities500 rows: 8-dp rounded
-  coordinates, admin1-code lookup, sequential ids (base.py:71-188);
 * ``translate_cities500``    — metadata coordinate join (J5) + alternate-name
   priority pick (A3) + coalesce chain (P10) + TW passthrough
   (translate.py:149-338).
+
+Both id allocations (W1) here are a plain ``row_number()`` over a window
+partitioned by country, plus the country's base as a literal.  The
+10^12-row ``ids.sequential_ids_scalable`` is the allocator of the declared
+``seq_id_assign`` query only.
 
 Everything is built from the operator library; no step shuffles more than the
 keys + payload it aggregates, and all dimension sides are broadcastable.
@@ -24,13 +32,12 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import coordinate_dedup
-from ..operators.ids import (dense_rank_codes, sequential_ids,
-                             sequential_ids_scalable)
-from ..operators.merge import replace_by_key
+from ..operators.merge import replace_by_key, union_all
+from ..operators.registry import GEODATA_COLS
 from ..operators.translate import (CHINESE_PRIORITY, coalesce_chain,
                                    extract_chinese_names, fix_li_names,
                                    metadata_coordinate_join,
@@ -38,102 +45,135 @@ from ..operators.translate import (CHINESE_PRIORITY, coalesce_chain,
 
 COORD_DECIMAL_PLACES = 8  # reference base.py:24-25
 
-#: the full-column sort that orders cities500 id allocation
-#: (base.py:137-143) — module-level so callers that pre-collect the
-#: boundary sample (``convert_to_cities_schema(presampled=...)``) name
-#: the same columns the operator sorts by
+#: the full-column sort that orders a country's city id allocation
+#: (base.py:137-143)
 CITIES_SORT_COLS = ["country", "admin_1", "admin_2", "admin_3", "admin_4",
                     "latitude", "longitude"]
 
 
 def global_max_geoname_id_df(tables: list[DataFrame],
                              id_col: str = "geoname_id") -> DataFrame:
-    """One-row ``(m)`` subplan: max id across all id-bearing tables —
-    exposed un-collected so callers can fuse it with other one-row
-    aggregates (crossJoin of 1×1 rows) into a SINGLE driver action."""
+    """One-row ``(m)`` subplan: max id across all id-bearing tables
+    (geoname_ids.py:36-75), un-collected so ``enhance_countries`` fuses it
+    with the per-country counts into ONE driver action."""
     maxes = [t.agg(F.max(F.col(id_col).cast("long")).alias("m")) for t in tables]
     merged = reduce(DataFrame.unionByName, maxes)
     return merged.agg(F.max("m").alias("m"))
 
 
-def global_max_geoname_id(tables: list[DataFrame], id_col: str = "geoname_id") -> int:
-    """Max id across all id-bearing tables (geoname_ids.py:36-75)."""
-    row = global_max_geoname_id_df(tables, id_col).first()
-    return int(row.m) if row.m is not None else 0
+def _country_ids(order: list[str], bases: dict[str, int]) -> Column:
+    """``bases[country_code] + row_number() - 1`` within each country: the
+    bases are ONE parsed CASE of long literals, not a py4j call each."""
+    arms = " ".join(f"WHEN '{cc}' THEN {b}L" for cc, b in bases.items())
+    w = Window.partitionBy("country_code").orderBy(*order)
+    return (F.row_number().over(w) - 1
+            + F.expr(f"CASE country_code {arms} END")).cast("string")
 
 
-def generate_admin1_records(geodata: DataFrame, *, country_code: str,
-                            base_geoname_id: int) -> DataFrame:
-    """One ADMIN1 row per distinct admin_1: code ``CC.<rank>`` (zero-padded,
-    alphabetical) + sequential geoname ids (base.py:493-592).
+def enhance_countries(geodata: dict[str, DataFrame],
+                      id_tables: list[DataFrame]
+                      ) -> tuple[DataFrame, DataFrame, dict[str, int]]:
+    """Admin1 records and cities500 rows of every handler country
+    (enhance_data.py:10-68): ``(admin1, cities, city_bases)``.
 
-    admin_1 sets are dimension-sized by construction (a country has tens of
-    first-level divisions), so the plain single-window ``sequential_ids`` is
-    correct here and avoids the scalable variant's two driver actions +
-    persist; the big cities500 allocation keeps the scalable path.
+    ``geodata`` maps a country code to its handler's GEODATA rows.  ONE
+    bounded driver action returns the max id of ``id_tables`` and each
+    country's admin1-record and city-row counts; from them the driver
+    threads the reference's ``current_max_id`` (countries in sorted order,
+    admin1 ids first, then city ids) into per-country base literals.
     """
-    distinct = geodata.select("admin_1").distinct()
-    coded = dense_rank_codes(distinct, "admin_1", prefix=country_code, out_col="id")
-    with_ids = sequential_ids(coded, ["admin_1"], base=base_geoname_id,
-                              out_col="geoname_id")
-    return with_ids.select(
-        F.col("id"),
+    g = union_all([geodata[cc].select(F.lit(cc).alias("country_code"),
+                                      *GEODATA_COLS)
+                   for cc in sorted(geodata)])
+    counts = g.groupBy("country_code").agg(
+        (F.count_distinct("admin_1")  # + 1 for a NULL admin_1, its own row
+         + F.max(F.col("admin_1").isNull().cast("int"))).alias("n_a1"),
+        F.count(F.when(F.col("latitude").isNotNull()
+                       & F.col("longitude").isNotNull(), 1)).alias("n_cities"))
+    row = (global_max_geoname_id_df(id_tables)
+           .crossJoin(counts.agg(F.collect_list(F.struct(*counts.columns))
+                                 .alias("n")))
+           .first())
+    n = {r.country_code: (r.n_a1, r.n_cities) for r in row.n}
+    current = (row.m or 0) + 1
+    a1_bases, city_bases = {}, {}
+    for cc in sorted(geodata):
+        n_a1, n_cities = n.get(cc, (0, 0))
+        a1_bases[cc], city_bases[cc] = current, current + n_a1
+        current += n_a1 + n_cities  # reference threads current_max_id
+    admin1 = generate_admin1_records(g, bases=a1_bases)
+    cities = convert_to_cities_schema(g, bases=city_bases, admin1_codes=admin1)
+    return admin1, cities, city_bases
+
+
+def generate_admin1_records(geodata: DataFrame, *,
+                            bases: dict[str, int]) -> DataFrame:
+    """One ADMIN1 row per distinct (country_code, admin_1): code
+    ``CC.<rank>`` (zero-padded to the digits of the country's count,
+    alphabetical, NULL first) + sequential geoname ids from the country's
+    base in ``bases`` (base.py:493-592, :627-671).
+
+    Like the city rows (``convert_to_cities_schema``), the ids come from a
+    plain window partitioned by country, not ``ids.sequential_ids_scalable``:
+    handler rows are one country's admin units (tens of admin_1 names,
+    thousands of rows, never cities500), and at that size the scalable
+    allocator's boundary sample, range join, count and offsets window cost
+    more than its sort saves (BENCH/BASELINE.md).
+    """
+    distinct = geodata.select("country_code", "admin_1").distinct()
+    by_cc = Window.partitionBy("country_code")
+    rank = F.row_number().over(by_cc.orderBy("admin_1")).cast("string")
+    width = F.length(F.count(F.lit(1)).over(by_cc).cast("string"))
+    return distinct.select(
+        F.concat("country_code", F.lit("."),
+                 F.lpad(rank, width, "0")).alias("id"),
         F.col("admin_1").alias("name"),
         F.col("admin_1").alias("asciiname"),
-        F.col("geoname_id").cast("string").alias("geoname_id"))
+        _country_ids(["admin_1"], bases).alias("geoname_id"))
 
 
 def update_admin1(admin1: DataFrame, new_records: DataFrame, *,
-                  country_code: str) -> DataFrame:
-    """Replace a country's admin1 rows (delete-by-prefix + insert,
+                  country_codes: list[str]) -> DataFrame:
+    """Replace the countries' admin1 rows (delete-by-prefix + insert,
     enhance_data.py:137-142)."""
-    return replace_by_key(admin1, new_records,
-                          F.col("id").startswith(f"{country_code}."))
+    return replace_by_key(admin1, new_records, reduce(Column.__or__, [
+        F.col("id").startswith(f"{cc}.") for cc in country_codes]))
 
 
-def convert_to_cities_schema(geodata: DataFrame, *, country_code: str,
-                             base_geoname_id: int,
-                             admin1_codes: DataFrame,
-                             presampled: list[tuple] | None = None
-                             ) -> DataFrame:
-    """GEODATA rows → cities500-shaped rows (base.py:71-188).
+def convert_to_cities_schema(geodata: DataFrame, *, bases: dict[str, int],
+                             admin1_codes: DataFrame) -> DataFrame:
+    """GEODATA rows (with ``country_code``) → cities500-shaped rows
+    (base.py:71-188).
 
-    * coordinates rounded to 8 dp (join-key stability, SURVEY §1.3);
-    * admin1_code via broadcast join against the admin1 table (J7 — the
-      reference's dict lookup);
-    * geoname ids allocated sequentially after the full-column sort (W1).
-
-    ``presampled``: optional ``CITIES_SORT_COLS`` sample rows forwarded to
-    the id allocator so it skips its boundary-probe job — callers with an
-    existing bounded construction action collect the sample there (ids.py
-    ``presampled`` contract: any value set is a correct boundary source).
+    * rows without a coordinate dropped, coordinates rounded to 8 dp
+      (join-key stability, SURVEY §1.3), admin null tokens → NULL;
+    * admin1_code via broadcast join against the admin1 table on
+      (country, admin_1) (J7 — the reference's per-country dict lookup);
+    * geoname ids allocated sequentially per country after the
+      full-column sort (W1), from the country's base in ``bases``.
     """
-    # single withColumns calls: every withColumn re-analyzes the deepening
-    # plan driver-side (~30 ms each in the release profile); these exprs all
-    # bind to ORIGINAL columns so batching is semantics-preserving
-    g = geodata.withColumns(
-        {c: normalize_null_tokens(F.col(c))
-         for c in ("admin_1", "admin_2", "admin_3", "admin_4")})
-    g = (g.filter(F.col("latitude").isNotNull() & F.col("longitude").isNotNull())
-         .withColumns({"latitude": F.round("latitude", COORD_DECIMAL_PLACES),
-                       "longitude": F.round("longitude", COORD_DECIMAL_PLACES)}))
-    g = sequential_ids_scalable(g, CITIES_SORT_COLS, base=base_geoname_id,
-                                out_col="geoname_id",
-                                presampled=presampled)
+    g = geodata.filter(F.col("latitude").isNotNull()
+                       & F.col("longitude").isNotNull()).select(
+        "country_code", "country",
+        *[normalize_null_tokens(F.col(c)).alias(c)
+          for c in ("admin_1", "admin_2", "admin_3", "admin_4")],
+        *[F.round(c, COORD_DECIMAL_PLACES).alias(c)
+          for c in ("latitude", "longitude")])
+    parts = F.split(F.col("id"), "\\.")
     a1 = admin1_codes.select(
-        F.col("name").alias("admin_1"),
-        F.element_at(F.split(F.col("id"), "\\."), -1).alias("admin1_code"))
-    g = g.join(F.broadcast(a1), "admin_1", "left")
+        parts[0].alias("country_code"), F.col("name").alias("admin_1"),
+        F.element_at(parts, -1).alias("admin1_code"))
+    g = g.join(F.broadcast(a1), ["country_code", "admin_1"], "left")
     name = coalesce_chain(F.col("admin_3"), F.col("admin_2"), F.col("admin_1"))
     return g.select(
-        F.col("geoname_id").cast("string").alias("geoname_id"),
+        _country_ids(CITIES_SORT_COLS, bases).alias("geoname_id"),
         name.alias("name"),
         name.alias("asciiname"),
         F.lit(None).cast("string").alias("alternatenames"),
         "latitude", "longitude",
         F.lit("A").alias("feature_class"),
         F.lit("ADM3").alias("feature_code"),
-        F.lit(country_code).alias("country_code"),
+        "country_code",
         F.lit(None).cast("string").alias("cc2"),
         "admin1_code",
         F.col("admin_2").alias("admin2_code"),
@@ -160,11 +200,11 @@ def merge_extra_data(cities: DataFrame, extra: DataFrame, *,
 
 
 def replace_country_rows(cities: DataFrame, handler_rows: DataFrame, *,
-                         country_code: str) -> DataFrame:
-    """U3: drop a country's rows, insert the handler-generated ones
+                         country_codes: list[str]) -> DataFrame:
+    """U3: drop the countries' rows, insert the handler-generated ones
     (base.py:694-722)."""
     return replace_by_key(cities, handler_rows,
-                          F.col("country_code") == country_code)
+                          F.col("country_code").isin(country_codes))
 
 
 def pick_chinese_names(alternate_names: DataFrame) -> DataFrame:

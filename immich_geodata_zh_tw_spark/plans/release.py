@@ -9,9 +9,10 @@ artifacts — the batch counterpart of the manifest resume (sources/manifest).
 
 Stages:
 
-* ``enhance``  — per-country handler dispatch (operators/registry) →
-  admin1 records + cities500 replacement rows → replace-by-key updates
-  (enhance_data.py:10-68);
+* ``enhance``  — per-country handler dispatch (operators/registry), then
+  ``enhance.enhance_countries`` over all countries at once (one bounded
+  driver action for the id bases; plain per-country window ids) and one
+  replace-by-key per artifact (enhance_data.py:10-68);
 * ``translate`` — metadata/alternate/alternatenames translate chain
   (translate.py:149-338);
 * ``pack``     — driver-side release layout + archives (core/pack_release.py).
@@ -57,25 +58,18 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
     translated_path = str(work / "cities500_translated")
 
     if "enhance" not in skip:
-        id_tables = [cities.select("geoname_id"), admin1.select("geoname_id")]
-        if admin2 is not None:
-            id_tables.append(admin2.select("geoname_id"))
-        base = enhance.global_max_geoname_id(id_tables)
-        current = base + 1
         out_cities, out_admin1 = cities, admin1
-        for cc, raw in sorted(country_inputs.items()):
-            geodata = get_handler(cc)(raw)
-            a1 = enhance.generate_admin1_records(
-                geodata, country_code=cc, base_geoname_id=current)
-            n_a1 = a1.count()
-            out_admin1 = enhance.update_admin1(out_admin1, a1, country_code=cc)
-            handler_cities = enhance.convert_to_cities_schema(
-                geodata, country_code=cc, base_geoname_id=current + n_a1,
-                admin1_codes=a1)
-            n_cities = handler_cities.count()
+        if country_inputs:
+            id_tables = [t.select("geoname_id")
+                         for t in (cities, admin1, admin2) if t is not None]
+            geodata = {cc: get_handler(cc)(raw)
+                       for cc, raw in country_inputs.items()}
+            a1, handler_cities, _ = enhance.enhance_countries(geodata,
+                                                              id_tables)
+            out_admin1 = enhance.update_admin1(admin1, a1,
+                                               country_codes=list(geodata))
             out_cities = enhance.replace_country_rows(
-                out_cities, handler_cities, country_code=cc)
-            current += n_a1 + n_cities  # reference threads current_max_id
+                cities, handler_cities, country_codes=list(geodata))
         if extra_cities is not None:
             out_cities = enhance.merge_extra_data(out_cities, extra_cities)
         out_cities.write.mode("overwrite").parquet(cities_path)

@@ -27,6 +27,12 @@ def geodata(spark):
 
 
 @pytest.fixture(scope="module")
+def tw_geodata(geodata):
+    """``geodata`` as one country's rows of the enhance union."""
+    return geodata.select(F.lit("TW").alias("country_code"), "*")
+
+
+@pytest.fixture(scope="module")
 def admin1(spark):
     rows = [("TW.01", "old_a", "old_a", "100"), ("JP.13", "東京都", "Tokyo", "200")]
     return spark.createDataFrame(pd.DataFrame(
@@ -34,30 +40,30 @@ def admin1(spark):
 
 
 class TestAdmin1:
-    def test_codes_and_ids(self, spark, geodata, admin1):
-        recs = enhance.generate_admin1_records(geodata, country_code="TW",
-                                               base_geoname_id=1000)
+    def test_codes_and_ids(self, spark, tw_geodata, admin1):
+        recs = enhance.generate_admin1_records(tw_geodata,
+                                               bases={"TW": 1000})
         pdf = recs.toPandas().sort_values("id").reset_index(drop=True)
         # 4 distinct admin_1, alphabetical dense rank, width = len('4') = 1
         assert pdf["id"].tolist() == ["TW.1", "TW.2", "TW.3", "TW.4"]
         assert sorted(pdf["name"]) == ["嘉義縣", "臺中市", "臺北市", "高雄市"]
         assert sorted(int(i) for i in pdf["geoname_id"]) == [1000, 1001, 1002, 1003]
 
-    def test_replace_by_prefix(self, spark, geodata, admin1):
-        recs = enhance.generate_admin1_records(geodata, country_code="TW",
-                                               base_geoname_id=1000)
-        merged = enhance.update_admin1(admin1, recs, country_code="TW").toPandas()
+    def test_replace_by_prefix(self, spark, tw_geodata, admin1):
+        recs = enhance.generate_admin1_records(tw_geodata,
+                                               bases={"TW": 1000})
+        merged = enhance.update_admin1(admin1, recs,
+                                       country_codes=["TW"]).toPandas()
         assert "TW.01" not in set(merged["id"])      # old TW rows gone
         assert "JP.13" in set(merged["id"])          # other countries kept
         assert len(merged) == 5
 
 
 class TestConvertAndMerge:
-    def test_convert_schema_and_ids(self, spark, geodata):
-        a1 = enhance.generate_admin1_records(geodata, country_code="TW",
-                                             base_geoname_id=1000)
+    def test_convert_schema_and_ids(self, spark, tw_geodata):
+        a1 = enhance.generate_admin1_records(tw_geodata, bases={"TW": 1000})
         cities = enhance.convert_to_cities_schema(
-            geodata, country_code="TW", base_geoname_id=2000, admin1_codes=a1)
+            tw_geodata, bases={"TW": 2000}, admin1_codes=a1)
         pdf = cities.toPandas()
         assert len(pdf) == 5
         assert sorted(int(i) for i in pdf["geoname_id"]) == list(range(2000, 2005))
@@ -81,7 +87,7 @@ class TestConvertAndMerge:
             "longitude": [2.0, 1.0, 3.0, 3.0],
             "population": [999, 700, 50, 800],
         }))
-        assert enhance.global_max_geoname_id([cities, extra]) == 14
+        assert enhance.global_max_geoname_id_df([cities, extra]).first().m == 14
         out = enhance.merge_extra_data(cities, extra, min_population=100).toPandas()
         got = dict(zip(out["geoname_id"], out["population"]))
         # id 11 not re-added (anti-join); id 13 below pop floor;

@@ -45,31 +45,6 @@ class TestIds:
         got = out.sort_values(["name", "k"])["seq_id"].tolist()
         assert got == list(range(1000, 1000 + n))  # exact sorted sequence
 
-    def test_scalable_ids_presampled_matches_probe_path(self, spark):
-        """r6 ``presampled`` contract: a caller-supplied boundary sample —
-        exact, skewed, stale (values absent from the data), or empty —
-        yields the identical id assignment as the operator's own probe,
-        because boundaries only steer bucket balance, never the ids."""
-        from immich_geodata_zh_tw_spark.operators import ids
-
-        n = 500
-        df = spark.createDataFrame(pd.DataFrame(
-            {"name": [f"x{(i * 37) % n:05d}" for i in range(n)],
-             "k": list(range(n))}))
-        want = (ids.sequential_ids_scalable(df, ["name", "k"], base=10)
-                .toPandas().sort_values(["name", "k"])["seq_id"].tolist())
-        samples = [
-            [],                                        # degenerate: 1 bucket
-            [("x00001", 3)],                           # single skewed cut
-            [(f"zz{i}", -i) for i in range(50)],       # stale, off-domain
-            [(f"x{i:05d}", i) for i in range(0, n, 7)],  # near-exact
-        ]
-        for s in samples:
-            got = (ids.sequential_ids_scalable(df, ["name", "k"], base=10,
-                                               presampled=s)
-                   .toPandas().sort_values(["name", "k"])["seq_id"].tolist())
-            assert got == want, s
-
     def test_scalable_ids_plan_has_no_python_udf(self, spark):
         """W1 must stay JVM-side (VERDICT.md round-1 item 3)."""
         from immich_geodata_zh_tw_spark.operators import ids

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from immich_geodata_zh_tw_spark.operators.registry import get_handler
 from immich_geodata_zh_tw_spark.plans.release import run_release
 
 
@@ -110,6 +111,123 @@ class TestReleaseRunner:
         res = run_release(spark, workdir=tmp_path, **inputs,
                           skip={"enhance"}, release_date="2026-08-16")
         assert spark.read.parquet(res["translated"]).count() == 3
+
+
+@pytest.fixture()
+def three_countries(spark, inputs):
+    """TW + KR + JP handler inputs: KR empty, JP one row, TW with a NULL
+    admin_1, every null token, rows without a coordinate, and an admin_1
+    name (中央) that JP shares."""
+    tw = [  # COUNTYNAME, TOWNNAME, VILLNAME, latitude, longitude
+        ("臺北市", "中正區", "建國里", 25.032, 121.519),
+        ("臺北市", "大安區", "", 25.026, 121.543),
+        ("中央", "東區", "甲里", 24.8, 120.97),
+        ("中央", "None", "乙里", 24.81, 120.96),
+        (None, "西區", "丙里", 23.48, 120.45),
+        (None, "北區", None, 23.49, 120.46),
+        ("", "南區", "丁里", 22.6, 120.3),
+        ("None", "南區", "戊里", 22.61, 120.31),
+        ("nan", "nan", "己里", 22.62, 120.32),
+        ('""', "前鎮區", '""', 22.63, 120.33),
+        ("新竹縣", "竹北市", "庚里", None, 121.0),   # dropped: no latitude
+        ("臺北市", "信義區", "辛里", 25.03, None),   # dropped: no longitude
+    ]
+    jp = [("中央", None, "市1市", None, 35.68, 139.76)]
+    tw_raw = spark.createDataFrame(tw, "COUNTYNAME string, TOWNNAME string, "
+                                   "VILLNAME string, latitude double, "
+                                   "longitude double")
+    jp_raw = spark.createDataFrame(jp, "N03_001 string, N03_003 string, "
+                                   "N03_004 string, N03_005 string, "
+                                   "latitude double, longitude double")
+    kr_raw = spark.createDataFrame([], "adm_nm string, sidonm string, "
+                                   "sggnm string, latitude double, "
+                                   "longitude double")
+    return dict(inputs, country_inputs={"TW": tw_raw, "KR": kr_raw,
+                                        "JP": jp_raw})
+
+
+def reference_threading(geodata: dict[str, pd.DataFrame], max_id: int):
+    """The reference's id threading (enhance_data.py, base.py) in pandas:
+    from max id + 1, countries in sorted order, each first its admin1 rows
+    (distinct admin_1, ascending, NULL first; codes zero-padded to the
+    digits of their count), then its city rows (null tokens → NULL, rows
+    without a coordinate dropped, ascending on the seven sort columns,
+    NULLs first).  Returns ``{admin1 id: (name, geoname_id)}`` and
+    ``{city geoname_id: (country, lat, lon, admin1_code, admin2_code)}``."""
+    tokens = ["", "None", "nan", '""']
+    sort_cols = ["country", "admin_1", "admin_2", "admin_3", "admin_4",
+                 "latitude", "longitude"]
+    current = max_id + 1
+    admin1, cities = {}, {}
+    for cc in sorted(geodata):
+        g = geodata[cc]
+        names = sorted(set(g["admin_1"]), key=lambda v: (v is not None, v))
+        width = len(str(len(names)))
+        code = {nm: str(i + 1).zfill(width) for i, nm in enumerate(names)}
+        for i, nm in enumerate(names):
+            admin1[f"{cc}.{code[nm]}"] = (nm, current + i)
+        current += len(names)
+        rows = g[g["latitude"].notna() & g["longitude"].notna()].copy()
+        for c in ("admin_1", "admin_2", "admin_3", "admin_4"):
+            rows[c] = rows[c].astype(object).where(~rows[c].isin(tokens),
+                                                   None)
+        rows = rows.sort_values(sort_cols, na_position="first")
+        for i, r in enumerate(rows.itertuples()):
+            cities[current + i] = (
+                cc, r.latitude, r.longitude,
+                None if r.admin_1 is None else code[r.admin_1], r.admin_2)
+        current += len(rows)
+    return admin1, cities
+
+
+class TestReleaseThreading:
+    def test_three_countries_match_reference_threading(
+            self, spark, tmp_path, three_countries):
+        res = run_release(spark, workdir=tmp_path, **three_countries,
+                          skip={"translate", "pack"})
+        geodata = {cc: get_handler(cc)(raw).toPandas()
+                   for cc, raw in three_countries["country_inputs"].items()}
+        want_a1, want_cities = reference_threading(geodata, max_id=5000)
+        # TW: 3 names, 4 null tokens and the NULL are admin1 rows; JP: 1
+        assert len(want_a1) == 9 and len(want_cities) == 11
+
+        a1 = spark.read.parquet(res["admin1"]).toPandas()
+        a1 = a1[a1["id"].str[:3].isin(["TW.", "KR.", "JP."])]
+        got_a1 = {r.id: (r.name, int(r.geoname_id)) for r in a1.itertuples()}
+        assert got_a1 == want_a1
+        cities = spark.read.parquet(res["cities"]).toPandas()
+        cities = cities[cities["country_code"].isin(["TW", "KR", "JP"])]
+        got_cities = {int(r.geoname_id): (r.country_code, r.latitude,
+                                          r.longitude, r.admin1_code,
+                                          r.admin2_code)
+                      for r in cities.itertuples()}
+        assert len(cities) == len(got_cities)  # one row per id
+        assert got_cities == want_cities
+        # the stale TW rows are gone, the FR rows kept
+        assert set(a1["id"]) == set(want_a1)
+        assert "FR.11" in set(spark.read.parquet(res["admin1"])
+                              .toPandas()["id"])
+
+    def test_enhance_runs_one_driver_action_before_its_writes(
+            self, spark, tmp_path, three_countries):
+        """The id bases of every country come from ONE bounded action;
+        the other SQL executions of the stage are its two writes."""
+        store = spark._jsparkSession.sharedState().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def execution_ids():
+            bus.waitUntilEmpty()
+            execs = store.executionsList()
+            return {execs.apply(i).executionId():
+                    execs.apply(i).description()
+                    for i in range(execs.size())}
+
+        before = execution_ids()
+        run_release(spark, workdir=tmp_path, **three_countries,
+                    skip={"translate", "pack"})
+        new = {k: v for k, v in execution_ids().items() if k not in before}
+        actions = [new[k].split(" at ")[0] for k in sorted(new)]
+        assert actions == ["first", "parquet", "parquet"], new
 
 
 class TestReleaseVersionWorkflow:
