@@ -127,14 +127,11 @@ def pinned(cpus: int):
 
 
 def two_level_scaling(*, cpus_4n: int, n_items: int, materialize, build_job,
-                      unit: str, metric: str, warmup: bool = True,
-                      extra: dict | None = None) -> dict:
-    """Shared N vs 4N-cores scaling harness (the north-rule protocol).
+                      unit: str, metric: str, warmup: bool = True) -> dict:
+    """N vs 4N-cores scaling harness (the north-rule protocol).
 
-    One copy of the protocol for every scaled job — flagship
-    (``bench/scaling.py``) and dedup family (``bench/scaling_dedup.py``)
-    — so protocol fixes (full-size warm-up, min-of-2 reps,
-    materialize-at-4N-before-either-leg) can't drift between them.
+    Run by the flagship's ``bench/scaling.py``; the round-5 dedup-family
+    legs it measured are recorded in ``BENCH/BENCH_r5_scaling_dedup.json``.
 
     ``materialize(spark) -> path`` writes the corpus once at full width
     (a low-core writer would cap every reader's scan parallelism);
@@ -203,8 +200,5 @@ def two_level_scaling(*, cpus_4n: int, n_items: int, materialize, build_job,
                           f"{unit}_per_sec": round(n_items / sec, 1), **noise}
     rate = f"{unit}_per_sec"
     eff = results["4N"][rate] / (4.0 * results["N"][rate])
-    out = {"metric": metric, "value": round(eff, 3), "unit": "ratio",
-           "pinned_cpus": True, f"n_{unit}": n_items, "runs": results}
-    if extra:
-        out.update(extra)
-    return out
+    return {"metric": metric, "value": round(eff, 3), "unit": "ratio",
+            "pinned_cpus": True, f"n_{unit}": n_items, "runs": results}

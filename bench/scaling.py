@@ -6,9 +6,7 @@ parallelism levels (local[N] and local[4N]) and report throughput at both plus
 ``eff = (pages/sec @ 4N) / (4 × pages/sec @ N)``.
 
 The measurement protocol itself (materialize-at-4N, per-leg sessions,
-full-size warm-up, min-of-2 reps) lives in ONE place —
-``bench.common.two_level_scaling`` — shared with the dedup-family scaling
-module so protocol fixes cannot drift between the scaled jobs.
+full-size warm-up, min-of-2 reps) is ``bench.common.two_level_scaling``.
 """
 
 from __future__ import annotations

@@ -10,7 +10,8 @@ builds Immich's reverse-geocode data) as a distributed, Spark-first engine:
   (the Immich runtime semantic, reference README.md:103)
 * the reference's tabular operator inventory (SURVEY.md §2) as DataFrame plans
 * web-scale extract stage: Arrow UDFs over ``html:binary`` pages
-* skew handling (salting + adaptive cell splitting) and manifest-based resume
+* manifest-based resume; dense cells need no skew code, since the pages side
+  is round-robin repartitioned after the bbox filter and every join is broadcast
 
 Everything is built on public PySpark APIs; geometry kernels are dependency-free
 numpy (no shapely/h3/pyproj in this environment).

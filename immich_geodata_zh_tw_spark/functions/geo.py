@@ -69,9 +69,3 @@ def in_bbox(lat: Column, lon: Column,
     lat_min, lat_max, lon_min, lon_max = bbox
     return ((lat >= F.lit(lat_min)) & (lat <= F.lit(lat_max))
             & (lon >= F.lit(lon_min)) & (lon <= F.lit(lon_max)))
-
-
-def round_coord(col: Column, places: int = 8) -> Column:
-    """8-dp coordinate rounding (reference base.py:24-25) — the stringly join
-    key stability rule (SURVEY.md §1.3)."""
-    return F.round(col, places)

@@ -521,9 +521,6 @@ def t2s(col: Column | str) -> Column:
 #: inside SQL string literals (Spark SQL eats single backslashes in
 #: literals; DuckDB keeps them).
 IS_CHINESE_RE_SPARK = r"^[\p{IsHan}-]+$"
-IS_CHINESE_RE_DUCK = r"^[\p{Han}-]+$"
-HAS_CHINESE_RE_SPARK = r"[\p{IsHan}]"
-HAS_CHINESE_RE_DUCK = r"[\p{Han}]"
 IS_CHINESE_SQL = {"spark": r"^[\\p{IsHan}-]+$", "duckdb": r"^[\p{Han}-]+$"}
 HAS_CHINESE_SQL = {"spark": r"[\\p{IsHan}]", "duckdb": r"[\p{Han}]"}
 
@@ -531,11 +528,6 @@ HAS_CHINESE_SQL = {"spark": r"[\\p{IsHan}]", "duckdb": r"[\p{Han}]"}
 def is_chinese(col: Column) -> Column:
     """Whole string is Han (or '-') — reference is_chinese (translate.py:52-55)."""
     return col.rlike(IS_CHINESE_RE_SPARK)
-
-
-def include_chinese(col: Column) -> Column:
-    """String contains at least one Han character (translate.py:58-69)."""
-    return col.rlike(HAS_CHINESE_RE_SPARK)
 
 
 def is_traditional(col: Column) -> Column:

@@ -4,9 +4,9 @@ Catalyst cannot see through an ArrowEvalPython node: a corpus-derived
 frame that EXPLODES behind a pandas UDF (shingle hashes, band signatures,
 LSH table sigs) keeps the *pre-fan-out* scan estimate, so once the input
 parquet is small enough the planner happily BROADCASTS the exploded
-corpus — a single-threaded hashed-relation build locally (caught by
-``bench/scaling_dedup.py``: 31 M-row broadcast builds serialized the
-scoring stage) and a driver OOM at real scale.
+corpus — a single-threaded hashed-relation build locally
+(``BENCH/BENCH_r5_scaling_dedup.json``: 31 M-row broadcast builds
+serialized the scoring stage) and a driver OOM at real scale.
 
 ``hint_if_large`` re-derives the decision from the statistic Catalyst
 gets RIGHT — the source frame's estimated bytes — times a call-site

@@ -252,7 +252,7 @@ def _pairs_from_bands(bands: DataFrame, *, id_col: str,
     of ``source`` — at 400 k docs that guessed the 1.6 M-row frame under
     the auto-broadcast threshold and planned a BROADCAST self-join, whose
     single-threaded hashed-relation build serialized the whole stage
-    (caught by ``bench/scaling_dedup.py``; at real scale it is a driver
+    (``BENCH/BENCH_r5_scaling_dedup.json``; at real scale it is a driver
     OOM).  :func:`_stats.hint_if_large` corrects the estimate with the
     band fan-out and forces the spill-safe sort-merge join the uniform
     (band, sig) key wants — while a genuinely small corpus keeps the
@@ -267,14 +267,6 @@ def _pairs_from_bands(bands: DataFrame, *, id_col: str,
             .select(F.col(f"l.{id_col}").alias("id_a"),
                     F.col(f"r.{id_col}").alias("id_b"))
             .distinct())
-
-
-def shingle_set_expr(text_col: str, *, shingle: int = 5, stride: int = 2) -> str:
-    """Distinct character n-gram set as one JVM expression (Spark SQL text;
-    DuckDB twin uses list_distinct/list_transform/generate_series)."""
-    return (f"array_distinct(transform(sequence(1, "
-            f"greatest(length({text_col}) - {shingle - 1}, 1), {stride}), "
-            f"i -> substring({text_col}, i, {shingle})))")
 
 
 def hashed_shingle_set_expr(text_col: str, *, shingle: int = 5,
@@ -513,9 +505,10 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str, text_col: str,
     # estimate (the pre-fan-out scan size) can fall under the
     # auto-broadcast threshold and plan a BROADCAST of the exploded
     # corpus — a single-threaded build that serialized the scoring stage
-    # at 400 k docs (bench/scaling_dedup.py) and is a driver OOM at real
-    # scale; hint_if_large re-decides from the SOURCE estimate × the
-    # hash fan-out, keeping the broadcast fast path for small corpora
+    # at 400 k docs (BENCH/BENCH_r5_scaling_dedup.json) and is a driver
+    # OOM at real scale; hint_if_large re-decides from the SOURCE
+    # estimate × the hash fan-out, keeping the broadcast fast path for
+    # small corpora
     from ._stats import hint_if_large
 
     sh = hint_if_large(

@@ -220,22 +220,20 @@ def dense_rank_codes(df: DataFrame, name_col: str, *, prefix: str,
                      partition_cols: list[str] | None = None) -> DataFrame:
     """Zero-padded alphabetical dense-rank codes, e.g. ``TW.01``
     (reference base.py:655-660: digits = len(str(count)))."""
-    w = (Window.partitionBy(*partition_cols) if partition_cols else Window.partitionBy()
-         ).orderBy(name_col)
-    rank = F.dense_rank().over(w)
+    part = Window.partitionBy(*(partition_cols or []))
+    rank = F.dense_rank().over(part.orderBy(name_col))
     if width is None:
-        # width = len(str(global distinct count)) as a SUBPLAN, not a
-        # driver-side count() job: the extra global window is over the same
-        # dimension-sized frame the rank window already single-partitions,
-        # and it removes one fixed-latency driver action per call (two per
-        # release run — measured in the release-pipeline construction
-        # profile).  collect_set drops NULLs but dense_rank ranks them, so
-        # a present NULL name counts as one extra rank — without it the
-        # width comes up a digit short exactly at 9+NULL, 99+NULL, ...
-        wall = Window.partitionBy()
-        total = (F.size(F.collect_set(name_col).over(wall))
+        # width = len(str(distinct count in the rank's partition)) as a
+        # SUBPLAN, not a driver-side count() job: the extra window is over
+        # the same frame and partition as the rank window, and it removes
+        # one fixed-latency driver action per call (two per release run —
+        # measured in the release-pipeline construction profile).
+        # collect_set drops NULLs but dense_rank ranks them, so a present
+        # NULL name counts as one extra rank — without it the width comes
+        # up a digit short exactly at 9+NULL, 99+NULL, ...
+        total = (F.size(F.collect_set(name_col).over(part))
                  + F.max(F.when(F.col(name_col).isNull(), 1)
-                         .otherwise(0)).over(wall))
+                         .otherwise(0)).over(part))
         pad_w = F.length(total.cast("string"))
     else:
         pad_w = F.lit(width)

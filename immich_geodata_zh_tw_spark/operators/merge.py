@@ -27,17 +27,6 @@ def union_all(dfs: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def anti_join_merge(existing: DataFrame, extra: DataFrame, *, key: str,
-                    min_population: int | None = None,
-                    population_col: str = "population") -> DataFrame:
-    """Add rows of ``extra`` whose key is absent from ``existing``
-    (and above the population floor), reference enhance_data.py:247-268."""
-    new_rows = extra.join(existing.select(key), key, "left_anti")
-    if min_population is not None:
-        new_rows = new_rows.filter(F.col(population_col) >= F.lit(min_population))
-    return existing.unionByName(new_rows)
-
-
 def marker_join(df: DataFrame, dup_keys: list[str], *,
                 flag_col: str = "has_dup") -> DataFrame:
     """Flag rows whose key combination occurs more than once

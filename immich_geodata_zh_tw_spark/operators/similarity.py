@@ -188,11 +188,6 @@ def lsh_signature_sql(vec_col: str, planes: np.ndarray, *,
     return "(" + " + ".join(bits) + ")"
 
 
-def lsh_signature_expr(vec_col: str, planes: np.ndarray) -> Column:
-    """Column form of :func:`lsh_signature_sql` (Spark dialect)."""
-    return F.expr(lsh_signature_sql(vec_col, planes, dialect="spark"))
-
-
 def lsh_signature_udf(planes_per_table: list[np.ndarray]):
     """Vectorized pandas UDF: embedding → array of per-table bucket ids,
     BIT-IDENTICAL to :func:`lsh_signature_sql`.

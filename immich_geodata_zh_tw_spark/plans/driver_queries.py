@@ -636,17 +636,11 @@ def q_distinct_sorted(spark, sf_dir):
     return c.select("c_mktsegment").distinct().orderBy("c_mktsegment")
 
 
-SQL_DISTINCT_SORTED = "SELECT DISTINCT c_mktsegment FROM customer ORDER BY 1"
-
-
 def q_global_max(spark, sf_dir):
     """A4 global max/count scalar aggregates (geoname_ids.py:36-42 shape)."""
     o = _t(spark, sf_dir, "orders")
     return o.agg(F.max(F.col("o_orderkey").cast("long")).alias("max_key"),
                  F.count(F.lit(1)).alias("n_rows"))
-
-
-SQL_GLOBAL_MAX = "SELECT max(CAST(o_orderkey AS BIGINT)) AS max_key, count(*) AS n_rows FROM orders"
 
 
 def q_union_dedup(spark, sf_dir):
@@ -656,14 +650,6 @@ def q_union_dedup(spark, sf_dir):
          .unionByName(o.filter(F.col("o_totalprice") > 100000))
          .dropDuplicates(["o_orderkey"]))
     return u.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
-
-
-SQL_UNION_DEDUP = """
-SELECT o_orderstatus, count(*) AS n FROM (
-  SELECT DISTINCT o_orderkey, o_orderstatus FROM orders
-  WHERE o_orderstatus = 'F' OR o_totalprice > 100000)
-GROUP BY 1
-"""
 
 
 def q_diverse_sample(spark, sf_dir):
@@ -752,19 +738,6 @@ def _asof_errors_to_clicks(spark, sf_dir, *, tolerance=None, events=None):
                     F.col("r_value").alias("sum_value")))
 
 
-def q_asof_backward(spark, sf_dir):
-    """As-of join (backward, inclusive): the click context preceding each
-    error — DuckDB's native ASOF LEFT JOIN is the oracle."""
-    return _asof_errors_to_clicks(spark, sf_dir)
-
-
-def q_asof_tolerance(spark, sf_dir):
-    """As-of join with a 30-minute tolerance: stale matches null out as a
-    pure projection over the backward match (the newest candidate missing
-    the window proves no candidate makes it)."""
-    return _asof_errors_to_clicks(spark, sf_dir, tolerance=_ASOF_TOL_S)
-
-
 # DuckDB ASOF LEFT JOIN is inclusive (e.ts >= c.ts picks the greatest
 # qualifying c.ts) — the operator's equal-``on`` right-before-left tie rule
 # matches it by construction.  r_value is carried VERBATIM (no arithmetic),
@@ -814,36 +787,6 @@ FROM documents GROUP BY 1
 """
 
 
-def q_doc_text_stats(spark, sf_dir):
-    """Token count / punct / digit / stopword / quality score — all JVM SQL."""
-    d = _t(spark, sf_dir, "documents")
-    return textstats.with_text_stats(d, "text").select(
-        "doc_id", "n_tokens", "punct_ratio", "digit_ratio",
-        "stopword_hits", "quality_score")
-
-
-SQL_DOC_TEXT_STATS = f"""
-SELECT doc_id,
-       {textstats.token_count_sql('text')} AS n_tokens,
-       {textstats.punct_ratio_sql('text')} AS punct_ratio,
-       {textstats.digit_ratio_sql('text')} AS digit_ratio,
-       {textstats.stopword_hits_sql('en', 'text')} AS stopword_hits,
-       {textstats.quality_score_sql('text')} AS quality_score
-FROM documents
-"""
-
-
-def q_doc_langid(spark, sf_dir):
-    """Stopword-vote language ID."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", textstats.predict_lang("text").alias("pred_lang"))
-
-
-SQL_DOC_LANGID = f"""
-SELECT doc_id, {textstats.predict_lang_sql('text')} AS pred_lang FROM documents
-"""
-
-
 def q_doc_minhash_pairs(spark, sf_dir):
     """MinHash-LSH near-dup candidate pairs (4 bands, 5-char shingles)."""
     d = _t_wide(spark, sf_dir, "documents")
@@ -877,25 +820,6 @@ bands AS (
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM bands l JOIN bands r ON l.band_idx = r.band_idx AND l.sig = r.sig
 WHERE l.doc_id < r.doc_id
-"""
-
-
-def q_doc_bpe_tokens(spark, sf_dir):
-    """BPE-ish token counting (GPT-2-style pre-tokenizer pieces) next to the
-    whitespace count — both pure regex/JVM, no UDF."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.expr(textstats.token_count_sql("text")).alias("ws_tokens"),
-        F.expr(textstats.bpe_token_count_sql("text", dialect="spark"))
-        .alias("bpe_tokens"))
-
-
-SQL_DOC_BPE_TOKENS = f"""
-SELECT doc_id,
-       {textstats.token_count_sql('text')} AS ws_tokens,
-       {textstats.bpe_token_count_sql('text', dialect='duckdb')} AS bpe_tokens
-FROM documents
 """
 
 
@@ -2089,11 +2013,6 @@ def q_split_last(spark, sf_dir):
     return p.select(
         "p_partkey",
         F.element_at(F.split(F.col("p_name"), " "), -1).alias("last_word"))
-
-
-SQL_SPLIT_LAST = """
-SELECT p_partkey, list_extract(string_split(p_name, ' '), -1) AS last_word FROM part
-"""
 
 
 def q_korea_split_strip(spark, sf_dir):

@@ -40,7 +40,3 @@ def cities_pdf(village_grid: int = 5) -> pd.DataFrame:
     df["admin1_code"] = df["admin_1"].map(
         lambda n: f"TW.{str(ranks[n]).zfill(digits)}")
     return df
-
-
-def cities_df(spark, village_grid: int = 5):
-    return spark.createDataFrame(cities_pdf(village_grid))

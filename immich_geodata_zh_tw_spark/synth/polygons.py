@@ -64,9 +64,3 @@ def admin_polygons_pdf(village_grid: int = 5) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=[
         "county", "township", "village", "geometry_wkb",
         "centroid_lat", "centroid_lon"])
-
-
-def admin_polygons_df(spark, village_grid: int = 5):
-    """The polygon table as a (small, broadcastable) Spark DataFrame."""
-    pdf = admin_polygons_pdf(village_grid)
-    return spark.createDataFrame(pdf)

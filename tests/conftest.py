@@ -16,15 +16,3 @@ def spark():
     yield s
     s.stop()
 
-
-# Shared near-dup streaming fixture texts — X2 is X with ONE word changed:
-# shares 3 of 4 MinHash band signatures with X under the kernel defaults
-# (n_bands=4, shingle=5, stride=2; verified against the shared kernel),
-# while Y shares 0 bands with either.  ONE copy: both streaming test
-# modules import these, so a change to the kernel defaults that breaks the
-# band-sharing premise fails every dependent test together.
-NEARDUP_TXT_X = ("the quick brown fox jumps over the lazy dog while the "
-                 "crawler fetches the same page again and again for testing")
-NEARDUP_TXT_X2 = NEARDUP_TXT_X.replace("dog", "cat")
-NEARDUP_TXT_Y = ("completely different content about geospatial reverse "
-                 "geocoding engines running on very large sparse clusters")

@@ -68,6 +68,16 @@ class TestIds:
         out = ids.dense_rank_codes(df, "admin_1", prefix="TW").toPandas()
         # 12 distinct → width 2, zero-padded (reference base.py:654)
         assert set(out["code"]) == {f"TW.{i + 1:02d}" for i in range(12)}
+        # partitioned: each partition's width comes from its own count, so
+        # 2 names next to 12 get width 1, not the global width 2
+        two = spark.createDataFrame(pd.DataFrame({"admin_1": ["a", "b"]}))
+        parts = (df.withColumn("grp", F.lit("big"))
+                 .unionByName(two.withColumn("grp", F.lit("small"))))
+        out = ids.dense_rank_codes(parts, "admin_1", prefix="X",
+                                   partition_cols=["grp"]).toPandas()
+        codes = out.groupby("grp")["code"].agg(set).to_dict()
+        assert codes == {"big": {f"X.{i + 1:02d}" for i in range(12)},
+                         "small": {"X.1", "X.2"}}
 
     def test_dense_rank_width_counts_null_rank(self, spark):
         """dense_rank ranks a NULL name but collect_set drops it: 9

@@ -1,4 +1,5 @@
-"""Every engine module is reached from a product entry point.
+"""Every engine module is reached from a product entry point, and every
+definition in it is read.
 
 A module of ``immich_geodata_zh_tw_spark`` stays only if the product reaches
 it: the driver entry (``__spark_entry__.py``: the flagship job and the
@@ -6,26 +7,23 @@ declared queries) or the benchmark workloads (``perfbench/workloads.py``).
 Reachability is a static walk of ``import`` statements with ``ast`` — nothing
 is imported or run — including imports inside function bodies (the engine
 imports lazily) and the ``__init__`` of every package on a module's path.
+
+Inside a module, every top-level ``def``, ``class`` and ``SQL_*`` constant
+stays only if some code or test outside its own body reads its name, or it
+is decorated (``@register_handler`` registers the handlers). The query
+registries ``_QUERIES`` and ``_ORACLES`` read every declared query and
+oracle by name, so they count as readers.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = "immich_geodata_zh_tw_spark"
 ENTRIES = ["__spark_entry__.py", "perfbench/workloads.py"]
-
-#: modules kept although no entry reaches them, one reason each
-UNREACHED_OK = {
-    "skew.salting": "north-rule skew item; kept until a straggler "
-                    "measurement decides it",
-    "streaming.pipeline": "no decision yet on the streaming path",
-    "streaming.stateful": "no decision yet on the streaming path",
-    "operators.validate": "no decision yet on the validation operators",
-}
-
 
 def _module_file(root: Path, name: str) -> Path | None:
     """Source file of dotted module ``name`` under ``root``, if any."""
@@ -87,24 +85,62 @@ def package_modules(root: Path) -> set[str]:
             for f in (root / PACKAGE).rglob("*.py")} - {""}
 
 
-def unreached(root: Path, kept: list[str]) -> set[str]:
-    """Package modules reached neither from the entries nor from the
-    ``kept`` package modules (whose own imports and packages they need)."""
-    files = ENTRIES + [str(_module_file(root / PACKAGE, m).relative_to(root))
-                       for m in kept]
+def unreached(root: Path) -> set[str]:
+    """Package modules the entries do not reach."""
     prefix = PACKAGE + "."
-    reached = {m[len(prefix):] for m in reached_modules(root, files)
+    reached = {m[len(prefix):] for m in reached_modules(root, ENTRIES)
                if m.startswith(prefix)}
     return package_modules(root) - reached
 
 
+def _reads(tree: ast.AST) -> Counter[str]:
+    """Names a tree reads: loaded names, attribute names and the names a
+    ``from`` import binds."""
+    names: Counter[str] = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            names[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            names[node.attr] += 1
+        elif isinstance(node, ast.ImportFrom):
+            names.update(a.name for a in node.names)
+    return names
+
+
+def _definitions(tree: ast.Module):
+    """(name, node) of each top-level undecorated def or class and each
+    ``SQL_*`` constant."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            if not node.decorator_list:
+                yield node.name, node
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name) and t.id.startswith("SQL_"):
+                    yield t.id, node
+
+
+def unread_definitions(root: Path) -> list[str]:
+    """``module:name`` of each engine definition whose name nothing reads
+    outside its own body, in any Python file of the repo."""
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in root.rglob("*.py")
+             if not any(p.startswith(".")
+                        for p in f.relative_to(root).parts)}
+    reads = sum((_reads(t) for t in trees.values()), Counter())
+    return sorted(
+        f"{_module_name(root, f)}:{name}"
+        for f, tree in trees.items()
+        if f.relative_to(root).parts[0] == PACKAGE
+        for name, node in _definitions(tree)
+        if reads[name] == _reads(node)[name])
+
+
 def test_every_module_is_reached():
-    assert sorted(unreached(ROOT, list(UNREACHED_OK))) == []
+    assert sorted(unreached(ROOT)) == []
 
 
-def test_exemptions_are_current():
-    """An exempt module that an entry now reaches must leave the list."""
-    assert sorted(set(UNREACHED_OK) - unreached(ROOT, [])) == []
+def test_every_definition_is_read():
+    assert unread_definitions(ROOT) == []
 
 
 def test_walk_follows_lazy_and_relative_imports(tmp_path):
@@ -122,3 +158,19 @@ def test_walk_follows_lazy_and_relative_imports(tmp_path):
     # a walk from a submodule reaches the packages that contain it
     assert reached_modules(tmp_path, ["p/sub/b.py"]) == {
         "p", "p.sub", "p.sub.b", "p.c"}
+
+
+def test_definition_walk_skips_self_reads_and_decorated(tmp_path):
+    pkg = tmp_path / PACKAGE
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "m.py").write_text(
+        "def rec(n):\n    return rec(n - 1)\n"
+        "@reg\ndef handler():\n    pass\n"
+        "def used():\n    pass\n"
+        "SQL_A = 'x'\nSQL_B = 'y'\nOTHER = 1\n"
+        "class C:\n    pass\n")
+    (tmp_path / "t.py").write_text(
+        f"from {PACKAGE}.m import used\nprint(SQL_B)\n")
+    assert unread_definitions(tmp_path) == [
+        f"{PACKAGE}.m:C", f"{PACKAGE}.m:SQL_A", f"{PACKAGE}.m:rec"]

@@ -101,69 +101,3 @@ class TestPackSink:
     def test_missing_artifact_raises(self, tmp_path):
         with pytest.raises(ValueError, match="missing release artifacts"):
             pack.pack_release(tmp_path / "o", data_files={})
-
-
-class TestValidateGeodata:
-    def test_checks_single_aggregate(self, spark):
-        import pandas as pd
-        import pytest
-
-        from immich_geodata_zh_tw_spark.operators.validate import (
-            assert_valid, validate_geodata)
-
-        df = spark.createDataFrame(pd.DataFrame({
-            "geoname_id": [1, 2, 2, 4],
-            "name": ["a", None, "c", "d"],
-            "lat": [23.5, 24.0, 25.5, 91.0],
-            "lon": [121.0, 120.5, 121.5, 121.0]}))
-        got = {r["check"]: r for r in validate_geodata(
-            df, min_rows=3, key_cols=["geoname_id"],
-            required_non_null=["name"], lat_col="lat", lon_col="lon",
-            bbox=(21.5, 25.5, 119.5, 122.5)).collect()}
-        assert got["row_count"]["passed"] and got["row_count"]["observed"] == 4
-        assert not got["unique_geoname_id"]["passed"]
-        assert got["unique_geoname_id"]["observed"] == 1  # one dup
-        assert not got["non_null_name"]["passed"]
-        assert got["coords_parseable"]["passed"]
-        assert not got["coords_in_bbox"]["passed"]  # lat 91 outside
-        assert got["coords_in_bbox"]["observed"] == 1
-        with pytest.raises(ValueError, match="unique_geoname_id"):
-            assert_valid(df, key_cols=["geoname_id"])
-        # a clean frame gates through
-        clean = df.dropDuplicates(["geoname_id"]).fillna({"name": "x"})
-        assert_valid(clean, min_rows=1, key_cols=["geoname_id"],
-                     required_non_null=["name"])
-
-    def test_null_keys_are_not_duplicates(self, spark):
-        """Review regression: count_distinct drops NULL-keyed rows, which
-        misreported unique frames with a NULL key as duplicated; the
-        struct-wrapped distinct is null-safe."""
-        from immich_geodata_zh_tw_spark.operators.validate import (
-            validate_geodata)
-
-        df = spark.createDataFrame(
-            [(1,), (2,), (None,)], "geoname_id int")
-        got = {r["check"]: r for r in validate_geodata(
-            df, key_cols=["geoname_id"]).collect()}
-        assert got["unique_geoname_id"]["passed"]
-        assert got["unique_geoname_id"]["observed"] == 0
-        # two NULL keys DO count as a duplicate tuple
-        df2 = spark.createDataFrame(
-            [(1,), (None,), (None,)], "geoname_id int")
-        got2 = {r["check"]: r for r in validate_geodata(
-            df2, key_cols=["geoname_id"]).collect()}
-        assert not got2["unique_geoname_id"]["passed"]
-
-    def test_one_aggregate_in_plan(self, spark):
-        import pandas as pd
-
-        from immich_geodata_zh_tw_spark.operators.validate import (
-            validate_geodata)
-
-        df = spark.createDataFrame(pd.DataFrame(
-            {"geoname_id": [1], "lat": [23.0], "lon": [121.0]}))
-        plan = validate_geodata(
-            df, key_cols=["geoname_id"], lat_col="lat",
-            lon_col="lon")._jdf.queryExecution().executedPlan().toString()
-        # every check folds into one aggregate pair (partial+final)
-        assert plan.count("HashAggregate") <= 4, plan

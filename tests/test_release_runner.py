@@ -232,16 +232,14 @@ class TestReleaseThreading:
 
 class TestReleaseVersionWorkflow:
     """update_data.sh's regenerate-and-ship-delta loop: run a release,
-    change an input, run again, diff the two versions, gate with the
-    validator — the three operators composed as a user would."""
+    change an input, run again and diff the two versions, composed as a
+    user would."""
 
     def test_diff_and_validate_between_versions(self, spark, tmp_path,
                                                 inputs):
         from pyspark.sql import functions as F
 
         from immich_geodata_zh_tw_spark.operators.merge import release_diff
-        from immich_geodata_zh_tw_spark.operators.validate import (
-            assert_valid, validate_geodata)
 
         res_v1 = run_release(spark, workdir=tmp_path / "v1", **inputs,
                              release_date="2026-08-16")
@@ -254,13 +252,6 @@ class TestReleaseVersionWorkflow:
         res_v2 = run_release(spark, workdir=tmp_path / "v2", **inputs2,
                              release_date="2026-08-17")
         v2 = spark.read.parquet(res_v2["translated"])
-
-        # both versions pass the release gate
-        for v in (v1, v2):
-            assert_valid(v, min_rows=1, key_cols=["geoname_id"],
-                         required_non_null=["name", "country_code"],
-                         lat_col="latitude", lon_col="longitude",
-                         bbox=(-90.0, 90.0, -180.0, 180.0))
 
         diff = release_diff(v1, v2, key="geoname_id",
                             compare_cols=["name", "country_code"])
@@ -277,8 +268,3 @@ class TestReleaseVersionWorkflow:
             e1, e2, key="geoname_id", compare_cols=["name"]).collect()}
         assert ediff["200"]["status"] == "changed"
         assert ediff["200"]["changed_cols"] == ["name"]
-        # validator catches a broken frame before pack would ship it
-        broken = v2.withColumn("latitude", F.lit(float("nan")))
-        got = {r["check"]: r for r in validate_geodata(
-            broken, lat_col="latitude", lon_col="longitude").collect()}
-        assert not got["coords_parseable"]["passed"]

@@ -1,15 +1,11 @@
-"""Manifest resumability, skew handling A/B equivalence, streaming ingest."""
+"""Manifest resumability: checkpoint cadence, resume and idempotent re-runs."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from immich_geodata_zh_tw_spark.skew import salting
 from immich_geodata_zh_tw_spark.sources import manifest
-from immich_geodata_zh_tw_spark.synth import cities, pages, polygons
 
 
 class TestManifest:
@@ -97,154 +93,3 @@ class TestManifest:
         manifest.checkpointed_run(spark, df, split_col="split", process=process,
                                   output_path=out, manifest_path=man)
         assert spark.read.parquet(out).count() == 100  # no duplicates
-
-
-class TestSkew:
-    def test_salted_repartition_preserves_rows(self, spark):
-        ids = np.arange(5000)
-        lat, lon = pages.page_coords(ids)
-        pdf = pd.DataFrame({"id": ids, "lat": lat, "lon": lon}).dropna()
-        df = spark.createDataFrame(pdf)
-        df = df.withColumn("cell", F.lit(None).cast("long"))
-        from immich_geodata_zh_tw_spark.functions.geo import cell_expr
-        df = df.withColumn("cell", cell_expr(F.col("lat"), F.col("lon"), 8))
-        hist = df.groupBy("cell").count().orderBy(F.desc("count")).limit(2).collect()
-        hot = [r.cell for r in hist]
-        salted = salting.salted_repartition(df, "cell", factor=8, hot_keys=hot)
-        assert salted.count() == df.count()
-        # hot keys spread over >1 salt, cold keys all salt 0
-        spread = (salted.filter(F.col("cell").isin(hot))
-                  .select("salt").distinct().count())
-        assert spread > 1
-        cold = (salted.filter(~F.col("cell").isin(hot))
-                .select("salt").distinct().collect())
-        assert [r.salt for r in cold] == [0]
-
-    def test_adaptive_cell_split_bounds_and_equivalence(self, spark):
-        ids = np.arange(20000)
-        lat, lon = pages.page_coords(ids)
-        pdf = pd.DataFrame({"id": ids, "lat": lat, "lon": lon}).dropna()
-        df = spark.createDataFrame(pdf)
-        out = salting.adaptive_cell_split(df, res=6, threshold=2000, delta=2)
-        sizes = out.groupBy("acell").count().toPandas()
-        from immich_geodata_zh_tw_spark.geo import grid
-        res_of = grid.cell_res(sizes["acell"].to_numpy())
-        assert (res_of == 8).any() and (res_of == 6).any()  # mixed resolution
-        # A/B: total rows and per-row identity preserved
-        assert out.count() == df.count()
-        # every split cell's rows still belong to the hot coarse parent
-        fine = sizes[res_of == 8]
-        hot_parents = set(
-            grid.cell_to_parent(fine["acell"].to_numpy(), 6).tolist())
-        hist = salting.cell_histogram(df, res=6).filter(F.col("n") > 2000)
-        assert hot_parents == {r.cell for r in hist.collect()}
-
-
-class TestStreamingIngest:
-    def test_incremental_batches_resume(self, spark, tmp_path):
-        from immich_geodata_zh_tw_spark.streaming.pipeline import (
-            incremental_reverse_geocode)
-
-        inp = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        polys = polygons.admin_polygons_pdf(village_grid=3)
-        cts = cities.cities_pdf(village_grid=3)
-
-        pages.pages_df(spark, 300).write.mode("append").parquet(inp)
-        q = incremental_reverse_geocode(
-            spark, input_path=inp, output_path=outp, checkpoint_path=ckpt,
-            polys_pdf=polys, cities_pdf=cts)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(outp).count()
-        assert n1 > 0
-
-        # new files arrive; restart drains ONLY the new ones (commit log)
-        extra = pages.pages_df(spark, 200, start=10_000)
-        extra.write.mode("append").parquet(inp)
-        q2 = incremental_reverse_geocode(
-            spark, input_path=inp, output_path=outp, checkpoint_path=ckpt,
-            polys_pdf=polys, cities_pdf=cts)
-        q2.awaitTermination(120)
-        n2 = spark.read.parquet(outp).count()
-        assert n2 > n1
-        # urls unique: the first 300 pages were not reprocessed
-        out = spark.read.parquet(outp)
-        assert out.select("url").distinct().count() == out.count()
-
-    def test_fresh_checkpoint_rerun_leaves_no_orphans(self, spark, tmp_path):
-        """Round-2 VERDICT item 10: deleting the checkpoint and re-running
-        must not mix stale batch_id dirs from the prior lineage into reads."""
-        import shutil
-
-        from immich_geodata_zh_tw_spark.streaming.pipeline import (
-            incremental_reverse_geocode)
-
-        inp = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        polys = polygons.admin_polygons_pdf(village_grid=3)
-        cts = cities.cities_pdf(village_grid=3)
-
-        pages.pages_df(spark, 200).write.mode("append").parquet(inp)
-        q = incremental_reverse_geocode(
-            spark, input_path=inp, output_path=outp, checkpoint_path=ckpt,
-            polys_pdf=polys, cities_pdf=cts)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(outp).count()
-
-        shutil.rmtree(ckpt)  # fresh lineage: same input reprocesses
-        q2 = incremental_reverse_geocode(
-            spark, input_path=inp, output_path=outp, checkpoint_path=ckpt,
-            polys_pdf=polys, cities_pdf=cts)
-        q2.awaitTermination(120)
-        out = spark.read.parquet(outp)
-        assert out.count() == n1  # no doubled rows from orphaned dirs
-        assert out.select("url").distinct().count() == out.count()
-
-
-class TestIncrementalNeardup:
-    def test_end_to_end_verdicts_resume(self, spark, tmp_path):
-        """Composed pipeline: stateful LSH flags + per-doc rollup +
-        idempotent batch-scoped sink; a restart drains only new files and
-        flags a cross-batch near-identical recrawl against the original."""
-        import pandas as pd
-
-        from immich_geodata_zh_tw_spark.streaming.pipeline import (
-            NEARDUP_DOCS_SCHEMA, incremental_neardup)
-
-        from conftest import (NEARDUP_TXT_X as x, NEARDUP_TXT_X2 as x2,
-                              NEARDUP_TXT_Y as y)
-
-        inp = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def write(rows):
-            pdf = pd.DataFrame(rows, columns=["doc_id", "ts", "text"])
-            pdf["ts"] = pd.to_datetime(pdf["ts"])
-            (spark.createDataFrame(pdf, schema=NEARDUP_DOCS_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(inp))
-
-        write([(1, "2026-01-01 10:00:00", x),
-               (3, "2026-01-01 10:10:00", y),
-               (7, "2026-01-01 10:11:00", None)])
-        q = incremental_neardup(spark, input_path=inp, output_path=outp,
-                                checkpoint_path=ckpt, horizon="24 hours")
-        q.awaitTermination(120)
-        got1 = spark.read.parquet(outp).toPandas().set_index("doc_id")
-        assert bool(got1.loc[1, "kept"]) and bool(got1.loc[3, "kept"])
-        # null-text docs must come through the DEPLOYED pipeline as kept,
-        # not be silently dropped by the band explode
-        assert bool(got1.loc[7, "kept"])
-
-        # restart with one new file: the edited recrawl is flagged against
-        # doc 1 via state carried in the checkpoint; old batches not redone
-        write([(2, "2026-01-01 10:30:00", x2)])
-        q2 = incremental_neardup(spark, input_path=inp, output_path=outp,
-                                 checkpoint_path=ckpt, horizon="24 hours")
-        q2.awaitTermination(120)
-        got2 = (spark.read.parquet(outp).toPandas()
-                .sort_values("doc_id").set_index("doc_id"))
-        assert got2.index.tolist() == [1, 2, 3, 7]
-        assert not bool(got2.loc[2, "kept"]) and got2.loc[2, "dup_of"] == 1
