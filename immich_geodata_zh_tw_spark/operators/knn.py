@@ -453,13 +453,12 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     """Single-pass exact kNN as a *pure narrow plan* — zero shuffle, no
     fallback branch.
 
-    Valid only when the caller can guarantee every query's true nearest
-    place lies within the k-ring, i.e. the covering radius of the places
-    over the query domain is below the ring guard: :func:`ring_covers`
-    proves it for a domain of boxes.  The max nearest-neighbour spacing
-    (:func:`max_nn_spacing_km`) does not show it: it is blind to voids
-    between clusters.  Queries with no candidate in the ring are dropped
-    and a farther in-ring candidate is taken silently.
+    Valid only where every query's true nearest place lies in its k-ring
+    within the ring guard (:func:`guard_km_col`); the max nearest-neighbour
+    spacing (:func:`max_nn_spacing_km`) does not show that: it is blind to
+    voids between clusters.  Elsewhere a query with no ring candidate is
+    dropped and a farther in-ring candidate is taken silently;
+    :func:`knn_join` is exact everywhere.
 
     Plan shape: the small side is grouped per covering cell on the driver
     into an ``array<struct(lat, lon, payload…)>`` and broadcast (no
@@ -479,100 +478,3 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
 
     best = _best_over("__places", lat_col, lon_col, fields)
     return _output(joined.withColumn("__best", best), queries, fields)
-
-
-#: the :func:`ring_covers` proof splits a (box, cell) overlap into at most
-#: 4 ** _COVER_DEPTH pieces, and expands at most _COVER_PAIRS pieces or
-#: (piece, place) pairs per level
-_COVER_DEPTH = 4
-_COVER_PAIRS = 1_000_000
-
-
-def ring_covers(places_pdf, bounds, *, res: int, k: int = 1,
-                lat_col: str = "latitude", lon_col: str = "longitude") -> bool:
-    """Does every point of the boxes ``bounds`` ((lon_min, lat_min, lon_max,
-    lat_max) per row) have a place of its k-ring at ``res`` within the ring
-    guard?  Then the in-ring nearest is the global nearest of every query
-    in the boxes, and :func:`knn_join_static` is exact there: it drops no
-    row and returns what :func:`knn_join` returns.  False is always safe.
-
-    A proof, not a sample.  Each (box, grid cell) overlap is a piece; a
-    piece with centre ``s`` whose nearest ring place ``p`` has
-    ``d(s, p) + r ≤ guard`` settles every point ``q`` of it: ``r`` bounds
-    ``d(s, q)`` by the meridian-then-parallel path from ``s`` to ``q``, and
-    the guard is taken at the piece's largest |lat|, where it is least.
-    Pieces that do not settle split into four, down to
-    ``4 ** _COVER_DEPTH`` per overlap.  A cell with no ring place, a piece
-    still unsettled at the last depth, more than ``_COVER_PAIRS`` pieces or
-    (piece, place) pairs in one level, or a box reaching the antimeridian
-    or a pole (where the cell encode wraps or clamps) gives False.  At
-    8,000 villages over their own polygon bboxes: res 12, 28,268 pieces,
-    all settled at depth 0, ~0.04 s."""
-    lon0, lat0, lon1, lat1 = np.asarray(bounds, dtype=np.float64).reshape(-1, 4).T
-    if not ((lon0 > -180.0) & (lon1 < 180.0)
-            & (lat0 > -90.0) & (lat1 < 90.0)).all():  # NaN fails too
-        return False
-    # the cells of each box: the same floor arithmetic as cell_expr, both
-    # ends inclusive (a query on a box edge is in the box)
-    nrows, ncols = 1 << res, 2 << res
-    r0 = np.floor((lat0 + 90.0) / 180.0 * nrows).astype(np.int64)
-    r1 = np.floor((lat1 + 90.0) / 180.0 * nrows).astype(np.int64)
-    c0 = np.floor((lon0 + 180.0) / 360.0 * ncols).astype(np.int64)
-    c1 = np.floor((lon1 + 180.0) / 360.0 * ncols).astype(np.int64)
-    n_c = np.maximum(c1 - c0 + 1, 0)
-    n_cells = np.maximum(r1 - r0 + 1, 0) * n_c
-    if n_cells.sum() > _COVER_PAIRS:
-        return False
-    box = np.repeat(np.arange(n_cells.size), n_cells)
-    t = np.arange(int(n_cells.sum())) - np.repeat(np.cumsum(n_cells) - n_cells,
-                                                  n_cells)
-    row, col = r0[box] + t // n_c[box], c0[box] + t % n_c[box]
-    if row.size == 0:  # no query can exist
-        return True
-
-    # each piece's ring places: one run of the (cell → place) table
-    prow, pcell = _kring_rows(places_pdf, lat_col=lat_col, lon_col=lon_col,
-                              res=res, k=k)
-    order = np.argsort(pcell, kind="stable")
-    prow, pcell = prow[order], pcell[order]
-    cell = grid.make_cell(res, row, col)
-    lo = np.searchsorted(pcell, cell, "left")
-    cnt = np.searchsorted(pcell, cell, "right") - lo
-    if (cnt == 0).any():
-        return False
-    plat = np.radians(places_pdf[lat_col].to_numpy(dtype=np.float64))
-    plon = np.radians(places_pdf[lon_col].to_numpy(dtype=np.float64))
-    pcos = np.cos(plat)
-
-    # pieces: centre and half-extents of cell ∩ box; the guard's slack
-    # covers the rounding of the computed cell edges
-    lat_step, lon_step = grid.cell_size_deg(res)
-    south, west = -90.0 + row * lat_step, -180.0 + col * lon_step
-    s, n = np.maximum(south, lat0[box]), np.minimum(south + lat_step, lat1[box])
-    w, e = np.maximum(west, lon0[box]), np.minimum(west + lon_step, lon1[box])
-    clat, h_lat, clon, h_lon = (s + n) / 2, (n - s) / 2, (w + e) / 2, (e - w) / 2
-    guard = _guard_km_np(np.maximum(np.abs(s), np.abs(n)), res=res,
-                         k=k) * (1.0 - 1e-9)
-    for depth in range(_COVER_DEPTH + 1):
-        if cnt.sum() > _COVER_PAIRS:
-            return False
-        starts = np.cumsum(cnt) - cnt
-        j = prow[np.arange(int(cnt.sum())) + np.repeat(lo - starts, cnt)]
-        b = np.repeat(np.arange(cnt.size), cnt)
-        blat = np.radians(clat)
-        d = _pair_km(blat[b], np.radians(clon)[b], np.cos(blat)[b],
-                     plat[j], plon[j], pcos[j])
-        # |lat| nearest the equator within the piece: its parallels are longest
-        eq = np.where(np.abs(clat) <= h_lat, 0.0, np.abs(clat) - h_lat)
-        r = (h_lat + h_lon * np.cos(np.radians(eq))) * _DEG_KM
-        todo = ~(np.minimum.reduceat(d, starts) + r <= guard)  # NaN: todo
-        if not todo.any():
-            return True
-        if depth == _COVER_DEPTH:
-            return False
-        # split each unsettled piece into four quarters
-        h_lat, h_lon = np.repeat(h_lat[todo] / 2, 4), np.repeat(h_lon[todo] / 2, 4)
-        clat = np.repeat(clat[todo], 4) + h_lat * np.tile([-1, -1, 1, 1], todo.sum())
-        clon = np.repeat(clon[todo], 4) + h_lon * np.tile([-1, 1, -1, 1], todo.sum())
-        lo, cnt, guard = (np.repeat(a[todo], 4) for a in (lo, cnt, guard))
-    return False  # unreachable: the last depth returns

@@ -193,9 +193,6 @@ def fix_li_names(col: Column) -> Column:
     return F.regexp_replace(col, "裏(.*)$", "里$1")
 
 
-FIX_LI_SQL_DUCK = "regexp_replace({col}, '裏(.*)$', '里\\1')"
-
-
 def priority_pick(df: DataFrame, *, key: str, lang_col: str,
                   priority: list[str] | None = None,
                   preferred_col: str | None = None,

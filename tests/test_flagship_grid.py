@@ -1,8 +1,7 @@
-"""The flagship's computed grids (``plans.reverse_geocode.grid_res`` over
+"""The flagship's computed grids (``plans.geocode_kernel.grid_res`` over
 the cities and over the polygon bbox centres) and what they buy: every row
-settles on its kNN one-ring, few candidates per row, and ``ring_covers``
-proves it for the static kNN join.  The lattice checks are driver-side
-numpy, no Spark session."""
+settles on its kNN one-ring, and few candidates per row.  The lattice
+checks are driver-side numpy, no Spark session."""
 
 from __future__ import annotations
 
@@ -11,9 +10,9 @@ import pandas as pd
 import pytest
 
 from immich_geodata_zh_tw_spark.geo import distance, grid, wkb
-from immich_geodata_zh_tw_spark.operators.knn import _guard_km_np, ring_covers
+from immich_geodata_zh_tw_spark.operators.knn import _guard_km_np
 from immich_geodata_zh_tw_spark.operators.pipjoin import polygon_cells_pdf
-from immich_geodata_zh_tw_spark.plans.reverse_geocode import grid_res
+from immich_geodata_zh_tw_spark.plans.geocode_kernel import grid_res
 from immich_geodata_zh_tw_spark.synth import TW_BBOX, cities, polygons
 
 
@@ -32,12 +31,24 @@ def test_pick(village_grid, res):
 
 
 def test_no_res_guards_a_two_place_table():
-    """Taipei and Sydney: the spacing exceeds every ring guard down to
-    res 4, so the flagship's kNN takes auto_ring's (res, k)."""
+    """Taipei and Sydney: only Taipei lies in the bbox, so no spacing
+    picks a res and the flagship's kNN takes auto_ring's (res, k)."""
     two = pd.DataFrame({"latitude": [25.03, -33.87],
                         "longitude": [121.56, 151.21]})
     assert grid_res(two) is None
     assert grid_res(two.iloc[:1]) is None  # no spacing at all
+
+
+@pytest.mark.parametrize("village_grid", [2, 20])
+def test_far_points_do_not_coarsen_the_pick(village_grid):
+    """A place or polygon far outside the bbox leaves the pick alone: no
+    query can lie near it."""
+    cts = cities.cities_pdf(village_grid)
+    far = cts.iloc[:1].assign(latitude=-33.87, longitude=151.21)
+    assert grid_res(pd.concat([cts, far])) == grid_res(cts)
+    centres = bbox_centres(polygons.admin_polygons_pdf(village_grid))
+    assert (grid_res(pd.concat([centres, far[["latitude", "longitude"]]]))
+            == grid_res(centres))
 
 
 def lattice(step_frac: float, res: int):
@@ -118,61 +129,3 @@ class TestPick:
         knn_cand = knn_cand.reshape(ring.shape).sum(axis=1)
         assert pip_cand.min() >= 1 and pip_cand.mean() <= 5
         assert knn_cand.min() >= 1 and knn_cand.mean() <= 15
-
-
-class TestRingCovers:
-    """``knn.ring_covers``: the proof under which the flagship takes the
-    static kNN join instead of the guarded one."""
-
-    @pytest.mark.parametrize("village_grid", [2, 5, 20])
-    def test_proves_the_village_tables(self, village_grid):
-        cts = cities.cities_pdf(village_grid)
-        polys = polygons.admin_polygons_pdf(village_grid)
-        assert ring_covers(cts, wkb.bounds_array(polys["geometry_wkb"]),
-                           res=grid_res(cts))
-
-    def test_refusals(self):
-        two = pd.DataFrame({"latitude": [24.0, 24.5],
-                            "longitude": [121.0, 121.5]})
-        # ~75 km apart: the box's inner res-12 cells have no ring place
-        assert not ring_covers(two, [[121.0, 24.0, 121.5, 24.5]], res=12)
-        # the antimeridian (the cell encode wraps) and a NaN bound
-        assert not ring_covers(two, [[179.0, 24.0, 180.0, 24.5]], res=4)
-        assert not ring_covers(two, [[121.0, 24.0, np.nan, 24.5]], res=4)
-        # no box: no query can exist
-        assert ring_covers(two, np.empty((0, 4)), res=12)
-
-    def test_sound_against_brute_force(self):
-        """Random places and boxes: wherever the proof holds, every point
-        of a 60 × 60 lattice over the box (edges included) has its nearest
-        place in its one-ring, within the guard."""
-        rng = np.random.default_rng(11)
-        proved = 0
-        for _ in range(200):
-            n = int(rng.integers(2, 60))
-            lat0, lon0 = rng.uniform(-60, 60), rng.uniform(-170, 160)
-            span = rng.uniform(0.05, 3.0)
-            plat = lat0 + rng.uniform(0, span, n)
-            plon = lon0 + rng.uniform(0, span, n)
-            res = int(rng.integers(4, 14))
-            box = [lon0 + span * 0.2, lat0 + span * 0.2,
-                   lon0 + span * rng.uniform(0.3, 0.8),
-                   lat0 + span * rng.uniform(0.3, 0.8)]
-            places = pd.DataFrame({"latitude": plat, "longitude": plon})
-            if not ring_covers(places, [box], res=res):
-                continue
-            proved += 1
-            glat, glon = np.meshgrid(np.linspace(box[1], box[3], 60),
-                                     np.linspace(box[0], box[2], 60),
-                                     indexing="ij")
-            glat, glon = glat.ravel(), glon.ravel()
-            d = distance.haversine_np(glat[:, None], glon[:, None],
-                                      plat[None, :], plon[None, :])
-            near = d.argmin(axis=1)
-            q = grid.cell_of(glat, glon, res)
-            c = grid.cell_of(plat[near], plon[near], res)
-            cheb = np.maximum(abs(grid.cell_row(q) - grid.cell_row(c)),
-                              abs(grid.cell_col(q) - grid.cell_col(c)))
-            assert (cheb <= 1).all()
-            assert (d.min(axis=1) <= _guard_km_np(glat, res=res, k=1)).all()
-        assert proved >= 30

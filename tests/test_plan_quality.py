@@ -15,27 +15,26 @@ def _plan(df) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def _check_flagship_plan(spark, cities_pdf) -> None:
+def _check_flagship_plan(spark, tmp_path, cities_pdf) -> None:
     import re
     from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
         reverse_geocode_pages
     from immich_geodata_zh_tw_spark.synth import pages, polygons
 
+    pages.pages_df(spark, 100).write.parquet(str(tmp_path / "pages"))
     out = reverse_geocode_pages(
-        spark, pages.pages_df(spark, 100),
+        spark, spark.read.parquet(str(tmp_path / "pages")),
         polygons.admin_polygons_pdf(village_grid=2), cities_pdf)
     plan = _plan(out)
-    assert "SortMergeJoin" not in plan
-    assert "collect_list" not in plan and "Aggregate" not in plan, plan
-    blocks = re.split(r"\n\n", plan)
-    shuffles = [b for b in blocks
-                if re.match(r"\(\d+\) Exchange\b", b.strip())]
-    # pages-side rows (url/html/lat/lon) cross exactly ONE exchange — the
-    # documented post-filter repartition — and no other shuffle exists
-    pages_shuffles = [b for b in shuffles if re.search(r"\b(url|html)#", b)]
-    assert len(pages_shuffles) == 1, pages_shuffles
-    assert "RoundRobinPartitioning" in pages_shuffles[0]
-    assert len(shuffles) == 1, shuffles
+    # scan → one Arrow kernel → project: no exchange of any kind (no
+    # shuffle, no broadcast), no join, and no reference table planned as a
+    # driver-side LocalRelation
+    assert not re.search(r"\(\d+\) \w*Exchange\b", plan), plan
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    assert "LocalTableScan" not in plan, plan
+    # once in the tree, once as the "(n) MapInPandas" detail header
+    assert plan.count("MapInPandas (") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 class TestPlanQuality:
@@ -112,26 +111,27 @@ class TestPlanQuality:
         n_arrow = plan.count("ArrowEvalPython")
         assert n_arrow <= 4, f"ArrowEvalPython appears {n_arrow}× (dup eval)"
 
-    def test_flagship_single_wide_op(self, spark):
-        """The full reverse-geocode plan: no sort-merge join, and the ONLY
-        non-broadcast exchange is the single documented post-filter
-        repartition — the pages side is otherwise never shuffled, and the
-        places side is grouped on the driver (no collect_list aggregate)."""
+    def test_flagship_single_wide_op(self, spark, tmp_path):
+        """The full reverse-geocode plan is one Python stage over the scan:
+        extract, bbox, PIP and kNN run in one mapInPandas kernel against a
+        broadcast reference, so the pages side crosses no exchange and the
+        plan holds no join, no aggregate and no LocalRelation."""
         from immich_geodata_zh_tw_spark.synth import cities
 
-        _check_flagship_plan(spark, cities.cities_pdf(village_grid=2))
+        _check_flagship_plan(spark, tmp_path, cities.cities_pdf(village_grid=2))
 
-    def test_flagship_general_knn_path(self, spark):
-        """The same plan rules when no one-ring guards the cities table and
-        the kNN takes auto_ring's ring (here: one far-away place)."""
-        from immich_geodata_zh_tw_spark.plans.reverse_geocode import grid_res
+    def test_flagship_general_knn_path(self, spark, tmp_path):
+        """The same plan when no one-ring guards the cities table and the
+        kNN takes auto_ring's ring (here: one city in the bbox and one
+        far-away place)."""
+        from immich_geodata_zh_tw_spark.plans.geocode_kernel import grid_res
         from immich_geodata_zh_tw_spark.synth import cities
 
-        cts = cities.cities_pdf(village_grid=2)
-        cts = pd.concat([cts, cts.iloc[:1].assign(
+        cts = cities.cities_pdf(village_grid=2).iloc[:1]
+        cts = pd.concat([cts, cts.assign(
             geoname_id=-1, latitude=-33.87, longitude=151.21)])
         assert grid_res(cts) is None
-        _check_flagship_plan(spark, cts)
+        _check_flagship_plan(spark, tmp_path, cts)
 
     def test_parquet_scan_pruning(self, spark):
         """Filters and projections must reach the parquet scan."""

@@ -8,11 +8,12 @@ Reachability is a static walk of ``import`` statements with ``ast`` — nothing
 is imported or run — including imports inside function bodies (the engine
 imports lazily) and the ``__init__`` of every package on a module's path.
 
-Inside a module, every top-level ``def``, ``class`` and ``SQL_*`` constant
+Inside a module, every top-level ``def``, ``class`` and assigned name
 stays only if some code or test outside its own body reads its name, or it
 is decorated (``@register_handler`` registers the handlers). The query
 registries ``_QUERIES`` and ``_ORACLES`` read every declared query and
-oracle by name, so they count as readers.
+oracle by name, so they count as readers.  Dunder names (``__all__``) are
+read by the import system, not by code.
 """
 
 from __future__ import annotations
@@ -109,15 +110,17 @@ def _reads(tree: ast.AST) -> Counter[str]:
 
 def _definitions(tree: ast.Module):
     """(name, node) of each top-level undecorated def or class and each
-    ``SQL_*`` constant."""
+    name a top-level assignment binds, dunder names excepted."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
             if not node.decorator_list:
                 yield node.name, node
-        elif isinstance(node, ast.Assign):
-            for t in node.targets:
-                if isinstance(t, ast.Name) and t.id.startswith("SQL_"):
-                    yield t.id, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        yield n.id, node
 
 
 def unread_definitions(root: Path) -> list[str]:
@@ -168,9 +171,11 @@ def test_definition_walk_skips_self_reads_and_decorated(tmp_path):
         "def rec(n):\n    return rec(n - 1)\n"
         "@reg\ndef handler():\n    pass\n"
         "def used():\n    pass\n"
-        "SQL_A = 'x'\nSQL_B = 'y'\nOTHER = 1\n"
+        "SQL_A = 'x'\nSQL_B = 'y'\nOTHER = 1\nX, Y = 1, 2\nT: int = 3\n"
+        "__all__ = ['used']\n"
         "class C:\n    pass\n")
     (tmp_path / "t.py").write_text(
-        f"from {PACKAGE}.m import used\nprint(SQL_B)\n")
+        f"from {PACKAGE}.m import used\nprint(SQL_B, Y)\n")
     assert unread_definitions(tmp_path) == [
-        f"{PACKAGE}.m:C", f"{PACKAGE}.m:SQL_A", f"{PACKAGE}.m:rec"]
+        f"{PACKAGE}.m:C", f"{PACKAGE}.m:OTHER", f"{PACKAGE}.m:SQL_A",
+        f"{PACKAGE}.m:T", f"{PACKAGE}.m:X", f"{PACKAGE}.m:rec"]

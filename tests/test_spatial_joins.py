@@ -157,12 +157,12 @@ class TestKnnJoin:
         """VERDICT.md round-1 item 5: a cities table sparser than the village
         tiling must NOT silently drop/mis-name rows — the flagship's kNN
         guard sends each row whose nearest city may lie outside its ring to
-        the exact full-array fallback, at any grid pick; the static join
-        runs only where ``ring_covers`` proves the rings cover the domain."""
+        the exact full-array scan, at any grid pick."""
         from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
         from immich_geodata_zh_tw_spark.functions.geo import in_bbox
-        from immich_geodata_zh_tw_spark.plans.reverse_geocode import (
-            grid_res, reverse_geocode_pages)
+        from immich_geodata_zh_tw_spark.plans.geocode_kernel import grid_res
+        from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
+            reverse_geocode_pages
         from immich_geodata_zh_tw_spark.synth import TW_BBOX, pages, polygons
 
         p = pages.pages_df(spark, 400)
@@ -172,19 +172,22 @@ class TestKnnJoin:
                     .count())
         assert expected > 0
         polys = polygons.admin_polygons_pdf(village_grid=2)
-        bounds = wkb.bounds_array(polys["geometry_wkb"])
         for lat, lon, res, ring_misses in [
             # four corners of the bbox: a res-6 one-ring guards their spacing
-            # and covers the bbox (the static join)
+            # and covers the bbox
             ([21.7, 25.3, 21.7, 25.3], [119.7, 119.7, 122.3, 122.3], 6,
              False),
             # two pairs 300 km apart: res 8 guards their 51.5 km spacing,
             # but no city lies in a res-8 one-ring between the pairs
             ([25.0, 25.0, 22.2, 22.2], [121.3, 121.8, 120.4, 120.9], 8,
              True),
-            # the corners plus a city half a world away: no res guards it
+            # the corners plus a city half a world away: the pick ignores
+            # the far city, which no page is near
             ([21.7, 25.3, 21.7, 25.3, -33.87],
-             [119.7, 119.7, 122.3, 122.3, 151.21], None, False),
+             [119.7, 119.7, 122.3, 122.3, 151.21], 6, False),
+            # one city in the bbox and one half a world away: no spacing
+            # picks a res, so the kNN takes auto_ring's (res, k)
+            ([23.5, -33.87], [121.0, 151.21], None, False),
         ]:
             n = len(lat)
             sparse = pd.DataFrame({
@@ -192,9 +195,6 @@ class TestKnnJoin:
                 "admin1_code": [f"0{i}" for i in range(1, n + 1)],
                 "latitude": lat, "longitude": lon})
             assert grid_res(sparse) == res
-            if res is not None:
-                assert knn_op.ring_covers(sparse, bounds, res=res) == (
-                    not ring_misses)
             out = reverse_geocode_pages(spark, p, polys, sparse).toPandas()
             # every extracted in-bbox page row gets named (nothing dropped) …
             assert len(out) == expected
