@@ -176,3 +176,36 @@ def covering_cells(lat_min: float, lat_max: float, lon_min: float, lon_max: floa
 def cell_size_deg(res: int) -> tuple[float, float]:
     """(lat_step, lon_step) in degrees at ``res``."""
     return 180.0 / (1 << res), 360.0 / (2 << res)
+
+
+#: (query, row) pairs expanded per numpy step (8 MB per float64 temporary),
+#: so a coarse grid or a full scan never holds a batch's cross product
+PAIR_CHUNK = 1_000_000
+
+
+def sorted_by_cell(cell: np.ndarray, row: np.ndarray):
+    """(cell, row) sorted by cell, the rows of a cell in their given order:
+    the CSR index :func:`runs` searches."""
+    order = np.argsort(cell, kind="stable")
+    return cell[order], row[order].astype(np.int32)
+
+
+def runs(keys: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(lo, cnt): ``q[i]``'s run of sorted ``keys`` is ``lo[i]:lo[i] + cnt[i]``."""
+    lo = np.searchsorted(keys, q, "left")
+    return lo, np.searchsorted(keys, q, "right") - lo
+
+
+def pairs(lo: np.ndarray, cnt: np.ndarray):
+    """Chunks of (i, pos), ``i`` ascending, one pair per ``pos`` in
+    ``lo[i]:lo[i] + cnt[i]``; a chunk holds about :data:`PAIR_CHUNK`
+    pairs, and at least one ``i``."""
+    ends = np.cumsum(cnt)
+    i0 = 0
+    while i0 < cnt.size:
+        done = ends[i0 - 1] if i0 else 0
+        i1 = max(i0 + 1, int(np.searchsorted(ends, done + PAIR_CHUNK, "right")))
+        c = cnt[i0:i1]
+        yield (np.repeat(np.arange(i0, i1), c),
+               np.arange(int(c.sum())) + np.repeat(lo[i0:i1] - (np.cumsum(c) - c), c))
+        i0 = i1

@@ -1,8 +1,9 @@
 """Vectorized point-in-polygon (ray casting) over WKB geometries.
 
 Replaces the exact-refinement role shapely's STRtree + ``contains`` would play
-(SURVEY.md §2.3 J9): the PIP *join* prefilters with grid-cell equi-joins, and
-this kernel does the exact test inside an Arrow-batched pandas UDF.
+(SURVEY.md §2.3 J9): the PIP join (``operators/pipjoin.PolygonCover``)
+prefilters (point, polygon) pairs with a grid-cell cover, and this kernel
+does the exact test, both inside one Arrow-batched ``mapInPandas`` pass.
 
 Algorithm: standard even-odd ray casting (public domain; cf. W. Randolph
 Franklin's PNPOLY), vectorized over whole batches of (point, polygon) pairs:

@@ -3,30 +3,23 @@
 Reference semantic: a photo's (lat, lon) is matched to the nearest cities500
 point (reference README.md:103; the reference *constructs* that point table,
 one row per village centroid, so k=1 lands on the right village).  At 10^12
-pages a cross join is impossible; the scalable plan is:
+pages a cross join is impossible.  :class:`NearestPlace` holds the small
+places table (~10^4 rows, broadcast-sized by construction) as a cell-sorted
+CSR index of each place's k-ring cells, plus the place coordinates:
 
-1. encode each query point's grid cell in pure Column algebra (no UDF);
-2. group the **small** places table by the cells of each place's k-ring
-   on the driver into one Arrow frame of per-cell candidate arrays (the
-   places table is broadcast-sized by construction, ~10^4 rows; the
-   10^12-row side is never exploded and never shuffled);
-3. broadcast equi-join on the query's own cell → per-row candidate array;
-4. pick the nearest candidate with ``array_min(transform(...))`` — evaluated
-   inside whole-stage codegen, 1 row in → 1 row out, NO explode, NO groupBy
-   (a per-query window/groupBy would shuffle every candidate row for zero
-   reduction — measured as the dominant non-scaling cost at 10^7 rows);
-5. **exactness guard** (per row, latitude-aware): the in-ring nearest is
-   provably the global nearest iff its distance is ≤ the minimum possible
-   distance to any point outside the ring.  Rows failing the guard — or with
-   no in-ring candidate at all — fall back to an exact scan of the *full*
-   places array inside the same ``CASE`` expression (branch evaluated lazily,
-   only for the vanishing unsettled fraction).
+1. **ring pick** (:meth:`NearestPlace.ring`): a query's own grid cell
+   selects the places whose k-ring covers it, and the min (haversine km,
+   place row) wins — vectorized over (query, place) pairs, in chunks;
+2. **exactness guard** (per row, latitude-aware, :func:`_guard_km_np`): the
+   in-ring nearest is provably the global nearest iff its distance is ≤ the
+   minimum possible distance to any point outside the ring;
+3. **full scan** (:meth:`NearestPlace.nearest`): a row failing the guard,
+   or with no in-ring place, takes the min over every place.
 
-Everything is ONE narrow Catalyst plan: no driver-side iteration, no
-per-round anti-join, no action, no persist.  (Round-1 shipped an escalation
-loop with a big-big ``left_anti`` + ``take(1)`` per round; at scale the
-anti-join re-shuffles the full query set every round — rewritten per
-VERDICT.md round-1 item 1.)
+:func:`knn_join` and :func:`knn_join_static` run it as ONE ``mapInPandas``
+over one broadcast of that object: 1 row in → 1 row out, no join, no
+exchange, no action.  The flagship (``plans/geocode_kernel.py``) runs the
+same object inside its Arrow pass.
 """
 
 from __future__ import annotations
@@ -34,29 +27,28 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..functions.geo import cell_expr
 from ..geo import grid
-from ..geo.distance import haversine_sql
+from ..geo.distance import haversine_np
 
 _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 
 #: multiplicative safety margin on the out-of-ring distance lower bound:
 #: the planar small-angle bound overestimates the true haversine distance by
 #: O(Δλ²) relative (≤ ~1e-5 at city scales); 1e-3 makes the guard airtight
-#: at the cost of routing a negligible extra fraction to the exact fallback.
+#: at the cost of routing a negligible extra fraction to the full scan.
 _GUARD_SAFETY = 0.999
 
 
-def _kring_rows(places_pdf, *, lat_col: str, lon_col: str, res: int,
-                k: int) -> tuple[np.ndarray, np.ndarray]:
-    """(row, cell) per (place, covering cell): ``row`` indexes
-    ``places_pdf``, ``cell`` is a cell of the place's k-ring."""
-    rings = grid.k_ring(grid.cell_of(places_pdf[lat_col].to_numpy(),
-                                     places_pdf[lon_col].to_numpy(), res), k)
+def _kring_rows(lat, lon, *, res: int, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, cell) per (place, covering cell): ``row`` indexes the places
+    at (``lat``, ``lon``), ``cell`` is a cell of the place's k-ring."""
+    rings = grid.k_ring(grid.cell_of(lat, lon, res), k)
     keep = rings.ravel() >= 0  # -1: beyond a pole
     return (np.repeat(np.arange(len(rings)), rings.shape[1])[keep],
             rings.ravel()[keep])
@@ -70,31 +62,11 @@ def explode_places_by_kring(spark: SparkSession, places_pdf, *,
     ``places_pdf`` is a pandas DataFrame (broadcast-scale by contract).
     Adds ``cell`` (the covering cell).
     """
-    row, cell = _kring_rows(places_pdf, lat_col=lat_col, lon_col=lon_col,
-                            res=res, k=k)
+    row, cell = _kring_rows(places_pdf[lat_col].to_numpy(),
+                            places_pdf[lon_col].to_numpy(), res=res, k=k)
     out = places_pdf.iloc[row].reset_index(drop=True)
     out["cell"] = cell
     return spark.createDataFrame(out)
-
-
-def _candidate_arrays(spark: SparkSession, places_pdf, row, key,
-                      fields: dict[str, str], cells=None) -> DataFrame:
-    """``(cell, __places)``: per cell of ``cells`` (default: the distinct
-    ``key`` values), the candidate structs ``fields`` of the ``places_pdf``
-    rows ``row`` whose ``key`` is that cell.  Grouped on the driver and
-    shipped as ONE Arrow frame — a Spark ``collect_list`` over an exploded
-    row table cost ~680 py4j round trips to build and an exchange on every
-    execution."""
-    order = np.argsort(key, kind="stable")
-    key, row = key[order], row[order]
-    cells = np.unique(key) if cells is None else cells
-    structs = pa.StructArray.from_arrays(
-        [pa.array(places_pdf[src].to_numpy()[row], from_pandas=True)
-         for src in fields.values()], names=list(fields))
-    places = pa.ListArray.from_arrays(
-        pa.array(np.r_[np.searchsorted(key, cells), key.size].astype(np.int32)),
-        structs)
-    return spark.createDataFrame(pa.table({"cell": cells, "__places": places}))
 
 
 def min_cell_km(res: int, max_abs_lat: float) -> float:
@@ -103,9 +75,9 @@ def min_cell_km(res: int, max_abs_lat: float) -> float:
     return min(lat_step, lon_step * math.cos(math.radians(max_abs_lat))) * _DEG_KM
 
 
-def guard_km_col(lat: Column, *, res: int, k: int) -> Column:
-    """Per-row lower bound (km) on the distance from a query at ``lat`` to any
-    point OUTSIDE its k-ring at ``res`` — pure Column algebra.
+def _guard_km_np(lat, *, res: int, k: int) -> np.ndarray:
+    """Per-row lower bound (km) on the distance from a query at ``lat`` to
+    any point OUTSIDE its k-ring at ``res``.
 
     A point outside the ring sits in a cell at Chebyshev distance ≥ k+1, so
     it is separated from the query by ≥ k full cell steps in latitude OR
@@ -117,15 +89,6 @@ def guard_km_col(lat: Column, *, res: int, k: int) -> Column:
     point there can be metres away in a far column (an 89.999° cap let a
     query within ~0.0002° of the pole settle on a farther ring candidate).
     """
-    lat_step, lon_step = grid.cell_size_deg(res)
-    eff_lat = F.least(F.abs(lat) + F.lit((k + 1) * lat_step), F.lit(90.0))
-    step = F.least(F.lit(lat_step),
-                   F.lit(lon_step) * F.cos(F.radians(eff_lat)))
-    return F.lit(k * _DEG_KM * _GUARD_SAFETY) * step
-
-
-def _guard_km_np(lat, *, res: int, k: int) -> np.ndarray:
-    """numpy twin of :func:`guard_km_col` (same bound, same safety margin)."""
     lat_step, lon_step = grid.cell_size_deg(res)
     eff_lat = np.minimum(np.abs(lat) + (k + 1) * lat_step, 90.0)
     step = np.minimum(lat_step, lon_step * np.cos(np.radians(eff_lat)))
@@ -140,8 +103,6 @@ def _pair_km(lat_a, lon_a, cos_a, lat_b, lon_b, cos_b):
     return 2.0 * 6371.0088 * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
-#: candidate pairs expanded per numpy batch (32 MB per float64 temporary)
-_PAIR_CHUNK = 4_000_000
 #: coarsest grid level of the spacing search: below it the out-of-ring bound
 #: degenerates (the ring spans tens of degrees of latitude) and the scan
 #: budget would send the residue to the brute scan anyway
@@ -152,25 +113,19 @@ def _ring_min_km(q, lo, cnt, order, lat, lon, coslat) -> np.ndarray:
     """Per query point ``q[i]``: min distance to the OTHER points of its
     k-ring, where ring cell ``c`` of query ``i`` holds the points
     ``order[lo[i, c]:lo[i, c] + cnt[i, c]]``; ``inf`` if there are none.
-    Pairs are expanded in chunks of about :data:`_PAIR_CHUNK`."""
-    per_q = cnt.sum(axis=1)
-    ends = np.cumsum(per_q)
-    out = np.empty(q.size)
-    i0 = 0
-    while i0 < q.size:
-        done = ends[i0 - 1] if i0 else 0
-        i1 = max(i0 + 1, int(np.searchsorted(ends, done + _PAIR_CHUNK, "right")))
-        c = cnt[i0:i1].ravel()
-        excl = np.cumsum(c) - c
-        pos = np.arange(int(c.sum())) + np.repeat(lo[i0:i1].ravel() - excl, c)
-        j = order[pos]
-        qi = np.repeat(q[i0:i1], per_q[i0:i1])
+    Pairs are expanded in :func:`grid.pairs` chunks; a query's ring cells
+    may span two chunks, so each chunk's minima fold into the running one."""
+    out = np.full(q.size, np.inf)
+    for f, pos in grid.pairs(lo.ravel(), cnt.ravel()):
+        if not f.size:
+            continue
+        i = f // cnt.shape[1]
+        qi, j = q[i], order[pos]
         d = _pair_km(lat[qi], lon[qi], coslat[qi], lat[j], lon[j], coslat[j])
         d[j == qi] = np.inf
-        # every query's own cell holds the query itself: no empty segment
-        starts = np.cumsum(per_q[i0:i1]) - per_q[i0:i1]
-        out[i0:i1] = np.minimum.reduceat(d, starts)
-        i0 = i1
+        starts = np.flatnonzero(np.diff(i, prepend=-1))
+        out[i[starts]] = np.minimum(out[i[starts]],
+                                    np.minimum.reduceat(d, starts))
     return out
 
 
@@ -200,7 +155,7 @@ def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
     bucketed at the coarsest resolution with at least n/2 distinct cells,
     and each point is compared only with the points of its 1-ring.  A point
     is settled when its ring minimum is ≤ the out-of-ring lower bound the
-    kNN guard uses (:func:`guard_km_col`, safety margin included) — no
+    kNN guard uses (:func:`_guard_km_np`, safety margin included) — no
     point outside the ring can then be nearer.  Unsettled points retry one
     level coarser; those still unsettled at :data:`_SPACING_RES_LO`, or at
     a level whose ring scan would cost as much as a brute scan of them
@@ -283,10 +238,9 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
               max_explode_rows: int = 4_000_000) -> tuple[int, int]:
     """Pick (res, k) minimizing expected per-query candidate work.
 
-    The per-row cost of the ring path is ~|candidate array| haversines
-    (higher-order ``transform`` is interpreted per element), and the array
-    size is density × step² × (2k+1)².  Exactness never depends on this
-    choice — the guard routes unsettled rows to the exact fallback — but
+    The per-row cost of the ring pick is ~|ring places| haversines, and
+    that count is density × step² × (2k+1)².  Exactness never depends on
+    this choice — the guard routes unsettled rows to the full scan — but
     the settled fraction does: the guard must exceed the worst-case
     query→nearest-place distance.  That covering radius is proxied by
     ``max_nn_spacing_km × margin``; margin defaults to 2.5 because VOIDS in
@@ -295,8 +249,9 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
     with margin 1.3 most rows failed the guard and paid ring+brute BOTH,
     19.9 s; at guard ≥ 2.3× spacing the sweep plateaus at ~2.4 s).
 
-    A fixed res is a footgun in both directions (round-5 sweep, 100 k
-    queries × 1 k places, sf0.1/32 cores, noop-measured): res 9 → 39 km
+    A fixed res is a footgun in both directions (round-5 sweep of the
+    earlier Catalyst ring pick, 100 k queries × 1 k places, sf0.1/32 cores,
+    noop-measured): res 9 → 39 km
     cells → ~100-candidate arrays → 5-8 s; res 7 → 156 km cells → 38 s;
     guard-sufficient fine-res picks (res 11 k 2 / res 12 k 3-4) → 2.4-2.5 s.
     Exactness at any pick is oracle-pinned by q:geo_knn_cells.
@@ -335,47 +290,108 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
 
 def _places_side(places_pdf, place_lat: str, place_lon: str,
                  place_cols: list[str] | None):
-    """(places, fields): one place per distinct coordinate, keeping the
-    min-tiebreak row, and the candidate struct's field → column map (plat,
-    plon, then ``tb`` — the first place column, the tie-break — then the
-    payload).
+    """(places, place_cols): one place per distinct coordinate, keeping the
+    min-tiebreak row, sorted by the tie-break (the first place column,
+    ascending) with a fresh index, so the lower row wins a distance tie.
 
     The reduction is EXACT for the 1-NN joins here: every query's distance
-    to coordinate twins is identical, and ``_best_over`` breaks ties on
-    ``tb`` ascending (struct array_min compares (d, tb, …)
-    lexicographically; the tie-break is a unique key by caller contract),
-    so among places sharing BOTH coordinates only the min-tiebreak row can
-    ever win — pinned by test_spatial_joins.  Duplicate-bearing tables
-    otherwise multiply every candidate array and the brute-fallback array
-    by the duplication factor (the r6 4×-supplier bench: place coords are
-    mod-997 products, so 4 000 suppliers put 4 copies on every point — kNN
-    row 23× slower)."""
+    to coordinate twins is identical, so among places sharing BOTH
+    coordinates only the min-tiebreak row can ever win (the tie-break is a
+    unique key by caller contract) — pinned by test_spatial_joins.
+    Duplicate-bearing tables otherwise multiply every ring and the full
+    scan by the duplication factor (the r6 4×-supplier bench: place coords
+    are mod-997 products, so 4 000 suppliers put 4 copies on every point —
+    kNN row 23× slower)."""
     if place_cols is None:
         place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
-    if places_pdf.duplicated([place_lat, place_lon]).any():
-        places_pdf = (places_pdf.sort_values(place_cols[0], kind="mergesort")
-                      .drop_duplicates([place_lat, place_lon], keep="first")
-                      .sort_index())
-    return places_pdf, {"plat": place_lat, "plon": place_lon,
-                        "tb": place_cols[0], **{c: c for c in place_cols[1:]}}
+    places = (places_pdf.sort_values(place_cols[0], kind="mergesort")
+              .drop_duplicates([place_lat, place_lon], keep="first")
+              .reset_index(drop=True))
+    return places, place_cols
 
 
-def _output(out: DataFrame, queries: DataFrame,
-            fields: dict[str, str]) -> DataFrame:
-    return out.select(
-        *queries.columns,
-        F.col("__best.tb").alias(fields["tb"]),
-        *[F.col(f"__best.{c}").alias(c) for c in list(fields)[3:]],
-        F.col("__best.d").alias("knn_dist_km"),
-    )
+def take_or_null(values: np.ndarray, row: np.ndarray):
+    """``values[row]``, null where ``row`` is -1; integers stay exact (a
+    nullable integer array, not a float one)."""
+    if values.dtype.kind in "iu":
+        values = pd.array(values)
+    return pd.api.extensions.take(values, row, allow_fill=True)
 
 
-def _best_over(array_col: str, lat_col: str, lon_col: str,
-               fields: dict[str, str]) -> Column:
-    dist_sql = haversine_sql(lat_col, lon_col, "p.plat", "p.plon")
-    payload = ", ".join(f"p.{f} AS {f}" for f in list(fields)[2:])
-    return F.expr(
-        f"array_min(transform({array_col}, p -> struct({dist_sql} AS d, {payload})))")
+class NearestPlace:
+    """The places at (``lat``, ``lon``) as the cells of each place's k-ring
+    at ``res``, sorted by cell, and their coordinates.  A place is its row:
+    a distance tie goes to the lower row, so callers pass the places in
+    tie-break order (:func:`_places_side`)."""
+
+    def __init__(self, lat, lon, *, res: int, k: int):
+        self.res, self.k = res, k
+        self.lat = np.asarray(lat, dtype=np.float64)
+        self.lon = np.asarray(lon, dtype=np.float64)
+        row, cell = _kring_rows(self.lat, self.lon, res=res, k=k)
+        self.cell, self.row = grid.sorted_by_cell(cell, row)
+
+    def _pick(self, best, dist, lat, lon, q, j) -> None:
+        """Per query ``q`` (ascending), the min (km, row) over places ``j``."""
+        d = haversine_np(lat[q], lon[q], self.lat[j], self.lon[j])
+        first = np.lexsort((j, d, q))[np.flatnonzero(np.diff(q, prepend=-1))]
+        best[q[first]], dist[q[first]] = j[first], d[first]
+
+    def ring(self, lat: np.ndarray, lon: np.ndarray):
+        """(place row, km) of each query's nearest place in its k-ring, the
+        lower row on a distance tie; (-1, NaN) when the ring holds no place
+        (a NaN coordinate has no cell)."""
+        best, dist = np.full(lat.size, -1), np.full(lat.size, np.nan)
+        cells = grid.cell_of(lat, lon, self.res)
+        for i, pos in grid.pairs(*grid.runs(self.cell, cells)):
+            self._pick(best, dist, lat, lon, i, self.row[pos])
+        return best, dist
+
+    def nearest(self, lat: np.ndarray, lon: np.ndarray):
+        """(place row, km) of each query's nearest place: the ring pick,
+        then a scan of every place for each row the ring guard does not
+        settle; (-1, NaN) for a NaN coordinate or an empty table."""
+        best, dist = self.ring(lat, lon)
+        todo = np.flatnonzero(~(dist <= _guard_km_np(lat, res=self.res, k=self.k))
+                              & ~np.isnan(lat + lon))
+        for i, j in grid.pairs(np.zeros(todo.size, dtype=np.int64),
+                               np.full(todo.size, self.lat.size)):
+            self._pick(best, dist, lat, lon, todo[i], j)
+        return best, dist
+
+
+def _name_rows(spark: SparkSession, queries: DataFrame, places, place_cols,
+               near: NearestPlace, *, lat_col: str, lon_col: str,
+               ring_only: bool) -> DataFrame:
+    """ONE ``mapInPandas`` over one broadcast of ``near`` and the places'
+    ``place_cols``: every ``queries`` column, then ``place_cols`` and
+    ``knn_dist_km`` of the place :meth:`NearestPlace.nearest` picks, null
+    when there is none (``ring_only``: :meth:`NearestPlace.ring`'s, and a
+    row without a ring place is dropped)."""
+    values = places[place_cols]
+    bc = spark.sparkContext.broadcast(
+        (near, {c: values[c].to_numpy() for c in place_cols}))
+    schema = StructType([
+        *queries.schema.fields,
+        *from_arrow_schema(pa.Schema.from_pandas(values, preserve_index=False)),
+        StructField("knn_dist_km", DoubleType())])
+
+    def batches(frames):
+        near, vals = bc.value
+        for pdf in frames:
+            lat = pdf[lat_col].to_numpy(dtype=np.float64, na_value=np.nan)
+            lon = pdf[lon_col].to_numpy(dtype=np.float64, na_value=np.nan)
+            best, dist = (near.ring if ring_only else near.nearest)(lat, lon)
+            if ring_only:
+                keep = best >= 0
+                pdf, best, dist = pdf[keep], best[keep], dist[keep]
+            out = pdf.reset_index(drop=True)
+            for c, v in vals.items():
+                out[c] = take_or_null(v, best)
+            out["knn_dist_km"] = dist
+            yield out
+
+    return queries.mapInPandas(batches, schema)
 
 
 def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
@@ -383,18 +399,20 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
              place_lat: str = "latitude", place_lon: str = "longitude",
              place_cols: list[str] | None = None,
              res: int | str = "auto", k: int | None = None) -> DataFrame:
-    """Exact nearest-place join: one output row per query row, ONE narrow plan.
+    """Exact nearest-place join: one output row per query row, ONE
+    ``mapInPandas`` running :meth:`NearestPlace.nearest`.
 
     Output = all ``queries`` columns + ``place_cols`` + ``knn_dist_km``.
     Ties broken by the first column of ``place_cols`` (ascending) — callers
     should pass a unique key first (e.g. geoname_id), mirroring the
     deterministic tie rule used throughout the reference (min geoname_id,
-    enhance_data.py:279-290).
+    enhance_data.py:279-290).  A query with a NULL or NaN coordinate, or
+    any query against an empty places table, gets null place columns and a
+    null ``knn_dist_km``.  ``query_id`` is not read.
 
     ``k`` is the candidate ring radius; rows whose in-ring nearest fails the
-    per-row exactness guard (or that have no in-ring candidate) are resolved
-    against the full places array inside the same CASE expression — exact by
-    definition, evaluated only for that residual fraction.
+    per-row exactness guard (or that have no in-ring candidate) scan every
+    place — exact by definition, paid only by that residual fraction.
 
     ``res="auto"`` (default) derives BOTH res and k from the places
     table's measured nearest-neighbor spacing (:func:`auto_ring`) — a
@@ -403,46 +421,18 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
     (silently ignoring it would hand back a different ring than asked
     for); pin an int res to control k (default 1).
     """
-    places_pdf, fields = _places_side(places_pdf, place_lat, place_lon,
+    places, place_cols = _places_side(places_pdf, place_lat, place_lon,
                                       place_cols)
     if res == "auto":
         if k is not None:
             raise ValueError("res='auto' derives BOTH res and k from the "
                              "place spacing; pass an explicit res to pin k")
-        res, k = auto_ring(places_pdf, lat_col=place_lat, lon_col=place_lon)
+        res, k = auto_ring(places, lat_col=place_lat, lon_col=place_lon)
     elif k is None:
         k = 1
-    row, cell = _kring_rows(places_pdf, lat_col=place_lat,
-                            lon_col=place_lon, res=res, k=k)
-    grouped = _candidate_arrays(spark, places_pdf, row, cell, fields)
-
-    # one-row DF carrying ALL places as one array — the exact fallback
-    # operand, joined only to the rows the guard does not settle: the
-    # transform folds run outside whole-stage codegen, so every row that
-    # carries the array copies it at each row boundary (at 8,000 places a
-    # copy to every row cost 0.43 s per 4,800 rows).  Settled rows carry a
-    # null.  The cap is the BROADCAST size of the places table, the same
-    # for every kNN variant here; beyond it, switch to a cell-bucketed
-    # shuffle join on the k-ring, the fallback residual routing through
-    # per-row nearest cells rather than a global array.
-    n = len(places_pdf)
-    all_places = _candidate_arrays(
-        spark, places_pdf, np.arange(n), np.zeros(n, dtype=np.int64), fields,
-        cells=np.zeros(1, dtype=np.int64)).select(
-            F.col("__places").alias("__all"))
-
-    ring = (queries.join(F.broadcast(grouped),
-                         cell_expr(lat_col, lon_col, res) == grouped["cell"], "left")
-            .withColumn("__rb", _best_over("__places", lat_col,
-                                           lon_col, fields))
-            .drop("cell", "__places"))
-    guard = guard_km_col(F.col(lat_col), res=res, k=k)
-    settled = F.col("__rb").isNotNull() & (F.col("__rb.d") <= guard)
-    out = ring.join(F.broadcast(all_places), ~settled, "left")
-    brute_best = _best_over("__all", lat_col, lon_col, fields)
-    return _output(out.withColumn("__best", F.when(settled, F.col("__rb"))
-                                  .otherwise(brute_best)),
-                   queries, fields)
+    near = NearestPlace(places[place_lat], places[place_lon], res=res, k=k)
+    return _name_rows(spark, queries, places, place_cols, near,
+                      lat_col=lat_col, lon_col=lon_col, ring_only=False)
 
 
 def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
@@ -450,31 +440,19 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
                     place_lat: str = "latitude", place_lon: str = "longitude",
                     place_cols: list[str] | None = None,
                     res: int = grid.DEFAULT_RES, k: int = 1) -> DataFrame:
-    """Single-pass exact kNN as a *pure narrow plan* — zero shuffle, no
-    fallback branch.
+    """Ring-only kNN: :meth:`NearestPlace.ring` in ONE ``mapInPandas``, no
+    guard and no full scan; a query with no place in its k-ring (a NULL or
+    NaN coordinate included) is dropped.
 
-    Valid only where every query's true nearest place lies in its k-ring
-    within the ring guard (:func:`guard_km_col`); the max nearest-neighbour
+    Exact only where every query's true nearest place lies in its k-ring
+    within the ring guard (:func:`_guard_km_np`); the max nearest-neighbour
     spacing (:func:`max_nn_spacing_km`) does not show that: it is blind to
-    voids between clusters.  Elsewhere a query with no ring candidate is
-    dropped and a farther in-ring candidate is taken silently;
-    :func:`knn_join` is exact everywhere.
-
-    Plan shape: the small side is grouped per covering cell on the driver
-    into an ``array<struct(lat, lon, payload…)>`` and broadcast (no
-    aggregate, no exchange anywhere in the plan); each query row joins
-    its own cell's candidate array (1 row in → 1 row out — NO explode) and
-    picks the nearest with ``array_min(transform(...))`` in whole-stage
-    codegen.  Streaming/foreachBatch-safe (no actions).
+    voids between clusters.  Elsewhere a farther in-ring place is taken
+    silently; :func:`knn_join` is exact everywhere.  Output columns as
+    :func:`knn_join`'s.
     """
-    places_pdf, fields = _places_side(places_pdf, place_lat, place_lon,
+    places, place_cols = _places_side(places_pdf, place_lat, place_lon,
                                       place_cols)
-    row, cell = _kring_rows(places_pdf, lat_col=place_lat,
-                            lon_col=place_lon, res=res, k=k)
-    grouped = _candidate_arrays(spark, places_pdf, row, cell, fields)
-
-    joined = queries.join(F.broadcast(grouped),
-                          cell_expr(lat_col, lon_col, res) == grouped["cell"], "inner")
-
-    best = _best_over("__places", lat_col, lon_col, fields)
-    return _output(joined.withColumn("__best", best), queries, fields)
+    near = NearestPlace(places[place_lat], places[place_lon], res=res, k=k)
+    return _name_rows(spark, queries, places, place_cols, near,
+                      lat_col=lat_col, lon_col=lon_col, ring_only=True)

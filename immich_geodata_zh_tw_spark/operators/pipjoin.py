@@ -1,34 +1,32 @@
-"""Point-in-polygon join: cell prefilter + exact vectorized refinement.
+"""Point-in-polygon join: a grid-cell cover, then the exact even-odd test,
+in one vectorized pass.
 
 The extract-stage semantic of the reference (SURVEY.md §2.3 J9): a point is
-assigned the admin polygon containing it.  Scalable plan:
+assigned the admin polygon containing it.  :class:`PolygonCover` holds the
+small side (~10^4 admin polygons) as one CSR vertex table
+(:class:`pip.PolygonTable`, decoded once from the WKB, no bigger than it)
+and the grid cells covering each polygon's bbox, sorted by cell.  Its
+:meth:`PolygonCover.hits` is the filter → refine split: a point's own cell
+selects the candidate polygons from the cover (non-overlapping admin
+tilings give ~1 per point, plus bbox false positives), and
+``PolygonTable.contains`` keeps the ones containing it — a bbox test per
+pair, edge expansion over the survivors, crossing parity — with no per-row
+or per-polygon Python.
 
-1. driver-side: expand each polygon (small side: ~10^4 admin polygons) into
-   the grid cells covering its bbox → (cell, row, poly_id, attrs…) table,
-   broadcast (``row``: the polygon's row in the vertex table of step 3);
-2. points (10^12 side) compute their cell in Column algebra and broadcast
-   equi-join → candidate (point, poly_id) pairs.  Non-overlapping admin
-   tilings yield ~1 candidate per point (plus bbox false positives);
-3. exact refinement inside an Arrow-batched pandas UDF: the driver packs the
-   polygons into one CSR vertex table (:class:`pip.PolygonTable`, no bigger
-   than their WKB), broadcast once per call; each batch of candidate pairs
-   is tested in one vectorized pass — bbox test per pair, edge expansion
-   over the survivors, crossing parity — with no per-row or per-polygon
-   Python and no executor-side cache.
-
-No shuffle touches the big side at any step — the only wide operation is the
-broadcast itself.
+:func:`pip_join` runs it as ONE ``mapInPandas`` over one broadcast of the
+cover: no join and no exchange, the big side never shuffled.  The flagship
+(``plans/geocode_kernel.py``) runs the same cover inside its Arrow pass.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
-from ..functions.geo import cell_expr
 from ..geo import grid, pip, wkb
 
 
@@ -69,49 +67,64 @@ def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
     return pd.DataFrame({"cell": cell, id_col: polys_pdf[id_col].to_numpy()[row]})
 
 
+class PolygonCover:
+    """A :class:`pip.PolygonTable` and the cells at ``res`` covering each
+    geometry's bbox (NaN, a geometry without points: (0, 0) as in
+    ``wkb.bounds_array``), as (cell, row) sorted by cell."""
+
+    def __init__(self, table: pip.PolygonTable, res: int):
+        self.table, self.res = table, res
+        self.cell, self.row = grid.sorted_by_cell(
+            *_cover(np.nan_to_num(table.bbox), res))
+
+    def hits(self, lat: np.ndarray, lon: np.ndarray):
+        """(point, row): the index of each point, ascending, that lies in
+        geometry ``row`` of the table, once per containing geometry; a NaN
+        coordinate has no cell, so no hit."""
+        points, rows = [np.zeros(0, dtype=np.int64)], [self.row[:0]]
+        cells = grid.cell_of(lat, lon, self.res)
+        for i, pos in grid.pairs(*grid.runs(self.cell, cells)):
+            row = self.row[pos]
+            hit = self.table.contains(row, lon[i], lat[i])
+            points.append(i[hit])
+            rows.append(row[hit])
+        return np.concatenate(points), np.concatenate(rows)
+
+
 def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
              lat_col: str = "lat", lon_col: str = "lon",
              id_col: str = "poly_id", wkb_col: str = "geometry_wkb",
              attr_cols: list[str] | None = None,
-             res: int = grid.DEFAULT_RES, how: str = "inner",
-             point_id: str | None = None) -> DataFrame:
-    """Assign each point its containing polygon's id + attributes.
+             res: int = grid.DEFAULT_RES) -> DataFrame:
+    """Assign each point its containing polygon's id + attributes: ONE
+    ``mapInPandas`` running :meth:`PolygonCover.hits` over one broadcast of
+    the cover and the polygons' ``id_col`` and ``attr_cols`` values.
 
-    ``how='inner'`` drops points in no polygon; ``'left'`` keeps them with
-    null attributes (requires ``point_id``, a unique point key).  Polygons
-    must not overlap (admin tilings don't); if they did, a point would emit
-    one row per containing polygon.
+    Output = ``id_col``, all ``points`` columns, ``attr_cols``.  A point in
+    no polygon (or with a NULL coordinate) is dropped.  Polygons must not
+    overlap (admin tilings don't); if they did, a point would emit one row
+    per containing polygon.
     """
     if attr_cols is None:
         attr_cols = [c for c in polys_pdf.columns if c not in (id_col, wkb_col)]
+    cover = PolygonCover(pip.PolygonTable.from_wkb(polys_pdf[wkb_col]), res)
+    values = polys_pdf[[id_col, *attr_cols]]
+    types = from_arrow_schema(pa.Schema.from_pandas(values, preserve_index=False))
+    bc = spark.sparkContext.broadcast(
+        (cover, {c: values[c].to_numpy() for c in values.columns}))
+    schema = StructType([types[id_col], *points.schema.fields,
+                         *(types[c] for c in attr_cols)])
 
-    # decoded once: the vertex table's bboxes give the cover (NaN: a
-    # geometry without points, (0, 0) as in wkb.bounds_array), and the cover
-    # carries each polygon's table row, so the kernel needs no id lookup,
-    # and its id and attributes, so no second join fetches them
-    table = pip.PolygonTable.from_wkb(polys_pdf[wkb_col])
-    cell, row = _cover(np.nan_to_num(table.bbox), res)
-    cover = polys_pdf[[id_col, *attr_cols]].iloc[row].reset_index(drop=True)
-    cover.insert(0, "__row", row)
-    cover.insert(0, "cell", cell)
-    cover = spark.createDataFrame(cover)
-    bc = spark.sparkContext.broadcast(table)
+    def batches(frames):
+        cover, vals = bc.value
+        for pdf in frames:
+            point, row = cover.hits(
+                pdf[lat_col].to_numpy(dtype=np.float64, na_value=np.nan),
+                pdf[lon_col].to_numpy(dtype=np.float64, na_value=np.nan))
+            out = pdf.take(point).reset_index(drop=True)
+            out.insert(0, id_col, vals[id_col][row])
+            for c in attr_cols:
+                out[c] = vals[c][row]
+            yield out
 
-    @F.pandas_udf(BooleanType())
-    def contains_udf(row: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(bc.value.contains(row.to_numpy(),
-                                           lon.to_numpy(dtype=np.float64),
-                                           lat.to_numpy(dtype=np.float64)))
-
-    cand = points.join(F.broadcast(cover),
-                       cell_expr(lat_col, lon_col, res) == cover["cell"], "inner")
-    hit = (cand.filter(contains_udf(F.col("__row"), F.col(lon_col), F.col(lat_col)))
-           .select(id_col, *points.columns, *attr_cols))
-    if how == "inner":
-        return hit
-    if how == "left":
-        if point_id is None:
-            raise ValueError("how='left' requires point_id (unique point key)")
-        return points.join(hit.select(point_id, id_col, *attr_cols),
-                           point_id, "left")
-    raise ValueError(f"unsupported how={how!r}")
+    return points.mapInPandas(batches, schema)

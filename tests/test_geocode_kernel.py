@@ -1,6 +1,6 @@
-"""The flagship's fused kernel (``plans.geocode_kernel``) against the
-operator composition it replaced, kept here as the reference: the text-free
-extract → in-bbox filter → ``pip_join`` → ``knn_join`` at the kernel's grids.
+"""The flagship's fused kernel (``plans.geocode_kernel``) against brute
+force: the text-free extract → in-bbox filter, then every point against
+every polygon and every city.
 
 The polygons are the 80-village tiling with its enclave multipolygon, one
 village turned into a polygon with a hole and the hole added as a village of
@@ -22,9 +22,8 @@ from pyspark.sql import functions as F
 
 from immich_geodata_zh_tw_spark.extract.html_meta import extract_pages
 from immich_geodata_zh_tw_spark.functions.geo import in_bbox
-from immich_geodata_zh_tw_spark.geo import wkb
-from immich_geodata_zh_tw_spark.operators.knn import knn_join
-from immich_geodata_zh_tw_spark.operators.pipjoin import pip_join
+from immich_geodata_zh_tw_spark.geo import pip, wkb
+from immich_geodata_zh_tw_spark.geo.distance import haversine_np
 from immich_geodata_zh_tw_spark.plans.geocode_kernel import (
     ADMIN_COLS, PLACE_COLS, GeocodeReference)
 from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
@@ -117,19 +116,37 @@ def _pages(points) -> pd.DataFrame:
                         columns=["url", "html"])
 
 
-def reference_rows(spark, pages: pd.DataFrame, cities_pdf: pd.DataFrame,
-                   ref: GeocodeReference) -> pd.DataFrame:
-    """The replaced composition, at the kernel's grids."""
+def reference_rows(spark, pages: pd.DataFrame,
+                   cities_pdf: pd.DataFrame) -> pd.DataFrame:
+    """Brute force: ``PolygonTable.contains`` of every extracted in-bbox
+    point against every polygon, then the min (haversine km, geoname_id)
+    over every city."""
     pts = (extract_pages(spark.createDataFrame(pages, PAGES_SCHEMA),
                          with_text=False)
            .filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-           .filter(in_bbox(F.col("lat"), F.col("lon"), TW_BBOX)))
-    polys = POLYS.assign(poly_id=range(len(POLYS)))
-    hit = pip_join(spark, pts, polys, id_col="poly_id", attr_cols=ADMIN_COLS,
-                   res=ref.pip_res).drop("poly_id")
-    return knn_join(spark, hit, cities_pdf, query_id="url",
-                    place_cols=PLACE_COLS, res=ref.knn_res,
-                    k=ref.k).select(*COLS).toPandas()
+           .filter(in_bbox(F.col("lat"), F.col("lon"), TW_BBOX))
+           .select("url", "lat", "lon").toPandas())
+    n, m = len(pts), len(POLYS)
+    pt, poly = np.repeat(np.arange(n), m), np.tile(np.arange(m), n)
+    hit = pip.PolygonTable.from_wkb(POLYS["geometry_wkb"]).contains(
+        poly, pts["lon"].to_numpy()[pt], pts["lat"].to_numpy()[pt])
+    rows = pts.iloc[pt[hit]].reset_index(drop=True)
+    for c in ADMIN_COLS:
+        rows[c] = POLYS[c].to_numpy()[poly[hit]]
+    if cities_pdf.empty:
+        return rows.assign(**{c: None for c in PLACE_COLS}, knn_dist_km=np.nan)
+    # distances to the distinct coordinates, so coordinate twins tie exactly
+    xy, inv = np.unique(cities_pdf[["latitude", "longitude"]].to_numpy(),
+                        axis=0, return_inverse=True)
+    d = haversine_np(rows["lat"].to_numpy()[:, None],
+                     rows["lon"].to_numpy()[:, None],
+                     xy[None, :, 0], xy[None, :, 1])[:, inv.ravel()]
+    ids = np.broadcast_to(cities_pdf["geoname_id"].to_numpy(), d.shape)
+    best = np.lexsort((ids, d), axis=-1)[:, 0]
+    for c in PLACE_COLS:
+        rows[c] = cities_pdf[c].to_numpy()[best]
+    rows["knn_dist_km"] = d[np.arange(len(rows)), best]
+    return rows[COLS]
 
 
 def assert_same_rows(got: pd.DataFrame, want: pd.DataFrame) -> None:
@@ -164,7 +181,7 @@ def test_kernel_and_plan_match_the_operators(spark, table):
     pages = _pages(points)
     cts = CITIES[table]
     ref = GeocodeReference(POLYS, cts)
-    want = reference_rows(spark, pages, cts, ref)
+    want = reference_rows(spark, pages, cts)
     assert len(want) > 800
     half = len(pages) // 2
     assert_same_rows(kernel_rows(ref, [pages.iloc[:half], pages.iloc[:0],
@@ -202,4 +219,4 @@ def test_random_pages_match_the_operators(spark, table, points, split):
     cts = CITIES[table]
     ref = GeocodeReference(POLYS, cts)
     assert_same_rows(kernel_rows(ref, [pages.iloc[:split], pages.iloc[split:]]),
-                     reference_rows(spark, pages, cts, ref))
+                     reference_rows(spark, pages, cts))

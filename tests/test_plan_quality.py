@@ -16,7 +16,6 @@ def _plan(df) -> str:
 
 
 def _check_flagship_plan(spark, tmp_path, cities_pdf) -> None:
-    import re
     from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
         reverse_geocode_pages
     from immich_geodata_zh_tw_spark.synth import pages, polygons
@@ -26,20 +25,28 @@ def _check_flagship_plan(spark, tmp_path, cities_pdf) -> None:
         spark, spark.read.parquet(str(tmp_path / "pages")),
         polygons.admin_polygons_pdf(village_grid=2), cities_pdf)
     plan = _plan(out)
-    # scan → one Arrow kernel → project: no exchange of any kind (no
-    # shuffle, no broadcast), no join, and no reference table planned as a
-    # driver-side LocalRelation
-    assert not re.search(r"\(\d+\) \w*Exchange\b", plan), plan
-    assert "Join" not in plan and "Aggregate" not in plan, plan
+    # scan → one Arrow kernel → project, and no reference table planned as
+    # a driver-side LocalRelation
+    _assert_one_arrow_pass(plan)
+    assert "Aggregate" not in plan, plan
     assert "LocalTableScan" not in plan, plan
+
+
+def _assert_one_arrow_pass(plan: str) -> None:
+    """Exactly one MapInPandas, no other Python stage, no join and no
+    exchange of any kind (no shuffle, no broadcast)."""
+    import re
     # once in the tree, once as the "(n) MapInPandas" detail header
     assert plan.count("MapInPandas (") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert not re.search(r"\(\d+\) \w*Exchange\b", plan), plan
+    assert "Join" not in plan, plan
 
 
 class TestPlanQuality:
     def test_knn_join_is_broadcast_only(self, spark):
-        """The kNN hot path must never sort-merge-join the big side."""
+        """The kNN hot path must never join the big side: the places reach
+        the executors as one broadcast object, not a join side."""
         from immich_geodata_zh_tw_spark.operators.knn import knn_join
 
         pts = spark.createDataFrame(pd.DataFrame(
@@ -50,31 +57,29 @@ class TestPlanQuality:
             "longitude": [120.0 + 0.2 * i for i in range(10)]})
         out = knn_join(spark, pts, places, query_id="qid",
                        place_cols=["place_id"], res=8, k=1)
-        plan = _plan(out)
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
+        _assert_one_arrow_pass(_plan(out))
 
     def test_knn_reduction_is_shuffle_free(self, spark):
-        """The per-query nearest reduction must be an array_min over the
-        broadcast candidate array — no big-side exchange, no aggregation of
-        candidate rows, no Window sort (query ids are unique, so a groupBy
-        would shuffle everything and reduce nothing)."""
-        from immich_geodata_zh_tw_spark.operators.knn import knn_join
+        """The per-query nearest reduction runs inside the one Arrow pass —
+        no big-side exchange, no aggregation of candidate rows, no Window
+        sort (query ids are unique, so a groupBy would shuffle everything
+        and reduce nothing).  The ring-only join has the same shape."""
+        from immich_geodata_zh_tw_spark.operators.knn import (knn_join,
+                                                              knn_join_static)
 
         pts = spark.createDataFrame(pd.DataFrame(
             {"qid": range(50), "lat": [23.5] * 50, "lon": [121.0] * 50}))
         places = pd.DataFrame({"place_id": [1], "latitude": [23.5],
                                "longitude": [121.0]})
-        out = knn_join(spark, pts, places, query_id="qid",
-                       place_cols=["place_id"], res=8, k=1)
-        plan = _plan(out)
-        assert "array_min" in plan
-        assert "Window" not in plan
-        # only the (tiny) candidate-grouping side may exchange; the query
-        # side's lineage from LocalTableScan → output must be exchange-free
-        assert "Exchange hashpartitioning(qid" not in plan
+        for join in (knn_join, knn_join_static):
+            plan = _plan(join(spark, pts, places, query_id="qid",
+                              place_cols=["place_id"], res=8, k=1))
+            _assert_one_arrow_pass(plan)
+            assert "Window" not in plan and "Aggregate" not in plan, plan
 
     def test_pip_join_broadcast_and_no_bigside_shuffle(self, spark):
+        """The cover and the polygons are one broadcast object; the points
+        pass once through one Arrow kernel, never joined or shuffled."""
         from immich_geodata_zh_tw_spark.operators.pipjoin import pip_join
         from immich_geodata_zh_tw_spark.synth import polygons
 
@@ -84,15 +89,7 @@ class TestPlanQuality:
             {"pid": range(100), "lat": [23.5] * 100, "lon": [121.0] * 100}))
         out = pip_join(spark, pts, polys, id_col="poly_id",
                        attr_cols=["county"], res=8)
-        plan = _plan(out)
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        # the only exchanges allowed are broadcast exchanges
-        import re
-        non_broadcast_exchanges = [
-            ln for ln in plan.splitlines()
-            if re.search(r"\bExchange hashpartitioning", ln)]
-        assert non_broadcast_exchanges == []
+        _assert_one_arrow_pass(_plan(out))
 
     def test_minhash_single_arrow_pass(self, spark):
         """The MinHash signature must be ONE Arrow-batched kernel per

@@ -215,30 +215,51 @@ class TestKnnJoin:
 
     def test_knn_join_is_one_plan_no_actions(self, spark, queries_pdf, places_pdf):
         """The general kNN must be a single narrow plan (round-1 ran per-round
-        take(1) actions + a big-big left_anti): the plan must contain no
-        anti-join and no exchange on the query side."""
+        take(1) actions + a big-big left_anti): one Arrow pass over the
+        queries, with no join and no exchange of any kind."""
+        import re
+
         q = spark.createDataFrame(queries_pdf)
         out = knn_op.knn_join(spark, q, places_pdf, query_id="qid",
                               place_cols=["place_id"], res=10, k=1)
         plan = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted")
-        assert "LeftAnti" not in plan
-        assert "Exchange hashpartitioning(qid" not in plan
-        assert plan.count("BroadcastHashJoin") >= 1
+        assert plan.count("MapInPandas (") == 1, plan
+        assert not re.search(r"\(\d+\) \w*Exchange\b", plan), plan
+        assert "Join" not in plan and "ArrowEvalPython" not in plan, plan
 
     def test_empty_places_table_keeps_every_query(self, spark):
-        """The general join's fallback array is one row even when empty, so
-        every query row comes back, with no place."""
-        places = pd.DataFrame({"place_id": pd.Series([], dtype="int64"),
-                               "latitude": pd.Series([], dtype="float64"),
-                               "longitude": pd.Series([], dtype="float64")})
-        q = spark.createDataFrame(pd.DataFrame(
-            {"qid": [0, 1], "lat": [23.0, 24.0], "lon": [121.0, 121.5]}))
+        """Every query row comes back, with no place and no distance, when
+        the places table is empty or the query has a NULL or NaN
+        coordinate; the ring-only join drops those rows."""
+        empty = pd.DataFrame({"place_id": pd.Series([], dtype="int64"),
+                              "latitude": pd.Series([], dtype="float64"),
+                              "longitude": pd.Series([], dtype="float64")})
+        places = pd.DataFrame({"place_id": [1, 2, 3],
+                               "latitude": [23.0, 23.5, 24.0],
+                               "longitude": [121.0, 121.0, 121.0]})
+        q = spark.createDataFrame(
+            [(0, 23.0, 121.0), (1, 24.0, 121.5), (2, None, 121.0),
+             (3, 23.5, None), (4, float("nan"), 121.0)],
+            "qid long, lat double, lon double")
+        out = (knn_op.knn_join(spark, q, empty, query_id="qid",
+                               place_cols=["place_id"], res=10, k=1)
+               .toPandas().sort_values("qid"))
+        assert out["qid"].tolist() == [0, 1, 2, 3, 4]
+        assert out["place_id"].isna().all()
+        assert out["knn_dist_km"].isna().all()
         out = (knn_op.knn_join(spark, q, places, query_id="qid",
                                place_cols=["place_id"], res=10, k=1)
                .toPandas().sort_values("qid"))
-        assert out["qid"].tolist() == [0, 1]
-        assert out["place_id"].isna().all()
+        assert out["qid"].tolist() == [0, 1, 2, 3, 4]
+        assert out["place_id"].tolist()[:2] == [1, 3]
+        assert out["place_id"].iloc[2:].isna().all()
+        assert out["knn_dist_km"].iloc[2:].isna().all()
+        out = (knn_op.knn_join_static(spark, q, places, query_id="qid",
+                                      place_cols=["place_id"], res=10, k=1)
+               .toPandas().sort_values("qid"))
+        assert out["qid"].tolist() == [0]
+        assert out["place_id"].tolist() == [1]
 
     def test_dense_single_cell(self, spark):
         # all queries and places inside one cell — degenerate skew case
@@ -304,18 +325,6 @@ class TestPipJoin:
         assert dict(zip(out["pid"], out["poly_id"])) == want
         # sanity: nearly every in-bbox point is inside some village
         assert len(out) >= 0.95 * n
-
-    def test_left_join_keeps_outside_points(self, spark):
-        polys = polygons.admin_polygons_pdf(village_grid=2)
-        polys = polys.reset_index().rename(columns={"index": "poly_id"})
-        pts = spark.createDataFrame(pd.DataFrame(
-            {"pid": [0, 1], "lat": [23.0, 50.0], "lon": [121.0, 10.0]}))
-        out = pipjoin.pip_join(spark, pts, polys, id_col="poly_id",
-                               attr_cols=["county"], res=8, how="left",
-                               point_id="pid").toPandas().sort_values("pid")
-        assert len(out) == 2
-        assert out.iloc[0]["county"] is not None
-        assert out.iloc[1]["county"] is None
 
     def test_string_ids_in_any_order(self, spark):
         """Points get the id and attributes of their own polygon when the
