@@ -293,6 +293,8 @@ def _places_side(places_pdf, place_lat: str, place_lon: str,
     """(places, place_cols): one place per distinct coordinate, keeping the
     min-tiebreak row, sorted by the tie-break (the first place column,
     ascending) with a fresh index, so the lower row wins a distance tie.
+    A place with a NULL or NaN coordinate, which is no distance from any
+    query, is dropped.
 
     The reduction is EXACT for the 1-NN joins here: every query's distance
     to coordinate twins is identical, so among places sharing BOTH
@@ -304,7 +306,8 @@ def _places_side(places_pdf, place_lat: str, place_lon: str,
     kNN row 23× slower)."""
     if place_cols is None:
         place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
-    places = (places_pdf.sort_values(place_cols[0], kind="mergesort")
+    places = (places_pdf.dropna(subset=[place_lat, place_lon])
+              .sort_values(place_cols[0], kind="mergesort")
               .drop_duplicates([place_lat, place_lon], keep="first")
               .reset_index(drop=True))
     return places, place_cols
@@ -332,10 +335,15 @@ class NearestPlace:
         self.cell, self.row = grid.sorted_by_cell(cell, row)
 
     def _pick(self, best, dist, lat, lon, q, j) -> None:
-        """Per query ``q`` (ascending), the min (km, row) over places ``j``."""
+        """Per query ``q`` (ascending), the min (km, row) over places ``j``:
+        a segmented min of the km, then the lowest row among its exact ties;
+        no sort."""
         d = haversine_np(lat[q], lon[q], self.lat[j], self.lon[j])
-        first = np.lexsort((j, d, q))[np.flatnonzero(np.diff(q, prepend=-1))]
-        best[q[first]], dist[q[first]] = j[first], d[first]
+        start = np.flatnonzero(np.diff(q, prepend=-1))
+        low = np.minimum.reduceat(d, start)
+        tie = d == np.repeat(low, np.diff(start, append=q.size))
+        row = np.minimum.reduceat(np.where(tie, j, np.iinfo(np.int64).max), start)
+        best[q[start]], dist[q[start]] = row, low
 
     def ring(self, lat: np.ndarray, lon: np.ndarray):
         """(place row, km) of each query's nearest place in its k-ring, the

@@ -2,8 +2,8 @@
 
 North-rule mapping of the reference's resumability features (SURVEY.md §2.10):
 
-* R1 resume-by-key (generate_geodata_locationiq.py:164-202) → anti-join the
-  pending split list against the manifest;
+* R1 resume-by-key (generate_geodata_locationiq.py:164-202) → only the
+  splits without an ``ok`` manifest row are pending;
 * R2 batched checkpoint writes (:264-278) → per-split dynamic-partition
   overwrite, manifest row appended only after the split's data is committed
   (a split without a manifest row is retried — idempotent because the re-run
@@ -14,6 +14,9 @@ North-rule mapping of the reference's resumability features (SURVEY.md §2.10):
 At 10^12 rows the unit of work is a *split* (a coarse partition of the input,
 e.g. a date or an id range), not a Spark task: task retries are Spark-native
 (R5); the manifest makes whole-job restarts cheap.
+
+Every manifest value comes from a job the run makes anyway (the jobs are
+listed in :func:`checkpointed_run`).
 """
 
 from __future__ import annotations
@@ -21,27 +24,27 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA_VERSION = 1
 
 
-def _manifest_exists(spark: SparkSession, path: str) -> bool:
+def completed_splits(spark: SparkSession, manifest_path: str,
+                     split_type: str) -> set:
+    """Split ids already committed (status='ok') as ``split_type`` (a DDL
+    type: int ids read as bigint too); empty when nothing exists at
+    ``manifest_path`` yet, an error when what exists is not a manifest."""
     try:
-        spark.read.parquet(path).limit(1).collect()
-        return True
-    except Exception:
-        return False
-
-
-def completed_splits(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    """Distinct split ids already committed (status='ok'), or None."""
-    if not _manifest_exists(spark, manifest_path):
-        return None
-    m = spark.read.parquet(manifest_path)
-    return (m.filter(F.col("status") == "ok")
-            .select("split_id").distinct())
+        m = spark.read.schema(f"split_id {split_type}, status string").parquet(
+            manifest_path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
+    return {r.split_id for r in m.filter(F.col("status") == "ok").collect()}
 
 
 def checkpointed_run(spark: SparkSession, df: DataFrame, *, split_col: str,
@@ -53,59 +56,54 @@ def checkpointed_run(spark: SparkSession, df: DataFrame, *, split_col: str,
     ``process(sub_df) -> DataFrame`` must keep ``split_col`` in its output.
     Committed output lands under ``output_path`` partitioned by ``split_col``
     (dynamic overwrite → re-runs are idempotent); one manifest row per split:
-    ``(run_id, split_id, status, row_count, wall_ms, schema_version, input_fingerprint)``.
+    ``(split_id, row_count, input_fingerprint, run_id, status, wall_ms,
+    schema_version, committed_at)``.
+
+    Jobs: one read of the committed split ids (none before the first
+    commit); one exact ``groupBy(split_col)`` over the uncommitted rows,
+    whose keys are the pending splits and whose ``bit_xor(xxhash64(*columns))``
+    is each one's order-insensitive ``input_fingerprint``; then per batch the
+    write and a one-file manifest append.  ``row_count`` is a ``count_if``
+    per split observed in the write's own result stage, where Spark applies
+    each partition's update once, so retried and speculative tasks do not
+    double-count, and a split with no output rows commits with 0.
 
     ``batch_size`` = R3 checkpoint cadence (reference flushes every
-    ``batch_size`` rows / 20 cache writes): pending splits are processed in
-    batches of that many splits, the manifest appended after EACH batch, so a
-    mid-run failure loses at most one batch of work instead of the whole run.
-    Default None = single batch.
+    ``batch_size`` rows / 20 cache writes): pending splits run in batches of
+    that many splits (default: one batch), the manifest appended after EACH,
+    so a mid-run failure loses at most one batch of work; it also bounds the
+    write's observed columns, one per split of a batch.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    all_splits = df.select(F.col(split_col).alias("split_id")).distinct()
-    done = completed_splits(spark, manifest_path)
-    pending = (all_splits.join(done, "split_id", "left_anti")
-               if done is not None else all_splits)
-    pending_ids = sorted([r.split_id for r in pending.collect()])
-    if not pending_ids:
-        return {"run_id": run_id, "processed_splits": 0, "rows": 0}
-
-    step = batch_size or len(pending_ids)
+    split = F.col(split_col)
+    split_type = df.schema[split_col].dataType.simpleString()
+    done = completed_splits(spark, manifest_path, split_type)
+    fingerprint = dict(df.filter(~split.isin(*done)).groupBy(split)
+                       .agg(F.bit_xor(F.xxhash64(*df.columns))).collect())
+    pending = sorted(fingerprint)
+    schema = (f"split_id {split_type}, row_count bigint, input_fingerprint "
+              "bigint, run_id string, status string, wall_ms int, schema_version int")
+    step = batch_size or max(len(pending), 1)
     total_rows = 0
-    for i in range(0, len(pending_ids), step):
-        total_rows += _run_batch(spark, df, split_col=split_col,
-                                 process=process, output_path=output_path,
-                                 manifest_path=manifest_path, run_id=run_id,
-                                 pending_ids=pending_ids[i:i + step])
-    return {"run_id": run_id, "processed_splits": len(pending_ids),
+    for i in range(0, len(pending), step):
+        ids = pending[i:i + step]
+        obs = Observation()
+        t0 = time.time()
+        (process(df.filter(split.isin(*ids)))
+         .observe(obs, *(F.count_if(split == F.lit(s)).alias(f"n{k}")
+                         for k, s in enumerate(ids)))
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy(split_col).parquet(output_path))
+        counts = list(obs.get.values())
+        rows = pd.DataFrame({"split_id": ids, "row_count": counts,
+                             "input_fingerprint": [fingerprint[s] for s in ids],
+                             "run_id": run_id, "status": "ok",
+                             "wall_ms": int((time.time() - t0) * 1000),
+                             "schema_version": MANIFEST_SCHEMA_VERSION})
+        # Arrow → a local relation: no Python worker; one file per append
+        (spark.createDataFrame(rows, schema).coalesce(1)
+         .withColumn("committed_at", F.current_timestamp())
+         .write.mode("append").parquet(manifest_path))
+        total_rows += sum(counts)
+    return {"run_id": run_id, "processed_splits": len(pending),
             "rows": total_rows}
-
-
-def _run_batch(spark: SparkSession, df: DataFrame, *, split_col: str,
-               process, output_path: str, manifest_path: str,
-               run_id: str, pending_ids: list) -> int:
-    """One checkpoint batch: process → commit partitions → append manifest."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    sub = df.filter(F.col(split_col).isin(pending_ids))
-    # input fingerprint per split: order-insensitive xor-ish hash of row hashes
-    t0 = time.time()
-    out = process(sub)
-    out.write.mode("overwrite").partitionBy(split_col).parquet(output_path)
-    wall_ms = int((time.time() - t0) * 1000)
-
-    committed = spark.read.parquet(output_path).filter(
-        F.col(split_col).isin(pending_ids))
-    counts = (committed.groupBy(F.col(split_col).alias("split_id"))
-              .agg(F.count(F.lit(1)).alias("row_count")))
-    # order-insensitive, overflow-free lineage fingerprint of the input split
-    fingerprints = (sub.groupBy(F.col(split_col).alias("split_id"))
-                    .agg(F.expr(f"bit_xor(xxhash64({', '.join(sub.columns)}))")
-                         .alias("input_fingerprint")))
-    manifest_rows = (counts.join(fingerprints, "split_id", "left")
-                     .withColumn("run_id", F.lit(run_id))
-                     .withColumn("status", F.lit("ok"))
-                     .withColumn("wall_ms", F.lit(wall_ms))
-                     .withColumn("schema_version", F.lit(MANIFEST_SCHEMA_VERSION))
-                     .withColumn("committed_at", F.current_timestamp()))
-    manifest_rows.write.mode("append").parquet(manifest_path)
-    return committed.count()

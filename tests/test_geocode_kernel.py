@@ -8,8 +8,9 @@ its own.  Points sit on vertices, on shared edges (the hole's too), inside,
 and outside the bbox; pages without a geo tag and with a null ``html`` ride
 along.  The cities tables cover the village centroids, coordinate twins,
 the three sparse tables whose rows take the full-array scan, one city in
-the bbox (``auto_ring``'s grid), the centroids plus a far-away city, and no
-city at all."""
+the bbox (``auto_ring``'s grid), the centroids plus a far-away city, two
+cities exactly equidistant from a meridian of vertices, and no city at
+all."""
 
 from __future__ import annotations
 
@@ -64,6 +65,18 @@ def _sparse(lat, lon) -> pd.DataFrame:
         "latitude": lat, "longitude": lon})
 
 
+def _mirror(lat: float = 23.5, lon: float = 121.0) -> pd.DataFrame:
+    """Two cities mirrored about the meridian ``lon``, which 14 polygon
+    vertices sit on, so those vertices are exactly as far from both; the
+    offset is the smallest whose degrees → radians rounding keeps the mirror
+    exact.  The higher geoname_id is listed first."""
+    r = np.radians
+    k = next(k for k in range(1, 64)
+             if r(lon + k / 64) - r(lon) == r(lon) - r(lon - k / 64))
+    return _sparse([lat, lat], [lon + k / 64, lon - k / 64]).assign(
+        geoname_id=[2, 1])
+
+
 CITIES = {
     "villages": VILLAGES,
     # every centroid three times over, ids above and below the original's
@@ -83,6 +96,8 @@ CITIES = {
     "villages_far": pd.concat([VILLAGES, VILLAGES.iloc[:1].assign(
         geoname_id=-1, latitude=-33.87, longitude=151.21)], ignore_index=True),
     "empty": VILLAGES.iloc[:0],
+    # distance ties between distinct coordinates: the lower geoname_id wins
+    "mirror": _mirror(),
 }
 
 

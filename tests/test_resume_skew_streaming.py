@@ -30,9 +30,8 @@ class TestManifest:
             manifest.checkpointed_run(spark, df, split_col="split",
                                       process=flaky, output_path=out,
                                       manifest_path=man, batch_size=2)
-        committed = {r.split_id for r in
-                     manifest.completed_splits(spark, man).collect()}
-        assert committed == {0, 1, 2, 3}  # first two batches survived
+        # first two batches survived
+        assert manifest.completed_splits(spark, man, "int") == {0, 1, 2, 3}
         r = manifest.checkpointed_run(spark, df, split_col="split",
                                       process=lambda s: s, output_path=out,
                                       manifest_path=man, batch_size=2)
@@ -71,12 +70,74 @@ class TestManifest:
             output_path=out, manifest_path=man)
         assert r3["processed_splits"] == 0
 
-        # manifest carries lineage + metrics per split
-        m = spark.read.parquet(man).toPandas()
-        assert set(m["split_id"]) == set(range(10))
-        assert (m["row_count"] == 100).all()
-        assert m["input_fingerprint"].notna().all()
+        # manifest carries lineage + metrics per split: the input split's
+        # order-insensitive row hash and the split's output row count
+        m = spark.read.parquet(man).toPandas().set_index("split_id")
+        assert sorted(m.index) == list(range(10))
+        fp = (df.groupBy("split").agg(F.expr("bit_xor(xxhash64(id, split, v))"))
+              .toPandas().set_index("split").iloc[:, 0])
+        n = final.groupBy("split").count().toPandas().set_index("split")["count"]
+        assert (m["input_fingerprint"] == fp[m.index]).all()
+        assert (m["row_count"] == n[m.index]).all()
         assert (m["schema_version"] == manifest.MANIFEST_SCHEMA_VERSION).all()
+
+    def test_split_without_output_rows_commits(self, spark, tmp_path):
+        """A split whose ``process`` output is empty commits with row_count
+        0 instead of running again on every resume."""
+        kw = dict(split_col="split", output_path=str(tmp_path / "out"),
+                  manifest_path=str(tmp_path / "manifest"),
+                  process=lambda sub: sub.filter(F.col("split") != 3))
+        df = (spark.range(0, 400)
+              .withColumn("split", (F.col("id") % 4).cast("int")))
+        r1 = manifest.checkpointed_run(spark, df, **kw)
+        assert (r1["processed_splits"], r1["rows"]) == (4, 300)
+        assert manifest.checkpointed_run(spark, df, **kw)["processed_splits"] == 0
+        m = spark.read.parquet(kw["manifest_path"]).toPandas()
+        assert dict(zip(m["split_id"], m["row_count"])) == {
+            0: 100, 1: 100, 2: 100, 3: 0}
+
+    def test_session_conf_untouched(self, spark, tmp_path):
+        """The dynamic partition overwrite is an option of the write, not a
+        session setting left behind for the caller's later writes."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        spark.conf.unset(key)
+        before = spark.conf.get(key)
+        df = spark.range(0, 8).withColumn("split", F.col("id") % 2)
+        manifest.checkpointed_run(spark, df, split_col="split",
+                                  process=lambda s: s,
+                                  output_path=str(tmp_path / "out"),
+                                  manifest_path=str(tmp_path / "manifest"))
+        assert spark.conf.get(key) == before
+
+    def test_unreadable_manifest_raises(self, spark, tmp_path):
+        """Only a missing manifest means "nothing committed": one that
+        exists but is not parquet raises before any split runs again."""
+        man = tmp_path / "manifest"
+        man.mkdir()
+        (man / "part-00000.parquet").write_text("not parquet")
+        calls = []
+        df = spark.range(0, 8).withColumn("split", F.col("id") % 2)
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            manifest.checkpointed_run(spark, df, split_col="split",
+                                      process=calls.append,
+                                      output_path=str(tmp_path / "out"),
+                                      manifest_path=str(man))
+        assert calls == [] and not (tmp_path / "out").exists()
+
+    def test_int_manifest_resumes_bigint_splits(self, spark, tmp_path):
+        """Manifests that stored a bigint split column's ids as int (the
+        type partition discovery gives small ids) still resume it, and the
+        new rows append next to the old ones."""
+        man = str(tmp_path / "manifest")
+        spark.range(0, 2).select(F.col("id").cast("int").alias("split_id"),
+                                 F.lit("ok").alias("status")
+                                 ).write.parquet(man)
+        df = spark.range(0, 40).withColumn("split", F.col("id") % 4)
+        r = manifest.checkpointed_run(spark, df, split_col="split",
+                                      process=lambda s: s, manifest_path=man,
+                                      output_path=str(tmp_path / "out"))
+        assert (r["processed_splits"], r["rows"]) == (2, 20)
+        assert manifest.completed_splits(spark, man, "bigint") == {0, 1, 2, 3}
 
     def test_rerun_is_idempotent(self, spark, tmp_path):
         out = str(tmp_path / "out")

@@ -231,13 +231,14 @@ class TestKnnJoin:
     def test_empty_places_table_keeps_every_query(self, spark):
         """Every query row comes back, with no place and no distance, when
         the places table is empty or the query has a NULL or NaN
-        coordinate; the ring-only join drops those rows."""
+        coordinate; the ring-only join drops those rows.  A place with a NaN
+        coordinate is never the nearest."""
         empty = pd.DataFrame({"place_id": pd.Series([], dtype="int64"),
                               "latitude": pd.Series([], dtype="float64"),
                               "longitude": pd.Series([], dtype="float64")})
-        places = pd.DataFrame({"place_id": [1, 2, 3],
-                               "latitude": [23.0, 23.5, 24.0],
-                               "longitude": [121.0, 121.0, 121.0]})
+        places = pd.DataFrame({"place_id": [1, 2, 3, 4],
+                               "latitude": [23.0, 23.5, 24.0, np.nan],
+                               "longitude": [121.0, 121.0, 121.0, 121.5]})
         q = spark.createDataFrame(
             [(0, 23.0, 121.0), (1, 24.0, 121.5), (2, None, 121.0),
              (3, 23.5, None), (4, float("nan"), 121.0)],
