@@ -10,8 +10,9 @@ builds Immich's reverse-geocode data) as a distributed, Spark-first engine:
   (the Immich runtime semantic, reference README.md:103)
 * the reference's tabular operator inventory (SURVEY.md §2) as DataFrame plans
 * web-scale extract stage: Arrow UDFs over ``html:binary`` pages
-* manifest-based resume; dense cells need no skew code, since the pages side
-  is round-robin repartitioned after the bbox filter and every join is broadcast
+* manifest-based resume; dense cells need no skew code, since each page
+  batch is geocoded in the task that read it, in one Arrow pass against a
+  broadcast reference (no repartition, no join)
 
 Everything is built on public PySpark APIs; geometry kernels are dependency-free
 numpy (no shapely/h3/pyproj in this environment).

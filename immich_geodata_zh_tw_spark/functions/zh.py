@@ -1,22 +1,23 @@
-"""Simplified↔Traditional Chinese conversion, JVM-side (SURVEY.md §2.8 F8).
+"""Simplified↔Traditional Chinese conversion (SURVEY.md §2.8 F8).
 
 The reference uses OpenCC (translate.py:17-19,72-97) — a dictionary-based,
 deterministic converter.  OpenCC is absent here, so the engine ships a
 two-stage conversion built only from public-knowledge character/word
-equivalences, applied entirely with JVM built-ins (``translate`` +
-chained literal ``replace``) so every expression is emitted verbatim into
-the DuckDB oracles:
+equivalences:
 
-1. **character stage** — a 661-pair table of *unambiguous* simplified →
-   traditional characters via ``F.translate`` (台→臺, 县→縣, …);
-2. **word stage** — a 209-entry word-fixup table applied AFTER the
-   character pass as ONE ``aggregate``/``list_reduce`` fold over flat
-   literal arrays (depth-O(1); a nested replace chain would exceed DuckDB's
-   128-deep binder limit and grow a Spark node per entry), correcting the
-   cases where the character default is wrong for a specific word (OpenCC
-   resolves these with its word dictionaries): 頭[發→髮], 皇[後→后], 乾/幹
-   splits of 干, 麵 splits of 面, 歷/曆 splits of 历, plus s2twp-style
-   Taiwan vocabulary (軟體/資訊/計程車…).
+1. **character stage** — a 979-pair table of *unambiguous* simplified →
+   traditional characters (台→臺, 县→縣, …);
+2. **word stage** — a word-fixup table applied AFTER the character pass,
+   in order, correcting the cases where the character default is wrong
+   for a specific word (OpenCC resolves these with its word
+   dictionaries): 頭[發→髮], 皇[後→后], 乾/幹 splits of 干, 麵 splits of
+   面, 歷/曆 splits of 历, plus s2twp-style Taiwan vocabulary
+   (軟體/資訊/計程車…).
+
+Each conversion has two executable forms: the Python functions
+``_py_s2t``/``_py_t2s``, which Spark runs as Arrow kernels
+(:func:`s2t_t2s_udf`, :func:`s2t_udf`), and the DuckDB SQL text
+:func:`s2t_sql`/:func:`t2s_sql`, which the oracles run.
 
 Genuinely context-dependent single characters with no dominant default
 (复→復/複, 钟→鐘/鍾, 范→範/姓范…) are deliberately unmapped — the
@@ -24,14 +25,14 @@ reference's own cached outputs for those are *tables*, which the engine
 joins instead (SURVEY.md §2.1 S7).
 
 Predicate semantics follow the reference exactly (translate.py:52-97):
-``is_chinese`` = whole string is Han characters or '-'; ``is_traditional`` =
-is_chinese ∧ s2t-fixpoint; ``is_simplified`` = is_chinese ∧ t2s-fixpoint.
+``is_chinese`` = whole string is Han characters or '-'; traditional =
+is_chinese ∧ s2t-fixpoint; simplified = is_chinese ∧ t2s-fixpoint (callers
+compose the last two from one :func:`s2t_t2s_udf` call).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: common simplified → traditional character pairs (1:1, same order; unique
 #: source chars, no identity mappings, no ambiguous targets)
@@ -342,10 +343,9 @@ _T2S_WORD_FIXUPS = [(d, s) for s, d in S2T_WORD_FIXUPS if s != d]
 
 
 def _py_s2t(text: str) -> str:
-    """Python mirror of the full s2t pipeline — the same chars/words/order
-    as the Column fold (validated by the module asserts below and the
-    Spark-vs-python check in tests), and the kernel behind
-    :func:`s2t_udf`."""
+    """Simplified → Traditional: the character stage, then every word
+    fixup in order — the function behind :func:`s2t_udf` and
+    :func:`s2t_t2s_udf` (:func:`s2t_sql` is its DuckDB text)."""
     out = text.translate(_S2T_TRANS)
     for s, d in S2T_WORD_FIXUPS:
         out = out.replace(s, d)
@@ -353,7 +353,8 @@ def _py_s2t(text: str) -> str:
 
 
 def _py_t2s(text: str) -> str:
-    """Python mirror of :func:`t2s` (reverse word fold, then chars)."""
+    """Traditional → Simplified: the reversed word fixups, then the
+    reverse character stage (:func:`t2s_sql` is its DuckDB text)."""
     out = text
     for d, s in _T2S_WORD_FIXUPS:
         out = out.replace(d, s)
@@ -428,92 +429,47 @@ assert not _UNREACHED, f"fixup sources preempted by earlier entries: {_UNREACHED
 
 
 # ---------------------------------------------------------------------------
-# The word stage is a FOLD over the fixup pairs — one aggregate /
-# list_reduce node regardless of dictionary size.  A chained replace(replace(
-# …)) nests one level per entry: DuckDB's binder caps expression depth at 128
-# (a 209-entry chain fails to bind) and Spark's expression tree would grow a
-# node per entry; the fold keeps depth O(1) and scales to thousands of
-# entries — the shape an OpenCC-sized phrase dictionary needs.
+# DuckDB SQL text of the conversions: the oracles' independent restatement of
+# _py_s2t/_py_t2s (tests/test_properties.py pins them equal).  The word stage
+# is a FOLD over the fixup pairs — one list_reduce node regardless of
+# dictionary size.  A chained replace(replace(…)) nests one level per entry:
+# DuckDB's binder caps expression depth at 128 (a 209-entry chain fails to
+# bind); the fold keeps depth O(1) and scales to thousands of entries — the
+# shape an OpenCC-sized phrase dictionary needs.
 #
 # Each PAIR rides the folded list itself as one 'src␟dst' string (split
 # inside the lambda): the earlier shape indexed two n-literal arrays from
 # inside the lambda, which DuckDB re-constructed on EVERY reduce step —
 # O(n²) literal evals per row, measured 176 s for 500 rows at n=510 vs
-# 0.5 s for this shape (identical output, asserted below via _py_s2t).
+# 0.5 s for this shape (identical output).
 # ---------------------------------------------------------------------------
 
-def _word_fold(init: str, pairs: list[tuple[str, str]], *, dialect: str) -> str:
-    """SQL text folding ``replace(acc, src_i, dst_i)`` over ``init``."""
-    if not pairs:
-        return init
-    elems = ", ".join(f"'{s}{_SEP}{d}'" for s, d in pairs)
-    if dialect == "spark":
-        return (f"aggregate(array({elems}), {init}, (acc, p) -> "
-                f"replace(acc, element_at(split(p, chr(31)), 1), "
-                f"element_at(split(p, chr(31)), 2)))")
-    if dialect == "duckdb":
-        return (f"list_reduce(list_concat([{init}], [{elems}]), "
-                f"(acc, p) -> replace(acc, string_split(p, chr(31))[1], "
-                f"string_split(p, chr(31))[2]))")
-    raise ValueError(dialect)
-
-
-def _s2t_text(col: str, *, dialect: str = "spark") -> str:
-    """SQL text of the full s2t conversion (char translate + word fold)."""
-    return _word_fold(f"translate({col}, '{SIMPLIFIED}', '{TRADITIONAL}')",
-                      S2T_WORD_FIXUPS, dialect=dialect)
-
-
-def _t2s_text(col: str, *, dialect: str = "spark") -> str:
-    """SQL text of t2s: reverse word fixups first, then reverse characters."""
-    rev = [(d, s) for s, d in S2T_WORD_FIXUPS if s != d]
-    folded = _word_fold(col, rev, dialect=dialect)
-    return f"translate({folded}, '{TRADITIONAL}', '{SIMPLIFIED}')"
-
-
-#: separator for packing the fixup tables into ONE string literal each —
-#: building the arrays as `F.array(*806 × F.lit)` cost ~1 s of py4j
-#: round-trips PER s2t()/t2s() call (measured; the release-pipeline plan
-#: build was ~6 s of driver time).  `split(lit, sep)` is 2 calls and
-#: Catalyst constant-folds it back into the same array literal.
+#: separator inside each folded 'src␟dst' pair literal
 _SEP = "\x1f"
 assert all(_SEP not in s and _SEP not in d for s, d in S2T_WORD_FIXUPS)
 
 
-def _packed_arrays(pairs: list[tuple[str, str]]) -> tuple[Column, Column]:
-    srcs = F.split(F.lit(_SEP.join(s for s, _ in pairs)), _SEP)
-    dsts = F.split(F.lit(_SEP.join(d for _, d in pairs)), _SEP)
-    return srcs, dsts
+def _word_fold(init: str, pairs: list[tuple[str, str]]) -> str:
+    """DuckDB text folding ``replace(acc, src_i, dst_i)`` over ``init``."""
+    if not pairs:
+        return init
+    elems = ", ".join(f"'{s}{_SEP}{d}'" for s, d in pairs)
+    return (f"list_reduce(list_concat([{init}], [{elems}]), "
+            f"(acc, p) -> replace(acc, string_split(p, chr(31))[1], "
+            f"string_split(p, chr(31))[2]))")
 
 
-def s2t(col: Column | str) -> Column:
-    """Simplified → Traditional (character stage + word-fold stage).
-
-    Built from public Column ops (``F.translate`` + an ``F.aggregate`` fold
-    of ``F.replace`` over the packed fixup arrays) — no SQL-text round-trip
-    through private APIs, so arbitrary Column expressions and Spark Connect
-    both work (ADVICE.md round-2 item 4), and the expression stays a single
-    fold node however large the word dictionary grows.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    srcs, dsts = _packed_arrays(S2T_WORD_FIXUPS)
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(len(S2T_WORD_FIXUPS))),
-        F.translate(c, SIMPLIFIED, TRADITIONAL),
-        lambda acc, i: F.replace(acc, F.element_at(srcs, i),
-                                 F.element_at(dsts, i)))
+def s2t_sql(col: str) -> str:
+    """DuckDB text of :func:`_py_s2t` (char translate, then the word fold)."""
+    return _word_fold(f"translate({col}, '{SIMPLIFIED}', '{TRADITIONAL}')",
+                      S2T_WORD_FIXUPS)
 
 
-def t2s(col: Column | str) -> Column:
-    """Traditional → Simplified (reverse word fold + reverse characters)."""
-    c = F.col(col) if isinstance(col, str) else col
-    rev = [(d, s) for s, d in S2T_WORD_FIXUPS if s != d]
-    srcs, dsts = _packed_arrays(rev)
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(len(rev))), c,
-        lambda acc, i: F.replace(acc, F.element_at(srcs, i),
-                                 F.element_at(dsts, i)))
-    return F.translate(folded, TRADITIONAL, SIMPLIFIED)
+def t2s_sql(col: str) -> str:
+    """DuckDB text of :func:`_py_t2s` (reverse word fold, then reverse
+    characters)."""
+    return (f"translate({_word_fold(col, _T2S_WORD_FIXUPS)}, "
+            f"'{TRADITIONAL}', '{SIMPLIFIED}')")
 
 
 #: Han-script membership, reference translate.py:52-69 (regex dialects:
@@ -530,42 +486,17 @@ def is_chinese(col: Column) -> Column:
     return col.rlike(IS_CHINESE_RE_SPARK)
 
 
-def is_traditional(col: Column) -> Column:
-    """Reference is_traditional_chinese (translate.py:86-97):
-    is_chinese ∧ s2t-fixpoint."""
-    return is_chinese(col) & (s2t(col) == col)
-
-
-def is_simplified(col: Column) -> Column:
-    """Reference is_simplified_chinese (translate.py:72-83):
-    is_chinese ∧ t2s-fixpoint."""
-    return is_chinese(col) & (t2s(col) == col)
-
-
-def s2t_sql(col: str, *, dialect: str = "duckdb") -> str:
-    """SQL text of ``s2t`` (identical semantics in Spark SQL and DuckDB)."""
-    return _s2t_text(col, dialect=dialect)
-
-
-def t2s_sql(col: str, *, dialect: str = "duckdb") -> str:
-    return _t2s_text(col, dialect=dialect)
-
-
 def s2t_t2s_udf():
     """Arrow-batched kernel: text → struct(s2t, t2s), both conversions in
-    one pass per row.
+    one pass per row — the form Spark runs.
 
-    Scale rationale (the minhash_bands_udf precedent): the Column fold is
-    a single expression node but evaluates INTERPRETED (higher-order
-    ``aggregate`` is CodegenFallback) at ~400 JVM ``replace`` calls per
-    row, and the 800-literal packed arrays repeat in every projection that
-    mentions a conversion — plan-size and per-row cost both grow with the
-    dictionary.  Python ``str.translate`` + the same replace chain is the
-    IDENTICAL computation (``_py_s2t``/``_py_t2s``, which the module
-    asserts and tests pin to the Column fold) at C speed, and one
-    ArrowEvalPython node carries the whole dictionary.  Use the Column
-    forms (:func:`s2t`/:func:`t2s`) as the executable spec and in
-    oracle-shared SQL; use this kernel on corpus-scale columns.
+    Python ``str.translate`` + the fixup replace chain (``_py_s2t`` /
+    ``_py_t2s``) runs at C speed, and one ArrowEvalPython node carries the
+    whole dictionary.  A JVM ``aggregate`` fold of the same replaces is
+    CodegenFallback (interpreted, ~400 ``replace`` calls per row) and
+    repeats its ~800 literals in every projection that mentions it.  The
+    DuckDB oracles run :func:`s2t_sql`/:func:`t2s_sql`, which
+    tests/test_properties.py pins equal to this kernel's functions.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -8,19 +8,19 @@ scan, and every merge round then touches only |distinct words| rows.  That
 is the load-bearing scale fact: at 100 TB the corpus scan happens ONCE;
 the iterative part runs over a table bounded by vocabulary size.
 
-Two training paths, same algorithm, property-tested equal:
+Two training paths, same algorithm, tested equal round by round;
+:func:`bpe_train_stats` picks one by the word table's size:
 
-* :func:`train_bpe` — the production path: bounded top-V word table
-  (exact salted top-K) collected to the driver (the textbook bounded
-  driver action, like `similarity.kmeans_centroids`' sample), then the
-  exact in-memory merge loop for thousands of merges.
-* :func:`bpe_rounds_plan` — the fully-distributed fixed-round form used by
-  the driver oracle: each round is ONE (pair → Σcount) shuffle over the
-  word table plus a 1-row TakeOrdered argmax collect (the kmeans
-  per-iteration bounded-collect precedent, `operators/kmeans.py`), and the
-  merge applies as ONE literal string replace.  Cross-engine exact: the
-  DuckDB oracle unrolls the identical recurrence into CTEs
-  (`plans/driver_queries.py` doc_vocab bpe branch).
+* :func:`bpe_rounds_inmem` — the bounded ``(word, count)`` table
+  collected to the driver once (the textbook bounded driver action),
+  then the exact in-memory merge loop.
+* :func:`bpe_rounds_plan` — the fully-distributed fixed-round form: each
+  round is ONE (pair → Σcount) shuffle over the word table plus a 1-row
+  TakeOrdered argmax collect (the kmeans per-iteration bounded-collect
+  precedent, `operators/kmeans.py`), and the merge applies as ONE literal
+  string replace.  Cross-engine exact: the DuckDB oracle unrolls the
+  identical recurrence into CTEs (`plans/driver_queries.py` doc_vocab bpe
+  branch).
 
 Merge application — the brace-wrapped replace trick
 ---------------------------------------------------
@@ -235,12 +235,6 @@ bw{r} AS (
     return ",".join(parts)
 
 
-def pair_symbols(pair: str) -> tuple[str, str]:
-    """``'{x}{y}' → ('x', 'y')`` (symbols never contain braces)."""
-    x, y = pair[1:-1].split("}{")
-    return x, y
-
-
 def bpe_rounds_inmem(word_counts: list[tuple[str, int]], n_merges: int
                      ) -> tuple[list[tuple[int, str, int]],
                                 list[tuple[list[str], int]]]:
@@ -285,20 +279,6 @@ def bpe_rounds_inmem(word_counts: list[tuple[str, int]], n_merges: int
     return merges, seqs
 
 
-def train_bpe(word_counts: list[tuple[str, int]], n_merges: int
-              ) -> list[tuple[str, str]]:
-    """Exact in-memory merge loop over a bounded (word, count) table —
-    the production path for thousands of merges after a
-    `sample.global_topk_ranked` top-V collect.  Same admission filter,
-    same tie-break (highest count, then lexicographically smallest
-    ``'{x}{y}'`` pattern), same greedy left-to-right apply as the
-    distributed form — `tests/test_bpe.py` pins the equality.  (Thin
-    wrapper over :func:`bpe_rounds_inmem` — ONE in-memory loop serves
-    both the production path and the size-gated fast path below.)"""
-    merges, _ = bpe_rounds_inmem(word_counts, n_merges)
-    return [pair_symbols(p) for _, p, _ in merges]
-
-
 def bpe_train_stats(df: DataFrame, *, n_merges: int,
                     text_col: str = "text",
                     max_word_chars: int = MAX_WORD_CHARS
@@ -336,58 +316,3 @@ def bpe_train_stats(df: DataFrame, *, n_merges: int,
         .cast("long").alias("t")).collect()[0]["t"])
     wt_fin.unpersist()
     return merges, size
-
-
-def apply_bpe_udf(merges: list[tuple[str, str]], text_col: str = "text"):
-    """Arrow-batched tokenizer: text → ``array<string>`` BPE tokens under a
-    learned merge list.  The merge table broadcasts via closure capture
-    (small); per-word segmentations are memoized per batch — Zipfian word
-    reuse makes the cache hit rate the dominant term.  Words outside the
-    trainable set (too long / brace-bearing) pass through as char symbols
-    (no learned pair can match them)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, StringType
-
-    ranks = {m: i for i, m in enumerate(merges)}
-
-    def encode_word(w: str, cache: dict) -> list[str]:
-        got = cache.get(w)
-        if got is not None:
-            return got
-        syms = list(w) + [EOW]
-        while len(syms) > 1:
-            best_r = min((ranks.get(p, len(ranks))
-                          for p in zip(syms, syms[1:])), default=len(ranks))
-            if best_r >= len(ranks):
-                break
-            # rewrite ALL non-overlapping occurrences left-to-right — the
-            # same apply step as training, so training words re-encode to
-            # their training segmentation
-            x, y = merges[best_r]
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
-                    out.append(x + y)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        cache[w] = syms
-        return syms
-
-    def tokenize(texts):
-        cache: dict = {}
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            for w in (t or "").split():
-                toks.extend(encode_word(w, cache))
-            out.append(toks)
-        return pd.Series(out)
-
-    # explicit annotations (module-local pandas alias is not resolvable by
-    # pyspark's hint inspection inside a closure — similarity.py precedent)
-    tokenize.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(tokenize, ArrayType(StringType()))
-    return udf(F.col(text_col))

@@ -11,9 +11,9 @@ Web-scale additions (training-data pipeline, driver mandate): exact dedup by
 content hash, MinHash-LSH near-dup candidate pairs, SimHash.  Most use
 built-in JVM functions (md5/xxhash64, higher-order array ops); the MinHash
 signature itself is an Arrow-batched pandas UDF (:func:`minhash_bands_udf`)
-because the SQL ``aggregate`` higher-order fold is CodegenFallback — the
-SQL form (:func:`minhash_agg_expr`) remains as the executable spec the
-DuckDB oracle and the parity tests run.
+because a SQL ``aggregate`` higher-order fold is CodegenFallback.  Its
+DuckDB text (:func:`minhash_md5s_sql` + :func:`minhash_bands_sql`) is what
+the oracles and the kernel-parity tests run.
 """
 
 from __future__ import annotations
@@ -56,68 +56,86 @@ def exact_dedup(df: DataFrame, content_col: str, *, id_col: str) -> DataFrame:
 ROWS_PER_BAND = 2
 
 
-def minhash_agg_expr(text_col: str, *, n_bands: int = 4, shingle: int = 5,
-                     stride: int = 2) -> str:
-    """All MinHash rows in ONE md5 pass, as one Spark-SQL aggregate.
+def minhash_md5s_sql(text_col: str) -> str:
+    """DuckDB text: the md5 hex of every 2nd 5-char shingle of ``text_col``
+    (1-based char positions), as a list — the shingles the kernels hash at
+    their default ``shingle=5, stride=2``.  Sampling every 2nd position
+    loses little at 5-char shingles."""
+    return (f"list_transform(generate_series(1, greatest(length({text_col}) "
+            f"- 4, 1), 2), i -> md5(substring({text_col}, i, 5)))")
 
-    Classic banding needs ``n_bands × rows_per_band`` independent hash
-    functions; round 1 evaluated that many md5 calls per shingle position —
-    the measured cost center of the whole bench.  A 128-bit md5 digest
-    already carries 8 independent 16-bit values, so instead each sampled
-    shingle is hashed ONCE and row ``k`` takes hex slice ``[4k, 4k+4)``;
-    a single ``aggregate`` folds the shingle array into the struct of 8
-    per-slice minima (one pass, no re-hash).  Round 3 correction: the fold
-    is CodegenFallback, i.e. it evaluates interpreted — this expression is
-    now the executable spec for the DuckDB oracle while the engine hot
-    path runs :func:`minhash_bands_udf`.  ``stride`` samples every n-th
-    position (negligible quality loss at 5-char shingles).
+
+def minhash_bands_sql(hashed: str) -> str:
+    """DuckDB text: ``(doc_id, band_idx, sig)`` rows, 4 bands, from
+    relation ``hashed``, whose ``mh`` is :func:`minhash_md5s_sql`.
+
+    Classic banding needs ``4 × ROWS_PER_BAND`` independent hash
+    functions.  A 128-bit md5 digest already carries 8 independent 16-bit
+    values, so each sampled shingle is hashed ONCE and row ``k`` is the
+    minimum over shingles of hex slice ``[4k, 4k+4)``; band ``b`` is the
+    concat of its ``ROWS_PER_BAND`` rows (more rows per band ⇒
+    exponentially fewer false-positive candidate pairs).
+    :func:`minhash_bands_udf` computes the same values.
     """
-    n_rows = n_bands * ROWS_PER_BAND
-    assert n_rows * 4 <= 32, "md5 hex has 32 chars = max 8 rows of 4"
-    arr = (f"transform(sequence(1, greatest(length({text_col}) - {shingle - 1}, 1), "
-           f"{stride}), i -> md5(substring({text_col}, i, {shingle})))")
-    init = "named_struct(" + ", ".join(f"'m{k}', 'g'" for k in range(n_rows)) + ")"
-    merge = ("(acc, h) -> named_struct(" + ", ".join(
-        f"'m{k}', least(acc.m{k}, substring(h, {1 + 4 * k}, 4))"
-        for k in range(n_rows)) + ")")
-    return f"aggregate({arr}, {init}, {merge})"
+    def sig(b: int) -> str:
+        return "concat(" + ", ".join(
+            f"list_min(list_transform(mh, h -> "
+            f"substring(h, {1 + 4 * (b * ROWS_PER_BAND + r)}, 4)))"
+            for r in range(ROWS_PER_BAND)) + ")"
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_idx, {sig(b)} AS sig FROM {hashed}"
+        for b in range(4))
 
 
-def minhash_signature(text_col: str, *, n_bands: int = 4,
-                      shingle: int = 5, stride: int = 2) -> list[Column]:
-    """MinHash band signatures over character shingles, pure SQL expressions.
+def _shingle_digests(texts, *, shingle: int, stride: int, n_rows: int):
+    """One md5 per DISTINCT shingle of the batch: ``(per_doc, hexes,
+    digests)`` — each doc's shingle ids (None for null text), the
+    concatenated md5 hex of the distinct shingles, and its first ``n_rows``
+    4-hex-char slices per shingle as a big-endian-uint32 view (numeric order
+    on ``>u4`` == byte-lexicographic == DuckDB's string ``list_min`` on
+    hex)."""
+    import hashlib
 
-    Band ``b`` = concat of its ``ROWS_PER_BAND`` slice-minima (more rows per
-    band ⇒ exponentially fewer false-positive candidate pairs).  This SQL
-    form is the executable *spec*: the DuckDB oracle runs its dialect twin
-    and the parity tests assert :func:`minhash_bands_udf` (the hot path —
-    the ``aggregate`` fold here is CodegenFallback, so it ran interpreted
-    and re-ran per self-join side) produces bit-identical values.
-    """
-    cols = [F.expr(minhash_agg_expr(text_col, n_bands=n_bands, shingle=shingle,
-                                    stride=stride)).alias("__mh")]
-    return cols
+    memo: dict[str, int] = {}
+    per_doc: list[np.ndarray | None] = []
+    for t in texts:
+        if t is None:
+            per_doc.append(None)
+            continue
+        # SQL: generate_series(1, greatest(length-shingle+1, 1), stride),
+        # substring(text, i, shingle) — 1-based, char (not byte) slices
+        last = max(len(t) - (shingle - 1), 1)
+        ids = []
+        for i in range(0, last, stride):
+            s = t[i:i + shingle]
+            j = memo.get(s)
+            if j is None:
+                j = len(memo)
+                memo[s] = j
+            ids.append(j)
+        per_doc.append(np.asarray(ids, dtype=np.int64))
+    hexes = "".join(hashlib.md5(s.encode("utf-8")).hexdigest() for s in memo)
+    digests = (np.frombuffer(hexes.encode("ascii"), dtype=">u4")
+               .reshape(len(memo), 8)[:, :n_rows]
+               if memo else np.empty((0, 8), dtype=">u4"))
+    return per_doc, hexes, digests
 
 
 def minhash_bands_udf(*, n_bands: int = 4, shingle: int = 5,
                       stride: int = 2):
-    """Arrow-batched pandas UDF: text → array of band signatures,
-    BIT-IDENTICAL to :func:`minhash_agg_expr` + :func:`_band_cols`.
+    """Arrow-batched pandas UDF: text → array of band signatures, equal to
+    DuckDB's :func:`minhash_bands_sql` rows (pinned per band value by
+    tests/test_operators_unit.py).
 
-    Scale rationale (same class as similarity.lsh_signature_udf): the SQL
+    Scale rationale (same class as similarity.lsh_signature_udf): a SQL
     ``aggregate``/``transform`` higher-order pass is CodegenFallback — the
     whole join stage around it drops to interpreted, boxed evaluation, and
     the signature work re-runs per self-join side (measured ~5.5 s of the
     7 s doc_minhash_pairs at sf0.1; a materialized-signature join is
     0.35 s).  This kernel hashes each *distinct* shingle in the Arrow batch
     once (near-dup corpora repeat most shingles), then takes the per-slice
-    minima as one numpy reduction over a big-endian-uint32 view of the hex
-    slices — numeric order on ``>u4`` == byte-lexicographic == the JVM
-    UTF8String / DuckDB collation on hex, so parity with the DuckDB oracle
-    (which runs the SQL text) holds exactly.
+    minima as one numpy reduction over the ``>u4`` slice view.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -125,31 +143,8 @@ def minhash_bands_udf(*, n_bands: int = 4, shingle: int = 5,
     assert n_rows * 4 <= 32
 
     def bands(texts: pd.Series) -> pd.Series:
-        memo: dict[str, int] = {}
-        per_doc: list[np.ndarray | None] = []
-        for t in texts:
-            if t is None:
-                per_doc.append(None)
-                continue
-            # SQL: sequence(1, greatest(length-shingle+1, 1), stride),
-            # substring(text, i, shingle) — 1-based, char (not byte) slices
-            last = max(len(t) - (shingle - 1), 1)
-            ids = []
-            for i in range(0, last, stride):
-                s = t[i:i + shingle]
-                j = memo.get(s)
-                if j is None:
-                    j = len(memo)
-                    memo[s] = j
-                ids.append(j)
-            per_doc.append(np.asarray(ids, dtype=np.int64))
-        hexes = "".join(hashlib.md5(s.encode("utf-8")).hexdigest()
-                        for s in memo)
-        # big-endian uint32 view of each 4-hex-char slice: numeric order ==
-        # byte-lexicographic == the SQL side's string `least`
-        digests = (np.frombuffer(hexes.encode("ascii"), dtype=">u4")
-                   .reshape(len(memo), 8)[:, :n_rows]
-                   if memo else np.empty((0, 8), dtype=">u4"))
+        per_doc, _, digests = _shingle_digests(
+            texts, shingle=shingle, stride=stride, n_rows=n_rows)
         out = []
         for ids in per_doc:
             if ids is None:
@@ -164,13 +159,6 @@ def minhash_bands_udf(*, n_bands: int = 4, shingle: int = 5,
 
     bands.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return pandas_udf(bands, "array<string>")
-
-
-def _band_cols(n_bands: int) -> list[Column]:
-    return [
-        F.expr(f"concat(__mh.m{2 * b}, __mh.m{2 * b + 1})").alias(f"band{b}")
-        for b in range(n_bands)
-    ]
 
 
 def _bands_frame(df: DataFrame, *, id_col: str, text_col: str,
@@ -200,8 +188,7 @@ def _bands_frame(df: DataFrame, *, id_col: str, text_col: str,
 
 def minhash_candidate_pairs(df: DataFrame, *, id_col: str, text_col: str,
                             n_bands: int = 4, shingle: int = 5,
-                            max_bucket_size: int | None = None,
-                            persist: bool = False) -> DataFrame:
+                            max_bucket_size: int | None = None) -> DataFrame:
     """LSH candidate near-dup pairs: docs sharing any band signature.
 
     Explode to (band_idx, sig) → self-join per bucket → distinct (a, b) with
@@ -221,21 +208,17 @@ def minhash_candidate_pairs(df: DataFrame, *, id_col: str, text_col: str,
       Default ``None`` preserves the exact candidate-pair semantics the
       DuckDB oracle checks.
 
-    ``persist`` spools the band frame so the self-join's two subtrees (two
-    ArrowEvalPython nodes over two scans — `hint_if_large` on one side
-    defeats ReusedExchange) share one kernel pass.  Default False: unlike
+    The band frame is not cached, although the self-join's two subtrees
+    (two ArrowEvalPython nodes over two scans — `hint_if_large` on one side
+    defeats ReusedExchange) each run the kernel: unlike
     :func:`ngram_jaccard_pairs` (where caching the pre-explode array frame
     measured 9.5 s → 6.5 s), caching the post-explode, post-repartition
     band rows measured r6 interleaved A/B at 1.1-1.4 s → 2.7-4.3 s — the
     InMemoryTableScan costs the join more than the second ~0.3 s kernel
-    pass saves.  The knob exists for corpora where the kernel dominates
-    (very long documents).
+    pass saves.
     """
     bands = _bands_frame(df, id_col=id_col, text_col=text_col,
                          n_bands=n_bands, shingle=shingle)
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-        bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
     if max_bucket_size is not None:
         w = Window.partitionBy("band_idx", "sig").orderBy(F.col(id_col).asc())
         bands = (bands.withColumn("__rn", F.row_number().over(w))
@@ -269,33 +252,24 @@ def _pairs_from_bands(bands: DataFrame, *, id_col: str,
             .distinct())
 
 
-def hashed_shingle_set_expr(text_col: str, *, shingle: int = 5,
-                            stride: int = 2, dialect: str = "spark") -> str:
-    """Distinct shingle set as 60-bit md5-prefix BIGINTs.
+def hashed_shingle_set_expr(text_col: str) -> str:
+    """DuckDB text: the distinct set of every 2nd 5-char shingle of
+    ``text_col`` as 60-bit md5-prefix BIGINTs (the shingles of
+    :func:`minhash_md5s_sql`).
 
     Set ops over *string* arrays box every element (UTF8String hash +
     equality per probe) — measured ~124 µs per candidate pair at 150
     shingles, and 32-way-parallel evaluation GC-thrashed.  Over BIGINT the
-    intersect/union hit the primitive specialization.  The 60-bit hash is
-    computed identically in both engines (Spark ``conv(hex,16,10)``,
-    DuckDB ``'0x…'::BIGINT``), so a collision — P ≈ 10⁻¹³ per doc pair —
-    merges the same two shingles on both sides and parity still holds
-    exactly; the Jaccard value differs from the true string-set value only
-    in that event.
+    intersect/union hit the primitive specialization.  A 60-bit collision
+    — P ≈ 10⁻¹³ per doc pair — merges the same two shingles here and in
+    :func:`minhash_shingles_udf`'s ``hs``, so parity still holds exactly;
+    the Jaccard value differs from the true string-set value only in that
+    event.
     """
-    if dialect == "spark":
-        elem = (f"cast(conv(substring(md5(substring({text_col}, i, {shingle})"
-                f"), 1, 15), 16, 10) AS BIGINT)")
-        return (f"array_distinct(transform(sequence(1, "
-                f"greatest(length({text_col}) - {shingle - 1}, 1), {stride}), "
-                f"i -> {elem}))")
-    if dialect == "duckdb":
-        elem = (f"('0x' || substring(md5(substring({text_col}, i, {shingle})"
-                f"), 1, 15))::BIGINT")
-        return (f"list_distinct(list_transform(generate_series(1, "
-                f"greatest(length({text_col}) - {shingle - 1}, 1), {stride}), "
-                f"i -> {elem}))")
-    raise ValueError(dialect)
+    elem = (f"('0x' || substring(md5(substring({text_col}, i, 5)), 1, 15))"
+            f"::BIGINT")
+    return (f"list_distinct(list_transform(generate_series(1, "
+            f"greatest(length({text_col}) - 4, 1), 2), i -> {elem}))")
 
 
 def minhash_shingles_udf(*, n_bands: int = 4, shingle: int = 5,
@@ -313,11 +287,8 @@ def minhash_shingles_udf(*, n_bands: int = 4, shingle: int = 5,
     :func:`hashed_shingle_set_expr` — distinct by hash VALUE (the SQL twin
     applies ``list_distinct`` AFTER hashing, so a within-doc 60-bit
     collision, P ≈ 10⁻¹³ per shingle pair, folds to one element on both
-    sides).  Parity with both SQL specs is locked by
-    ``tests/test_operators_unit.py``.
+    sides).  Parity with both is locked by ``tests/test_operators_unit.py``.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -325,29 +296,10 @@ def minhash_shingles_udf(*, n_bands: int = 4, shingle: int = 5,
     assert n_rows * 4 <= 32
 
     def fused(texts: pd.Series) -> pd.DataFrame:
-        memo: dict[str, int] = {}
-        per_doc: list[np.ndarray | None] = []
-        for t in texts:
-            if t is None:
-                per_doc.append(None)
-                continue
-            last = max(len(t) - (shingle - 1), 1)
-            ids = []
-            for i in range(0, last, stride):
-                s = t[i:i + shingle]
-                j = memo.get(s)
-                if j is None:
-                    j = len(memo)
-                    memo[s] = j
-                ids.append(j)
-            per_doc.append(np.asarray(ids, dtype=np.int64))
-        hexes = "".join(hashlib.md5(s.encode("utf-8")).hexdigest()
-                        for s in memo)
-        digests = (np.frombuffer(hexes.encode("ascii"), dtype=">u4")
-                   .reshape(len(memo), 8)[:, :n_rows]
-                   if memo else np.empty((0, 8), dtype=">u4"))
-        h60 = np.array([int(hexes[32 * j:32 * j + 15], 16)
-                        for j in range(len(memo))], dtype=np.int64)
+        per_doc, hexes, digests = _shingle_digests(
+            texts, shingle=shingle, stride=stride, n_rows=n_rows)
+        h60 = np.array([int(hexes[j:j + 15], 16)
+                        for j in range(0, len(hexes), 32)], dtype=np.int64)
         bcol: list[list[str] | None] = []
         hcol: list[list[int] | None] = []
         for ids in per_doc:
@@ -840,9 +792,9 @@ def with_simhash(df: DataFrame, text_col: str, *, shingle: int = 4,
     is a 1-char string test both Spark and DuckDB evaluate identically;
     round 1 used xxhash64, which DuckDB lacks, leaving SimHash without an
     oracle).  The md5 array is materialized once and ONE ``aggregate`` folds
-    all ``n_bits`` counters (same single-pass named_struct trick as
-    :func:`minhash_agg_expr`).  Near-dup grouping uses the fingerprint value
-    directly (identical fingerprints ⇒ near-dup bucket).
+    all ``n_bits`` counters into one named_struct in a single pass.
+    Near-dup grouping uses the fingerprint value directly (identical
+    fingerprints ⇒ near-dup bucket).
     """
     assert n_bits <= 32  # md5 hex has 32 chars
     shingles = (f"transform(sequence(1, greatest(length({text_col}) - {shingle - 1}, 1)), "

@@ -21,8 +21,9 @@ Log-probabilities are carried as **integer micro-nats**
 bigram LM oracle validated empirically, `operators/ngram_lm.py`), so every
 per-document sum is exact 64-bit integer arithmetic: no float-accumulation
 order, no HUGEINT, and the DuckDB oracle reproduces the weight bit-for-bit.
-The feature hash is the repo's standard 60-bit md5 prefix
-(`operators/dedup.py:hashed_shingle_set_expr`), identical in both engines.
+The feature hash is the repo's standard 60-bit md5 prefix (the one
+`operators/dedup.py:hashed_shingle_set_expr` emits), computed identically
+in both engines.
 
 Scale shape (the part that must survive 100 TB)
 -----------------------------------------------

@@ -154,37 +154,23 @@ def hyperplanes(n_planes: int, dim: int, *, seed: int = 1234) -> np.ndarray:
     return (u01(idx) - 0.5).reshape(n_planes, dim)
 
 
-def lsh_signature_sql(vec_col: str, planes: np.ndarray, *,
-                      dialect: str = "spark") -> str:
-    """Bucket id = sign bits of plane dot products, as SQL text.
+def lsh_signature_sql(vec_col: str, planes: np.ndarray) -> str:
+    """Bucket id = sign bits of plane dot products, as DuckDB SQL text.
 
-    Emitted identically (same term order, every literal CAST AS DOUBLE so
-    both engines multiply the same IEEE doubles) for Spark SQL and DuckDB —
-    this is what makes the LSH ANN query *exactly* oracle-checkable
-    (VERDICT.md round-2 item 1): the bucket ids, hence the candidate set,
-    hence the re-ranked output, are bit-identical across engines.
+    Every literal is CAST AS DOUBLE and the terms sum left to right, so
+    DuckDB multiplies and adds the same IEEE doubles, in the same order, as
+    :func:`lsh_signature_udf` — this is what makes the LSH ANN query
+    *exactly* oracle-checkable (VERDICT.md round-2 item 1): the bucket ids,
+    hence the candidate set, hence the re-ranked output, are bit-identical
+    across engines.
     """
     n_planes, dim = planes.shape
-    if dialect == "spark":
-        def elem(d):
-            return f"element_at({vec_col}, {d + 1})"
-
-        def shl(cond, p):
-            return f"shiftleft(CAST(({cond}) AS BIGINT), {p})"
-    elif dialect == "duckdb":
-        def elem(d):
-            return f"{vec_col}[{d + 1}]"
-
-        def shl(cond, p):
-            return f"(CAST(({cond}) AS BIGINT) << {p})"
-    else:
-        raise ValueError(dialect)
     bits = []
     for p in range(n_planes):
         terms = " + ".join(
-            f"CAST({elem(d)} AS DOUBLE) * CAST({planes[p, d]!r} AS DOUBLE)"
+            f"CAST({vec_col}[{d + 1}] AS DOUBLE) * CAST({planes[p, d]!r} AS DOUBLE)"
             for d in range(dim))
-        bits.append(shl(f"({terms}) > 0.0", p))
+        bits.append(f"(CAST((({terms}) > 0.0) AS BIGINT) << {p})")
     return "(" + " + ".join(bits) + ")"
 
 

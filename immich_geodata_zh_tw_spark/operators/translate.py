@@ -50,7 +50,7 @@ def translate_admin1(admin1: DataFrame, alternate: DataFrame, *,
 
     ``asciiname`` mirrors the final name (reference :409).  The reference's
     row-wise ``map_elements`` becomes one Arrow kernel call for both
-    conversions (s2t for the value, t2s for the is_simplified fixpoint
+    conversions (s2t for the value, t2s for the simplified fixpoint
     probe) + a broadcastable left join.
     """
     from ..functions import zh
@@ -71,9 +71,10 @@ def translate_admin1(admin1: DataFrame, alternate: DataFrame, *,
             .drop("__nr"))
 
 
-def extract_chinese_names_sql(col: str, *, dialect: str = "spark") -> str:
-    """F11 — the reference's comma-candidate scan (translate.py:230-263) as a
-    single JVM/DuckDB expression, no Python.
+def extract_chinese_names_sql(col: str) -> str:
+    """F11 — the reference's comma-candidate scan (translate.py:230-263) as
+    DuckDB SQL text: the oracles' restatement of
+    :func:`extract_chinese_names`.
 
     Reference loop semantics: scan comma-split ``alternatenames``; return the
     first *traditional* candidate; else s2t(first *simplified* candidate);
@@ -87,57 +88,32 @@ def extract_chinese_names_sql(col: str, *, dialect: str = "spark") -> str:
 
         coalesce(first(trad), s2t(first(simp)), first(contains_han))
     """
-    from ..functions.zh import (HAS_CHINESE_SQL, IS_CHINESE_SQL, _s2t_text,
-                                _t2s_text)
+    from ..functions.zh import HAS_CHINESE_SQL, IS_CHINESE_SQL, s2t_sql, t2s_sql
 
-    if dialect == "spark":
-        def first(pred: str) -> str:
-            return f"get(filter(split({col}, ','), w -> {pred}), 0)"
-        regex = "regexp_like"
-    elif dialect == "duckdb":
-        def first(pred: str) -> str:
-            return f"(list_filter(string_split({col}, ','), w -> {pred}))[1]"
-        regex = "regexp_matches"
-    else:
-        raise ValueError(dialect)
+    def first(pred: str) -> str:
+        return f"(list_filter(string_split({col}, ','), w -> {pred}))[1]"
 
-    is_cn = f"{regex}(w, '{IS_CHINESE_SQL[dialect]}')"
-    trad = f"({is_cn} AND {_s2t_text('w', dialect=dialect)} = w)"
-    simp = f"({is_cn} AND {_t2s_text('w', dialect=dialect)} = w)"
-    inc = f"{regex}(w, '{HAS_CHINESE_SQL[dialect]}')"
-    return (f"coalesce({first(trad)}, "
-            f"{_s2t_text(first(simp), dialect=dialect)}, "
-            f"{first(inc)})")
-
-
-def extract_chinese_names_expr(col: str) -> Column:
-    """Pure-Column form of :func:`extract_chinese_names_sql` (Spark dialect)
-    — the executable spec.  ``col`` is a column *name*.
-
-    Per-row cost: the s2t/t2s fixpoint probes inside the ``filter`` lambdas
-    evaluate the interpreted word fold (~2×332 ``replace`` calls) PER
-    candidate — fine as a spec, wrong on a corpus column (measured r6:
-    1.74 s for the 5 k-doc driver row vs 0.25 s hybrid).  Query paths use
-    :func:`extract_chinese_names`."""
-    return F.expr(extract_chinese_names_sql(col, dialect="spark"))
+    is_cn = f"regexp_matches(w, '{IS_CHINESE_SQL['duckdb']}')"
+    trad = f"({is_cn} AND {s2t_sql('w')} = w)"
+    simp = f"({is_cn} AND {t2s_sql('w')} = w)"
+    inc = f"regexp_matches(w, '{HAS_CHINESE_SQL['duckdb']}')"
+    return f"coalesce({first(trad)}, {s2t_sql(first(simp))}, {first(inc)})"
 
 
 def extract_chinese_names(col: str) -> Column:
-    """Corpus-scale form of the comma-candidate scan: JVM regex filters +
-    ONE Arrow kernel for the conversion fixpoint probes.
+    """The comma-candidate scan as Spark runs it: JVM regex filters + ONE
+    Arrow kernel for the conversion fixpoint probes.
 
-    Same value as :func:`extract_chinese_names_expr` by construction
+    Same value as the DuckDB text :func:`extract_chinese_names_sql`
     (pinned by tests/test_operators_unit.py):
 
-    * the Han-script predicates stay the EXACT same JVM regexes
-      (``IS_CHINESE_SQL`` / ``HAS_CHINESE_SQL``) — no Python re dialect in
-      the semantics;
+    * the Han-script predicates are JVM regexes (``IS_CHINESE_SQL`` /
+      ``HAS_CHINESE_SQL``; RE2's ``\\p{Han}`` on the DuckDB side) — no
+      Python re dialect in the semantics;
     * the kernel scans the is_chinese candidate array in order and probes
-      s2t/t2s fixpoints with ``_py_s2t``/``_py_t2s``, which the zh module
-      asserts bit-identical to the Column folds (the s2t_t2s_udf
-      precedent: C-speed ``str.translate``+``replace`` instead of the
-      CodegenFallback ``aggregate`` fold at ~700 interpreted JVM calls per
-      candidate);
+      s2t/t2s fixpoints with ``_py_s2t``/``_py_t2s`` (C-speed
+      ``str.translate``+``replace``; tests/test_properties.py pins them to
+      the DuckDB ``s2t_sql``/``t2s_sql``);
     * candidates repeat heavily in name corpora, so the kernel memoizes
       conversions per batch (bounded by the batch's distinct candidates —
       no cross-run state).

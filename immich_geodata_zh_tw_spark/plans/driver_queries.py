@@ -794,29 +794,11 @@ def q_doc_minhash_pairs(spark, sf_dir):
                                          n_bands=4, shingle=5)
 
 
-def _minhash_band_sql_duck(b: int, shingle: int = 5, stride: int = 2,
-                           rows_per_band: int = 2) -> str:
-    """Band signature from 16-bit digest slices (same family as
-    operators/dedup.minhash_agg_expr: one md5 per position, row k = hex
-    slice [4k, 4k+4))."""
-    mins = [
-        (f"list_min(list_transform(mh, h -> substring(h, {1 + 4 * (b * rows_per_band + r)}, 4)))")
-        for r in range(rows_per_band)
-    ]
-    return "concat(" + ", ".join(mins) + ")"
-
-
 SQL_DOC_MINHASH_PAIRS = f"""
 WITH hashed AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(text) - 4, 1), 2),
-                        i -> md5(substring(text, i, 5))) AS mh
+  SELECT doc_id, {dedup.minhash_md5s_sql('text')} AS mh
   FROM documents),
-bands AS (
-  {' UNION ALL '.join(
-      f"SELECT doc_id, {b} AS band_idx, {_minhash_band_sql_duck(b)} AS sig FROM hashed"
-      for b in range(4))}
-)
+bands AS ({dedup.minhash_bands_sql('hashed')})
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM bands l JOIN bands r ON l.band_idx = r.band_idx AND l.sig = r.sig
 WHERE l.doc_id < r.doc_id
@@ -1949,15 +1931,9 @@ def q_doc_dedup_clusters(spark, sf_dir):
 
 SQL_DOC_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE hashed AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(text) - 4, 1), 2),
-                        i -> md5(substring(text, i, 5))) AS mh
+  SELECT doc_id, {dedup.minhash_md5s_sql('text')} AS mh
   FROM documents),
-bands AS (
-  {' UNION ALL '.join(
-      f"SELECT doc_id, {b} AS band_idx, {_minhash_band_sql_duck(b)} AS sig FROM hashed"
-      for b in range(4))}
-),
+bands AS ({dedup.minhash_bands_sql('hashed')}),
 pairs AS (
   SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
   FROM bands l JOIN bands r ON l.band_idx = r.band_idx AND l.sig = r.sig
@@ -1982,16 +1958,10 @@ def q_doc_jaccard_pairs(spark, sf_dir):
 
 SQL_DOC_JACCARD_PAIRS = f"""
 WITH hashed AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(text) - 4, 1), 2),
-                        i -> md5(substring(text, i, 5))) AS mh,
-         {dedup.hashed_shingle_set_expr('text', dialect='duckdb')} AS sh
+  SELECT doc_id, {dedup.minhash_md5s_sql('text')} AS mh,
+         {dedup.hashed_shingle_set_expr('text')} AS sh
   FROM documents),
-bands AS (
-  {' UNION ALL '.join(
-      f"SELECT doc_id, {b} AS band_idx, {_minhash_band_sql_duck(b)} AS sig FROM hashed"
-      for b in range(4))}
-),
+bands AS ({dedup.minhash_bands_sql('hashed')}),
 pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM bands l JOIN bands r ON l.band_idx = r.band_idx AND l.sig = r.sig
@@ -2135,11 +2105,12 @@ _N_ZH = len(_ZH_WORDS)
 
 def q_zh_s2t(spark, sf_dir):
     """F8 OpenCC-style s2t conversion (translate.py:72-97): character stage
-    + word-level fixups, plus the reference-definition is_traditional /
-    is_simplified predicates (is_chinese ∧ conversion fixpoint).  Also
-    carries F7's Unicode Han-script predicates over han_detect's own
-    salted-name expression (the former standalone han_detect plan, folded here
-    to keep the registry inside the driver's 50-row window)."""
+    + word-level fixups, plus the reference-definition traditional /
+    simplified predicates (is_chinese ∧ conversion fixpoint), all from one
+    s2t_t2s_udf call.  Also carries F7's Unicode Han-script predicates over
+    han_detect's own salted-name expression (the former standalone
+    han_detect plan, folded here to keep the registry inside the driver's
+    50-row window)."""
     from ..functions import zh
 
     d = _t(spark, sf_dir, "documents")
@@ -2150,11 +2121,13 @@ def q_zh_s2t(spark, sf_dir):
         "CASE WHEN lang = 'zh' THEN concat('臺北市-', CAST(doc_id AS STRING)) "
         "WHEN lang = 'de' THEN concat('Berlin', CAST(doc_id AS STRING)) "
         "ELSE concat('台中', ' mixed ', CAST(doc_id AS STRING)) END")
+    name = F.col("name")
+    pair = zh.s2t_t2s_udf()(name)
     return salted.select(
         "doc_id",
-        zh.s2t(F.col("name")).alias("name_t"),
-        zh.is_traditional(F.col("name")).alias("is_trad"),
-        zh.is_simplified(F.col("name")).alias("is_simp"),
+        pair["s2t"].alias("name_t"),
+        (zh.is_chinese(name) & (pair["s2t"] == name)).alias("is_trad"),
+        (zh.is_chinese(name) & (pair["t2s"] == name)).alias("is_simp"),
         han.rlike("^[\\p{IsHan}\\-0-9]+$").alias("is_pure_han"),
         han.rlike("[\\p{IsHan}]").alias("contains_han"))
 
@@ -2248,7 +2221,8 @@ _ALT_ARRAY_DUCK = "[" + ", ".join(f"'{w}'" for w in _ALT_CASES) + "]"
 def q_extract_chinese_names(spark, sf_dir):
     """F11 — the reference's alternatenames comma-candidate scan
     (translate.py:230-263): first traditional, else s2t(first simplified),
-    else first Han-containing — as one JVM expression (no Python)."""
+    else first Han-containing — JVM regex filters + one Arrow fixpoint
+    kernel (operators/translate.extract_chinese_names)."""
     from ..operators.translate import extract_chinese_names
 
     d = _t_wide(spark, sf_dir, "documents")
@@ -2270,7 +2244,7 @@ WITH salted AS (
       AS alternatenames
   FROM documents)
 SELECT doc_id,
-  {extract_chinese_names_sql('alternatenames', dialect='duckdb')} AS picked
+  {extract_chinese_names_sql('alternatenames')} AS picked
 FROM salted
 """
 
@@ -2423,7 +2397,7 @@ def _sql_release_pipeline() -> str:
     alt_t = (f"CASE WHEN regexp_matches(alternate_name, '{is_cn}') "
              f"AND {s2t_sql('alternate_name')} = alternate_name "
              f"THEN alternate_name ELSE {s2t_sql('alternate_name')} END")
-    extracted = extract_chinese_names_sql("alternatenames", dialect="duckdb")
+    extracted = extract_chinese_names_sql("alternatenames")
     return f"""
 WITH mx AS (SELECT CAST(max(o_orderkey) AS BIGINT) AS base FROM orders),
 g AS (
@@ -2859,7 +2833,7 @@ def _sql_embed_ann_lsh() -> str:
     sigs = []
     for t in range(_LSH_N_TABLES):
         planes = similarity.hyperplanes(_LSH_N_PLANES, 64, seed=1234 + 7 * t)
-        sig = similarity.lsh_signature_sql("v", planes, dialect="duckdb")
+        sig = similarity.lsh_signature_sql("v", planes)
         sigs.append(f"SELECT vec_id, {t} AS tbl, {sig} AS sig FROM emb")
     bands = " UNION ALL ".join(sigs)
     cos = _COS_DUCK.format(a="va.v", b="vb.v")
@@ -2978,7 +2952,7 @@ def _sql_embed_neardup() -> str:
     sigs = []
     for t in range(_ND_N_TABLES):
         planes = similarity.hyperplanes(_ND_N_PLANES, 64, seed=1234 + 7 * t)
-        sig = similarity.lsh_signature_sql("v", planes, dialect="duckdb")
+        sig = similarity.lsh_signature_sql("v", planes)
         sigs.append(f"SELECT vec_id, {t} AS tbl, {sig} AS sig FROM corpus")
     bands = " UNION ALL ".join(sigs)
     cos = _COS_DUCK.format(a="va.v", b="vb.v")

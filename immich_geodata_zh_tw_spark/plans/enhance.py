@@ -257,10 +257,8 @@ def translate_cities500(cities: DataFrame, metadata: DataFrame,
     #   t2s-fixpoint           → s2t(meta)       (proper simplified)
     #   mixed (neither)        → meta            (reference passes verbatim)
     # Both conversions come from ONE Arrow kernel call per row
-    # (zh.s2t_t2s_udf — bit-identical to the Column folds, which remain the
-    # oracle spec): the interpreted 510-replace fold and its 1000+-literal
-    # packed arrays would otherwise repeat in every branch of this CASE and
-    # dominate per-row cost at corpus scale.
+    # (zh.s2t_t2s_udf; the DuckDB oracle runs zh.s2t_sql/t2s_sql), not once
+    # per branch of this CASE.
     meta_name = F.col("meta_name")
     pair = zh.s2t_t2s_udf()(meta_name)
     meta_translated = (F.when(~zh.is_chinese(meta_name), F.lit(None))

@@ -57,17 +57,15 @@ def get_spark(app_name: str = "immich-geodata-zh-tw-spark",
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 4)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    advisory_mb = os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION_MB",
-        str(_advisory_partition_mb(_parse_mem_mb(driver_mem), parallelism)))
+    advisory_mb = _advisory_partition_mb(_parse_mem_mb(driver_mem),
+                                         parallelism)
     # reduce-side width must be bounded by DATA/advisory, not by the core
     # count: with the default (initialPartitionNum = shuffle.partitions) a
     # 100 GB shuffle on 32 cores gets 3 GB partitions no matter what the
     # advisory says, and the sort+agg stage OOMs.  Starting wide costs
     # nothing at small scale — AQE coalesces back down to advisory-sized
     # partitions — and keeps per-task input flat as the corpus grows.
-    initial_partitions = os.environ.get(
-        "SPARK_GRAFT_INIT_PARTITIONS", str(max(32 * parallelism, 1024)))
+    initial_partitions = str(max(32 * parallelism, 1024))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{parallelism}]")

@@ -36,7 +36,16 @@ def completed_splits(spark: SparkSession, manifest_path: str,
                      split_type: str) -> set:
     """Split ids already committed (status='ok') as ``split_type`` (a DDL
     type: int ids read as bigint too); empty when nothing exists at
-    ``manifest_path`` yet, an error when what exists is not a manifest."""
+    ``manifest_path`` yet, an error when what exists is not a manifest.
+
+    A NULL ``split_id`` (committed by older code from an all-NULL split
+    column) is ignored: in ``NOT IN`` it would filter out every row.
+
+    A manifest that older code wrote for a bigint split column holds int
+    ``split_id`` files next to this code's bigint ones, so any other
+    reader must pass an explicit schema too: a plain
+    ``spark.read.parquet`` of it fails with
+    ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``."""
     try:
         m = spark.read.schema(f"split_id {split_type}, status string").parquet(
             manifest_path)
@@ -44,7 +53,8 @@ def completed_splits(spark: SparkSession, manifest_path: str,
         if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise
-    return {r.split_id for r in m.filter(F.col("status") == "ok").collect()}
+    ok = m.filter((F.col("status") == "ok") & F.col("split_id").isNotNull())
+    return {r.split_id for r in ok.collect()}
 
 
 def checkpointed_run(spark: SparkSession, df: DataFrame, *, split_col: str,
@@ -68,6 +78,9 @@ def checkpointed_run(spark: SparkSession, df: DataFrame, *, split_col: str,
     each partition's update once, so retried and speculative tasks do not
     double-count, and a split with no output rows commits with 0.
 
+    A NULL split id can be neither selected by ``isin`` nor committed, so
+    one in the pending rows raises ``ValueError`` before any write.
+
     ``batch_size`` = R3 checkpoint cadence (reference flushes every
     ``batch_size`` rows / 20 cache writes): pending splits run in batches of
     that many splits (default: one batch), the manifest appended after EACH,
@@ -78,8 +91,12 @@ def checkpointed_run(spark: SparkSession, df: DataFrame, *, split_col: str,
     split = F.col(split_col)
     split_type = df.schema[split_col].dataType.simpleString()
     done = completed_splits(spark, manifest_path, split_type)
-    fingerprint = dict(df.filter(~split.isin(*done)).groupBy(split)
+    fingerprint = dict(df.filter(split.isNull() | ~split.isin(*done))
+                       .groupBy(split)
                        .agg(F.bit_xor(F.xxhash64(*df.columns))).collect())
+    if None in fingerprint:
+        raise ValueError(f"checkpointed_run: split column {split_col!r} "
+                         "holds NULL split ids")
     pending = sorted(fingerprint)
     schema = (f"split_id {split_type}, row_count bigint, input_fingerprint "
               "bigint, run_id string, status string, wall_ms int, schema_version int")

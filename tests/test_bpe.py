@@ -1,17 +1,14 @@
-"""BPE merge training (operators/bpe.py): the three forms agree.
+"""BPE merge training (operators/bpe.py): the two forms agree.
 
 Pins the load-bearing equivalences:
 
-* distributed ``bpe_rounds_plan`` ≡ in-memory ``train_bpe`` (same merges,
-  same order) on the same corpus — the scale path and the production
-  driver-side path implement one algorithm;
-* ``apply_bpe_udf`` re-encodes every training word to exactly its
-  post-training segmentation (encode/train consistency, the property a
-  tokenizer must have for the merge table to mean anything);
+* distributed ``bpe_rounds_plan`` ≡ in-memory ``bpe_rounds_inmem`` (same
+  merges, same order) on the same corpus — the two paths
+  ``bpe_train_stats`` picks between implement one algorithm;
 * the brace-wrapped replace trick handles the self-overlapping-run case
   greedily-left-to-right (the documented reason for the wrapped encoding);
 * admission filtering (brace/``$``-bearing and over-long words) is
-  identical across all three forms.
+  identical across both forms.
 """
 
 from __future__ import annotations
@@ -29,8 +26,14 @@ CORPUS = [
 ]
 
 
+def _pair_symbols(pair):
+    """``'{x}{y}' → ('x', 'y')`` (symbols never contain braces)."""
+    x, y = pair[1:-1].split("}{")
+    return x, y
+
+
 def _wrapped_merges_to_pairs(merges):
-    return [bpe.pair_symbols(p) for _, p, _ in merges]
+    return [_pair_symbols(p) for _, p, _ in merges]
 
 
 @pytest.fixture(scope="module")
@@ -44,8 +47,8 @@ def test_rounds_plan_matches_inmemory_train(spark, corpus_df):
     for t in CORPUS:
         for w in t.split():
             counts[w] = counts.get(w, 0) + 1
-    expected = bpe.train_bpe(sorted(counts.items()), 8)
-    assert _wrapped_merges_to_pairs(merges) == expected
+    expected, _ = bpe.bpe_rounds_inmem(sorted(counts.items()), 8)
+    assert merges == expected
     # merged-pair counts are positive and non-increasing is NOT required
     # (a merge can create a new dominant pair), but every count must be
     # the true corpus count of its pair at its round — spot-check round 1:
@@ -108,14 +111,15 @@ def test_self_overlapping_run_is_greedy_left_to_right(spark):
     # 'xxxx' → pairs (1,2) and (3,4) merge in one pass: {xx}{xx}
     df = spark.createDataFrame([("xxxx xxxx xxxx",)], "text string")
     merges, wt = bpe.bpe_rounds_plan(df, n_merges=1)
-    assert bpe.pair_symbols(merges[0][1]) == ("x", "x")
+    assert _pair_symbols(merges[0][1]) == ("x", "x")
     # 3 words × 3 adjacent (x,x) pairs = 9 counted before merging
     assert merges[0][2] == 9
     rows = wt.collect()
     wt.unpersist()
     assert rows[0]["s"] == "{xx}{xx}{$}"
     # in-memory apply agrees on the run
-    assert bpe.train_bpe([("xxxx", 3)], 1) == [("x", "x")]
+    merges_m, _ = bpe.bpe_rounds_inmem([("xxxx", 3)], 1)
+    assert _wrapped_merges_to_pairs(merges_m) == [("x", "x")]
 
 
 def test_admission_filter_consistent(spark):
@@ -128,46 +132,9 @@ def test_admission_filter_consistent(spark):
     assert words == {"ok"}
     # only 'ok' is admissible → pairs (o,k) and (k,$) tie at 2; the
     # lexicographic pattern tie-break picks '{k}{$}' < '{o}{k}'
-    assert bpe.train_bpe(
-        [("{bad}", 5), ("pri$e", 5), (long_word, 5), ("ok", 2)], 1
-    ) == [("k", bpe.EOW)]
-
-
-def test_apply_udf_reencodes_training_words(spark, corpus_df):
-    merges, wt_fin = bpe.bpe_rounds_plan(corpus_df, n_merges=6)
-    pair_list = [bpe.pair_symbols(p) for _, p, _ in merges]
-    # training segmentation per word, from the final word table
-    import pyspark.sql.functions as F
-    train_seg = {
-        r["w"]: r["syms"] for r in wt_fin.select(
-            "w", F.expr(bpe.symbols_expr("s", dialect="spark"))
-            .alias("syms")).collect()}
-    wt_fin.unpersist()
-    toks = (corpus_df
-            .select(bpe.apply_bpe_udf(pair_list, "text").alias("toks"))
-            .collect())
-    # re-segment each encoded stream into words at EOW boundaries and
-    # compare with the training table's segmentation
-    for row, text in zip(toks, CORPUS):
-        stream, word_syms = list(row["toks"]), []
-        for s in stream:
-            word_syms.append(s)
-            if s.endswith(bpe.EOW):
-                w = "".join(word_syms).removesuffix(bpe.EOW)
-                assert word_syms == train_seg[w], (w, word_syms)
-                word_syms = []
-        assert word_syms == []
-        # lossless: concatenation minus EOW symbols reproduces the text
-        assert "".join(stream).replace(bpe.EOW, " ").strip() == \
-            " ".join(text.split())
-
-
-def test_apply_udf_unknown_word_passthrough(spark):
-    # a word never seen in training still round-trips as char symbols
-    toks = (spark.createDataFrame([("zzz",)], "text string")
-            .select(bpe.apply_bpe_udf([("a", "b")], "text").alias("t"))
-            .collect()[0]["t"])
-    assert toks == ["z", "z", "z", bpe.EOW]
+    merges_m, _ = bpe.bpe_rounds_inmem(
+        [("{bad}", 5), ("pri$e", 5), (long_word, 5), ("ok", 2)], 1)
+    assert _wrapped_merges_to_pairs(merges_m) == [("k", bpe.EOW)]
 
 
 def test_symbols_expr_roundtrip_dialect_parity(spark):

@@ -185,27 +185,35 @@ class TestDedup:
         assert all(4 not in k for k in scores)
 
     def test_fused_kernel_matches_sql_specs(self, spark):
-        """minhash_shingles_udf must equal BOTH split SQL specs: bands ==
-        minhash_bands_udf (itself bit-locked to the SQL spec above), hs ==
-        hashed_shingle_set_expr as a VALUE set (the SQL list keeps
-        first-occurrence order, the kernel sorts; set equality is the
-        contract the explode-join consumes)."""
+        """minhash_shingles_udf must equal BOTH split forms: bands ==
+        minhash_bands_udf (itself bit-locked to DuckDB's band rows in
+        TestMinhashKernel), hs == DuckDB running hashed_shingle_set_expr
+        as a VALUE set (the SQL list keeps first-occurrence order, the
+        kernel sorts; set equality is the contract the explode-join
+        consumes)."""
+        import duckdb
+
         from immich_geodata_zh_tw_spark.operators import dedup
 
-        d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        path = "/root/testdata/sf0.01/documents.parquet"
+        d = spark.read.parquet(path)
         fused = (d.select("doc_id", dedup.minhash_shingles_udf(
             n_bands=4, shingle=5)(F.col("text")).alias("f"))
             .select("doc_id", F.col("f.bands").alias("bands"),
                     F.sort_array("f.hs").alias("hs")))
-        split = (d.select(
-            "doc_id",
-            dedup.minhash_bands_udf(n_bands=4, shingle=5)(
-                F.col("text")).alias("bands"),
-            F.sort_array(F.array_distinct(F.expr(
-                dedup.hashed_shingle_set_expr("text", shingle=5))))
-            .alias("hs")))
-        assert fused.exceptAll(split).count() == 0
-        assert split.exceptAll(fused).count() == 0
+        split = d.select("doc_id", dedup.minhash_bands_udf(
+            n_bands=4, shingle=5)(F.col("text")).alias("bands"))
+        assert (fused.select("doc_id", "bands")
+                .exceptAll(split).count() == 0)
+        assert (split.exceptAll(fused.select("doc_id", "bands"))
+                .count() == 0)
+        got = {r.doc_id: r.hs and list(r.hs) for r in fused.collect()}
+        want = dict(duckdb.sql(f"""
+            SELECT doc_id,
+                   list_sort({dedup.hashed_shingle_set_expr('text')})
+            FROM read_parquet('{path}')""").fetchall())
+        assert len(got) == d.count()
+        assert got == want
         # null text → null struct fields
         edge = spark.createDataFrame(
             pd.DataFrame({"doc_id": [1], "text": [None]}))
@@ -477,28 +485,37 @@ class TestTranslate:
         assert got[2] == "丁"   # same lang → preferred wins
 
     def test_extract_chinese_names_kernel_matches_expr(self, spark):
-        """The r6 hybrid (JVM regex filters + memoized Arrow fixpoint
-        kernel) must be VALUE-IDENTICAL to the pure-Column spec expression
-        on every branch: trad-first, s2t(first simp), later-trad-beats-
-        earlier-simp, Han-contains fallback, dash-only candidate, word-fold
-        conversions (头发→頭髮), empty/NULL inputs."""
+        """The hybrid Spark runs (JVM regex filters + memoized Arrow
+        fixpoint kernel) must be VALUE-IDENTICAL to DuckDB running
+        extract_chinese_names_sql on every branch: trad-first, s2t(first
+        simp), later-trad-beats-earlier-simp, Han-contains fallback,
+        dash-only candidate, word-fold conversions (头发→頭髮), empty/NULL
+        inputs.  The regexes differ by engine (Java ``\\p{IsHan}``, RE2
+        ``\\p{Han}``), so a case that differs is a cross-engine fault."""
+        import duckdb
+
         from immich_geodata_zh_tw_spark.operators.translate import (
-            extract_chinese_names, extract_chinese_names_expr)
+            extract_chinese_names, extract_chinese_names_sql)
 
         cases = ["Taipei,台北,臺北", "Taipei,台北,Tai-pei", "foo,bar",
                  "hello世界town,xyz", "", "头发屋,發街", "皇后區,queens",
                  "新营,Xinying,新營", None, "-,x", "干,乾", "里長,里长",
                  "发财,台北,發財", "a b,台 北", ",,,", "裏",
                  "Seoul,서울,汉城", "x,y,松岛,松島"]
-        df = spark.createDataFrame(
-            pd.DataFrame({"alternatenames": cases}, dtype=object))
-        out = df.select(
-            extract_chinese_names("alternatenames").alias("fast"),
-            extract_chinese_names_expr("alternatenames").alias("spec"),
-        ).toPandas()
-        for i, (fast, spec) in enumerate(zip(out["fast"], out["spec"])):
-            assert (pd.isna(fast) and pd.isna(spec)) or fast == spec, (
-                cases[i], fast, spec)
+        pdf = pd.DataFrame({"i": range(len(cases)), "alternatenames": cases})
+        pdf["alternatenames"] = pdf["alternatenames"].astype(object)
+        fast = (spark.createDataFrame(pdf)
+                .select("i", extract_chinese_names("alternatenames")
+                        .alias("picked"))
+                .toPandas().set_index("i")["picked"])
+        con = duckdb.connect()
+        con.register("cases", pdf)
+        spec = dict(con.execute(
+            f"SELECT i, {extract_chinese_names_sql('alternatenames')} "
+            f"FROM cases").fetchall())
+        for i, case in enumerate(cases):
+            assert (pd.isna(fast[i]) and spec[i] is None) or fast[i] == spec[i], (
+                case, fast[i], spec[i])
 
     def test_null_token_normalization(self, spark):
         from immich_geodata_zh_tw_spark.operators.translate import (
@@ -619,25 +636,31 @@ class TestRepetition:
 
 class TestMinhashKernel:
     def test_arrow_bands_bit_identical_to_sql(self, spark):
-        """The Arrow signature kernel must equal the SQL spec PER BAND VALUE
-        — pair-set parity alone cannot catch signature drift (a byte-order
-        slip yields wrong-but-consistent sigs with the SAME pair set)."""
+        """The Arrow signature kernel must equal DuckDB's band rows (the
+        oracles' minhash_bands_sql text) PER BAND VALUE — pair-set parity
+        alone cannot catch signature drift (a byte-order slip yields
+        wrong-but-consistent sigs with the SAME pair set)."""
+        import duckdb
+
         from immich_geodata_zh_tw_spark.operators import dedup
 
-        d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        path = "/root/testdata/sf0.01/documents.parquet"
+        d = spark.read.parquet(path)
         udf_bands = (d.select("doc_id", dedup.minhash_bands_udf(
             n_bands=4, shingle=5)(F.col("text")).alias("b"))
-            .select("doc_id", F.posexplode("b").alias("band_idx", "sig")))
-        sql_bands = (d.select(F.col("doc_id"), *dedup.minhash_signature(
-            "text", n_bands=4, shingle=5))
-            .select("doc_id", *dedup._band_cols(4))
-            .select("doc_id", F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band_idx"),
-                         F.col(f"band{b}").alias("sig"))
-                for b in range(4)])).alias("bs"))
-            .select("doc_id", "bs.band_idx", "bs.sig"))
-        assert udf_bands.exceptAll(sql_bands).count() == 0
-        assert sql_bands.exceptAll(udf_bands).count() == 0
+            .select("doc_id", F.posexplode("b").alias("band_idx", "sig"))
+            .toPandas())
+        sql_bands = duckdb.sql(f"""
+            WITH hashed AS (
+              SELECT doc_id, {dedup.minhash_md5s_sql('text')} AS mh
+              FROM read_parquet('{path}'))
+            {dedup.minhash_bands_sql('hashed')}""").df()
+        key = ["doc_id", "band_idx", "sig"]
+        got, want = (f[key].astype({"band_idx": "int64"})
+                     .sort_values(key).reset_index(drop=True)
+                     for f in (udf_bands, sql_bands))
+        assert len(got) == 4 * d.count()
+        pd.testing.assert_frame_equal(got, want)
         # edge rows: null text, empty text, shorter than one shingle
         edge = spark.createDataFrame(
             pd.DataFrame({"doc_id": [1, 2, 3], "text": [None, "", "ab"]}))

@@ -1,6 +1,6 @@
 """Property-based invariants (hypothesis) for the pure kernels — the grid
 index, haversine, and the zh conversion.  These run driver-side (numpy /
-plain Python), no Spark session needed."""
+plain Python, DuckDB for the zh SQL text), no Spark session needed."""
 
 from __future__ import annotations
 
@@ -113,6 +113,45 @@ class TestZhProperties:
         # the same traditional form (no oscillating char/word pairs)
         once = zh._py_s2t(text)
         assert zh._py_s2t(zh._py_t2s(once)) == once
+
+
+#: words that fire the fixup stages both ways (sources for s2t, targets for
+#: t2s), so drawn strings hit word pairs, overlaps and chained fixups that
+#: single characters almost never spell
+_fixup_words = sorted({w for pair in zh.S2T_WORD_FIXUPS for w in pair})
+_zh_tokens = st.sampled_from(
+    list(zh.SIMPLIFIED + zh.TRADITIONAL + "x -") + _fixup_words)
+_zh_texts = st.lists(_zh_tokens, max_size=12).map("".join)
+
+
+class TestZhSqlParity:
+    """The Arrow kernels' functions (``_py_s2t``/``_py_t2s``) equal DuckDB
+    running the oracles' ``s2t_sql``/``t2s_sql`` text — the kernel's
+    reference, on inputs far beyond the oracle queries' 12 fixed words.
+    One DuckDB query per drawn batch."""
+
+    @staticmethod
+    def _check(texts: list[str]) -> None:
+        import duckdb
+        import pandas as pd
+
+        con = duckdb.connect()
+        con.register("t", pd.DataFrame({"i": range(len(texts)), "s": texts}))
+        got = con.execute(f"SELECT {zh.s2t_sql('s')}, {zh.t2s_sql('s')} "
+                          "FROM t ORDER BY i").fetchall()
+        want = [(zh._py_s2t(s), zh._py_t2s(s)) for s in texts]
+        bad = [(s, g, w) for s, g, w in zip(texts, got, want) if g != w]
+        assert not bad, bad[:5]
+
+    def test_every_char_and_fixup_word(self):
+        # each table entry alone: a dropped, reordered or mistyped entry on
+        # either side shows here even when no drawn string spells it
+        self._check(list(zh.SIMPLIFIED + zh.TRADITIONAL) + _fixup_words)
+
+    @given(st.lists(_zh_texts, min_size=1, max_size=40))
+    @settings(max_examples=60, deadline=None)
+    def test_py_conversions_equal_duckdb_sql(self, texts):
+        self._check(texts)
 
 
 class TestAmbiguousCharAudit:

@@ -124,6 +124,50 @@ class TestManifest:
                                       manifest_path=str(man))
         assert calls == [] and not (tmp_path / "out").exists()
 
+    @pytest.mark.parametrize(
+        "split", ["CAST(NULL AS BIGINT)",
+                  "CASE WHEN id < 4 THEN NULL ELSE id % 2 END"],
+        ids=["all_null", "null_next_to_ids"])
+    def test_null_split_ids_raise_before_any_write(self, spark, tmp_path,
+                                                    split):
+        """NULL split ids, alone or next to other ids, raise a ValueError
+        naming the split column; nothing is written, no manifest row is
+        committed.  A resume after earlier commits still sees them."""
+        man, out = tmp_path / "manifest", tmp_path / "out"
+        df = spark.range(0, 8).withColumn("split", F.expr(split))
+        calls = []
+        with pytest.raises(ValueError, match="'split'"):
+            manifest.checkpointed_run(spark, df, split_col="split",
+                                      process=calls.append,
+                                      output_path=str(out),
+                                      manifest_path=str(man))
+        assert calls == [] and not out.exists() and not man.exists()
+        committed = spark.range(10, 12).withColumn("split", F.col("id"))
+        manifest.checkpointed_run(spark, committed, split_col="split",
+                                  process=lambda s: s, output_path=str(out),
+                                  manifest_path=str(man))
+        with pytest.raises(ValueError, match="'split'"):
+            manifest.checkpointed_run(spark, df.unionByName(committed),
+                                      split_col="split", process=calls.append,
+                                      output_path=str(out),
+                                      manifest_path=str(man))
+        assert calls == []
+
+    def test_null_manifest_row_does_not_block_resume(self, spark, tmp_path):
+        """A manifest that already holds an ok row with a NULL split_id
+        (older code committed one for an all-NULL input) must not make
+        ``NOT IN`` drop every row: new splits still run."""
+        man = str(tmp_path / "manifest")
+        spark.createDataFrame([(None, "ok")],
+                              "split_id bigint, status string").write.parquet(man)
+        assert manifest.completed_splits(spark, man, "bigint") == set()
+        df = spark.range(0, 20).withColumn("split", F.col("id") % 2 + 1)
+        r = manifest.checkpointed_run(spark, df, split_col="split",
+                                      process=lambda s: s, manifest_path=man,
+                                      output_path=str(tmp_path / "out"))
+        assert (r["processed_splits"], r["rows"]) == (2, 20)
+        assert manifest.completed_splits(spark, man, "bigint") == {1, 2}
+
     def test_int_manifest_resumes_bigint_splits(self, spark, tmp_path):
         """Manifests that stored a bigint split column's ids as int (the
         type partition discovery gives small ids) still resume it, and the
