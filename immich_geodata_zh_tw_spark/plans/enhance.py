@@ -24,6 +24,12 @@ partitioned by country, plus the country's base as a literal.  The
 10^12-row ``ids.sequential_ids_scalable`` is the allocator of the declared
 ``seq_id_assign`` query only.
 
+Handler rows are one country's admin units (thousands of rows), so
+``enhance_countries`` puts their union on ONE partition with a narrow
+``coalesce(1)``: the admin1 distinct, both per-country windows and the
+counts ``groupBy`` then find their distribution met and plan no exchange.
+The global max id is one ``max`` over the union of the id columns.
+
 Everything is built from the operator library; no step shuffles more than the
 keys + payload it aggregates, and all dimension sides are broadcastable.
 """
@@ -55,10 +61,15 @@ def global_max_geoname_id_df(tables: list[DataFrame],
                              id_col: str = "geoname_id") -> DataFrame:
     """One-row ``(m)`` subplan: max id across all id-bearing tables
     (geoname_ids.py:36-75), un-collected so ``enhance_countries`` fuses it
-    with the per-country counts into ONE driver action."""
-    maxes = [t.agg(F.max(F.col(id_col).cast("long")).alias("m")) for t in tables]
-    merged = reduce(DataFrame.unionByName, maxes)
-    return merged.agg(F.max("m").alias("m"))
+    with the per-country counts into ONE driver action.
+
+    ONE ``max`` over the union of the id columns: one partial aggregate per
+    scan and one exchange, not an aggregate and an exchange per table.  A
+    NULL id is skipped; when every table is empty ``m`` is NULL.  A
+    non-numeric id fails the cast under ANSI mode (Spark's default, and the
+    reference's strict cast) and is skipped as NULL without it."""
+    ids = [t.select(F.col(id_col).cast("long").alias("m")) for t in tables]
+    return reduce(DataFrame.unionByName, ids).agg(F.max("m").alias("m"))
 
 
 def _country_ids(order: list[str], bases: dict[str, int]) -> Column:
@@ -82,9 +93,11 @@ def enhance_countries(geodata: dict[str, DataFrame],
     threads the reference's ``current_max_id`` (countries in sorted order,
     admin1 ids first, then city ids) into per-country base literals.
     """
+    # dimension-sized rows on ONE partition: the distinct, windows and
+    # counts below plan no Exchange (module docstring)
     g = union_all([geodata[cc].select(F.lit(cc).alias("country_code"),
                                       *GEODATA_COLS)
-                   for cc in sorted(geodata)])
+                   for cc in sorted(geodata)]).coalesce(1)
     counts = g.groupBy("country_code").agg(
         (F.count_distinct("admin_1")  # + 1 for a NULL admin_1, its own row
          + F.max(F.col("admin_1").isNull().cast("int"))).alias("n_a1"),

@@ -12,10 +12,16 @@ Stages:
 * ``enhance``  — per-country handler dispatch (operators/registry), then
   ``enhance.enhance_countries`` over all countries at once (one bounded
   driver action for the id bases; plain per-country window ids) and one
-  replace-by-key per artifact (enhance_data.py:10-68);
+  replace-by-key per artifact (enhance_data.py:10-68).  The handler rows
+  are dimension-sized, so they sit on ONE partition and the stage's
+  distinct, windows and counts plan no exchange;
 * ``translate`` — metadata/alternate/alternatenames translate chain
-  (translate.py:149-338);
-* ``pack``     — driver-side release layout + archives (core/pack_release.py).
+  (translate.py:149-338), read from the enhance stage's parquet files;
+* ``pack``     — driver-side release layout + archives
+  (core/pack_release.py): the ``translated`` and ``admin1`` parquet files
+  become the text artifacts through pyarrow on the driver
+  (``sources.pack.parquet_to_tsv``), not through Spark, in a full run and
+  a pack-only run alike.
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.registry import get_handler
 from ..sources.geonames import CITIES_SCHEMA
-from ..sources.pack import pack_release
+from ..sources.pack import pack_release, parquet_to_tsv
 from . import enhance
 
 
@@ -50,6 +56,10 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
 
     Returns the artifact paths.  Skipped stages reuse the artifacts already
     under ``workdir`` (idempotent stage outputs, R6/R1).
+
+    ``cities500.txt`` and ``admin1CodesASCII.txt`` list the rows in the
+    part-file order of their stage's parquet write, not in Spark's
+    size-sorted split order; GeoNames readers do not depend on row order.
     """
     work = Path(workdir)
     work.mkdir(parents=True, exist_ok=True)
@@ -88,10 +98,8 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
               "translated": translated_path}
     if "pack" not in skip:
         # single-file text artifacts for the release layout
-        for src, dst in ((translated_path, work / "cities500.txt"),
-                         (admin1_path, work / "admin1CodesASCII.txt")):
-            pdf = spark.read.parquet(src).toPandas()
-            pdf.to_csv(dst, sep="\t", header=False, index=False)
+        parquet_to_tsv(translated_path, work / "cities500.txt")
+        parquet_to_tsv(admin1_path, work / "admin1CodesASCII.txt")
         if admin2 is not None:  # real content, reference pack_release.py:40
             admin2.toPandas().to_csv(work / "admin2Codes.txt", sep="\t",
                                      header=False, index=False)

@@ -7,6 +7,7 @@ in local mode; on a real cluster AQE coalesces post-shuffle partitions).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 from pathlib import Path
@@ -133,6 +134,28 @@ def local_dim_df(spark: SparkSession, rows, schema: str):
         verifySchema=False)
 
 
+def _package_zip(pkg_dir: Path, out_dir: str | Path) -> Path:
+    """The package's ``.py`` files as a zip in ``out_dir``, named by a hash
+    of their relative paths and bytes: two checkouts (or two versions of
+    one) never share a zip, and an unchanged tree reuses its own."""
+    sources = sorted(pkg_dir.rglob("*.py"))
+    digest = hashlib.sha256()
+    for py in sources:
+        rel = py.relative_to(pkg_dir).as_posix().encode()
+        data = py.read_bytes()
+        digest.update(b"%d:%s%d:" % (len(rel), rel, len(data)))
+        digest.update(data)
+    zip_path = (Path(out_dir)
+                / f"{pkg_dir.name}-{digest.hexdigest()[:16]}-pyfiles.zip")
+    if not zip_path.exists():
+        tmp = zip_path.with_suffix(f".{os.getpid()}.tmp")
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for py in sources:
+                zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
+        tmp.replace(zip_path)  # atomic: concurrent sessions never see a partial zip
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the spark-submit --py-files story).
 
@@ -142,13 +165,4 @@ def _ship_package(spark: SparkSession) -> None:
     relying on an inherited PYTHONPATH.
     """
     pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(gettempdir()) / f"{pkg_dir.name}-pyfiles.zip"
-    sources = sorted(pkg_dir.rglob("*.py"))
-    newest_src = max(p.stat().st_mtime for p in sources)
-    if not zip_path.exists() or zip_path.stat().st_mtime <= newest_src:
-        tmp = zip_path.with_suffix(".zip.tmp")
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for py in sources:
-                zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
-        tmp.replace(zip_path)  # atomic: concurrent sessions never see a partial zip
-    spark.sparkContext.addPyFile(str(zip_path))
+    spark.sparkContext.addPyFile(str(_package_zip(pkg_dir, gettempdir())))

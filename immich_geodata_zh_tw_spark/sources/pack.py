@@ -5,6 +5,8 @@ artifacts + license files into a ``release/`` layout, stamp
 ``geodata-date.txt``, and archive as both zip and gztar — the exact artifact
 shape Immich's geodata updater consumes.  Old release artifacts in the
 output dir are removed first (reference remove_old_releases, :8-17).
+The text artifacts come from the stages' driver-local parquet files, read
+with pyarrow (:func:`parquet_to_tsv`), so reading them starts no Spark job.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ from __future__ import annotations
 import shutil
 from datetime import date
 from pathlib import Path
+
+import pyarrow.parquet as pq
 
 #: release-relative destination for each logical artifact
 #: (reference pack_release.py:33-43)
@@ -32,6 +36,14 @@ def remove_old_releases(output_dir: str | Path) -> None:
                 shutil.rmtree(item)
             else:
                 item.unlink()
+
+
+def parquet_to_tsv(src: str | Path, dst: str | Path) -> None:
+    """A stage's parquet directory as one headerless tab-separated file
+    (the GeoNames text layout), read on the driver with pyarrow: rows come
+    in part-file order."""
+    pq.read_table(src).to_pandas().to_csv(dst, sep="\t", header=False,
+                                          index=False)
 
 
 def pack_release(output_dir: str | Path, *, data_files: dict[str, str | Path],

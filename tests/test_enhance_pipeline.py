@@ -4,8 +4,12 @@ semantics) over FIXTURES.md-style small tables — reference-invariant tests
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import reduce
+
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from immich_geodata_zh_tw_spark.plans import enhance
@@ -93,6 +97,63 @@ class TestConvertAndMerge:
         # id 11 not re-added (anti-join); id 13 below pop floor;
         # (1,1): existing 10 (pop 500) loses to new 12 (pop 700)
         assert got == {"12": 700, "11": 600, "14": 800}
+
+
+def per_table_max(tables):
+    """The per-table form of the global max id: one aggregate per table."""
+    maxes = [t.agg(F.max(F.col("geoname_id").cast("long")).alias("m"))
+             for t in tables]
+    return reduce(DataFrame.unionByName, maxes).agg(F.max("m").alias("m"))
+
+
+@contextmanager
+def ansi(spark, on: bool):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(on).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def id_tables(spark, *columns):
+    return [spark.createDataFrame([(v,) for v in ids], "geoname_id string")
+            for ids in columns]
+
+
+class TestGlobalMaxId:
+    @pytest.mark.parametrize("columns, want", [
+        ((["10", "11"], []), 11),             # one table empty
+        ((["5", None], [None], ["3"]), 5),    # NULL ids are skipped
+        (([], []), None),                     # all empty: m is NULL
+        (([None], []), None),
+    ])
+    def test_union_form_equals_per_table_form(self, spark, columns, want):
+        tables = id_tables(spark, *columns)
+        got = enhance.global_max_geoname_id_df(tables).first().m
+        assert got == per_table_max(tables).first().m == want
+
+    def test_non_numeric_ids(self, spark):
+        """Without ANSI casts a non-numeric id is NULL and skipped; with
+        them (Spark's default) both forms fail the cast."""
+        columns = (["abc", "7"], ["12x", None])
+        with ansi(spark, False):
+            tables = id_tables(spark, *columns)
+            assert (enhance.global_max_geoname_id_df(tables).first().m
+                    == per_table_max(tables).first().m == 7)
+        with ansi(spark, True):
+            tables = id_tables(spark, *columns)
+            for form in (enhance.global_max_geoname_id_df, per_table_max):
+                with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+                    form(tables).first()
+
+    def test_ids_start_at_one_when_every_table_is_empty(self, spark,
+                                                        geodata):
+        admin1, _, city_bases = enhance.enhance_countries(
+            {"TW": geodata}, id_tables(spark, [], []))
+        assert sorted(int(r.geoname_id) for r in admin1.collect()) == [
+            1, 2, 3, 4]
+        assert city_bases == {"TW": 5}  # after the 4 admin1 ids
 
 
 class TestTranslate:

@@ -123,3 +123,34 @@ class TestLocalDimDf:
                          "cc string, n long")
         with pytest.raises(ValueError):  # wrong arity
             local_dim_df(spark, [("TW", 1, 3)], "cc string, n long")
+
+
+class TestPackageZip:
+    """The zip shipped to Python workers is named by its sources, so two
+    checkouts on one machine never ship each other's worker code."""
+
+    @staticmethod
+    def _tree(root, body: str):
+        pkg = root / "pkg"
+        (pkg / "sub").mkdir(parents=True)
+        (pkg / "__init__.py").write_text("")
+        (pkg / "sub" / "mod.py").write_text(body)
+        return pkg
+
+    def test_different_trees_get_different_zips(self, tmp_path):
+        import zipfile
+
+        from immich_geodata_zh_tw_spark.session import _package_zip
+
+        out = tmp_path / "out"
+        out.mkdir()
+        a = _package_zip(self._tree(tmp_path / "a", "X = 1\n"), out)
+        b = _package_zip(self._tree(tmp_path / "b", "X = 2\n"), out)
+        assert a != b and a.parent == b.parent == out
+        for zip_path, body in ((a, b"X = 1\n"), (b, b"X = 2\n")):
+            with zipfile.ZipFile(zip_path) as zf:
+                assert zf.read("pkg/sub/mod.py") == body
+        # an equal tree elsewhere reuses the zip, whatever the mtimes
+        assert _package_zip(self._tree(tmp_path / "c", "X = 1\n"), out) == a
+        assert sorted(p.name for p in out.iterdir()) == sorted(
+            [a.name, b.name])

@@ -112,6 +112,37 @@ class TestReleaseRunner:
                           skip={"enhance"}, release_date="2026-08-16")
         assert spark.read.parquet(res["translated"]).count() == 3
 
+    def test_pack_only_run_repacks_the_stage_files(self, spark, tmp_path,
+                                                   inputs):
+        """A pack-only run over an earlier run's artifacts gives the same
+        cities500.txt rows and the same admin1CodesASCII.txt bytes, and
+        both files hold the rows Spark reads from the stage files (in
+        part-file order, so only the multiset is compared)."""
+        txt = {n: tmp_path / n for n in ("cities500.txt",
+                                         "admin1CodesASCII.txt")}
+        res = run_release(spark, workdir=tmp_path, **inputs,
+                          release_date="2026-08-16")
+        before = {n: p.read_bytes() for n, p in txt.items()}
+        for p in txt.values():
+            p.unlink()
+        res = run_release(spark, workdir=tmp_path, **inputs,
+                          skip={"enhance", "translate"},
+                          release_date="2026-08-16")
+        after = {n: p.read_bytes() for n, p in txt.items()}
+        assert after["admin1CodesASCII.txt"] == before["admin1CodesASCII.txt"]
+        assert (sorted(after["cities500.txt"].splitlines())
+                == sorted(before["cities500.txt"].splitlines()))
+        for src, name in ((res["translated"], "cities500.txt"),
+                          (res["admin1"], "admin1CodesASCII.txt")):
+            want = spark.read.parquet(src).toPandas().to_csv(
+                sep="\t", header=False, index=False)
+            assert (sorted(want.encode().splitlines())
+                    == sorted(after[name].splitlines()))
+        import zipfile
+        with zipfile.ZipFile(res["zip"]) as zf:
+            assert (zf.read("geodata/admin1CodesASCII.txt")
+                    == after["admin1CodesASCII.txt"])
+
 
 @pytest.fixture()
 def three_countries(spark, inputs):
@@ -228,6 +259,31 @@ class TestReleaseThreading:
         new = {k: v for k, v in execution_ids().items() if k not in before}
         actions = [new[k].split(" at ")[0] for k in sorted(new)]
         assert actions == ["first", "parquet", "parquet"], new
+
+    def test_admin1_write_shuffles_nothing(self, spark, tmp_path,
+                                           three_countries):
+        """The handler rows sit on one partition: the admin1 write's
+        distinct and per-country windows find their distribution met, so
+        its executed plan has no shuffle exchange above the handler
+        union."""
+        store = spark._jsparkSession.sharedState().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def executions():
+            bus.waitUntilEmpty()
+            execs = store.executionsList()
+            return [execs.apply(i) for i in range(execs.size())]
+
+        before = {e.executionId() for e in executions()}
+        run_release(spark, workdir=tmp_path, **three_countries,
+                    skip={"translate", "pack"})
+        writes = sorted((e for e in executions()
+                         if e.executionId() not in before
+                         and e.description().startswith("parquet at ")),
+                        key=lambda e: e.executionId())
+        plan = writes[1].physicalPlanDescription()  # cities, then admin1
+        assert "Coalesce" in plan and "Window" in plan, plan
+        assert "Exchange" not in plan, plan
 
 
 class TestReleaseVersionWorkflow:
