@@ -67,6 +67,7 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
     admin1_path = str(work / "admin1_enhanced")
     translated_path = str(work / "cities500_translated")
 
+    enhanced_schema = None  # known when enhance runs here: no inference job
     if "enhance" not in skip:
         out_cities, out_admin1 = cities, admin1
         if country_inputs:
@@ -84,9 +85,13 @@ def run_release(spark: SparkSession, *, workdir: str | Path,
             out_cities = enhance.merge_extra_data(out_cities, extra_cities)
         out_cities.write.mode("overwrite").parquet(cities_path)
         out_admin1.write.mode("overwrite").parquet(admin1_path)
+        enhanced_schema = out_cities.schema
 
     if "translate" not in skip:
-        enhanced = spark.read.parquet(cities_path)
+        reader = spark.read
+        if enhanced_schema is not None:
+            reader = reader.schema(enhanced_schema)
+        enhanced = reader.parquet(cities_path)
         translated = enhance.translate_cities500(
             enhanced, metadata, chinese_names)
         # GeoNames field order: the joins inside the translate chain move

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -111,6 +113,49 @@ class TestReleaseRunner:
         res = run_release(spark, workdir=tmp_path, **inputs,
                           skip={"enhance"}, release_date="2026-08-16")
         assert spark.read.parquet(res["translated"]).count() == 3
+
+    def test_translate_read_runs_no_schema_job_after_enhance(
+            self, spark, tmp_path, inputs, monkeypatch):
+        """When enhance ran in the same call, translate reads the enhance
+        parquet with the schema it wrote: the read submits no Spark job.
+        A run that skips enhance infers the schema (one job) and
+        translates the same rows."""
+        from pyspark.sql.readwriter import DataFrameReader
+
+        sc = spark.sparkContext
+        read = DataFrameReader.parquet
+        group = {"id": None}
+
+        def grouped_read(self, *paths, **options):
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setLocalProperty("spark.jobGroup.id", group["id"])
+            try:
+                return read(self, *paths, **options)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", grouped_read)
+        group["id"] = full = f"read-full-{tmp_path.name}"
+        full_res = run_release(spark, workdir=tmp_path / "full", **inputs,
+                               release_date="2026-08-16")
+        run_release(spark, workdir=tmp_path / "skip", **inputs,
+                    skip={"translate", "pack"})
+        group["id"] = skipped = f"read-skip-{tmp_path.name}"
+        skip_res = run_release(spark, workdir=tmp_path / "skip", **inputs,
+                               skip={"enhance"}, release_date="2026-08-16")
+        monkeypatch.undo()
+        tracker = sc.statusTracker()
+        # job events reach the tracker asynchronously and in order: once
+        # the later run's inference job shows, the full run's jobs have too
+        deadline = time.monotonic() + 30
+        while (not tracker.getJobIdsForGroup(skipped)
+               and time.monotonic() < deadline):
+            time.sleep(0.1)
+        assert len(tracker.getJobIdsForGroup(skipped)) == 1
+        assert list(tracker.getJobIdsForGroup(full)) == []
+        rows = [sorted(spark.read.parquet(r["translated"]).collect())
+                for r in (full_res, skip_res)]
+        assert rows[0] == rows[1]
 
     def test_pack_only_run_repacks_the_stage_files(self, spark, tmp_path,
                                                    inputs):
