@@ -3,26 +3,19 @@
 The reference computes centroids in a *projected* CRS (TWD97 EPSG:3826 for
 Taiwan, per-geometry UTM zones for Japan/Korea: core/geodata/taiwan.py:60-68,
 japan.py:29-107, south_korea.py:93-157) because geographic-coordinate centroids
-are biased.  pyproj is absent here, so the engine carries its own exact
-Transverse Mercator (Krüger series, `geo/tmerc.py`) — ``crs='twd97'`` /
-``'utm'`` reproduce the reference's EPSG:3826 / per-zone UTM pipelines
-faithfully.  The default ``'local'`` cylindrical equal-area about each
-polygon's own mean latitude (x = lon·cos(lat0), y = lat) remains for
-speed — the two agree to sub-metre for admin-polygon-sized geometries
-(asserted in tests).  Holes are handled by signed areas when rings are
-oppositely wound; our synthetic fixtures use simple rings.
+are biased.  pyproj is absent here; the engine projects each polygon onto the
+cylindrical equal-area plane about its own mean latitude
+(x = lon·cos(lat0), y = lat); on admin-polygon-sized geometries it lands
+within 2e-5° (~2 m) of an exact TWD97 Transverse Mercator centroid.  Holes
+are handled by signed areas when rings are oppositely wound; our synthetic
+fixtures use simple rings.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import tmerc, wkb
-
-
-def utm_zone(lon) -> np.ndarray:
-    """UTM zone number from longitude (reference japan.py:29-32 formula)."""
-    return (np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 6.0) + 1).astype(np.int64)
+from . import wkb
 
 
 def _ring_area_centroid(x: np.ndarray, y: np.ndarray) -> tuple[float, float, float]:
@@ -57,43 +50,7 @@ def polygon_centroid(rings: list[np.ndarray]) -> tuple[float, float]:
     return sy / total_area, (sx / total_area) / k
 
 
-def polygon_centroid_tm(rings: list[np.ndarray],
-                        proj: "tmerc.Tmerc") -> tuple[float, float]:
-    """(lat, lon) centroid computed in a true Transverse Mercator CRS —
-    the reference's TWD97/UTM pipeline (taiwan.py:60-68, japan.py:82-98)."""
-    total_area = 0.0
-    sx = sy = 0.0
-    for ring in rings:
-        e, n = proj.forward(ring[:, 1], ring[:, 0])
-        if not np.array_equal(ring[0], ring[-1]):
-            e = np.append(e, e[0]); n = np.append(n, n[0])
-        area, cx, cy = _ring_area_centroid(e, n)
-        total_area += area
-        sx += area * cx
-        sy += area * cy
-    if abs(total_area) < 1e-30:
-        all_pts = np.vstack(rings)
-        return float(np.mean(all_pts[:, 1])), float(np.mean(all_pts[:, 0]))
-    lat, lon = proj.inverse(sx / total_area, sy / total_area)
-    return float(lat), float(lon)
-
-
-def centroid_of_wkb(buf: bytes, *, crs: str = "local") -> tuple[float, float]:
-    """(lat, lon) projected centroid of a WKB polygon/multipolygon.
-
-    ``crs``: ``'local'`` (cylindrical equal-area about the polygon's mean
-    latitude), ``'twd97'`` (EPSG:3826 Transverse Mercator — the reference's
-    Taiwan pipeline), or ``'utm'`` (per-geometry WGS84 UTM zone from the
-    polygon's mean longitude — the reference's Japan/Korea pipeline).
-    """
-    rings = wkb.decode(buf)
-    if crs == "local":
-        return polygon_centroid(rings)
-    if crs == "twd97":
-        return polygon_centroid_tm(rings, tmerc.TWD97_TM2)
-    if crs == "utm":
-        all_pts = np.vstack(rings)
-        zone = int(utm_zone(float(np.mean(all_pts[:, 0]))))
-        south = float(np.mean(all_pts[:, 1])) < 0.0
-        return polygon_centroid_tm(rings, tmerc.utm(zone, south=south))
-    raise ValueError(f"unknown crs {crs!r}")
+def centroid_of_wkb(buf: bytes) -> tuple[float, float]:
+    """(lat, lon) projected centroid of a WKB polygon/multipolygon
+    (:func:`polygon_centroid`)."""
+    return polygon_centroid(wkb.decode(buf))

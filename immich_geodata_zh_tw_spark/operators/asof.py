@@ -3,10 +3,11 @@
 The classic time-series join Spark's DataFrame API lacks (pandas
 ``merge_asof``, DuckDB ``ASOF JOIN``): for every left row, find the single
 right row with the greatest ``on`` value satisfying ``right.on <= left.on``
-(backward; ``>=`` forward) within the same ``by`` key.  The web-scale
-motivation here is recrawl resolution over Common-Crawl-style pages
-(``url``/``warc_ts``): "the newest snapshot of each url as of T", "the click
-context preceding each error", "the config active when each event fired".
+within the same ``by`` key (the backward direction; the declared queries use
+no other).  The web-scale motivation here is recrawl resolution over
+Common-Crawl-style pages (``url``/``warc_ts``): "the newest snapshot of each
+url as of T", "the click context preceding each error", "the config active
+when each event fired".
 
 Scale shape
 -----------
@@ -86,7 +87,7 @@ def _check(left: DataFrame, right: DataFrame, on: str, by: list[str],
 
 def asof_join(left: DataFrame, right: DataFrame, *, on: str,
               by: list[str] | str, value_cols: list[str] | str,
-              direction: str = "backward", tolerance: float | None = None,
+              tolerance: float | None = None,
               tie_col: str | None = None, prefix: str = "r_",
               bucket_span: float | None = None) -> DataFrame:
     """Left as-of join: every ``left`` row, plus ``prefix + on`` (the matched
@@ -98,23 +99,18 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
     on : ordering column (timestamp or numeric), present on both sides.
     by : equi-key column(s).
     value_cols : right columns carried onto matches.
-    direction : ``backward`` (newest ``r.on <= l.on``) or ``forward``
-        (oldest ``r.on >= l.on``); both inclusive.
-    tolerance : max allowed ``|l.on - r.on|`` — SECONDS when ``on`` is a
+    tolerance : max allowed ``l.on - r.on`` — SECONDS when ``on`` is a
         timestamp, else in ``on``'s own units; matches farther away are
         nulled out (pure projection — see module docstring step 4).
     tie_col : numeric column making the winner among right rows sharing
-        ``(by, on)`` deterministic — greatest value wins (backward; least,
-        forward).  Without it, equal-key-equal-``on`` right duplicates make
-        the match nondeterministic (documented, not checked: verifying
+        ``(by, on)`` deterministic — greatest value wins.  Without it,
+        equal-key-equal-``on`` right duplicates make the match
+        nondeterministic (documented, not checked: verifying
         uniqueness would cost a shuffle).
     bucket_span : span of the mega-key escape hatch, in the same units as
         ``tolerance``.  Bounds every window partition to one
         ``(by, bucket)`` slice; see module docstring.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, "
-                         f"got {direction!r}")
     by = [by] if isinstance(by, str) else list(by)
     value_cols = ([value_cols] if isinstance(value_cols, str)
                   else list(value_cols))
@@ -122,7 +118,6 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
 
     on_type = dict(left.dtypes)[on]
     is_ts = on_type.startswith("timestamp")
-    sign = 1.0 if direction == "backward" else -1.0
     # tolerance/bucket_span are SECONDS for timestamps; the arithmetic runs
     # in integer MICROSECONDS (exact — epoch-2024 magnitudes have ~0.5 µs
     # double ulp, enough to corrupt a sub-µs tolerance as float seconds)
@@ -149,7 +144,7 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
         return col.cast("double")
 
     def _num(col: Column) -> Column:
-        """``on`` as a double, for the BUCKET math only: floor(x·sign/span)
+        """``on`` as a double, for the BUCKET math only: floor(x/span)
         stays monotonic non-decreasing in scan order under double rounding
         (long→double never inverts order), so bucketing — whose only
         contract is a deterministic monotone partition of the timeline —
@@ -178,34 +173,27 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
                     .alias(_TIE))
     u = l.unionByName(r, allowMissingColumns=True)
 
-    # forward = backward over the mirrored timeline; ties flip with it so
-    # "greatest tie wins" stays "the candidate closest in scan order"
-    order_cols = [(F.col(on).asc() if sign > 0 else F.col(on).desc()),
-                  F.col(_SIDE).asc(),
-                  (F.col(_TIE).asc() if sign > 0 else F.col(_TIE).desc())]
+    # "greatest tie wins" = the candidate closest in scan order
+    order_cols = [F.col(on).asc(), F.col(_SIDE).asc(), F.col(_TIE).asc()]
 
     if bucket_span is None:
         w = (Window.partitionBy(*by).orderBy(*order_cols)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         matched = u.withColumn(_PAY, F.last(_PAY, ignorenulls=True).over(w))
     else:
-        bkt = F.floor(_num(F.col(on)) * F.lit(sign)
-                      / F.lit(float(bucket_span) * unit))
+        bkt = F.floor(_num(F.col(on)) / F.lit(float(bucket_span) * unit))
         ub = u.withColumn(_BKT, bkt)
         # pass 1: the SAME scan, but windowed inside one (by, bucket) slice
         wl = (Window.partitionBy(*by, _BKT).orderBy(*order_cols)
               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         local = ub.withColumn(_PAY, F.last(_PAY, ignorenulls=True).over(wl))
         # pass 2: one row per (by, bucket) — the payload at the bucket's
-        # scan-order-final row (max_by over the mirrored numeric key tuple)
-        # k1/k3 mirror via conditional negation, never a double multiply:
-        # a double k1 could collapse distinct >2^53 integer on-values and
-        # let k2/k3 pick the WRONG final row; negation stays in-type exact
-        onx = _exact_num(F.col(on))
-        fin_key = F.struct((onx if sign > 0 else -onx).alias("k1"),
+        # scan-order-final row (max_by over the exact-typed key tuple: a
+        # double k1 could collapse distinct >2^53 integer on-values and
+        # let k2/k3 pick the WRONG final row)
+        fin_key = F.struct(_exact_num(F.col(on)).alias("k1"),
                            F.col(_SIDE).alias("k2"),
-                           (F.col(_TIE) if sign > 0
-                            else -F.col(_TIE)).alias("k3"))
+                           F.col(_TIE).alias("k3"))
         per_bucket = (local.groupBy(*by, _BKT)
                       .agg(F.max_by(_PAY, fin_key).alias(_BFINAL)))
         wc = (Window.partitionBy(*by).orderBy(F.col(_BKT).asc())
@@ -228,9 +216,8 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
         # long, so the subtraction is exact at any magnitude (a double gap
         # mis-rounds near the threshold above 2^53); an integer gap against
         # a fractional tolerance compares via floor (gap ≤ 2.5 ≡ gap ≤ 2)
-        d1 = _exact_num(F.col(on))
-        d2 = _exact_num(F.col(_PAY + ".matched_on"))
-        gap = (d1 - d2) if direction == "backward" else (d2 - d1)
+        gap = (_exact_num(F.col(on))
+               - _exact_num(F.col(_PAY + ".matched_on")))
         tol_units = float(tolerance) * unit
         bound = (F.lit(min(int(tol_units // 1), 2 ** 63 - 1))
                  if is_ts or is_int else F.lit(tol_units))

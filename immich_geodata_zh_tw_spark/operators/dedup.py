@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def keep_best_per_key(df: DataFrame, keys: list[str],
@@ -318,14 +319,17 @@ def minhash_shingles_udf(*, n_bands: int = 4, shingle: int = 5,
 
 
 def ngram_jaccard_pairs(df: DataFrame, *, id_col: str, text_col: str,
-                        n_bands: int = 4, shingle: int = 5,
-                        threshold: float = 0.0,
-                        persist: bool = True) -> DataFrame:
+                        threshold: float, n_bands: int = 4,
+                        shingle: int = 5) -> DataFrame:
     """Exact n-gram Jaccard similarity over LSH candidate pairs.
 
     Two-stage near-dup pipeline: MinHash banding proposes candidates (cheap,
     bucketed — never all-pairs), then the exact shingle-set Jaccard scores
-    each candidate; ``threshold`` keeps pairs at/above it.
+    each candidate; ``threshold`` (> 0) keeps pairs at/above it.  A kept
+    pair therefore shares at least one shingle, which is what lets the join
+    path read |B| off its matched rows.  A zero threshold is refused: an
+    LSH collision sharing no shingle would be kept by the kernel path and
+    dropped by the join path.
 
     Scoring shape — NO per-pair array payload.  Designs measured at sf0.1
     (485 k candidate pairs × ~150-hash sets, 32 cores):
@@ -353,18 +357,15 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str, text_col: str,
     FOUR plan consumers (the bands self-join duplicates the bands branch,
     plus A-side and B-side), so unpersisted the kernel — and the corpus
     scan under it — runs 4× (plan audit r6: four ArrowEvalPython nodes
-    over four parquet scans).  ``persist=True`` (default) spools the fused
-    frame to MEMORY_AND_DISK so the kernel runs ONCE — measured r6
-    interleaved A/B at sf0.1/32 cores: persisted 6.45/6.58 s vs
-    unpersisted 9.48/8.46 s (min-of-2 each), and at cluster scale the
-    saved quantity is three full corpus scans + md5 passes (~1.3 KB/doc
-    cached, linear).  (The round-5 "+2 s locally" note predated the fused
-    kernel's fourth consumer and is superseded by this A/B.)  Lifecycle:
+    over four parquet scans).  The fused frame is therefore spooled to
+    MEMORY_AND_DISK so the kernel runs ONCE — measured r6 interleaved A/B
+    at sf0.1/32 cores: persisted 6.45/6.58 s vs unpersisted 9.48/8.46 s
+    (min-of-2 each), and at cluster scale the saved quantity is three full
+    corpus scans + md5 passes (~1.3 KB/doc cached, linear).  Lifecycle:
     the cached frame is internal, so the caller can't ``unpersist`` it —
     its memory side is LRU-evictable, but the disk side lives until
     ``spark.catalog.clearCache()``; a long-lived session issuing many
-    persisted calls should clear between them, or pass ``persist=False``
-    to keep the plan action-free/cache-free (e.g. under foreachBatch).
+    calls should clear between them.
 
     The explicit round-robin ``repartition`` on the pair stream is
     load-balancing, not correctness: AQE coalesces shuffle partitions by
@@ -375,15 +376,15 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str, text_col: str,
     with the distinct's own exchange, whose coalescing is the problem
     being fixed.
     """
+    if not threshold > 0.0:
+        raise ValueError(f"threshold must be > 0, got {threshold!r}")
     hashed = (df.select(F.col(id_col),
                         minhash_shingles_udf(n_bands=n_bands,
                                              shingle=shingle)(
                             F.col(text_col)).alias("__f"))
               .select(id_col, F.col("__f.bands").alias("__bands"),
-                      F.col("__f.hs").alias("__hs")))
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
+                      F.col("__f.hs").alias("__hs"))
+              .persist(StorageLevel.MEMORY_AND_DISK))
     # posexplode_OUTER + key repartition for the same load-bearing reasons
     # documented on _bands_frame: plain explode makes Catalyst infer a
     # size(arr) > 0 pre-Generate filter that re-evaluates the Python UDF a
@@ -468,44 +469,19 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str, text_col: str,
                        F.explode_outer("__hs").alias("h"))
          .filter(F.col("h").isNotNull())),
         df, fanout=8.0)
-    if threshold <= 0.0:
-        # an LSH band collision without any shared shingle is possible in
-        # principle; only a zero threshold keeps those jaccard-0 pairs, and
-        # only this branch pays the semi-join + join-back onto the pair
-        # stream plus a separate sizes pass (a jaccard-0 pair has no
-        # B-match rows to carry |B| on)
-        inter = (pairs.join(sh.select(F.col(id_col).alias("id_a"), "h"),
-                            "id_a")
-                 .join(sh.select(F.col(id_col).alias("id_b"), "h"),
-                       ["id_b", "h"], "left_semi")
-                 .groupBy("id_a", "id_b")
-                 .agg(F.count(F.lit(1)).alias("__i")))
-        inter = (pairs.join(inter, ["id_a", "id_b"], "left")
-                 .select("id_a", "id_b",
-                         F.coalesce("__i", F.lit(0)).alias("__i")))
-        sizes = hint_if_large(  # corpus-sized, same estimate hazard
-            hashed.filter(F.col("__hs").isNotNull())
-            .select(F.col(id_col), F.size("__hs").alias("n")),
-            df, fanout=1.0)
-        scored = (inter
-                  .join(sizes.select(F.col(id_col).alias("id_a"),
-                                     F.col("n").alias("__na")), "id_a")
-                  .join(sizes.select(F.col(id_col).alias("id_b"),
-                                     F.col("n").alias("__nb")), "id_b"))
-    else:
-        # every surviving pair shares ≥1 shingle, so the B-side left join
-        # match rows carry |B| and the sizes pass disappears; count(__nb)
-        # counts exactly the matched (intersecting) rows
-        scored = (pairs
-                  .join(sh.select(F.col(id_col).alias("id_a"),
-                                  F.col("__n").alias("__na"), "h"), "id_a")
-                  .join(sh.select(F.col(id_col).alias("id_b"),
-                                  F.col("__n").alias("__nb"), "h"),
-                        ["id_b", "h"], "left")
-                  .groupBy("id_a", "id_b")
-                  .agg(F.first("__na").alias("__na"),
-                       F.count("__nb").alias("__i"),
-                       F.max("__nb").alias("__nb")))
+    # threshold > 0, so every kept pair shares ≥1 shingle: the B-side left
+    # join's match rows carry |B| and no sizes pass is needed; count(__nb)
+    # counts exactly the matched (intersecting) rows
+    scored = (pairs
+              .join(sh.select(F.col(id_col).alias("id_a"),
+                              F.col("__n").alias("__na"), "h"), "id_a")
+              .join(sh.select(F.col(id_col).alias("id_b"),
+                              F.col("__n").alias("__nb"), "h"),
+                    ["id_b", "h"], "left")
+              .groupBy("id_a", "id_b")
+              .agg(F.first("__na").alias("__na"),
+                   F.count("__nb").alias("__i"),
+                   F.max("__nb").alias("__nb")))
     return (scored.withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard"))
@@ -563,7 +539,7 @@ def span_dedup(df: DataFrame, *, id_col: str, text_col: str,
 
 
 def substr_dedup(df: DataFrame, *, id_col: str, text_col: str,
-                 gram_words: int = 50, persist: bool = False) -> DataFrame:
+                 gram_words: int = 50) -> DataFrame:
     """ExactSubstr-style repeated-substring removal (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" §3.2:
     remove every substring of ≥ 50 tokens that appears more than once in
@@ -599,15 +575,12 @@ def substr_dedup(df: DataFrame, *, id_col: str, text_col: str,
     (map-side combined), not into any sort.
 
     The hashed occurrence frame feeds TWO consumers (the dup-count
-    aggregate and the probe side of the semi join), so unpersisted the
-    gram explode runs twice — the sliding string-window assembly is the
-    operator's dominant cost (measured at 1 M × 40-word docs / 32 cores:
-    ~7 s per 29 M-gram pass, whole operator ~19 s warm).  ``persist=True``
-    spools the 28-byte-row occurrence frame to MEMORY_AND_DISK so the
-    explode runs ONCE — the right call on a cluster, where the re-scan
-    also re-pays corpus I/O; the jaccard/minhash lifecycle caveat applies
-    (the cached frame is internal — release with
-    ``spark.catalog.clearCache()``).  A skew note on the rejected
+    aggregate and the probe side of the semi join), so the gram explode
+    runs twice — the sliding string-window assembly is the operator's
+    dominant cost (measured at 1 M × 40-word docs / 32 cores: ~7 s per
+    29 M-gram pass, whole operator ~19 s warm).  The frame stays
+    unpersisted so the plan is action-free and leaves nothing cached.
+    A skew note on the rejected
     single-pass forms: a count window over (h1, h2) or a
     collect_list-per-gram aggregate would buffer a zipfian mega-gram's
     every occurrence in ONE task; two-pass count + semi-join is
@@ -625,9 +598,6 @@ def substr_dedup(df: DataFrame, *, id_col: str, text_col: str,
            .select(F.col(id_col), (F.col("pos0") + 1).alias("pos"),
                    F.xxhash64("gram").alias("__h1"),
                    F.xxhash64("gram", F.lit(1)).alias("__h2")))
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-        occ = occ.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (occ.groupBy("__h1", "__h2").agg(F.count(F.lit(1)).alias("c"))
            .filter(F.col("c") > 1).select("__h1", "__h2"))
     marked = occ.join(dup, ["__h1", "__h2"], "left_semi").select(id_col,

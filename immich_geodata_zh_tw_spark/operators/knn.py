@@ -44,6 +44,15 @@ _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 #: at the cost of routing a negligible extra fraction to the full scan.
 _GUARD_SAFETY = 0.999
 
+#: :func:`auto_ring`'s search space and guard sizing (see its docstring):
+#: the guard is ``spacing × _RING_MARGIN``, ``k`` stays ≤ ``_RING_MAX_K``,
+#: res runs ``_RING_RES_LO``..``_RING_RES_HI``, and the places' ring
+#: explosion stays ≤ ``_RING_MAX_EXPLODE_ROWS`` rows
+_RING_MARGIN = 2.5
+_RING_MAX_K = 4
+_RING_RES_LO, _RING_RES_HI = 4, 16
+_RING_MAX_EXPLODE_ROWS = 4_000_000
+
 
 def _kring_rows(lat, lon, *, res: int, k: int) -> tuple[np.ndarray, np.ndarray]:
     """(row, cell) per (place, covering cell): ``row`` indexes the places
@@ -107,6 +116,8 @@ def _pair_km(lat_a, lon_a, cos_a, lat_b, lon_b, cos_b):
 #: degenerates (the ring spans tens of degrees of latitude) and the scan
 #: budget would send the residue to the brute scan anyway
 _SPACING_RES_LO = 4
+#: the spacing search's brute-scan batch cap (query rows per batch)
+_SPACING_CHUNK = 2048
 
 
 def _ring_min_km(q, lo, cnt, order, lat, lon, coslat) -> np.ndarray:
@@ -138,8 +149,7 @@ def _brute_nn_km(q, lat, lon, coslat) -> np.ndarray:
 
 
 def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
-                      lon_col: str = "longitude",
-                      chunk: int = 2048) -> float:
+                      lon_col: str = "longitude") -> float:
     """Max over DISTINCT place points of the distance to the nearest other
     distinct point (km).
 
@@ -160,12 +170,12 @@ def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
     level coarser; those still unsettled at :data:`_SPACING_RES_LO`, or at
     a level whose ring scan would cost as much as a brute scan of them
     (dense clusters near a pole), take the chunked O(|rest|·n) scan (at
-    most ``chunk`` query rows per batch).  Only the max is returned, so an
-    unsettled point whose ring minimum is already ≤ the largest settled
-    spacing is dropped: it cannot raise the max.  Every pair distance is
-    the same haversine expression as the brute scan, so the result is
-    identical to it (pinned by tests/test_spacing.py against the O(n²)
-    reference).
+    most :data:`_SPACING_CHUNK` query rows per batch).  Only the max is
+    returned, so an unsettled point whose ring minimum is already ≤ the
+    largest settled spacing is dropped: it cannot raise the max.  Every
+    pair distance is the same haversine expression as the brute scan, so
+    the result is identical to it (pinned by tests/test_spacing.py against
+    the O(n²) reference).
     Measured on a 4-core host: 0.02 s vs 3.5 s for the brute scan at the
     flagship benchmark's 8,000 villages; 0.1 s vs 26 s at 20 k uniform
     global points; 1.1 s at 200 k.
@@ -219,13 +229,13 @@ def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
         keep = ~ok & (ub > worst)
         todo, ub = todo[keep], ub[keep]
     # brute scan of the rest, largest upper bound first, in batches that
-    # double up to ``chunk`` rows: the first small batches usually lift
+    # double up to _SPACING_CHUNK rows: the first small batches usually lift
     # ``worst`` past every remaining bound
     rank = np.argsort(-ub, kind="stable")
     todo, ub = todo[rank], ub[rank]
     i0, batch = 0, 64
     while i0 < todo.size and ub[i0] > worst:  # sorted: later ones can't either
-        i1 = i0 + min(batch, chunk)
+        i1 = i0 + min(batch, _SPACING_CHUNK)
         worst = max(worst, float(
             _brute_nn_km(todo[i0:i1], lat, lon, coslat).max()))
         i0, batch = i1, 2 * batch
@@ -233,9 +243,7 @@ def max_nn_spacing_km(places_pdf, *, lat_col: str = "latitude",
 
 
 def auto_ring(places_pdf, *, lat_col: str = "latitude",
-              lon_col: str = "longitude", margin: float = 2.5,
-              max_k: int = 4, res_lo: int = 4, res_hi: int = 16,
-              max_explode_rows: int = 4_000_000) -> tuple[int, int]:
+              lon_col: str = "longitude") -> tuple[int, int]:
     """Pick (res, k) minimizing expected per-query candidate work.
 
     The per-row cost of the ring pick is ~|ring places| haversines, and
@@ -243,7 +251,7 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
     this choice — the guard routes unsettled rows to the full scan — but
     the settled fraction does: the guard must exceed the worst-case
     query→nearest-place distance.  That covering radius is proxied by
-    ``max_nn_spacing_km × margin``; margin defaults to 2.5 because VOIDS in
+    ``max_nn_spacing_km × _RING_MARGIN``; the margin is 2.5 because VOIDS in
     a non-tiling place set are bigger than the inter-place spacing
     (measured on the 1 k-place synthetic fixture: voids ≈ 2.3× spacing —
     with margin 1.3 most rows failed the guard and paid ring+brute BOTH,
@@ -259,8 +267,8 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
     The spacing comes from the driver-side grid-bucketed search of
     :func:`max_nn_spacing_km` (~O(n log n): 0.02 s at 8,000 places, ~1 s at
     the global cities500's ~200 k) — places are pandas-resident by
-    contract.  ``max_explode_rows`` caps the small side's (2k+1)² ring
-    explosion; ``max_k`` defaults to 4 because measured
+    contract.  ``_RING_MAX_EXPLODE_ROWS`` caps the small side's (2k+1)²
+    ring explosion; ``_RING_MAX_K`` is 4 because measured
     per-row cost grows with ring size beyond what the candidate-array
     model captures (res 13 k 7 → 3.7 s vs res 12 k 4 → 2.5 s at equal
     modeled candidates).
@@ -268,14 +276,14 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
     spacing = max_nn_spacing_km(places_pdf, lat_col=lat_col, lon_col=lon_col)
     if not math.isfinite(spacing) or spacing <= 0:
         return grid.DEFAULT_RES, 1
-    need = spacing * margin
+    need = spacing * _RING_MARGIN
     max_lat = float(np.abs(places_pdf[lat_col].to_numpy()).max())
     n = len(places_pdf)
     best: tuple[float, int, int] | None = None
-    for res in range(res_lo, res_hi + 1):
+    for res in range(_RING_RES_LO, _RING_RES_HI + 1):
         step = min_cell_km(res, max_lat)
         k = max(1, math.ceil(need / (step * _GUARD_SAFETY)))
-        if k > max_k or n * (2 * k + 1) ** 2 > max_explode_rows:
+        if k > _RING_MAX_K or n * (2 * k + 1) ** 2 > _RING_MAX_EXPLODE_ROWS:
             continue
         # expected candidates/row ∝ ring AREA (the uniform place density is
         # a loop-invariant factor — it cannot move the argmin, so it is not
@@ -283,8 +291,8 @@ def auto_ring(places_pdf, *, lat_col: str = "latitude",
         cost = (step * (2 * k + 1)) ** 2
         if best is None or cost < best[0]:
             best = (cost, res, k)
-    if best is None:  # spacing too large for max_k at any res: coarsest wins
-        return res_lo, max_k
+    if best is None:  # spacing too large for _RING_MAX_K at any res
+        return _RING_RES_LO, _RING_MAX_K
     return best[1], best[2]
 
 

@@ -43,11 +43,8 @@ def degree_stats(edges: DataFrame, *, src: str = "src",
 
 def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
              n_iter: int = 3, damping_pct: int = 85,
-             scale: int = 10 ** 12, persist_edges: bool = False,
-             checkpoint_every: int = 1,
-             reliable_checkpoint_every: int = 0,
-             node_width: int | None = None,
-             edge_width: int | None = None) -> DataFrame:
+             scale: int = 10 ** 12, checkpoint_every: int = 1,
+             reliable_checkpoint_every: int = 0) -> DataFrame:
     """Fixed-iteration integer-exact PageRank → (node, rank_u).
 
     ``rank_u`` is the node's rank in micro-units of ``scale`` total mass
@@ -68,9 +65,7 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     Scale shape (per iteration, edges = the 100 TB side):
 
     * the rank frame is |V| rows (hosts, not pages) — always the small
-      side; it joins edges on ``src``, where ``persist_edges=True`` keeps
-      the edge table hash-partitioned on ``src`` ONCE so every iteration's
-      join reuses that layout instead of re-shuffling the big side;
+      side; it joins edges on ``src``;
     * per-edge contributions partial-aggregate map-side into |V| rows on
       ``dst`` — an in-degree mega-hub (zipfian reality) is combined inside
       each map task, never collected into one reducer's row list;
@@ -90,44 +85,13 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
 
     Pass a DISTINCT edge table for simple-graph semantics; parallel edges
     are honored as multi-edges (each carries its own contribution).
-
-    ``node_width`` / ``edge_width`` fix the partition counts of the
-    persisted per-node frames (nodes / outdeg / each round's ranks) and of
-    the persisted edge layout.  Explicit widths matter because persisted
-    plans are exempt from AQE re-partitioning (Spark keeps cached output
-    partitioning stable — ``canChangeCachedPlanOutputPartitioning`` is
-    false by default), so left implicit they materialize at
-    ``initialPartitionNum`` (1024 here): measured on this box, 3 iterations
-    over 10 M edges ran 1024 sub-100 k-row tasks per stage and spent 77 s
-    on scheduling overhead vs ~20 s at explicit widths.  Defaults:
-    ``defaultParallelism`` for the |V|-row frames and the max of that and
-    the input's scan width for edges — on a cluster pass widths sized to
-    |V| and |E| (the |V|-row frames never need edge-table width).
     """
-    sc = edges.sparkSession.sparkContext
-    node_w = node_width or sc.defaultParallelism
     e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
-    if persist_edges:
-        edge_w = edge_width or max(node_w, e.rdd.getNumPartitions())
-        e = e.repartition(edge_w, "__src").persist()
     nodes = (e.select(F.col("__src").alias("node"))
              .union(e.select(F.col("__dst").alias("node")))
              .distinct())
     outdeg = e.groupBy(F.col("__src").alias("node")).agg(
         F.count(F.lit(1)).alias("__out"))
-    if persist_edges:
-        # nodes / outdeg are referenced ~3× per iteration (contrib join,
-        # dangling split, ranks rebuild + ncount).  Left lazy, every
-        # checkpointed round re-runs the |2E|-row union-distinct and the
-        # edge-count agg from the raw edge table — measured to dominate
-        # the per-iteration cost.  Both are |V|-row frames; persisting
-        # them alongside the edge layout is the same one-knob contract.
-        # The explicit node_w hash layout (see docstring) is ALSO the
-        # partitioning every per-iteration node-keyed join aligns to —
-        # cached at HashPartitioning(node, node_w), the merge joins
-        # shuffle only their non-cached side, to the same width.
-        nodes = nodes.repartition(node_w, "node").persist()
-        outdeg = outdeg.repartition(node_w, "node").persist()
     ncount = nodes.agg(F.count(F.lit(1)).alias("__n"))  # one row
     base_expr = (f"(({scale} div __n) * {100 - damping_pct}) div 100"
                  f" + ({damping_pct} * (coalesce(__inc, cast(0 as bigint))"
@@ -165,7 +129,4 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
             ranks = ranks.checkpoint(eager=True)
         elif checkpoint_every and round_no % checkpoint_every == 0:
             ranks = ranks.localCheckpoint(eager=True)
-    if persist_edges:
-        # leave persisted for the caller's action; blocks are LRU-evictable
-        pass
     return ranks.select("node", "rank_u")

@@ -22,12 +22,7 @@ Scale shape
   explode of the corpus; counts are vocabulary-bounded (Heaps' law:
   sublinear in corpus size, but data-dependent — so the score joins below
   are plain shuffle joins by default, per the broadcast policy in
-  ``merge.marker_join``; AQE broadcasts the measured-small case).  The
-  optional ``vocab_k`` prunes the unigram table to an exact top-K (salted
-  two-phase rank — never a single-partition window) and semi-filters the
-  bigram table to pruned-vocab-consistent rows, making the model
-  PARAMETER-bounded for the genuinely-huge-corpus case; pruned-away tokens
-  fall through to the backoff floor.
+  ``merge.marker_join``; AQE broadcasts the measured-small case).
 * **Score** — the (w, prev) pairs are built INSIDE the token array by one
   ``transform`` and exploded once, so post-explode rows are two narrow
   strings (the whole-document array is never duplicated per token row);
@@ -64,14 +59,8 @@ def _tokens(text_col: str) -> Column:
     return F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
 
 
-def lm_train(docs: DataFrame, text_col: str = "text", *,
-             vocab_k: int | None = None, n_salts: int = 64) -> BigramLM:
-    """Count unigrams and bigrams over ``docs`` (see module docstring).
-
-    ``vocab_k``: exact top-``vocab_k`` unigram pruning (by count DESC,
-    token ASC) via the salted two-phase rank; bigrams are kept only when
-    BOTH tokens survive, so a kept bigram always has its prefix unigram
-    (the backoff chain can never hit a missing denominator)."""
+def lm_train(docs: DataFrame, text_col: str = "text") -> BigramLM:
+    """Count unigrams and bigrams over ``docs`` (see module docstring)."""
     pairs = docs.select(_tokens(text_col).alias("__a")).select(
         F.explode(F.expr(
             "transform(__a, (x, i) -> struct("
@@ -82,16 +71,6 @@ def lm_train(docs: DataFrame, text_col: str = "text", *,
     uni = pairs.groupBy("__w").agg(F.count(F.lit(1)).alias("__c1"))
     bi = (pairs.filter(F.col("__wp").isNotNull())
           .groupBy("__wp", "__w").agg(F.count(F.lit(1)).alias("__c2")))
-    if vocab_k is not None:
-        from .sample import global_topk_ranked
-        uni = global_topk_ranked(
-            uni, "__w", k=vocab_k,
-            order_cols=[F.col("__c1").desc(), F.col("__w").asc()],
-            n_salts=n_salts).drop("__rk")
-        kept = uni.select("__w")
-        bi = (bi.join(kept, "__w", "left_semi")
-              .join(kept.withColumnRenamed("__w", "__wp"), "__wp",
-                    "left_semi"))
     total = uni.agg(F.sum("__c1").cast("double").alias("__t"))
     return BigramLM(unigrams=uni, bigrams=bi, total=total)
 

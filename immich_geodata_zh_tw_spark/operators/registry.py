@@ -54,10 +54,6 @@ def get_handler(country_code: str) -> Handler:
     return _HANDLER_REGISTRY[cc]
 
 
-def all_handlers() -> list[str]:
-    return sorted(_HANDLER_REGISTRY)
-
-
 def _geodata_select(df: DataFrame, *, country: str,
                     admin_1, admin_2, admin_3=None, admin_4=None) -> DataFrame:
     null_s = F.lit(None).cast("string")

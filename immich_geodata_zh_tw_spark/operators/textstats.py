@@ -153,10 +153,6 @@ def redact_pii_sql(text_col: str = "text", *, dialect: str = "spark") -> str:
     return out
 
 
-def redact_pii(col: str = "text") -> Column:
-    return F.expr(redact_pii_sql(col, dialect="spark"))
-
-
 def word_ngrams_expr(words_col: str, n: int) -> Column:
     """Word n-grams of an already-split array, as one JVM expression
     (positions are 1-based in both Spark ``slice`` and DuckDB

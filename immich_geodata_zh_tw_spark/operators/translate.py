@@ -5,7 +5,8 @@ Reference semantics:
   that is really an equi-join on (country_code, lat, lon) → broadcast join J5;
 * alternate-name priority pick: score languages by a priority list, keep the
   top row per geoname_id (alternate_names.py:61-85);
-* coalesce fallback chains (translate.py:277-286,323-326);
+* coalesce fallback chains (translate.py:277-286,323-326) are plain
+  ``F.coalesce`` at their call sites;
 * null-token normalization: '', 'None', 'nan', '""' → NULL (base.py:389-398).
 """
 
@@ -22,10 +23,6 @@ CHINESE_PRIORITY = ["zh-Hant", "zh-TW", "zh-HK", "zh", "zh-Hans", "zh-CN", "zh-S
 
 def normalize_null_tokens(col: Column) -> Column:
     return F.when(col.isin(NULL_TOKENS), F.lit(None)).otherwise(col)
-
-
-def coalesce_chain(*cols: Column) -> Column:
-    return F.coalesce(*cols)
 
 
 def metadata_coordinate_join(cities: DataFrame, metadata: DataFrame, *,

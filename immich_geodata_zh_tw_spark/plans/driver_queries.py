@@ -531,7 +531,7 @@ def q_coalesce_chain(spark, sf_dir):
     raw = p.withColumn("c1", F.expr(_NULLTOK_CASE))
     return raw.select(
         "p_partkey",
-        translate.coalesce_chain(
+        F.coalesce(
             translate.normalize_null_tokens(F.col("c1")),
             F.col("p_type")).alias("final_name"))
 

@@ -44,9 +44,8 @@ from pyspark.sql import functions as F
 from ..operators.dedup import coordinate_dedup
 from ..operators.merge import replace_by_key, union_all
 from ..operators.registry import GEODATA_COLS
-from ..operators.translate import (CHINESE_PRIORITY, coalesce_chain,
-                                   extract_chinese_names, fix_li_names,
-                                   metadata_coordinate_join,
+from ..operators.translate import (CHINESE_PRIORITY, extract_chinese_names,
+                                   fix_li_names, metadata_coordinate_join,
                                    normalize_null_tokens, priority_pick)
 
 COORD_DECIMAL_PLACES = 8  # reference base.py:24-25
@@ -177,7 +176,7 @@ def convert_to_cities_schema(geodata: DataFrame, *, bases: dict[str, int],
         parts[0].alias("country_code"), F.col("name").alias("admin_1"),
         F.element_at(parts, -1).alias("admin1_code"))
     g = g.join(F.broadcast(a1), ["country_code", "admin_1"], "left")
-    name = coalesce_chain(F.col("admin_3"), F.col("admin_2"), F.col("admin_1"))
+    name = F.coalesce(F.col("admin_3"), F.col("admin_2"), F.col("admin_1"))
     return g.select(
         _country_ids(CITIES_SORT_COLS, bases).alias("geoname_id"),
         name.alias("name"),
@@ -292,13 +291,13 @@ def translate_cities500(cities: DataFrame, metadata: DataFrame,
     def blank_to_null(c):
         return F.when(c == "", F.lit(None)).otherwise(c)
 
-    final = coalesce_chain(blank_to_null(meta_translated),
-                           blank_to_null(alt_translated),
-                           blank_to_null(extracted))
+    final = F.coalesce(blank_to_null(meta_translated),
+                       blank_to_null(alt_translated),
+                       blank_to_null(extracted))
     final = F.when(F.col("country_code") == passthrough_country,
                    F.col("name")).otherwise(final)
     final = fix_li_names(final)
-    named = coalesce_chain(final, F.col("name"))
+    named = F.coalesce(final, F.col("name"))
     # ONE select instead of withColumn×2 + drop: each of those re-analyzes
     # the deepest plan of the whole release pipeline driver-side (guide §5
     # — plan construction was ~half this query's bench time at sf0.1);

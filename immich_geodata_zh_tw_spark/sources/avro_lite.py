@@ -36,6 +36,8 @@ import struct
 import zlib
 
 MAGIC = b"Obj\x01"
+#: the 16-byte sync marker every written container carries
+_SYNC = b"\x00" * 15 + b"\x01"
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double",
                "bytes", "string"}
 
@@ -314,8 +316,7 @@ def _encode(node, schema: Schema, value, out: bytearray) -> None:
 
 
 def write_container(path: str, json_schema, records: list, *,
-                    codec: str = "deflate",
-                    sync: bytes = b"\x00" * 15 + b"\x01") -> None:
+                    codec: str = "deflate") -> None:
     """Write records as a single-block Avro object-container file."""
     schema = Schema(json_schema)
     body = bytearray()
@@ -332,11 +333,11 @@ def write_container(path: str, json_schema, records: list, *,
             "avro.codec": codec.encode()}
     meta_schema = Schema({"type": "map", "values": "bytes"})
     _encode(meta_schema.root, meta_schema, meta, out)
-    out += sync
+    out += _SYNC
     out += zigzag_encode(len(records))
     out += zigzag_encode(len(payload))
     out += payload
-    out += sync
+    out += _SYNC
     tmp = f"{path}.tmp{os.getpid()}"
     with open(tmp, "wb") as fh:
         fh.write(bytes(out))

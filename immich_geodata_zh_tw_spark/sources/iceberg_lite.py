@@ -10,8 +10,8 @@ from the public Iceberg table-spec (format versions 1 and 2):
 1. resolve the CURRENT metadata file: ``metadata/version-hint.text`` if
    present, else the lexically-largest ``v*.metadata.json`` /
    ``*.metadata.json``;
-2. pick the current snapshot (or an explicit ``snapshot_id`` — time
-   travel), read its Avro **manifest list** (``sources/avro_lite``),
+2. pick the current snapshot, read its Avro **manifest list**
+   (``sources/avro_lite``),
 3. read each Avro **manifest**, keep data-file entries whose status is
    EXISTING(0)/ADDED(1) (never DELETED(2)),
 4. hand the resulting parquet file list to ``spark.read.parquet`` — from
@@ -27,8 +27,8 @@ Honest scope limits, enforced loudly rather than silently wrong:
   read exactly;
 * Iceberg-level PARTITION pruning is forfeited (Spark sees a file list,
   not the partition spec); parquet min/max row-group pruning still
-  applies.  For the flagship's crawl-window queries the day-partition
-  dirs can be pre-filtered by the caller via ``path_filter``;
+  applies;
+* only the current snapshot is read (no time travel);
 * the read is snapshot-consistent by construction: the file list comes
   from ONE manifest list of ONE snapshot.
 """
@@ -96,24 +96,11 @@ def _meta_version(name: str) -> tuple:
     return (int(m.group(1)) if m else -1, name)
 
 
-def _select_snapshot(meta: dict, snapshot_id: int | None,
-                     as_of_timestamp_ms: int | None = None) -> dict:
+def _select_snapshot(meta: dict) -> dict:
+    """The table's current snapshot."""
     snaps = meta.get("snapshots") or []
     if not snaps:
         raise ValueError("iceberg table has no snapshots (empty table)")
-    if snapshot_id is not None:
-        for s in snaps:
-            if s.get("snapshot-id") == snapshot_id:
-                return s
-        raise ValueError(f"snapshot {snapshot_id} not found")
-    if as_of_timestamp_ms is not None:
-        # TIMESTAMP AS OF: the latest snapshot committed at or before t
-        eligible = [s for s in snaps
-                    if s.get("timestamp-ms", 0) <= as_of_timestamp_ms]
-        if not eligible:
-            raise ValueError(
-                f"no snapshot at or before timestamp {as_of_timestamp_ms}")
-        return max(eligible, key=lambda s: s.get("timestamp-ms", 0))
     cur = meta.get("current-snapshot-id")
     for s in snaps:
         if s.get("snapshot-id") == cur:
@@ -121,20 +108,13 @@ def _select_snapshot(meta: dict, snapshot_id: int | None,
     return snaps[-1]
 
 
-def data_files(table_path: str, *, snapshot_id: int | None = None,
-               as_of_timestamp_ms: int | None = None,
-               meta: dict | None = None,
-               path_filter=None) -> list[str]:
-    """Parquet data-file paths of one snapshot (spec walk, see module
-    docstring).  Raises ``NotImplementedError`` on merge-on-read deletes.
-
-    ``path_filter(path) -> bool`` drops files by path BEFORE the scan —
-    the caller-side stand-in for Iceberg partition pruning (partition
-    values are encoded in the data paths by every Iceberg writer layout,
-    e.g. ``.../warc_ts_day=2026-01-01/...``)."""
-    meta = meta or load_table_metadata(table_path)
+def data_files(table_path: str) -> list[str]:
+    """Parquet data-file paths of the current snapshot (spec walk, see
+    module docstring).  Raises ``NotImplementedError`` on merge-on-read
+    deletes."""
+    meta = load_table_metadata(table_path)
     location = meta.get("location")
-    snap = _select_snapshot(meta, snapshot_id, as_of_timestamp_ms)
+    snap = _select_snapshot(meta)
 
     if "manifest-list" in snap:  # v2 (and late-v1) layout
         mlist_path = _remap(snap["manifest-list"], table_path, location)
@@ -161,10 +141,7 @@ def data_files(table_path: str, *, snapshot_id: int | None = None,
             if fmt != "PARQUET":
                 raise NotImplementedError(
                     f"iceberg data file format {fmt!r} unsupported")
-            path = _remap(df["file_path"], table_path, location)
-            if path_filter is not None and not path_filter(path):
-                continue
-            files.append(path)
+            files.append(_remap(df["file_path"], table_path, location))
     return files
 
 
@@ -260,19 +237,10 @@ def bootstrap_table(df: DataFrame, table_path: str) -> str:
     return table_path
 
 
-def read_iceberg_table(spark: SparkSession, table_path: str, *,
-                       snapshot_id: int | None = None,
-                       as_of_timestamp_ms: int | None = None,
-                       path_filter=None) -> DataFrame:
-    """Read an Iceberg table path without Iceberg jars (module docstring).
-
-    ``snapshot_id`` selects an older snapshot (Iceberg ``VERSION AS OF``);
-    ``as_of_timestamp_ms`` the latest snapshot committed at or before the
-    epoch-ms instant (``TIMESTAMP AS OF``); ``path_filter`` see
-    :func:`data_files`."""
-    files = data_files(table_path, snapshot_id=snapshot_id,
-                       as_of_timestamp_ms=as_of_timestamp_ms,
-                       path_filter=path_filter)
+def read_iceberg_table(spark: SparkSession, table_path: str) -> DataFrame:
+    """Read an Iceberg table path's current snapshot without Iceberg jars
+    (module docstring)."""
+    files = data_files(table_path)
     if not files:
         raise ValueError(f"iceberg snapshot of {table_path!r} has no "
                          f"data files")

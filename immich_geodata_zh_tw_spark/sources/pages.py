@@ -12,8 +12,9 @@ This sandbox ships no Iceberg runtime jars, so the reader resolves in order:
    Python over the table's own metadata JSON + Avro manifests): a real
    Iceberg table layout reads snapshot-consistently even with no Iceberg
    runtime on the classpath (this sandbox);
-4. parquet directory fallback (what the sandbox tests/bench use) — same
-   schema, same downstream plan.
+4. parquet directory fallback (what the sandbox tests/bench use) — read
+   with the declared ``PAGES_SCHEMA``, so opening it runs no Spark job; the
+   required columns are checked against one file footer on the driver.
 
 **Partition spec (production note).**  The 10^12-row table should be
 partitioned by ``days(warc_ts)`` + ``bucket(64, url)``:
@@ -44,7 +45,9 @@ import weakref
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
+PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
+                "text string, lang string")
+PAGES_COLUMNS = [c.split()[0] for c in PAGES_SCHEMA.split(", ")]
 
 #: per SparkContext: does the ``iceberg`` data source resolve?  The
 #: classpath is fixed for a context's life, and a failed ``format("iceberg")``
@@ -67,7 +70,7 @@ def _has_iceberg_source(spark: SparkSession) -> bool:
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
     """Resolve the pages table from an Iceberg table name, an Iceberg path,
     or a parquet directory — whichever the environment provides."""
-    df = None
+    df = present = None
     if not ("/" in source or source.endswith(".parquet")):
         df = spark.read.table(source)  # catalog table (Iceberg in prod)
     elif _has_iceberg_source(spark):
@@ -81,9 +84,16 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
             from .iceberg_lite import read_iceberg_table
 
             df = read_iceberg_table(spark, source)
-        else:
-            df = spark.read.parquet(source)  # plain-parquet fallback
-    missing = [c for c in PAGES_COLUMNS if c not in df.columns]
+        else:  # plain parquet: a user schema skips Spark's inference job
+            import pyarrow.dataset as ds
+
+            # under a user schema Spark NULL-fills an absent column, so the
+            # check reads a real footer (pyarrow inspects the first file)
+            present = ds.dataset(source, format="parquet").schema.names
+            df = spark.read.schema(PAGES_SCHEMA).parquet(source)
+    if present is None:
+        present = df.columns
+    missing = [c for c in PAGES_COLUMNS if c not in present]
     if missing:
         raise ValueError(f"pages source {source!r} lacks columns {missing}")
     return df.select(*PAGES_COLUMNS)

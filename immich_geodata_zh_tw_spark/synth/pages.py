@@ -24,6 +24,7 @@ import pandas as pd
 
 from . import TW_BBOX
 from ..extract.html_meta import extract_text
+from ..sources.pages import PAGES_COLUMNS, PAGES_SCHEMA
 from .hashing import u01
 
 _DENSE_SQUARES = [  # (lat0, lon0, size) — synthetic Taipei / New Taipei
@@ -114,11 +115,7 @@ def pages_pdf(ids) -> pd.DataFrame:
             extract_text(html),
             _LANGS[int(u01([i], salt=8)[0] * len(_LANGS))],
         ))
-    return pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-
-PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
-                "text string, lang string")
+    return pd.DataFrame(rows, columns=PAGES_COLUMNS)
 
 
 def pages_df(spark, n: int, partitions: int | None = None, start: int = 0):

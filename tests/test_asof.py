@@ -1,5 +1,5 @@
 """asof_join (operators/asof.py): semantics vs a brute-force argmax oracle,
-tie / tolerance / direction behavior, bucket-span invariance, plan shape."""
+tie / tolerance behavior, bucket-span invariance, plan shape."""
 
 from __future__ import annotations
 
@@ -11,29 +11,21 @@ from pyspark.sql import functions as F
 from immich_geodata_zh_tw_spark.operators.asof import asof_join
 
 
-def _brute(left_rows, right_rows, *, direction="backward", tolerance=None):
+def _brute(left_rows, right_rows, *, tolerance=None):
     """Per-left-row argmax reference (key, on, id) — inclusive, greatest
-    tie id wins backward / least forward (scan-order-nearest)."""
+    tie id wins (scan-order-nearest)."""
     out = {}
     for lk, lon, lid in left_rows:
         best = None
         for rk, ron, rid, rv in right_rows:
             if rk != lk:
                 continue
-            if direction == "backward":
-                if ron > lon or (tolerance is not None
-                                 and lon - ron > tolerance):
-                    continue
-                key = (ron, rid)
-                if best is None or key > (best[0], best[1]):
-                    best = (ron, rid, rv)
-            else:
-                if ron < lon or (tolerance is not None
-                                 and ron - lon > tolerance):
-                    continue
-                key = (-ron, -rid)
-                if best is None or key > (-best[0], -best[1]):
-                    best = (ron, rid, rv)
+            if ron > lon or (tolerance is not None
+                             and lon - ron > tolerance):
+                continue
+            key = (ron, rid)
+            if best is None or key > (best[0], best[1]):
+                best = (ron, rid, rv)
         out[(lk, lon, lid)] = best
     return out
 
@@ -64,15 +56,13 @@ def fuzz_data():
     return left, right
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward"])
 @pytest.mark.parametrize("tolerance", [None, 7.5])
-def test_matches_brute_force(spark, fuzz_data, direction, tolerance):
+def test_matches_brute_force(spark, fuzz_data, tolerance):
     left, right = fuzz_data
     l, r = _mk(spark, left, right)
     got = _run(asof_join(l, r, on="t", by="k", value_cols=["rid", "rv"],
-                         direction=direction, tolerance=tolerance,
-                         tie_col="rid"))
-    want = _brute(left, right, direction=direction, tolerance=tolerance)
+                         tolerance=tolerance, tie_col="rid"))
+    want = _brute(left, right, tolerance=tolerance)
     assert got == want
 
 
@@ -89,20 +79,17 @@ def test_bucket_span_invariance(spark, fuzz_data, span):
     assert bucketed == base
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_bigint_on_tolerance_is_exact(spark, direction):
+def test_bigint_on_tolerance_is_exact(spark):
     """Integral `on` above 2^53 (snowflake ids): the tolerance gap must be
     judged in exact long arithmetic — a double cast has ~1024-unit ulp at
     2^60 and mis-rounds matches near the boundary (the _TIE discipline,
     applied to `on` itself)."""
     base = 2 ** 60
-    sgn = 1 if direction == "backward" else -1
-    l = spark.createDataFrame([(1, base + sgn * 1000, 1)],
+    l = spark.createDataFrame([(1, base + 1000, 1)],
                               "k int, t long, lid int")
     r = spark.createDataFrame([(1, base, 10, 1.0)],
                               "k int, t long, rid int, rv double")
-    kw = dict(on="t", by="k", value_cols=["rid"], tie_col="rid",
-              direction=direction)
+    kw = dict(on="t", by="k", value_cols=["rid"], tie_col="rid")
     hit = asof_join(l, r, tolerance=1000, **kw).head()
     assert hit["r_rid"] == 10
     miss = asof_join(l, r, tolerance=999, **kw).head()
@@ -114,18 +101,14 @@ def test_bigint_on_tolerance_is_exact(spark, direction):
     assert miss_b["r_rid"] is None
 
 
-def test_bucket_span_forward_and_tolerance(spark, fuzz_data):
+def test_bucket_span_with_tolerance(spark, fuzz_data):
     left, right = fuzz_data
     l, r = _mk(spark, left, right)
-    for direction in ("backward", "forward"):
-        base = _run(asof_join(l, r, on="t", by="k",
-                              value_cols=["rid", "rv"], tie_col="rid",
-                              direction=direction, tolerance=9.0))
-        bucketed = _run(asof_join(l, r, on="t", by="k",
-                                  value_cols=["rid", "rv"], tie_col="rid",
-                                  direction=direction, tolerance=9.0,
-                                  bucket_span=8.0))
-        assert bucketed == base
+    base = _run(asof_join(l, r, on="t", by="k", value_cols=["rid", "rv"],
+                          tie_col="rid", tolerance=9.0))
+    bucketed = _run(asof_join(l, r, on="t", by="k", value_cols=["rid", "rv"],
+                              tie_col="rid", tolerance=9.0, bucket_span=8.0))
+    assert bucketed == base
 
 
 def test_timestamp_on_column(spark):
@@ -185,9 +168,6 @@ def test_column_validation(spark):
     with pytest.raises(ValueError, match="already exist"):
         asof_join(l.withColumn("r_t", F.lit(1)), r, on="t", by="k",
                   value_cols=["rv"])
-    with pytest.raises(ValueError, match="direction"):
-        asof_join(l, r, on="t", by="k", value_cols=["rv"],
-                  direction="nearest")
 
 
 def test_plan_shape(spark, fuzz_data):
@@ -206,20 +186,18 @@ def test_plan_shape(spark, fuzz_data):
 def test_null_on_never_matches(spark):
     """NULL `on` semantics (DuckDB ASOF / pandas merge_asof): a NULL-ts
     right row is never a candidate, a NULL-ts left row keeps its row with
-    a NULL match — in the base, bucketed, forward, and tolerance paths."""
+    a NULL match — in the base, bucketed and tolerance paths."""
     l = spark.createDataFrame([(1, 5.0, 0), (1, None, 1)],
                               "k int, t double, lid int")
     r = spark.createDataFrame(
         [(1, None, 9, 7.5), (1, 4.0, 2, 1.0)],
         "k int, t double, rid int, rv double")
-    for kw in ({}, {"bucket_span": 10.0}, {"direction": "forward"},
-               {"tolerance": 100.0}):
+    for kw in ({}, {"bucket_span": 10.0}, {"tolerance": 100.0}):
         got = _run(asof_join(l, r, on="t", by="k",
                              value_cols=["rid", "rv"], **kw))
         assert set(got) == {(1, 5.0, 0), (1, None, 1)}
         assert got[(1, None, 1)] is None  # NULL left matches nothing
-        want = (4.0, 2, 1.0) if "direction" not in kw else None
-        assert got[(1, 5.0, 0)] == want  # NULL right is never a candidate
+        assert got[(1, 5.0, 0)] == (4.0, 2, 1.0)  # NULL right never wins
 
 
 def test_tie_col_keeps_64bit_precision(spark):

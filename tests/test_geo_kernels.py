@@ -137,11 +137,6 @@ class TestWkbPip:
 
 
 class TestProjDistance:
-    def test_utm_zone(self):
-        assert proj.utm_zone(121.5) == 51  # Taiwan (reference japan.py:29-32)
-        assert proj.utm_zone(139.7) == 54  # Tokyo
-        assert proj.utm_zone(-0.1) == 30
-
     def test_square_centroid(self):
         ring = np.array([[121.0, 24.0], [121.2, 24.0], [121.2, 24.2],
                          [121.0, 24.2], [121.0, 24.0]])
@@ -181,70 +176,3 @@ class TestHaversineParity:
         want = distance.haversine_np(df.lat1, df.lon1, df.lat2, df.lon2)
         # collect() order matches input order for a no-shuffle plan
         assert np.allclose(np.sort(got), np.sort(want), rtol=1e-12)
-
-
-class TestTransverseMercator:
-    """geo/tmerc.py — exact Krüger-series TM (F16, the reference's
-    TWD97/UTM reprojection without pyproj)."""
-
-    def test_central_meridian_easting_exact(self):
-        from immich_geodata_zh_tw_spark.geo import tmerc
-
-        e, _ = tmerc.TWD97_TM2.forward(25.0, 121.0)
-        assert float(e) == 250000.0  # FE exactly on the central meridian
-
-    def test_utm_standard_vector(self):
-        """Equator point 3° from the zone-31 central meridian — the classic
-        published UTM value 166021.443 m."""
-        from immich_geodata_zh_tw_spark.geo import tmerc
-
-        e, n = tmerc.utm(31).forward(0.0, 0.0)
-        assert abs(float(e) - 166021.443) < 0.001
-        assert abs(float(n)) < 1e-6
-
-    def test_roundtrip_nanometer_class(self):
-        import numpy as np
-        from immich_geodata_zh_tw_spark.geo import tmerc
-
-        rng = np.random.default_rng(7)
-        lat = rng.uniform(-80, 80, 5000)
-        lon = 121.0 + rng.uniform(-8, 8, 5000)
-        E, N = tmerc.TWD97_TM2.forward(lat, lon)
-        lat2, lon2 = tmerc.TWD97_TM2.inverse(E, N)
-        assert np.abs(lat2 - lat).max() < 1e-9
-        assert np.abs(lon2 - lon).max() < 1e-9
-
-    def test_scale_factor_at_central_meridian(self):
-        """Ground distance along the CM scales by k0 = 0.9999."""
-        import numpy as np
-        from immich_geodata_zh_tw_spark.geo import tmerc
-        from immich_geodata_zh_tw_spark.geo.distance import haversine_np
-
-        _, n1 = tmerc.TWD97_TM2.forward(24.0, 121.0)
-        _, n2 = tmerc.TWD97_TM2.forward(24.001, 121.0)
-        proj_m = float(n2 - n1)
-        # spherical vs ellipsoidal arc differ ~0.3%; assert k0 bracket
-        arc_m = float(haversine_np(24.0, 121.0, 24.001, 121.0)) * 1000.0
-        assert 0.995 < proj_m / arc_m < 1.003
-
-    def test_twd97_centroid_close_to_local(self):
-        """For admin-polygon-sized geometry the exact-TM centroid and the
-        local equal-area centroid agree to sub-metre (~1e-5 deg)."""
-        from immich_geodata_zh_tw_spark.geo import proj
-        from immich_geodata_zh_tw_spark.synth import polygons
-
-        polys = polygons.admin_polygons_pdf(village_grid=3)
-        for buf in polys["geometry_wkb"].head(20):
-            la, lo = proj.centroid_of_wkb(bytes(buf), crs="local")
-            lt, ln = proj.centroid_of_wkb(bytes(buf), crs="twd97")
-            assert abs(la - lt) < 2e-5 and abs(lo - ln) < 2e-5
-
-    def test_utm_centroid_zone_dispatch(self):
-        from immich_geodata_zh_tw_spark.geo import proj, wkb
-        import numpy as np
-
-        ring = np.array([[139.6, 35.4], [139.7, 35.4], [139.7, 35.5],
-                         [139.6, 35.5], [139.6, 35.4]])
-        buf = wkb.encode_polygon([ring])
-        lat, lon = proj.centroid_of_wkb(buf, crs="utm")  # zone 54
-        assert abs(lat - 35.45) < 1e-4 and abs(lon - 139.65) < 1e-4

@@ -213,13 +213,6 @@ class TestIcebergLite:
         assert sorted(r.url for r in df.select("url").collect()) == \
             ["u1", "u2", "u3"]
 
-    def test_time_travel_to_first_snapshot(self, spark, tmp_path):
-        root = tmp_path / "tbl"
-        _build_table(spark, root)
-        df = iceberg_lite.read_iceberg_table(spark, str(root), snapshot_id=1)
-        assert sorted(r.url for r in df.select("url").collect()) == \
-            ["u1", "u2"]
-
     def test_read_pages_routes_through_metadata_walk(self, spark, tmp_path):
         """S5 end-to-end: the pages source reads a REAL Iceberg layout with
         no Iceberg jars on the classpath, full pages schema intact."""
@@ -240,29 +233,6 @@ class TestIcebergLite:
             [_manifest_row(root / "metadata/m2.avro", content=1, snap=2)])
         with pytest.raises(NotImplementedError, match="merge-on-read"):
             iceberg_lite.data_files(str(root))
-
-    def test_timestamp_as_of_travel(self, spark, tmp_path):
-        """TIMESTAMP AS OF: an instant between the two commits reads the
-        first snapshot; before the first commit is an error."""
-        root = tmp_path / "tbl"
-        _build_table(spark, root)
-        df = iceberg_lite.read_iceberg_table(
-            spark, str(root), as_of_timestamp_ms=1_700_000_300_000)
-        assert sorted(r.url for r in df.select("url").collect()) == \
-            ["u1", "u2"]
-        with pytest.raises(ValueError, match="no snapshot at or before"):
-            iceberg_lite.data_files(str(root),
-                                    as_of_timestamp_ms=1_600_000_000_000)
-
-    def test_path_filter_prunes_files_before_scan(self, spark, tmp_path):
-        """Caller-side partition pruning: the filter sees final local
-        paths and drops files before Spark ever lists them."""
-        root = tmp_path / "tbl"
-        _build_table(spark, root)
-        df = iceberg_lite.read_iceberg_table(
-            spark, str(root), path_filter=lambda p: p.endswith("f1.parquet"))
-        assert sorted(r.url for r in df.select("url").collect()) == \
-            ["u1", "u2"]
 
     def test_relocated_table_paths_remap(self, spark, tmp_path):
         """Manifests keep the author-time absolute location; a MOVED table

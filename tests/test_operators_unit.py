@@ -184,6 +184,19 @@ class TestDedup:
         assert scores[(1, 3)] > 0.6
         assert all(4 not in k for k in scores)
 
+    @pytest.mark.parametrize("thr", [0.0, -0.5])
+    def test_ngram_jaccard_refuses_non_positive_threshold(self, spark, thr):
+        """A jaccard-0 pair shares no shingle: the kernel path would keep
+        it and the join path would not, so only a positive threshold gives
+        one answer on both sides of the broadcast-budget gate."""
+        from immich_geodata_zh_tw_spark.operators import dedup
+
+        df = spark.createDataFrame([(1, "a b c d e f")],
+                                   "doc_id long, text string")
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            dedup.ngram_jaccard_pairs(df, id_col="doc_id", text_col="text",
+                                      threshold=thr)
+
     def test_fused_kernel_matches_sql_specs(self, spark):
         """minhash_shingles_udf must equal BOTH split forms: bands ==
         minhash_bands_udf (itself bit-locked to DuckDB's band rows in
@@ -221,32 +234,12 @@ class TestDedup:
                            .alias("f")).collect()[0].f)
         assert row.bands is None and row.hs is None
 
-    def test_ngram_jaccard_persist_path_identical(self, spark):
-        """persist=True (the cluster-scale single-kernel-pass knob) must
-        return exactly the unpersisted results, for both the carried-sizes
-        fast branch and the jaccard-0-keeping slow branch."""
-        from immich_geodata_zh_tw_spark.operators import dedup
-
-        d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        for thr in (0.2, 0.0):
-            a = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
-                                           text_col="text", threshold=thr)
-                 .toPandas().sort_values(["id_a", "id_b"])
-                 .reset_index(drop=True))
-            b = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
-                                           text_col="text", threshold=thr,
-                                           persist=True)
-                 .toPandas().sort_values(["id_a", "id_b"])
-                 .reset_index(drop=True))
-            pd.testing.assert_frame_equal(a, b)
-        spark.catalog.clearCache()
-
     def test_ngram_jaccard_kernel_path_matches_join_path(self, spark):
         """The r6 size-gated scoring kernel (broadcast hash-set dict +
         mapInPandas intersection) must return exactly the join-plan
-        results for both threshold branches.  The join path is forced by
-        disabling the broadcast threshold — the same knob that gates the
-        kernel (`_stats.broadcast_budget_ok`)."""
+        results.  The join path is forced by disabling the broadcast
+        threshold — the same knob that gates the kernel
+        (`_stats.broadcast_budget_ok`)."""
         from immich_geodata_zh_tw_spark.operators import dedup
         from immich_geodata_zh_tw_spark.operators._stats import (
             broadcast_budget_ok)
@@ -255,22 +248,20 @@ class TestDedup:
         assert broadcast_budget_ok(d, fanout=4.0)
         thr_key = "spark.sql.autoBroadcastJoinThreshold"
         saved = spark.conf.get(thr_key)
-        for thr in (0.2, 0.0):
-            kern = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
-                                              text_col="text", threshold=thr)
+        kern = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
+                                          text_col="text", threshold=0.2)
+                .toPandas().sort_values(["id_a", "id_b"])
+                .reset_index(drop=True))
+        try:
+            spark.conf.set(thr_key, "-1")
+            assert not broadcast_budget_ok(d, fanout=4.0)
+            join = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
+                                              text_col="text", threshold=0.2)
                     .toPandas().sort_values(["id_a", "id_b"])
                     .reset_index(drop=True))
-            try:
-                spark.conf.set(thr_key, "-1")
-                assert not broadcast_budget_ok(d, fanout=4.0)
-                join = (dedup.ngram_jaccard_pairs(d, id_col="doc_id",
-                                                  text_col="text",
-                                                  threshold=thr)
-                        .toPandas().sort_values(["id_a", "id_b"])
-                        .reset_index(drop=True))
-            finally:
-                spark.conf.set(thr_key, saved)
-            pd.testing.assert_frame_equal(kern, join)
+        finally:
+            spark.conf.set(thr_key, saved)
+        pd.testing.assert_frame_equal(kern, join)
         spark.catalog.clearCache()
 
     def test_minhash_clusters_transitive(self, spark):
@@ -313,25 +304,18 @@ class TestSubstrDedup:
     overlapping-window coalescing, whole-doc coverage → '', short/unique
     docs pass through with zeros."""
 
-    def _run(self, spark, texts, n, persist=False):
+    def _run(self, spark, texts, n):
         from immich_geodata_zh_tw_spark.operators import dedup
 
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-        out = (dedup.substr_dedup(df, id_col="doc_id", text_col="text",
-                                  gram_words=n, persist=persist)
-               .toPandas().set_index("doc_id").sort_index())
-        if persist:
-            spark.catalog.clearCache()
-        return out
+        return (dedup.substr_dedup(df, id_col="doc_id", text_col="text",
+                                   gram_words=n)
+                .toPandas().set_index("doc_id").sort_index())
 
-    @pytest.mark.parametrize("persist", [False, True])
-    def test_cross_doc_repeat_cuts_both(self, spark, persist):
-        # docs 0 and 1 share the 3-gram 'a b c'; doc 2 is untouched;
-        # persist=True (the cluster-shaped single-explode path) must be
-        # result-identical
-        out = self._run(spark, ["x a b c y", "z a b c", "p q r"], 3,
-                        persist=persist)
+    def test_cross_doc_repeat_cuts_both(self, spark):
+        # docs 0 and 1 share the 3-gram 'a b c'; doc 2 is untouched
+        out = self._run(spark, ["x a b c y", "z a b c", "p q r"], 3)
         assert out.loc[0, "clean_text"] == "x y"
         assert out.loc[0, "n_dup_intervals"] == 1
         assert out.loc[0, "n_removed_tokens"] == 3
@@ -992,7 +976,7 @@ class TestPiiRedaction:
         df = spark.createDataFrame(
             [(t,) for t, _, _ in self.CASES], ["t"])
         rows = df.select(
-            "t", textstats.redact_pii("t").alias("red"),
+            "t", F.expr(textstats.redact_pii_sql("t")).alias("red"),
             *[F.expr(textstats.pii_count_sql(k, "t", dialect="spark"))
               .alias(k) for k in ("email", "phone", "ipv4")]).collect()
         by_text = {r["t"]: r for r in rows}

@@ -14,6 +14,10 @@ is decorated (``@register_handler`` registers the handlers). The query
 registries ``_QUERIES`` and ``_ORACLES`` read every declared query and
 oracle by name, so they count as readers.  Dunder names (``__all__``) are
 read by the import system, not by code.
+
+Every parameter of an engine function is read in the function's body
+(nested functions included): a parameter nothing reads is an option that
+changes nothing.
 """
 
 from __future__ import annotations
@@ -138,12 +142,39 @@ def unread_definitions(root: Path) -> list[str]:
         if reads[name] == _reads(node)[name])
 
 
+def unread_parameters(root: Path) -> list[str]:
+    """``module:function(param)`` of each engine function parameter its
+    body never reads."""
+    out = []
+    for f in sorted((root / PACKAGE).rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            params = [p.arg for p in (*a.posonlyargs, *a.args, *a.kwonlyargs,
+                                      a.vararg, a.kwarg) if p is not None]
+            reads = {n.id for stmt in node.body for n in ast.walk(stmt)
+                     if isinstance(n, ast.Name)
+                     and isinstance(n.ctx, ast.Load)}
+            out += [f"{_module_name(root, f)}:{node.name}({p})"
+                    for p in params if p not in reads]
+    return out
+
+
 def test_every_module_is_reached():
     assert sorted(unreached(ROOT)) == []
 
 
 def test_every_definition_is_read():
     assert unread_definitions(ROOT) == []
+
+
+def test_every_parameter_is_read():
+    # the kNN joins' query_id is unread, but perfbench passes it; the
+    # benchmark change that stops passing it deletes it and this pin
+    assert unread_parameters(ROOT) == [
+        f"{PACKAGE}.operators.knn:knn_join(query_id)",
+        f"{PACKAGE}.operators.knn:knn_join_static(query_id)"]
 
 
 def test_walk_follows_lazy_and_relative_imports(tmp_path):
@@ -161,6 +192,19 @@ def test_walk_follows_lazy_and_relative_imports(tmp_path):
     # a walk from a submodule reaches the packages that contain it
     assert reached_modules(tmp_path, ["p/sub/b.py"]) == {
         "p", "p.sub", "p.sub.b", "p.c"}
+
+
+def test_parameter_walk_counts_nested_reads(tmp_path):
+    pkg = tmp_path / PACKAGE
+    pkg.mkdir()
+    (pkg / "m.py").write_text(
+        "def f(a, b=1, *args, c, **kw):\n"
+        "    def g():\n        return a + len(args)\n"
+        "    return g\n"
+        "class C:\n    def m(self, x):\n        return self\n")
+    assert unread_parameters(tmp_path) == [
+        f"{PACKAGE}.m:f(b)", f"{PACKAGE}.m:f(c)", f"{PACKAGE}.m:f(kw)",
+        f"{PACKAGE}.m:m(x)"]
 
 
 def test_definition_walk_skips_self_reads_and_decorated(tmp_path):

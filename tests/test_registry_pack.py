@@ -15,9 +15,6 @@ from immich_geodata_zh_tw_spark.sources import pack
 
 
 class TestRegistry:
-    def test_builtin_handlers_registered(self):
-        assert registry.all_handlers() == ["JP", "KR", "TW"]
-
     def test_unknown_country_error_lists_available(self):
         with pytest.raises(ValueError, match="JP, KR, TW"):
             registry.get_handler("FR")

@@ -73,6 +73,35 @@ class TestPagesSource:
         assert df.columns == ["url", "warc_ts", "html", "text", "lang"]
         assert df.count() == 50
 
+    def test_parquet_read_runs_no_spark_job(self, spark, tmp_path):
+        """The plain-parquet read takes the declared schema, so opening
+        the pages submits no schema-inference job: a job group around the
+        read holds only the one job run after it."""
+        import time
+
+        from immich_geodata_zh_tw_spark.sources.pages import read_pages
+        from immich_geodata_zh_tw_spark.synth import pages
+
+        path = str(tmp_path / "pages")
+        pages.pages_df(spark, 40, partitions=4).write.parquet(path)
+        sc = spark.sparkContext
+        group = f"read-pages-{tmp_path.name}"
+        sc.setJobGroup(group, "read_pages")
+        try:
+            df = read_pages(spark, path)
+            spark.range(1).collect()  # marks the end of the read's jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        # job events reach the tracker asynchronously and in order: once
+        # the marker job shows, any job of the read has too
+        deadline = time.monotonic() + 30
+        while (not tracker.getJobIdsForGroup(group)
+               and time.monotonic() < deadline):
+            time.sleep(0.1)
+        assert len(tracker.getJobIdsForGroup(group)) == 1
+        assert df.count() == 40
+
     def test_missing_columns_rejected(self, spark, tmp_path):
         import pytest
         from immich_geodata_zh_tw_spark.sources.pages import read_pages
